@@ -10,11 +10,13 @@ import org.apache.spark.sql.functions._
   * assignment table, partitioned by cell so a search touches only its
   * probe cells.
   *
-  * On disk: `dir/centroids` (k rows: c_id, n, c_vec) and
+  * On disk: `dir/centroids` (k rows: c_id, n, c_vec),
   * `dir/assignments` (one row per vector, `partitionBy(batch_key,
   * c_id)` so the nProbe-cell candidate scan is a partition-pruned
   * read, never a corpus scan, and each ingested batch owns its own
-  * partitions — replay-overwritable). `update` assigns a new batch
+  * partitions — replay-overwritable) and `dir/gen/state.json`, the
+  * batch-id ledger (a legacy parquet `dir/applied` ledger is folded
+  * into it by the next update). `update` assigns a new batch
   * against the FIXED centroids and writes only its own partitions —
   * the between-retrains ingestion path; `train`/`build` is the
   * periodic retrain.
@@ -210,18 +212,16 @@ object AnnIndex {
     * instead of appending duplicates — the property that lets
     * [[graft.streaming.Streams.annSink]] run at-least-once
     * foreachBatch replays safely. With `batchId` set, an
-    * already-applied batch (per the `dir/applied` ledger) is a full
-    * no-op and the ledger entry is recorded after the write. Nothing
+    * already-applied batch (per the JSON ledger `dir/gen/state.json`,
+    * StoreIO.commitGen) is a full no-op that runs no Spark job, and the
+    * ledger entry is recorded after the write. Nothing
     * existing is rewritten, so concurrent readers keep a consistent
     * view.
     */
   def update(newVecs: DataFrame, dir: String, batchId: Option[String] = None): Boolean = {
     val spark = newVecs.sparkSession
-    if (batchId.isDefined && !StoreIO.exists(spark, s"$dir/applied") &&
-        !StoreIO.exists(spark, s"$dir/applied-old")) {
-      StoreIO.swapIn(StoreIO.ledgerDf(spark, Seq.empty), spark, s"$dir/applied")
-    }
-    if (batchId.exists(StoreIO.applied(spark, dir, _))) return false
+    val led = StoreIO.ledgerOf(spark, dir)
+    if (batchId.exists(led.contains)) return false
     val cent = readCentroids(spark, dir)
     val batchKey = batchId.getOrElse(
       s"adhoc-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -230,7 +230,7 @@ object AnnIndex {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_key", "c_id").parquet(s"$dir/assignments")
-    batchId.foreach(StoreIO.recordApplied(spark, dir, _))
+    batchId.foreach(id => StoreIO.commitGen(spark, dir, led :+ id, None))
     true
   }
 

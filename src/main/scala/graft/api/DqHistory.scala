@@ -10,16 +10,17 @@ import org.apache.spark.sql.functions._
   * metric_ppm, threshold_ppm, ok) stamped with a monotone `run_seq`,
   * and [[trend]] reads the deltas between the two most recent runs per
   * expectation — the store a DQ dashboard tails and a regression alert
-  * gates on. Appends go through the staged-write + atomic-rename swap
-  * under an applied-batch ledger, so a replayed append (foreachBatch
-  * redelivery, retried orchestrator task) is a full no-op; the table
-  * grows by one panel per run, so reads stay tiny however large the
-  * corpus the panels describe.
+  * gates on. Appends commit a ledgered generation
+  * (StoreIO.commitGen: `gen/runs` + `gen/state.json`, one rename), so
+  * a replayed append (foreachBatch redelivery, retried orchestrator
+  * task) is a full no-op that runs no Spark job; the table grows by
+  * one panel per run, so reads stay tiny however large the corpus the
+  * panels describe.
   */
 object DqHistory {
 
   def exists(spark: SparkSession, dir: String): Boolean =
-    StoreIO.exists(spark, s"$dir/runs") || StoreIO.exists(spark, s"$dir/runs-old")
+    StoreIO.hasTable(spark, dir, "runs")
 
   /** Append one run's panel. Returns false (untouched store) when
     * `batchId` is already in the applied ledger.
@@ -34,26 +35,23 @@ object DqHistory {
     val spark = panel.sparkSession
     val stamped = panel.withColumn("run_seq", lit(runSeq))
     if (!exists(spark, dir)) {
-      StoreIO.swapIn(stamped, spark, s"$dir/runs")
-      StoreIO.ledgerDf(spark, Seq.empty).write.mode("overwrite").parquet(s"$dir/applied")
-      batchId.foreach(StoreIO.recordApplied(spark, dir, _))
+      StoreIO.commitGen(spark, dir, batchId.toSeq, Some("runs" -> stamped))
       return true
     }
-    if (batchId.exists(StoreIO.applied(spark, dir, _))) return false
-    // idempotent per run: a replay that crashed between the runs swap
-    // and recordApplied has already appended this run_seq — drop any
-    // existing rows for it before re-appending, so crash-replay
-    // converges to ONE panel per run (like UpsertStore's merge) instead
-    // of a duplicate that would make trend() compare a run to itself
-    StoreIO.swapIn(
-      read(spark, dir).where(col("run_seq") =!= runSeq).unionByName(stamped),
-      spark, s"$dir/runs")
-    batchId.foreach(StoreIO.recordApplied(spark, dir, _))
+    val led = StoreIO.ledgerOf(spark, dir)
+    if (batchId.exists(led.contains)) return false
+    // idempotent per run: a redelivery under a different batch id (an
+    // orchestrator retry that minted a new one) drops any existing rows
+    // for this run_seq before re-appending, so it converges to ONE
+    // panel per run (like UpsertStore's merge) instead of a duplicate
+    // that would make trend() compare a run to itself
+    StoreIO.commitGen(spark, dir, led ++ batchId, Some("runs" ->
+      read(spark, dir).where(col("run_seq") =!= runSeq).unionByName(stamped)))
     true
   }
 
   def read(spark: SparkSession, dir: String): DataFrame =
-    StoreIO.read(spark, dir, "runs")
+    StoreIO.readTable(spark, dir, "runs")
 
   /** Latest-vs-previous delta per expectation: (expectation,
     * threshold_ppm, prev_run_seq, run_seq, prev_ppm, metric_ppm,

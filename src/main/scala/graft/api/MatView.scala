@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   */
 object MatView {
 
-  private val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def jackson = StoreIO.jackson
 
   private def genDir(viewDir: String) = s"$viewDir/gen"
 
@@ -45,14 +45,14 @@ object MatView {
     * been refreshed (there is no schema to serve). Reads with the
     * schema recorded at the last refresh when present (cursor.json —
     * no footer-inference job per read; refresh reads the state back
-    * every trigger, so the saved job recurs per commit window).
+    * every trigger, so the saved job recurs per commit window). A
+    * corrupt or non-struct recorded schema falls back to footer
+    * inference.
     */
   def read(spark: SparkSession, viewDir: String): DataFrame = {
     val gen = StoreIO.genPath(spark, genDir(viewDir))
     val sch = StoreIO.readSmall(spark, s"$gen/cursor.json")
-      .flatMap(t => Option(jackson.readTree(t).get("schema")).filterNot(_.isNull))
-      .map(s => org.apache.spark.sql.types.DataType.fromJson(s.asText())
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .flatMap(t => StoreIO.schemaOf(jackson.readTree(t).get("schema")))
     sch match {
       case Some(st) => spark.read.schema(st).parquet(s"$gen/state")
       case None => spark.read.parquet(s"$gen/state")
@@ -101,7 +101,8 @@ object MatView {
       .groupBy(names.map(col): _*)
       .agg(sum(col("__s")).as("__dn"),
         sumCols.map(c => sum(col("__s") * col(c)).as(s"__d_$c")): _*)
-    val cur = scala.util.Try(read(spark, viewDir)).toOption
+    // no cursor means no state yet: the first refresh seeds it
+    val cur = if (from < 0L) None else Some(read(spark, viewDir))
     val merged = cur match {
       case None =>
         delta.select(names.map(col) ++:

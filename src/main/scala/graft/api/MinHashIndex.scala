@@ -13,16 +13,19 @@ import org.apache.spark.sql.functions._
   * survives a corpus that has grown to 100 TB while the nightly batch
   * stays at GBs.
   *
-  * Layout under `dir`:
-  *   - `sigs`    — one row per accepted doc: (doc_id, sig ARRAY<BIGINT>[16])
-  *   - `applied` — the batch-id ledger. Signature rows are immutable and
-  *                 doc_id-keyed, so the merge dedups by doc_id and is
-  *                 idempotent anyway; the ledger additionally makes a
-  *                 REPLAYED update a metadata no-op (no rewrite at all).
+  * Layout under `dir`: a ledgered generation (StoreIO.commitGen), one
+  * directory `gen/` swapped with one rename:
+  *   - `gen/sigs`       — one row per accepted doc: (doc_id, sig ARRAY<BIGINT>[16])
+  *   - `gen/state.json` — the batch-id ledger + the sigs schema.
+  *     Signature rows are immutable and doc_id-keyed, so the merge
+  *     dedups by doc_id and is idempotent anyway; the ledger
+  *     additionally makes a REPLAYED update a metadata no-op (no
+  *     rewrite, no Spark job).
   *
-  * Writes use the staged-directory + atomic-rename generation swap from
-  * DedupIndex.update, so a crash in any window leaves a complete
-  * previous generation readable.
+  * A crash in any window leaves a complete previous generation
+  * readable. The pre-generation layout (`sigs` + a parquet `applied`
+  * ledger directly under `dir`) stays readable and is folded into
+  * `gen/` by the next update.
   */
 object MinHashIndex {
 
@@ -71,38 +74,33 @@ object MinHashIndex {
   // ------------------------------------------------- store (via StoreIO)
 
   /** Create the index at `dir` from an initial corpus. */
-  def build(docs: DataFrame, dir: String): Unit = {
-    val spark = docs.sparkSession
-    signatures(docs).write.mode("overwrite").parquet(s"$dir/sigs")
-    StoreIO.ledgerDf(spark, Seq.empty).write.mode("overwrite").parquet(s"$dir/applied")
-  }
+  def build(docs: DataFrame, dir: String): Unit =
+    StoreIO.commitGen(docs.sparkSession, dir, Seq.empty, Some("sigs" -> signatures(docs)))
 
-  /** Stored signatures, with the crash-window fallback (StoreIO.read). */
-  def read(spark: SparkSession, dir: String, name: String = "sigs"): DataFrame =
-    StoreIO.read(spark, dir, name)
+  /** Stored signatures, with the crash-window fallback. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    StoreIO.readTable(spark, dir, "sigs")
 
   /** Fold an accepted batch's signatures in. Dedup by doc_id keeps the
     * merge idempotent even without the ledger; with a `batchId` already
-    * in the ledger the call is a full no-op (no rewrite). An absent
-    * store bootstraps from the batch (so a streaming sink's FIRST
-    * micro-batch needs no separate build step).
+    * in the ledger the call is a full no-op (no rewrite, no Spark job).
+    * An absent store bootstraps from the batch (so a streaming sink's
+    * FIRST micro-batch needs no separate build step).
     *
     * @return true if the batch was applied, false if the ledger
     *         recognized it as already merged.
     */
   def update(docs: DataFrame, dir: String, batchId: Option[String] = None): Boolean = {
     val spark = docs.sparkSession
-    if (!StoreIO.exists(spark, s"$dir/sigs") &&
-        !StoreIO.exists(spark, s"$dir/sigs-old")) {
-      build(docs, dir)
-      batchId.foreach(StoreIO.recordApplied(spark, dir, _))
+    if (!StoreIO.hasTable(spark, dir, "sigs")) {
+      StoreIO.commitGen(spark, dir, batchId.toSeq, Some("sigs" -> signatures(docs)))
       return true
     }
-    if (batchId.exists(StoreIO.applied(spark, dir, _))) return false
+    val led = StoreIO.ledgerOf(spark, dir)
+    if (batchId.exists(led.contains)) return false
     val merged = read(spark, dir).unionByName(signatures(docs))
       .groupBy("doc_id").agg(first("sig").as("sig"))
-    StoreIO.swapIn(merged, spark, s"$dir/sigs")
-    batchId.foreach(StoreIO.recordApplied(spark, dir, _))
+    StoreIO.commitGen(spark, dir, led ++ batchId, Some("sigs" -> merged))
     true
   }
 

@@ -16,14 +16,16 @@ import org.apache.spark.sql.functions._
   * oracle-checked by rel_sessionize_incremental, whose DuckDB oracle IS
   * the full recompute.
   *
-  * Layout under `dir`: ONE generation directory `gen/` holding the
-  * table AND its metadata, swapped atomically (StoreIO.swapInDir):
+  * Layout under `dir`: a ledgered generation (StoreIO.commitGen) — ONE
+  * directory `gen/` holding the table AND its metadata, swapped with
+  * one rename:
   *   - `gen/sessions`   — (user_id, session_seq, n_events, start_us, end_us)
-  *   - `gen/state.json` — batch-id ledger + the recorded table schema;
-  *     a replayed update is a no-op. Driver-side JSON (the
-  *     UpsertStore/Delta metadata posture): the replay check and the
-  *     ledger append cost zero Spark jobs, and reads pass the recorded
-  *     schema explicitly instead of a footer-inference job per batch.
+  *   - `gen/state.json` — the newest UpsertStore.ledgerWindow batch ids
+  *     + the recorded table schema; a replayed update is a no-op. The
+  *     replay check and the ledger append cost zero Spark jobs, and
+  *     reads pass the recorded schema instead of a footer-inference
+  *     job. A legacy store whose ledger is the parquet `gen/applied`
+  *     has it folded into the next generation's state.json.
   * The single-rename commit matters here more than in MinHashIndex:
   * the session merge is NOT naturally idempotent (a doc_id-keyed
   * signature merge dedups itself; re-adding a batch's event counts
@@ -69,46 +71,16 @@ object SessionStore {
       .agg(count(lit(1)).as("n_events"),
         min("us").as("start_us"), max("us").as("end_us"))
 
-  private val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private def writeGen(sessions: DataFrame, applied: Seq[String], dir: String): Unit = {
-    val spark = sessions.sparkSession
-    val staged = s"$dir/gen-staged-${java.util.UUID.randomUUID().toString.take(8)}"
-    sessions.write.mode("overwrite").parquet(s"$staged/sessions")
-    // ledger + schema commit in the SAME rename as the data (driver-side
-    // JSON: no Spark job for the ledger, no footer job for later reads)
-    val ids = applied.map(jackson.writeValueAsString).mkString(",")
-    StoreIO.writeSmallAtomic(spark, s"$staged/state.json",
-      s"""{"applied":[$ids],"schema":${jackson.writeValueAsString(sessions.schema.json)}}""")
-    StoreIO.swapInDir(spark, staged, s"$dir/gen")
-  }
+  private def writeGen(sessions: DataFrame, applied: Seq[String], dir: String): Unit =
+    StoreIO.commitGen(sessions.sparkSession, dir, applied, Some("sessions" -> sessions))
 
   /** Create the store at `dir` from the initial event history. */
   def build(events: DataFrame, dir: String): Unit =
     writeGen(sessionAgg(events), Seq.empty, dir)
 
-  private def stateOf(spark: SparkSession, dir: String):
-      (Seq[String], Option[org.apache.spark.sql.types.StructType]) =
-    StoreIO.readSmall(spark, s"${StoreIO.genPath(spark, s"$dir/gen")}/state.json")
-      .map { txt =>
-        val n = jackson.readTree(txt)
-        val a = n.get("applied")
-        val ids = (0 until a.size()).map(a.get(_).asText())
-        val sch = Option(n.get("schema")).filterNot(_.isNull).map(s =>
-          org.apache.spark.sql.types.DataType.fromJson(s.asText())
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-        (ids.toSeq, sch)
-      }
-      .getOrElse((Seq.empty, None))
-
   /** The stored session table (crash-window fallback via StoreIO). */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val gen = StoreIO.genPath(spark, s"$dir/gen")
-    stateOf(spark, dir)._2 match {
-      case Some(sch) => spark.read.schema(sch).parquet(s"$gen/sessions")
-      case None => spark.read.parquet(s"$gen/sessions")
-    }
-  }
+  def read(spark: SparkSession, dir: String): DataFrame =
+    StoreIO.readTable(spark, dir, "sessions")
 
   /** Fold a time-ordered event batch in. The stored per-user tail
     * (max session_seq row) joins the batch as a pseudo-event at its
@@ -123,12 +95,11 @@ object SessionStore {
     */
   def update(batch: DataFrame, dir: String, batchId: Option[String] = None): Boolean = {
     val spark = batch.sparkSession
-    if (!StoreIO.exists(spark, s"$dir/gen") &&
-        !StoreIO.exists(spark, s"$dir/gen-old")) {
+    if (!StoreIO.hasTable(spark, dir, "sessions")) {
       writeGen(sessionAgg(batch), batchId.toSeq, dir)
       return true
     }
-    val led = stateOf(spark, dir)._1
+    val led = StoreIO.ledgerOf(spark, dir)
     if (batchId.exists(led.contains)) return false
 
     val ev = norm(batch)

@@ -1,13 +1,15 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Shared plumbing for the persistent index stores (DedupIndex,
-  * MinHashIndex, SketchStore, SessionStore): Hadoop-FS paths (so the
-  * stores work on HDFS/S3, not just file://), generation reads with the
-  * crash-window fallback, the staged-write + atomic-rename swap, and the
-  * applied-batch ledger that makes replayed updates a no-op.
+  * MinHashIndex, SketchStore, SessionStore, DqHistory, AnnIndex):
+  * Hadoop-FS paths (so the stores work on HDFS/S3, not just file://),
+  * generation reads with the crash-window fallback, the staged-write +
+  * atomic-rename swap, the recorded-schema parse, and the ledgered
+  * generation (table + JSON batch-id ledger in one rename) that makes
+  * replayed updates a no-op.
   */
 object StoreIO {
 
@@ -70,20 +72,100 @@ object StoreIO {
     else target
   }
 
-  def ledgerDf(spark: SparkSession, ids: Seq[String]): DataFrame = {
-    import spark.implicits._
-    ids.toDF("batch_id")
+  /** One JSON parser for the stores' metadata files. */
+  private[api] val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A table schema recorded in a metadata file (a JSON string node
+    * holding `StructType.json`). None when the field is absent, null,
+    * corrupt or not a struct: every caller then falls back to parquet
+    * footer inference, so a damaged record costs a job, never a read.
+    */
+  def schemaOf(node: com.fasterxml.jackson.databind.JsonNode): Option[StructType] =
+    Option(node).filterNot(_.isNull).flatMap(n =>
+      scala.util.Try(DataType.fromJson(n.asText())).toOption.collect {
+        case st: StructType => st
+      })
+
+  // ---- ledgered generations --------------------------------------------
+  //
+  // Layout of a ledgered store under `dir`: ONE generation directory
+  // `gen/` holding the store's table AND `state.json` (the batch-id
+  // ledger plus the table's schema), promoted with one rename
+  // (swapInDir). Data and ledger can never be separated by a crash
+  // window; the replay check and the ledger append are driver-side JSON
+  // (zero Spark jobs); reads pass the recorded schema instead of a
+  // footer-inference job. The ledger keeps the newest
+  // UpsertStore.ledgerWindow ids: redelivery only ever repeats a recent
+  // batch, and the file is rewritten on every commit.
+  //
+  // Legacy layouts (a parquet `applied` ledger at `gen/applied` or at
+  // `<dir>/applied`, tables directly under `<dir>`) stay readable: their
+  // ledger is read once and folded into the next generation's
+  // state.json, after which the legacy directories are dropped.
+
+  private def hasGenDir(spark: SparkSession, dir: String): Boolean =
+    exists(spark, s"$dir/gen") || exists(spark, s"$dir/gen-old")
+
+  /** True once the store holds table `name`, in either layout. */
+  def hasTable(spark: SparkSession, dir: String, name: String): Boolean =
+    hasGenDir(spark, dir) || exists(spark, s"$dir/$name") || exists(spark, s"$dir/$name-old")
+
+  private def stateJson(spark: SparkSession, dir: String) =
+    readSmall(spark, s"${genPath(spark, s"$dir/gen")}/state.json").map(jackson.readTree)
+
+  /** The batch ids in a ledgered store's ledger, oldest first. */
+  def ledgerOf(spark: SparkSession, dir: String): Seq[String] =
+    stateJson(spark, dir) match {
+      case Some(n) =>
+        val a = n.get("applied")
+        (0 until a.size()).map(a.get(_).asText())
+      case None =>
+        // legacy parquet ledger: read once, folded in by the next commitGen
+        val legacy = Seq(s"${genPath(spark, s"$dir/gen")}/applied",
+          genPath(spark, s"$dir/applied")).find(exists(spark, _))
+        legacy.toSeq.flatMap(p => spark.read.parquet(p).collect().map(_.getString(0)))
+    }
+
+  /** Table `name` of a ledgered store, read with the recorded schema
+    * when there is one.
+    */
+  def readTable(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (!hasGenDir(spark, dir)) read(spark, dir, name) // legacy layout
+    else {
+      val path = s"${genPath(spark, s"$dir/gen")}/$name"
+      stateJson(spark, dir).flatMap(n => schemaOf(n.get("schema"))) match {
+        case Some(sch) => spark.read.schema(sch).parquet(path)
+        case None => spark.read.parquet(path)
+      }
+    }
+
+  /** Commit the next generation of a ledgered store in ONE rename:
+    * `table` (name, frame) is written under a staged directory, then
+    * `state.json` with the newest [[UpsertStore.ledgerWindow]] ids of
+    * `applied` and the table's schema, then the staged directory
+    * replaces `gen/`. A store without a table of its own (AnnIndex,
+    * whose partitions are replay-overwritable in place) commits the
+    * ledger alone. Any legacy ledger or table directory is dropped
+    * once the generation holding its content has landed.
+    */
+  def commitGen(
+      spark: SparkSession,
+      dir: String,
+      applied: Seq[String],
+      table: Option[(String, DataFrame)]): Unit = {
+    val staged = s"$dir/gen-staged-${java.util.UUID.randomUUID().toString.take(8)}"
+    table.foreach { case (name, df) => df.write.mode("overwrite").parquet(s"$staged/$name") }
+    val ids = applied.takeRight(UpsertStore.ledgerWindow).map(jackson.writeValueAsString)
+    writeSmallAtomic(spark, s"$staged/state.json",
+      s"""{"applied":[${ids.mkString(",")}]""" +
+        table.map(t => s""","schema":${jackson.writeValueAsString(t._2.schema.json)}""")
+          .getOrElse("") + "}")
+    swapInDir(spark, staged, s"$dir/gen")
+    (Seq("applied") ++ table.map(_._1)).foreach { n =>
+      delete(spark, s"$dir/$n")
+      delete(spark, s"$dir/$n-old")
+    }
   }
-
-  /** True if `batchId` is recorded in `dir/applied`. */
-  def applied(spark: SparkSession, dir: String, batchId: String): Boolean =
-    read(spark, dir, "applied")
-      .where(col("batch_id") === batchId).limit(1).count() > 0
-
-  /** Record `batchId` in the ledger generation. */
-  def recordApplied(spark: SparkSession, dir: String, batchId: String): Unit =
-    swapIn(read(spark, dir, "applied").unionByName(ledgerDf(spark, Seq(batchId))),
-      spark, s"$dir/applied")
 
   final class LeaseHeldException(msg: String) extends RuntimeException(msg)
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.TextNode
 
 /** Persistent key-bucketed upsert table — the parquet-native stand-in
   * for a MERGE INTO target (Delta/Iceberg) that stays DELTA-SIZED per
@@ -42,8 +44,11 @@ import org.apache.spark.sql.types._
   * key; within a batch the greatest `versionCol` wins (ties broken
   * deterministically via row_number on version desc). Schema
   * EVOLUTION is supported end-to-end: a batch may add columns (old
-  * generations are read with parquet schema merging and surface NULL
-  * for them) — see `core_store_schema_evolution`.
+  * generations are read with the recorded wider schema and surface
+  * NULL for them) — see `core_store_schema_evolution`. Every
+  * commit-log line records the table schema at its seq, so a
+  * historical read passes its own schema instead of running a
+  * footer-merge job.
   *
   * Crash windows (all converge under foreachBatch replay):
   *  - mid-publish within a commit: some buckets carry `g<seq>`, some
@@ -120,7 +125,7 @@ object UpsertStore {
       constraints: Seq[(String, String)] = Nil,
       statsJson: Option[String] = None)
 
-  private val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def jackson = StoreIO.jackson
 
   private def jstr(s: String): String = jackson.writeValueAsString(s)
 
@@ -128,8 +133,7 @@ object UpsertStore {
     val txt = StoreIO.readSmall(spark, s"$root/meta.json").getOrElse(
       sys.error(s"upsert store $root has no meta.json"))
     val n = jackson.readTree(txt)
-    val sch = Option(n.get("schema")).filterNot(_.isNull)
-      .map(s => DataType.fromJson(s.asText()).asInstanceOf[StructType])
+    val sch = StoreIO.schemaOf(n.get("schema"))
     val cons = Option(n.get("constraints")).filterNot(_.isNull).toSeq
       .flatMap(a => (0 until a.size()).map { i =>
         val c = a.get(i)
@@ -178,8 +182,14 @@ object UpsertStore {
     StructField("seq", LongType), StructField("batch_id", StringType),
     StructField("kind", StringType), StructField("ts_ms", LongType)))
 
+  /** One commit-log line. `schema` is the table schema at `seq` as a
+    * JSON node (parsed only when a read at that seq needs it); absent on
+    * lines written before per-commit schemas, whose reads fall back to a
+    * merged footer read.
+    */
   private final case class Commit(
-      seq: Long, batchId: Option[String], kind: String, tsMs: Long)
+      seq: Long, batchId: Option[String], kind: String, tsMs: Long,
+      schema: Option[JsonNode])
 
   /** The compacted-history head of a trimmed commit log: retention
     * replaces every line below the horizon with ONE `horizon` line
@@ -193,10 +203,13 @@ object UpsertStore {
     * those stay no-ops for the last [[ledgerWindow]] trimmed commits
     * and are documented undefined beyond.
     */
-  private final case class Horizon(seq: Long, tsMs: Long, ids: Seq[String])
+  private final case class Horizon(
+      seq: Long, tsMs: Long, ids: Seq[String], schema: Option[JsonNode])
 
-  /** Trimmed batch ids kept replay-checkable past the horizon. */
-  private val ledgerWindow = 64
+  /** Batch ids kept replay-checkable: past the commit-log horizon here,
+    * and in every ledgered generation's state.json (StoreIO.commitGen).
+    */
+  val ledgerWindow = 64
 
   /** The commit log as JSON lines: optional horizon head + live lines
     * (newest last).
@@ -206,16 +219,49 @@ object UpsertStore {
     val lines = StoreIO.readSmall(spark, s"$root/commits.json").toSeq
       .flatMap(_.split('\n')).filter(_.nonEmpty).map(jackson.readTree)
     val (hz, live) = lines.partition(n => n.get("kind").asText() == "horizon")
+    def schema(n: JsonNode) = Option(n.get("schema")).filterNot(_.isNull)
     (hz.headOption.map { n =>
       val ids = Option(n.get("applied_ids")).filterNot(_.isNull).toSeq
         .flatMap(a => (0 until a.size()).map(a.get(_).asText()))
-      Horizon(n.get("seq").asLong(), n.get("ts_ms").asLong(), ids)
+      Horizon(n.get("seq").asLong(), n.get("ts_ms").asLong(), ids, schema(n))
     },
       live.map { n =>
         Commit(n.get("seq").asLong(),
           Option(n.get("batch_id")).filterNot(_.isNull).map(_.asText()),
-          n.get("kind").asText(), n.get("ts_ms").asLong())
+          n.get("kind").asText(), n.get("ts_ms").asLong(), schema(n))
       })
+  }
+
+  /** The table schema recorded at commit `seq`: the newest log line at
+    * or below it (the horizon line once retention trimmed the rest).
+    * None for logs written before per-commit schemas and for a corrupt
+    * record — callers then read with footer merging.
+    */
+  private def schemaAt(spark: SparkSession, root: String, seq: Long): Option[StructType] = {
+    val (hz, live) = logOf(spark, root)
+    val at = live.filter(_.seq <= seq)
+    (if (at.nonEmpty) at.maxBy(_.seq).schema else hz.filter(_.seq <= seq).flatMap(_.schema))
+      .flatMap(StoreIO.schemaOf)
+  }
+
+  /** `a` plus the columns of `b` it lacks, appended in `b`'s order. */
+  private def widen(a: StructType, b: StructType): StructType = {
+    val have = a.fieldNames.toSet
+    StructType(a.fields.toSeq ++ b.fields.filterNot(f => have(f.name)))
+  }
+
+  /** The schema to record for a commit that published generations
+    * written with `written` (None: it published none): the schema at the
+    * current head widened by it. It holds every column a merged footer
+    * read of the resulting snapshot infers, since no such commit drops a
+    * column from a bucket it rewrites. A log from before per-commit
+    * schemas starts from the meta-recorded schema.
+    */
+  private def commitSchema(
+      spark: SparkSession, root: String, written: Option[StructType]): Option[StructType] = {
+    val prev = schemaAt(spark, root, snapshotSeq(spark, root))
+      .orElse(metaOf(spark, root).schema)
+    written.fold(prev)(w => Some(prev.fold(w)(widen(_, w))))
   }
 
   private def commitLog(spark: SparkSession, root: String): Seq[Commit] =
@@ -242,10 +288,10 @@ object UpsertStore {
 
   private def recordCommit(
       spark: SparkSession, root: String, seq: Long,
-      batchId: Option[String], kind: String): Unit = {
+      batchId: Option[String], kind: String, schema: Option[StructType]): Unit = {
     val prev = StoreIO.readSmall(spark, s"$root/commits.json").getOrElse("")
-    val line = s"""{"seq":$seq,"batch_id":${batchId.map(jstr).getOrElse("null")},""" +
-      s""""kind":${jstr(kind)},"ts_ms":${System.currentTimeMillis()}}"""
+    val line = commitLine(Commit(seq, batchId, kind, System.currentTimeMillis(),
+      schema.map(st => new TextNode(st.json))))
     StoreIO.writeSmallAtomic(spark, s"$root/commits.json",
       if (prev.isEmpty) line + "\n" else prev + line + "\n")
   }
@@ -327,6 +373,19 @@ object UpsertStore {
     regexp_extract(col("_metadata.file_path"),
       "/b(\\d+)/g\\d{12}/", 1).cast("int")
 
+  /** `df` checkpointed (one pass over it), with the sorted set of
+    * bucket ids in its int column `bucketCol` — observed by the
+    * checkpoint's own job (`Dataset.observe`), so collecting the set
+    * costs no separate distinct-and-collect job. The set is bounded by
+    * nBuckets, never by data.
+    */
+  private def checkpointBuckets(
+      df: DataFrame, bucketCol: String): (DataFrame, IndexedSeq[Int]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val cp = df.observe(obs, collect_set(col(bucketCol)).as("b")).localCheckpoint()
+    (cp, obs.get("b").asInstanceOf[scala.collection.Seq[Int]].toIndexedSeq.sorted)
+  }
+
   /** Per-bucket newest-generation-`<= seq`, the reconstruction rule. */
   private def pathsAt(
       spark: SparkSession, root: String, seq: Long): Seq[String] = {
@@ -342,24 +401,23 @@ object UpsertStore {
     val root = rootOf(spark, dir)
     val paths = pathsAt(spark, root, seq)
     require(paths.nonEmpty, s"upsert store $dir has no generations at seq $seq")
-    // mergeSchema: generations written before a schema-evolving batch
-    // lack its columns; the merged read surfaces them as NULL
-    spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    readSchema(spark, schemaAt(spark, root, seq), paths)
   }
 
-  /** Multi-path generation read at the CURRENT head with the
-    * META-RECORDED schema given explicitly: no distributed
-    * footer-merge job per read (the Delta posture — schema lives in
-    * the log, not in O(files) parquet footers; `mergeSchema=true`
-    * costs one Spark job listing-and-merging every footer on EVERY
-    * store read). Columns absent from pre-evolution generations
-    * surface as NULL exactly as the merged read did; column order is
-    * the meta order, which equals the merged order under the
-    * additive-only evolution this store enforces. Legacy stores
-    * without a recorded schema fall back to the footer merge.
-    * HEAD-STATE READS ONLY — historical reads (readAsOf below head,
-    * changefeeds, rowVersions) keep the merged-footer read so a
-    * pre-evolution snapshot keeps its own narrower schema.
+  /** Multi-path generation read with the schema the metadata records,
+    * given explicitly: no distributed footer-merge job per read (the
+    * Delta posture — schema lives in the log, not in O(files) parquet
+    * footers; `mergeSchema=true` costs one Spark job listing-and-merging
+    * every footer on EVERY store read). Columns absent from
+    * pre-evolution generations surface as NULL exactly as the merged
+    * read did; column order is the recorded order, which equals the
+    * merged order under the additive-only evolution this store
+    * enforces. Head-state reads pass the meta schema; historical reads
+    * (readAsOf, changefeeds, rowVersions, restore, clone) pass the
+    * schema the commit log records at their seq ([[schemaAt]]), so a
+    * pre-evolution snapshot keeps its own narrower schema. `None` (a
+    * store or history written before the schema was recorded) falls
+    * back to the footer merge.
     *
     * Known read-uncommitted-schema anomaly, accepted: the meta schema
     * is widened BEFORE an evolving commit publishes, so a concurrent
@@ -369,9 +427,9 @@ object UpsertStore {
     * schema presence as evidence the evolving commit committed; the
     * commit log is the truth for that.
     */
-  private def readWithMeta(
-      spark: SparkSession, meta: Meta, paths: Seq[String]): DataFrame =
-    meta.schema match {
+  private def readSchema(
+      spark: SparkSession, schema: Option[StructType], paths: Seq[String]): DataFrame =
+    schema match {
       case Some(s) => spark.read.schema(s).parquet(paths: _*)
       case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
     }
@@ -393,7 +451,7 @@ object UpsertStore {
     else {
       val paths = pathsAt(spark, root, snapshotSeq(spark, root))
       require(paths.nonEmpty, s"upsert store $dir has no generations")
-      readWithMeta(spark, meta, paths)
+      readSchema(spark, meta.schema, paths)
     }
   }
 
@@ -690,7 +748,8 @@ object UpsertStore {
     // a ledgered no-change mutation still commits (empty line, no
     // generations) so its replay is an exact no-op
     if (affected > 0 || batchId.nonEmpty)
-      recordCommit(spark, root, seq, batchId, kind)
+      recordCommit(spark, root, seq, batchId, kind,
+        commitSchema(spark, root, Some(fullSchema).filter(_ => affected > 0)))
     affected
   }
 
@@ -831,12 +890,9 @@ object UpsertStore {
         val meta = metaOf(spark, root)
         val n = meta.nBuckets
         val fsys = StoreIO.fs(spark, root)
-        val k = keys.select(key).distinct()
-          .withColumn("__kb", bucketExpr(key, n))
-          .localCheckpoint()
-        val touchedB = k.select("__kb").distinct().collect()
-          .map(_.getInt(0)).toSet // bounded by nBuckets, never by data
-        val paths = newestGens(fsys, root, n).filter(p => touchedB(p._1))
+        val (k, touchedB) = checkpointBuckets(
+          keys.select(key).distinct().withColumn("__kb", bucketExpr(key, n)), "__kb")
+        val paths = newestGens(fsys, root, n).filter(p => touchedB.contains(p._1))
         val seq = nextSeq(spark, root)
         val fullSchema = meta.schema.getOrElse(read(spark, root).schema)
         val marker = k.drop("__kb").withColumn("__m", lit(true))
@@ -850,7 +906,8 @@ object UpsertStore {
             .drop("__m"),
           _.where(!col("__hit")).drop("__hit"))
         if (removed > 0 || batchId.nonEmpty)
-          recordCommit(spark, root, seq, batchId, "delete_keys")
+          recordCommit(spark, root, seq, batchId, "delete_keys",
+            commitSchema(spark, root, Some(fullSchema).filter(_ => removed > 0)))
         removed
       }
     }
@@ -869,17 +926,14 @@ object UpsertStore {
     val meta = metaOf(spark, root)
     val n = meta.nBuckets
     val fsys = StoreIO.fs(spark, root)
-    val k = keys.select(key).distinct()
-      .withColumn("__b", bucketExpr(key, n))
-      .localCheckpoint()
-    val touched = k.select("__b").distinct().collect()
-      .map(_.getInt(0)).sorted // bounded by nBuckets, never by data
-    val paths = touched.toIndexedSeq.flatMap { b =>
+    val (k, touched) = checkpointBuckets(
+      keys.select(key).distinct().withColumn("__b", bucketExpr(key, n)), "__b")
+    val paths = touched.flatMap { b =>
       val gens = genList(fsys, bucketDir(root, b))
       if (gens.isEmpty) None else Some(gens.maxBy(_._1)._2)
     }
     if (paths.isEmpty) read(spark, root).limit(0)
-    else readWithMeta(spark, meta, paths)
+    else readSchema(spark, meta.schema, paths)
       .join(k.drop("__b"), Seq(key), "left_semi")
   }
 
@@ -900,19 +954,22 @@ object UpsertStore {
     val root = rootOf(spark, dir)
     val n = buckets(spark, root)
     val fsys = StoreIO.fs(spark, root)
-    val k = keys.select(key).distinct()
-      .withColumn("__kb", bucketExpr(key, n))
-      .localCheckpoint()
-    val touched = k.select("__kb").distinct().collect()
-      .map(_.getInt(0)).toSet // bounded by nBuckets, never by data
-    val paths = touched.toSeq.sorted
-      .flatMap(b => genList(fsys, bucketDir(root, b)).map(_._2))
+    val (k, touched) = checkpointBuckets(
+      keys.select(key).distinct().withColumn("__kb", bucketExpr(key, n)), "__kb")
+    val paths = touched.flatMap(b => genList(fsys, bucketDir(root, b)).map(_._2))
     if (paths.isEmpty) {
       val cur = read(spark, root)
       cur.limit(0).withColumn("commit_seq", lit(0L))
         .select(col("commit_seq") +: cur.columns.map(col).toIndexedSeq: _*)
     } else {
-      val raw = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+      // every retained generation: read with the union of the schemas
+      // the retained log records (each distinct one parsed once)
+      val (hz, live) = logOf(spark, root)
+      val parsed = (hz.map(_.schema).toSeq ++ live.map(_.schema)).distinct
+        .map(_.flatMap(StoreIO.schemaOf))
+      val span = Option.when(parsed.nonEmpty && parsed.forall(_.isDefined))(
+        parsed.flatten.reduce(widen))
+      val raw = readSchema(spark, span, paths)
       val seqOfPath = regexp_extract(col("_metadata.file_path"),
         "/b\\d+/g(\\d{12})/", 1).cast("long")
       raw.select(seqOfPath.as("commit_seq") +: raw.columns.map(col).toIndexedSeq: _*)
@@ -1011,11 +1068,11 @@ object UpsertStore {
       }
       (at(fromSeq), at(toSeq))
     }.filter { case (a, b) => a != b } // identical path == identical rows
-    def side(paths: Seq[String]): Option[DataFrame] =
+    def side(paths: Seq[String], seq: Long): Option[DataFrame] =
       if (paths.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true").parquet(paths: _*))
-    val aOpt = side(perBucket.flatMap(_._1))
-    val bOpt = side(perBucket.flatMap(_._2))
+      else Some(readSchema(spark, schemaAt(spark, root, seq), paths))
+    val aOpt = side(perBucket.flatMap(_._1), fromSeq)
+    val bOpt = side(perBucket.flatMap(_._2), toSeq)
     (aOpt, bOpt) match {
       case (None, None) =>
         // no changed buckets: an empty frame in the change-feed shape
@@ -1024,9 +1081,7 @@ object UpsertStore {
           .select(col("change") +: cur.columns.map(col).toIndexedSeq: _*))
       case _ =>
         val schema = (aOpt, bOpt) match {
-          case (Some(a), Some(b)) =>
-            StructType((a.schema ++ b.schema.filterNot(f =>
-              a.schema.fieldNames.contains(f.name))).toSeq)
+          case (Some(a), Some(b)) => widen(a.schema, b.schema)
           case _ => aOpt.orElse(bOpt).get.schema
         }
         def aligned(o: Option[DataFrame]) =
@@ -1133,7 +1188,7 @@ object UpsertStore {
         // BUCKET serially; at tens of thousands of buckets that is
         // scheduler latency, not data cost. Head-state read → explicit
         // meta schema (no footer-merge job).
-        val raw = readWithMeta(spark, metaOf(spark, root), plan.map(_._2))
+        val raw = readSchema(spark, metaOf(spark, root).schema, plan.map(_._2))
         val order: org.apache.spark.sql.Column =
           if (zorderBy.isEmpty)
             // deterministic spread (stable under task retry, unlike
@@ -1198,7 +1253,7 @@ object UpsertStore {
             publishDf(emptyOf(spark, outSchema), spark, bucketDir(root, b), seq)
         }
         StoreIO.delete(spark, staged)
-        recordCommit(spark, root, seq, None, "optimize")
+        recordCommit(spark, root, seq, None, "optimize", commitSchema(spark, root, Some(outSchema)))
         plan.length
       }
     }
@@ -1274,9 +1329,11 @@ object UpsertStore {
           }
         }
         val copyBack = diff.collect { case (b, Some(p)) => b -> p }
+        // the restored snapshot reads as the table did at `seq`, with
+        // the schema recorded there (NOT the head's wider one)
+        val asof = schemaAt(spark, root, seq)
         if (copyBack.nonEmpty) {
-          val raw = spark.read.option("mergeSchema", "true")
-            .parquet(copyBack.map(_._2): _*)
+          val raw = readSchema(spark, asof, copyBack.map(_._2))
           val staged = s"$root/staged-${java.util.UUID.randomUUID().toString.take(8)}"
           raw.select(bucketOfPath.as("__b") +: raw.columns.map(col).toIndexedSeq: _*)
             .write.partitionBy("__b").mode("overwrite").parquet(staged)
@@ -1290,12 +1347,12 @@ object UpsertStore {
         }
         val emptyAtSeq = diff.collect { case (b, None) => b }
         if (emptyAtSeq.nonEmpty) {
-          // schema of the table AS OF seq (merged over its generations)
-          val asofSchema = readAt(spark, root, seq).schema
+          // schema of the table AS OF seq
+          val asofSchema = asof.getOrElse(readAt(spark, root, seq).schema)
           emptyAtSeq.foreach(b =>
             publishDf(emptyOf(spark, asofSchema), spark, bucketDir(root, b), newSeq))
         }
-        recordCommit(spark, root, newSeq, batchId, "restore")
+        recordCommit(spark, root, newSeq, batchId, "restore", asof)
         newSeq
       }
     }
@@ -1335,14 +1392,11 @@ object UpsertStore {
       jackson.readTree(js).get("seq").asLong() <= seq)
     writeMeta(spark, dstDir, meta.copy(baseSeq = seq, statsJson = carriedStats))
     val (hz, live) = logOf(spark, root)
-    val carried = (hz.filter(_.seq <= seq).map(h =>
-      s"""{"seq":${h.seq},"batch_id":null,"kind":"horizon","ts_ms":${h.tsMs},""" +
-        s""""applied_ids":[${h.ids.map(jstr).mkString(",")}]}""").toSeq ++
+    val carried = (hz.filter(_.seq <= seq).map(horizonLine).toSeq ++
       live.filter(_.seq <= seq).map(commitLine)).mkString("", "\n", "\n")
     StoreIO.writeSmallAtomic(spark, s"$dstDir/commits.json", carried)
     if (srcGens.nonEmpty) {
-      val raw = spark.read.option("mergeSchema", "true")
-        .parquet(srcGens.map(_._2): _*)
+      val raw = readSchema(spark, schemaAt(spark, root, seq), srcGens.map(_._2))
       val staged = s"$dstDir/staged-${java.util.UUID.randomUUID().toString.take(8)}"
       raw.select(bucketOfPath.as("__b") +: raw.columns.map(col).toIndexedSeq: _*)
         .write.partitionBy("__b").mode("overwrite").parquet(staged)
@@ -1403,16 +1457,24 @@ object UpsertStore {
       val hzSeq = math.max(hz.map(_.seq).getOrElse(0L), cutoff - 1)
       val hzTs = math.max(hz.map(_.tsMs).getOrElse(0L),
         drop.map(_.tsMs).max)
-      val head = s"""{"seq":$hzSeq,"batch_id":null,"kind":"horizon",""" +
-        s""""ts_ms":$hzTs,"applied_ids":[${ids.map(jstr).mkString(",")}]}"""
+      // the horizon records the schema at its seq: the newest trimmed line's
+      val hzSchema = drop.maxBy(_.seq).schema
       StoreIO.writeSmallAtomic(spark, s"$root/commits.json",
-        (head +: keep.map(commitLine)).mkString("", "\n", "\n"))
+        (horizonLine(Horizon(hzSeq, hzTs, ids, hzSchema)) +: keep.map(commitLine))
+          .mkString("", "\n", "\n"))
     }
   }
 
+  private def schemaField(schema: Option[JsonNode]): String =
+    schema.map(n => s""","schema":${jstr(n.asText())}""").getOrElse("")
+
   private def commitLine(c: Commit): String =
     s"""{"seq":${c.seq},"batch_id":${c.batchId.map(jstr).getOrElse("null")},""" +
-      s""""kind":${jstr(c.kind)},"ts_ms":${c.tsMs}}"""
+      s""""kind":${jstr(c.kind)},"ts_ms":${c.tsMs}${schemaField(c.schema)}}"""
+
+  private def horizonLine(h: Horizon): String =
+    s"""{"seq":${h.seq},"batch_id":null,"kind":"horizon","ts_ms":${h.tsMs},""" +
+      s""""applied_ids":[${h.ids.map(jstr).mkString(",")}]${schemaField(h.schema)}}"""
 
   /** Re-bucket the store to `newBuckets` — the maintenance move when a
     * store outgrows its bucket count (buckets are the unit of rewrite;
@@ -1597,19 +1659,16 @@ object UpsertStore {
     }
 
     val wLatest = Window.partitionBy(key).orderBy(col(versionCol).desc)
-    val latest = batch
+    // one pass over the batch; feeds the touched set, the anti-join and
+    // the staged write
+    val (latest, touched) = checkpointBuckets(batch
       .withColumn("__rn", row_number().over(wLatest)).where("__rn = 1").drop("__rn")
-      .withColumn("__b", bucketExpr(key, n))
-      .localCheckpoint() // one pass over the batch; feeds the touched
-                         // scan, the anti-join and the staged write
-    val touched = latest.select("__b").distinct().collect()
-      .map(_.getInt(0)).sorted // bounded by nBuckets, never by data
+      .withColumn("__b", bucketExpr(key, n)), "__b")
     if (bootstrap && touched.isEmpty) {
       // an empty first batch must still leave a readable (schema-carrying)
       // store: one empty bucket generation
-      publishDf(emptyOf(spark, latest.drop("__b").schema),
-        spark, bucketDir(root, 0), seq)
-      recordCommit(spark, root, seq, batchId, "merge")
+      publishDf(emptyOf(spark, batchSchema), spark, bucketDir(root, 0), seq)
+      recordCommit(spark, root, seq, batchId, "merge", Some(batchSchema))
       return true
     }
     val existingPaths = touched.toIndexedSeq.flatMap { b =>
@@ -1696,7 +1755,8 @@ object UpsertStore {
     StoreIO.delete(spark, staged)
     sweep.foreach(sw => publishSweep(spark, root, sw, seq, unionSchema))
 
-    recordCommit(spark, root, seq, batchId, "merge")
+    recordCommit(spark, root, seq, batchId, "merge", commitSchema(spark, root,
+      Some(unionSchema).filter(_ => touched.nonEmpty || sweep.nonEmpty)))
     retainLocked(spark, root, retainCommits)
     true
   }

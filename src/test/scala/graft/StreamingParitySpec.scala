@@ -483,6 +483,8 @@ class StreamingParitySpec extends AnyFunSuite {
         while (api.MatView.cursor(spark, s"$base/view") < untilSeq &&
             System.currentTimeMillis() < deadline) Thread.sleep(20)
       } finally q.stop()
+      val cursor = api.MatView.cursor(spark, s"$base/view")
+      require(cursor == untilSeq, s"live view must reach seq $untilSeq, at $cursor")
     }
     batch((1L, 1L, 10L), (2L, 1L, 20L))
     live(1L, "ckpt1")
