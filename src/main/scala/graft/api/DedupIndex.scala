@@ -14,6 +14,11 @@ import org.apache.spark.sql.functions._
   * accepted batch in and re-minimizes — an idempotent merge, so re-runs
   * of the same batch don't corrupt the index. All operations are
   * distributed joins/aggregations; nothing is collected.
+  *
+  * Layout: the table IS `dir`, one generation replaced by the StoreIO
+  * swap ([[StoreIO.swapIn]]: staged write, then rename); during the
+  * swap's crash window the previous generation is complete at
+  * `dir-old`, which [[read]] falls back to ([[StoreIO.genPath]]).
   */
 object DedupIndex {
 
@@ -49,20 +54,10 @@ object DedupIndex {
 
   /** Create the index at `dir` from an initial corpus. */
   def build(docs: DataFrame, dir: String): Unit =
-    minimize(keyed(docs)).write.mode("overwrite").parquet(dir)
+    StoreIO.swapIn(minimize(keyed(docs)), docs.sparkSession, dir)
 
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    // recovery half of update()'s staged swap: if a crash landed between
-    // the two renames, the previous generation is complete at dir-old
-    val fs = fileSystem(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val old = new org.apache.hadoop.fs.Path(s"$dir-old")
-    spark.read.parquet(if (!fs.exists(p) && fs.exists(old)) s"$dir-old" else dir)
-  }
-
-  private def fileSystem(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def read(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(StoreIO.genPath(spark, dir))
 
   /** Verdict per batch doc against the stored index: `exact` (normalized
     * text already present), `near` (word-set signature present), or
@@ -78,24 +73,10 @@ object DedupIndex {
     * partitions.
     *
     * Durability: the merge is FULLY WRITTEN to a staged sibling
-    * directory before anything existing moves — a failure at any point
-    * leaves a complete generation on disk (current, or `dir-old` during
-    * the swap window, which [[read]] falls back to). The previous
-    * overwrite-in-place guarded by localCheckpoint could lose the index
-    * to a mid-write crash; this never deletes the only copy.
+    * directory before anything existing moves ([[StoreIO.swapIn]]), so a
+    * failure at any point leaves a complete generation on disk.
     */
-  def update(docs: DataFrame, dir: String): Unit = {
-    val spark = docs.sparkSession
-    val staged = s"$dir-staged-${java.util.UUID.randomUUID().toString.take(8)}"
-    minimize(read(spark, dir).unionByName(keyed(docs)))
-      .write.mode("overwrite").parquet(staged)
-    val fs = fileSystem(spark, dir)
-    val cur = new org.apache.hadoop.fs.Path(dir)
-    val old = new org.apache.hadoop.fs.Path(s"$dir-old")
-    fs.delete(old, true)
-    if (fs.exists(cur)) require(fs.rename(cur, old), s"swap: cannot retire $dir")
-    require(fs.rename(new org.apache.hadoop.fs.Path(staged), cur),
-      s"swap: cannot promote $staged")
-    fs.delete(old, true): Unit
-  }
+  def update(docs: DataFrame, dir: String): Unit =
+    StoreIO.swapIn(minimize(read(docs.sparkSession, dir).unionByName(keyed(docs))),
+      docs.sparkSession, dir)
 }

@@ -25,47 +25,41 @@ import org.apache.spark.sql.functions._
   * O(|view| + |delta groups|) for the merge — never O(fact table).
   *
   * EXACTLY-ONCE state: the view state and its changefeed cursor
-  * commit ATOMICALLY — both live under one generation directory
-  * promoted with a single [[StoreIO.swapInDir]] swap, so a crash
-  * anywhere leaves a consistent (state, cursor) pair and the next
-  * refresh re-derives the same window (the changefeed is a
-  * deterministic function of two snapshots). A separate cursor file
-  * would double-apply a window on a crash between state write and
-  * cursor commit — additive deltas are NOT idempotent, unlike the
-  * key-overwrite consumers that tolerate the at-least-once cursor.
+  * commit ATOMICALLY as one ledgered generation ([[StoreIO.commitGen]]):
+  * `gen/state` (the view table) and `gen/state.json` (`last_seq`, the
+  * last store commit folded in, plus the state schema) are promoted
+  * with a single rename, so a crash anywhere leaves a consistent
+  * (state, cursor) pair and the next refresh re-derives the same window
+  * (the changefeed is a deterministic function of two snapshots). A
+  * separate cursor file would double-apply a window on a crash between
+  * state write and cursor commit — additive deltas are NOT idempotent,
+  * unlike the key-overwrite consumers that tolerate the at-least-once
+  * cursor.
   */
 object MatView {
-
-  private def jackson = StoreIO.jackson
 
   private def genDir(viewDir: String) = s"$viewDir/gen"
 
   /** The maintained view state: group columns + `n_rows` +
     * `sum_<col>` per tracked column. Throws when the view has never
     * been refreshed (there is no schema to serve). Reads with the
-    * schema recorded at the last refresh when present (cursor.json —
-    * no footer-inference job per read; refresh reads the state back
-    * every trigger, so the saved job recurs per commit window). A
-    * corrupt or non-struct recorded schema falls back to footer
-    * inference.
+    * schema recorded at the last refresh (no footer-inference job per
+    * read; refresh reads the state back every trigger). A corrupt or
+    * non-struct recorded schema falls back to footer inference.
     */
-  def read(spark: SparkSession, viewDir: String): DataFrame = {
-    val gen = StoreIO.genPath(spark, genDir(viewDir))
-    val sch = StoreIO.readSmall(spark, s"$gen/cursor.json")
-      .flatMap(t => StoreIO.schemaOf(jackson.readTree(t).get("schema")))
-    sch match {
-      case Some(st) => spark.read.schema(st).parquet(s"$gen/state")
-      case None => spark.read.parquet(s"$gen/state")
-    }
-  }
+  def read(spark: SparkSession, viewDir: String): DataFrame =
+    StoreIO.readTable(spark, viewDir, "state")
 
   /** The last store commit folded into the view, -1 before the first
-    * refresh.
+    * refresh. A view written before `state.json` recorded its cursor in
+    * `gen/cursor.json` (same `last_seq` field); it is read here until
+    * the next refresh replaces that generation.
     */
   def cursor(spark: SparkSession, viewDir: String): Long = {
-    val p = s"${StoreIO.genPath(spark, genDir(viewDir))}/cursor.json"
-    StoreIO.readSmall(spark, p)
-      .map(jackson.readTree(_).get("last_seq").asLong()).getOrElse(-1L)
+    val gen = StoreIO.genPath(spark, genDir(viewDir))
+    StoreIO.stateIn(spark, gen)
+      .orElse(StoreIO.readSmall(spark, s"$gen/cursor.json").map(StoreIO.jackson.readTree))
+      .map(_.get("last_seq").asLong()).getOrElse(-1L)
   }
 
   /** Fold every store commit since the last refresh into the view.
@@ -129,19 +123,8 @@ object MatView {
                 .as(s"sum_$c")): _*)
           .where(col("n_rows") > 0)
     }
-    // state + cursor promote in ONE atomic swap (see scaladoc); the
-    // cursor record carries the state schema so later reads skip the
-    // footer-inference job
-    val staged = s"$viewDir/staged-${java.util.UUID.randomUUID().toString.take(8)}"
-    merged.write.parquet(s"$staged/state")
-    val f = StoreIO.fs(spark, staged)
-    val out = f.create(new org.apache.hadoop.fs.Path(s"$staged/cursor.json"), true)
-    try out.write(
-      (s"""{"last_seq":$head,"schema":""" +
-        jackson.writeValueAsString(merged.schema.json) + "}")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    StoreIO.swapInDir(spark, staged, genDir(viewDir))
+    // state + cursor promote in ONE atomic swap (see scaladoc)
+    StoreIO.commitGen(spark, viewDir, Nil, Some("state" -> merged), "last_seq" -> head)
     head
   }
 }

@@ -1,9 +1,8 @@
 package graft.api
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Persistent corpus profile sketches — the fixed-size state a 100-TB
   * pipeline keeps so "how many distinct texts / what are the heavy
@@ -21,21 +20,22 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   *    splitting the corpus into any batch sequence, lands on the
   *    sketch of the union. The SAME aggregator as
   *    `rel_agg_kmv_distinct`, so store and operator cannot drift.
-  *  - `cms`: a GENERATION DIRECTORY holding three tables that always
-  *    move together in one atomic rename:
-  *      `cms/counters` — the d×w count-min token counter cells;
-  *      `cms/meta`     — one row (d, w) so readers hash with the
-  *                       exact geometry the sketch was built with;
-  *      `cms/applied`  — the batch-id ledger. Cell-wise ADD is not
-  *                       idempotent, so replay safety comes from the
-  *                       ledger: an update that carries a `batchId`
-  *                       already present in `applied` is a no-op.
+  *    Replaced by the StoreIO swap ([[StoreIO.swapIn]]).
+  *  - `cms`: a ledgered generation ([[StoreIO.publishGen]]) that moves
+  *    in one atomic rename:
+  *      `cms/counters`   — the d×w count-min token counter cells;
+  *      `cms/state.json` — the geometry (`d`, `w`) readers hash with,
+  *                         the counters schema, and the batch-id
+  *                         ledger. Cell-wise ADD is not idempotent, so
+  *                         replay safety comes from the ledger: an
+  *                         update that carries a `batchId` already in
+  *                         it is a no-op, decided without a Spark job.
   *    Because ledger and counters swap in the SAME rename, a crash
   *    can never record a batch without its counts or vice versa.
   *
-  * Writes use the staged-directory + atomic-rename swap from
-  * DedupIndex.update so a crash in any window leaves a complete
-  * previous generation readable.
+  * During a swap's crash window the previous generation of either
+  * sketch is complete at `<name>-old`, which reads fall back to
+  * ([[StoreIO.genPath]]); nothing else is kept beside the current one.
   */
 object SketchStore {
 
@@ -110,7 +110,7 @@ object SketchStore {
   /** Build with the CMS width DERIVED from the measured token
     * cardinality ([[tokenCardinality]] → [[cmsWidthFor]]) — the closed
     * sizing loop: the KMV pass decides the geometry the CMS pass uses.
-    * Returns the chosen width (persisted in `cms/meta`, so every later
+    * Returns the chosen width (recorded in `cms/state.json`, so every later
     * read and update hashes consistently).
     */
   def buildSized(docs: DataFrame, dir: String, loadFactor: Double = 0.5): Long = {
@@ -120,19 +120,17 @@ object SketchStore {
   }
 
   private def buildWith(docs: DataFrame, dir: String, width: Long): Unit = {
-    swapIn(kmvOf(docs), docs.sparkSession, s"$dir/kmv")
-    swapInCms(docs.sparkSession, s"$dir/cms",
-      cmsOf(docs, width), metaDf(docs.sparkSession, width), emptyLedger(docs.sparkSession))
+    commitKmv(docs.sparkSession, dir, kmvOf(docs))
+    commitCms(docs.sparkSession, dir, cmsOf(docs, width), width, Nil)
   }
 
   // ---------------------------------------------------------------- update
 
   /** Merge a new batch into the persisted sketches: KMV by sketch
     * union (k smallest distinct of the concatenation), CMS by
-    * cell-wise add. Both merges read the retiring generation, write a
-    * staged directory, and swap via atomic rename — the DedupIndex
-    * crash-window contract. Pass `batchId` to make the CMS half
-    * replay-safe (see [[updateCms]]).
+    * cell-wise add. Both merges read the current generation, write a
+    * staged directory, and swap via atomic rename. Pass `batchId` to
+    * make the CMS half replay-safe (see [[updateCms]]).
     */
   def update(docs: DataFrame, dir: String, batchId: Option[String] = None): Unit = {
     updateKmv(docs, dir)
@@ -147,51 +145,43 @@ object SketchStore {
   def updateKmv(docs: DataFrame, dir: String): Unit = {
     val spark = docs.sparkSession
     val kmvNew = kmvOf(docs)
-    val kmvMerged = read(spark, dir, "kmv") match {
+    val kmvMerged = genOf(spark, dir, "kmv") match {
       case Some(old) =>
-        old.unionByName(kmvNew)
+        spark.read.parquet(old).unionByName(kmvNew)
           .select(col("lang"), explode(col("mins")).as("h"))
           .groupBy("lang")
           .agg(graft.functions.KmvAggregator.kmv(K)(col("h")).as("mins"))
       case None => kmvNew
     }
-    swapIn(kmvMerged, spark, s"$dir/kmv")
+    commitKmv(spark, dir, kmvMerged)
   }
 
   /** CMS-only merge (cell-wise ADD). ADD is not idempotent, so replay
     * safety comes from the batch ledger: when `batchId` is given and
-    * already present in `cms/applied`, the call is a NO-OP (returns
-    * false) — a retried batch cannot double-count. The ledger row and
-    * the merged counters land in the same generation rename, so no
-    * crash ordering can record one without the other. Calls without a
-    * `batchId` are raw read-modify-write and remain the caller's
-    * responsibility to not replay (the streaming path should use
-    * [[graft.streaming.Streams.cmsSink]]'s partition-overwrite scheme).
+    * already present in the ledger of `cms/state.json` (the newest
+    * [[UpsertStore.ledgerWindow]] ids), the call is a NO-OP (returns
+    * false) that runs no Spark job — a retried batch cannot
+    * double-count. The ledger and the merged counters land in the same
+    * generation rename, so no crash ordering can record one without
+    * the other. Calls without a `batchId` are raw read-modify-write and
+    * remain the caller's responsibility to not replay (the streaming
+    * path should use [[graft.streaming.Streams.cmsSink]]'s
+    * partition-overwrite scheme).
     *
     * @return true if the batch was applied, false if the ledger
     *         recognized it as already merged.
     */
   def updateCms(docs: DataFrame, dir: String, batchId: Option[String] = None): Boolean = {
     val spark = docs.sparkSession
-    val (merged, meta, ledger) = readCmsGen(spark, s"$dir/cms") match {
-      case Some((oldCounters, oldMeta, oldLedger)) =>
-        val w = oldMeta.head().getAs[Long]("w")
-        if (batchId.exists(id =>
-            oldLedger.where(col("batch_id") === id).limit(1).count() > 0)) {
-          return false
-        }
-        val counters = oldCounters.unionByName(cmsOf(docs, w))
+    val (merged, w, ledger) = cmsGen(spark, dir) match {
+      case Some(g) =>
+        if (batchId.exists(g.applied.contains)) return false
+        val counters = g.counters(spark).unionByName(cmsOf(docs, g.w))
           .groupBy("row_i", "bucket").agg(sum("c").as("c"))
-        val ledger = batchId match {
-          case Some(id) => oldLedger.unionByName(ledgerDf(spark, id))
-          case None => oldLedger
-        }
-        (counters, metaDf(spark, w), ledger)
-      case None =>
-        (cmsOf(docs, DefaultWidth), metaDf(spark, DefaultWidth),
-          batchId.map(ledgerDf(spark, _)).getOrElse(emptyLedger(spark)))
+        (counters, g.w, g.applied)
+      case None => (cmsOf(docs, DefaultWidth), DefaultWidth, Nil)
     }
-    swapInCms(spark, s"$dir/cms", merged, meta, ledger)
+    commitCms(spark, dir, merged, w, ledger ++ batchId)
     true
   }
 
@@ -201,7 +191,7 @@ object SketchStore {
     * exact below k, (k-1)·2^60/h_(k) above; no data touched.
     */
   def distinctEstimate(spark: SparkSession, dir: String): DataFrame =
-    read(spark, dir, "kmv").getOrElse(sys.error(s"no kmv sketch at $dir"))
+    spark.read.parquet(genOf(spark, dir, "kmv").getOrElse(sys.error(s"no kmv sketch at $dir")))
       .select(col("lang"),
         expr(s"CASE WHEN size(mins) < $K THEN CAST(size(mins) AS BIGINT) ELSE " +
           s"CAST(floor((CAST(${K - 1} AS DOUBLE) * 1152921504606846976.0) / " +
@@ -216,113 +206,75 @@ object SketchStore {
     */
   def freqEstimate(spark: SparkSession, dir: String, toks: Seq[String]): DataFrame = {
     import spark.implicits._
-    val (cms, meta, _) = readCmsGen(spark, s"$dir/cms")
-      .getOrElse(sys.error(s"no cms sketch at $dir"))
-    val m = meta.head()
-    val (d, w) = (m.getAs[Int]("d"), m.getAs[Long]("w"))
+    val g = cmsGen(spark, dir).getOrElse(sys.error(s"no cms sketch at $dir"))
     toks.toDF("tok")
       .select(col("tok"), posexplode(expr(
-        s"transform(sequence(0, ${d - 1}), i -> CAST(" +
+        s"transform(sequence(0, ${g.d - 1}), i -> CAST(" +
           "CAST(conv(substring(md5(concat(CAST(i AS STRING), ':', tok)), 1, 8), 16, 10) AS BIGINT)" +
-          s" % CAST($w AS BIGINT) AS INT))")))
+          s" % CAST(${g.w} AS BIGINT) AS INT))")))
       .withColumnRenamed("pos", "row_i")
       .withColumnRenamed("col", "bucket")
-      .join(broadcast(cms), Seq("row_i", "bucket"), "left")
+      .join(broadcast(g.counters(spark)), Seq("row_i", "bucket"), "left")
       .groupBy("tok")
       .agg(min(coalesce(col("c"), lit(0L))).as("est"))
   }
 
   /** The stored CMS geometry `(d, w)` — what [[buildSized]] chose. */
-  def cmsGeometry(spark: SparkSession, dir: String): (Int, Long) = {
-    val m = readCmsGen(spark, s"$dir/cms")
-      .getOrElse(sys.error(s"no cms sketch at $dir"))._2.head()
-    (m.getAs[Int]("d"), m.getAs[Long]("w"))
-  }
+  def cmsGeometry(spark: SparkSession, dir: String): (Int, Long) =
+    cmsGen(spark, dir).map(g => (g.d, g.w)).getOrElse(sys.error(s"no cms sketch at $dir"))
 
   // ------------------------------------------------------------ internals
 
-  private def metaDf(spark: SparkSession, width: Long): DataFrame =
-    spark.createDataFrame(
-      java.util.Collections.singletonList(Row(DefaultDepth, width)),
-      StructType(Seq(StructField("d", IntegerType), StructField("w", LongType))))
-
-  private val ledgerSchema = StructType(Seq(StructField("batch_id", StringType)))
-
-  private def ledgerDf(spark: SparkSession, id: String): DataFrame =
-    spark.createDataFrame(
-      java.util.Collections.singletonList(Row(id)), ledgerSchema)
-
-  private def emptyLedger(spark: SparkSession): DataFrame =
-    spark.createDataFrame(java.util.Collections.emptyList[Row](), ledgerSchema)
-
-  private def fileSystem(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Read the current generation, falling back to the retired one if a
-    * crash landed between the two swap renames (cur retired, staged not
-    * yet promoted) — the same fallback contract as DedupIndex.read.
-    * Hadoop FileSystem API throughout, so HDFS/S3 paths resolve.
+  /** The cms generation as recorded: where its counters live, the
+    * geometry, the batch ledger and the counters schema.
     */
-  private def read(spark: SparkSession, dir: String, which: String): Option[DataFrame] =
-    genPath(spark, s"$dir/$which").map(spark.read.parquet(_))
+  private final case class Cms(
+      root: String, d: Int, w: Long, applied: Seq[String], schema: Option[StructType]) {
+    def counters(spark: SparkSession): DataFrame =
+      schema.fold(spark.read)(spark.read.schema).parquet(s"$root/counters")
+  }
 
-  /** The cms generation tables (counters, meta, applied) of whichever
-    * generation root is currently readable.
-    */
-  private def readCmsGen(spark: SparkSession, path: String): Option[(DataFrame, DataFrame, DataFrame)] =
-    genPath(spark, path).map { root =>
-      (spark.read.parquet(s"$root/counters"),
-        spark.read.parquet(s"$root/meta"),
-        spark.read.schema(ledgerSchema).parquet(s"$root/applied"))
+  private def commitKmv(spark: SparkSession, dir: String, kmv: DataFrame): Unit = {
+    StoreIO.swapIn(kmv, spark, s"$dir/kmv")
+    dropLegacy(spark, dir, "kmv")
+  }
+
+  private def commitCms(
+      spark: SparkSession, dir: String, counters: DataFrame, w: Long, applied: Seq[String]): Unit = {
+    StoreIO.publishGen(spark, s"$dir/cms", applied, Some("counters" -> counters),
+      Seq("d" -> DefaultDepth.toLong, "w" -> w))
+    dropLegacy(spark, dir, "cms")
+  }
+
+  // ---- the earlier layout ------------------------------------------------
+  // Before the StoreIO protocol, a swap kept the replaced sketch at
+  // `<name>.retired` forever (after a crash between its renames, as the
+  // only copy), a dead writer's staging sat at `<name>.staged`, and the
+  // cms generation recorded its geometry and ledger in parquet `meta`
+  // (d, w) and `applied` (batch_id) tables instead of state.json. Such a
+  // store is read through the two fallbacks below; the next commit of
+  // each sketch replaces its generation (so `meta` and `applied` go with
+  // it) and drops the debris.
+
+  /** The readable generation of sketch `name`, None before the first build. */
+  private def genOf(spark: SparkSession, dir: String, name: String): Option[String] =
+    Seq(StoreIO.genPath(spark, s"$dir/$name"), s"$dir/$name.retired").find(StoreIO.exists(spark, _))
+
+  private def cmsGen(spark: SparkSession, dir: String): Option[Cms] =
+    genOf(spark, dir, "cms").map { root =>
+      StoreIO.stateIn(spark, root) match {
+        case Some(n) =>
+          Cms(root, n.get("d").asInt(), n.get("w").asLong(), StoreIO.appliedOf(n),
+            StoreIO.schemaOf(n.get("schema")))
+        case None =>
+          val m = spark.read.parquet(s"$root/meta").head()
+          Cms(root, m.getAs[Int]("d"), m.getAs[Long]("w"),
+            spark.read.parquet(s"$root/applied").collect().map(_.getString(0)).toSeq, None)
+      }
     }
 
-  private def genPath(spark: SparkSession, path: String): Option[String] = {
-    val fs = fileSystem(spark, path)
-    if (fs.exists(new Path(path))) Some(path)
-    else if (fs.exists(new Path(path + ".retired"))) Some(path + ".retired")
-    else None
-  }
-
-  /** Staged write + atomic rename swap (DedupIndex contract): the new
-    * generation becomes visible in one rename; the retiring one is
-    * kept as `<path>.retired` until the next swap for crash fallback.
-    * In the post-crash state (no current generation, only `.retired`),
-    * the staged generation is promoted BEFORE the retired one is
-    * deleted, so at every instant some complete generation is readable.
-    */
-  private def swapIn(df: DataFrame, spark: SparkSession, path: String): Unit = {
-    df.write.mode("overwrite").parquet(path + ".staged")
-    promote(spark, path)
-  }
-
-  /** CMS variant: counters, meta and ledger are all written under one
-    * staged root and become visible in the SAME rename.
-    */
-  private def swapInCms(spark: SparkSession, path: String,
-      counters: DataFrame, meta: DataFrame, ledger: DataFrame): Unit = {
-    val fs = fileSystem(spark, path)
-    fs.delete(new Path(path + ".staged"), true)
-    counters.write.mode("overwrite").parquet(s"$path.staged/counters")
-    meta.write.mode("overwrite").parquet(s"$path.staged/meta")
-    ledger.write.mode("overwrite").parquet(s"$path.staged/applied")
-    promote(spark, path)
-  }
-
-  private def promote(spark: SparkSession, path: String): Unit = {
-    val fs = fileSystem(spark, path)
-    val cur = new Path(path)
-    val retired = new Path(path + ".retired")
-    val staged = new Path(path + ".staged")
-    if (fs.exists(cur)) {
-      fs.delete(retired, true)
-      require(fs.rename(cur, retired), s"swap: retire $path")
-      require(fs.rename(staged, cur), s"swap: promote $path")
-    } else {
-      // recovery path: the staged generation already contains the merge
-      // of the retired one, so promote it first — deleting retired
-      // before the promote would leave a window with nothing readable
-      require(fs.rename(staged, cur), s"swap: promote $path")
-      fs.delete(retired, true): Unit
-    }
+  private def dropLegacy(spark: SparkSession, dir: String, name: String): Unit = {
+    StoreIO.delete(spark, s"$dir/$name.retired")
+    StoreIO.delete(spark, s"$dir/$name.staged")
   }
 }

@@ -1,10 +1,12 @@
 package graft.api
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Shared plumbing for the persistent index stores (DedupIndex,
-  * MinHashIndex, SketchStore, SessionStore, DqHistory, AnnIndex):
+  * MinHashIndex, SketchStore, SessionStore, DqHistory, AnnIndex,
+  * MatView):
   * Hadoop-FS paths (so the stores work on HDFS/S3, not just file://),
   * generation reads with the crash-window fallback, the staged-write +
   * atomic-rename swap, the recorded-schema parse, and the ledgered
@@ -23,17 +25,9 @@ object StoreIO {
   def delete(spark: SparkSession, path: String): Unit =
     fs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true): Unit
 
-  /** A stored generation, with the crash-window fallback: if a swap died
-    * between its two renames, the retired generation is still complete
-    * at `<name>-old`.
-    */
-  def read(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val f = fs(spark, dir)
-    val cur = new org.apache.hadoop.fs.Path(s"$dir/$name")
-    val old = new org.apache.hadoop.fs.Path(s"$dir/$name-old")
-    spark.read.parquet(
-      if (!f.exists(cur) && f.exists(old)) s"$dir/$name-old" else s"$dir/$name")
-  }
+  /** A stored generation, with the crash-window fallback of [[genPath]]. */
+  def read(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.parquet(genPath(spark, s"$dir/$name"))
 
   /** Stage-write `df`, retire the current generation to `<target>-old`,
     * promote the staged write, then drop the retired copy — every window
@@ -49,14 +43,20 @@ object StoreIO {
     * of `target` — the multi-table variant of [[swapIn]]: a store whose
     * update must commit several tables atomically (e.g. data + ledger)
     * writes them all under one staged dir and swaps once, so no crash
-    * window can separate them.
+    * window can separate them. The current generation is retired to
+    * `<target>-old` before the promote and dropped after it. When a
+    * swap died between its renames (only `-old` is left), the staged
+    * generation is promoted BEFORE the retiree is dropped, so at every
+    * instant [[genPath]] finds a complete generation.
     */
   def swapInDir(spark: SparkSession, staged: String, target: String): Unit = {
     val f = fs(spark, target)
     val cur = new org.apache.hadoop.fs.Path(target)
     val old = new org.apache.hadoop.fs.Path(s"$target-old")
-    f.delete(old, true)
-    if (f.exists(cur)) require(f.rename(cur, old), s"swap: cannot retire $target")
+    if (f.exists(cur)) {
+      f.delete(old, true)
+      require(f.rename(cur, old), s"swap: cannot retire $target")
+    }
     require(f.rename(new org.apache.hadoop.fs.Path(staged), cur),
       s"swap: cannot promote $staged")
     f.delete(old, true): Unit
@@ -80,7 +80,7 @@ object StoreIO {
     * corrupt or not a struct: every caller then falls back to parquet
     * footer inference, so a damaged record costs a job, never a read.
     */
-  def schemaOf(node: com.fasterxml.jackson.databind.JsonNode): Option[StructType] =
+  def schemaOf(node: JsonNode): Option[StructType] =
     Option(node).filterNot(_.isNull).flatMap(n =>
       scala.util.Try(DataType.fromJson(n.asText())).toOption.collect {
         case st: StructType => st
@@ -90,7 +90,8 @@ object StoreIO {
   //
   // Layout of a ledgered store under `dir`: ONE generation directory
   // `gen/` holding the store's table AND `state.json` (the batch-id
-  // ledger plus the table's schema), promoted with one rename
+  // ledger, the table's schema and any numeric fields the store
+  // records, such as MatView's cursor), promoted with one rename
   // (swapInDir). Data and ledger can never be separated by a crash
   // window; the replay check and the ledger append are driver-side JSON
   // (zero Spark jobs); reads pass the recorded schema instead of a
@@ -110,21 +111,29 @@ object StoreIO {
   def hasTable(spark: SparkSession, dir: String, name: String): Boolean =
     hasGenDir(spark, dir) || exists(spark, s"$dir/$name") || exists(spark, s"$dir/$name-old")
 
-  private def stateJson(spark: SparkSession, dir: String) =
-    readSmall(spark, s"${genPath(spark, s"$dir/gen")}/state.json").map(jackson.readTree)
+  /** The parsed `state.json` in generation directory `gen` (a path
+    * [[genPath]] resolved), None when there is none.
+    */
+  private[api] def stateIn(spark: SparkSession, gen: String): Option[JsonNode] =
+    readSmall(spark, s"$gen/state.json").map(jackson.readTree)
+
+  /** The batch ids of a parsed `state.json`, oldest first. */
+  private[api] def appliedOf(state: JsonNode): Seq[String] = {
+    val a = state.get("applied")
+    (0 until a.size()).map(a.get(_).asText())
+  }
 
   /** The batch ids in a ledgered store's ledger, oldest first. */
-  def ledgerOf(spark: SparkSession, dir: String): Seq[String] =
-    stateJson(spark, dir) match {
-      case Some(n) =>
-        val a = n.get("applied")
-        (0 until a.size()).map(a.get(_).asText())
+  def ledgerOf(spark: SparkSession, dir: String): Seq[String] = {
+    val gen = genPath(spark, s"$dir/gen")
+    stateIn(spark, gen) match {
+      case Some(n) => appliedOf(n)
       case None =>
         // legacy parquet ledger: read once, folded in by the next commitGen
-        val legacy = Seq(s"${genPath(spark, s"$dir/gen")}/applied",
-          genPath(spark, s"$dir/applied")).find(exists(spark, _))
+        val legacy = Seq(s"$gen/applied", genPath(spark, s"$dir/applied")).find(exists(spark, _))
         legacy.toSeq.flatMap(p => spark.read.parquet(p).collect().map(_.getString(0)))
     }
+  }
 
   /** Table `name` of a ledgered store, read with the recorded schema
     * when there is one.
@@ -132,39 +141,54 @@ object StoreIO {
   def readTable(spark: SparkSession, dir: String, name: String): DataFrame =
     if (!hasGenDir(spark, dir)) read(spark, dir, name) // legacy layout
     else {
-      val path = s"${genPath(spark, s"$dir/gen")}/$name"
-      stateJson(spark, dir).flatMap(n => schemaOf(n.get("schema"))) match {
-        case Some(sch) => spark.read.schema(sch).parquet(path)
-        case None => spark.read.parquet(path)
-      }
+      val gen = genPath(spark, s"$dir/gen")
+      stateIn(spark, gen).flatMap(n => schemaOf(n.get("schema")))
+        .fold(spark.read)(spark.read.schema).parquet(s"$gen/$name")
     }
 
-  /** Commit the next generation of a ledgered store in ONE rename:
-    * `table` (name, frame) is written under a staged directory, then
-    * `state.json` with the newest [[UpsertStore.ledgerWindow]] ids of
-    * `applied` and the table's schema, then the staged directory
-    * replaces `gen/`. A store without a table of its own (AnnIndex,
-    * whose partitions are replay-overwritable in place) commits the
-    * ledger alone. Any legacy ledger or table directory is dropped
-    * once the generation holding its content has landed.
+  /** Commit the next generation of a ledgered store in ONE rename
+    * ([[publishGen]] at `gen/`). A store without a table of its own
+    * (AnnIndex, whose partitions are replay-overwritable in place)
+    * commits the ledger alone. Any legacy ledger or table directory is
+    * dropped once the generation holding its content has landed.
     */
   def commitGen(
       spark: SparkSession,
       dir: String,
       applied: Seq[String],
-      table: Option[(String, DataFrame)]): Unit = {
-    val staged = s"$dir/gen-staged-${java.util.UUID.randomUUID().toString.take(8)}"
-    table.foreach { case (name, df) => df.write.mode("overwrite").parquet(s"$staged/$name") }
-    val ids = applied.takeRight(UpsertStore.ledgerWindow).map(jackson.writeValueAsString)
-    writeSmallAtomic(spark, s"$staged/state.json",
-      s"""{"applied":[${ids.mkString(",")}]""" +
-        table.map(t => s""","schema":${jackson.writeValueAsString(t._2.schema.json)}""")
-          .getOrElse("") + "}")
-    swapInDir(spark, staged, s"$dir/gen")
+      table: Option[(String, DataFrame)],
+      fields: (String, Long)*): Unit = {
+    publishGen(spark, s"$dir/gen", applied, table, fields)
     (Seq("applied") ++ table.map(_._1)).foreach { n =>
       delete(spark, s"$dir/$n")
       delete(spark, s"$dir/$n-old")
     }
+  }
+
+  /** Publish the next generation at `gen` in ONE rename: `table`
+    * (name, frame) is written under a staged sibling, then `state.json`
+    * with the newest [[UpsertStore.ledgerWindow]] ids of `applied`, the
+    * numeric `fields` and the table's schema, then the staged directory
+    * replaces `gen` ([[swapInDir]]). Nothing reads a staged directory,
+    * so `state.json` is one plain create.
+    */
+  private[api] def publishGen(
+      spark: SparkSession,
+      gen: String,
+      applied: Seq[String],
+      table: Option[(String, DataFrame)],
+      fields: Seq[(String, Long)]): Unit = {
+    val staged = s"$gen-staged-${java.util.UUID.randomUUID().toString.take(8)}"
+    table.foreach { case (name, df) => df.write.mode("overwrite").parquet(s"$staged/$name") }
+    val ids = applied.takeRight(UpsertStore.ledgerWindow).map(jackson.writeValueAsString)
+    val state = s"""{"applied":[${ids.mkString(",")}]""" +
+      fields.map { case (k, v) => s""","$k":$v""" }.mkString +
+      table.map(t => s""","schema":${jackson.writeValueAsString(t._2.schema.json)}""")
+        .getOrElse("") + "}"
+    val out = fs(spark, staged).create(new org.apache.hadoop.fs.Path(s"$staged/state.json"), true)
+    try out.write(state.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    swapInDir(spark, staged, gen)
   }
 
   final class LeaseHeldException(msg: String) extends RuntimeException(msg)

@@ -1510,9 +1510,9 @@ object UpsertStore {
       // HEAL an interrupted swap first: a previous rebucket that died
       // between its two root renames left the ONLY complete store at
       // `<dir>-old` (rootOf serves it). Proceeding from that state
-      // would be fatal — swapInDir's first act is deleting
-      // `<dir>-old`, i.e. the only durable copy, before the staged
-      // promote lands. Finish the old swap instead: re-home the lease
+      // would be fatal — the lease re-created `<dir>`, and swapInDir
+      // retires an existing `<dir>` by first deleting `<dir>-old`,
+      // i.e. the only durable copy, before the staged promote lands. Finish the old swap instead: re-home the lease
       // into the fallback, drop the meta-less shell at `<dir>` (it
       // holds only lease debris — bootstrap writes meta before any
       // data), and rename the fallback back. A crash between the

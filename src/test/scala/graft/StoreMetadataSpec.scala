@@ -14,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Store metadata without Spark jobs: replay checks, historical reads
   * and touched-bucket sets run no job of their own; per-commit schemas
   * read exactly like the merged footer read; the JSON ledger is bounded
-  * and folds legacy parquet ledgers in; a recorded schema that cannot be
-  * parsed falls back to inference; between batches, commit order wins.
+  * and folds legacy parquet ledgers and the earlier SketchStore and
+  * MatView layouts in; a recorded schema that cannot be parsed falls
+  * back to inference; between batches, commit order wins.
   */
 class StoreMetadataSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -71,6 +72,12 @@ class StoreMetadataSpec extends AnyFunSuite {
   private def docs(ids: Long*) =
     ids.map(i => (i, s"document number $i says hello world $i")).toDF("doc_id", "text")
 
+  private def langDocs(ids: Long*) = docs(ids: _*).withColumn("lang", lit("en"))
+
+  /** SketchStore point estimates of `toks`. */
+  private def freq(dir: String, toks: String*) =
+    api.SketchStore.freqEstimate(spark, dir, toks).as[(String, Long)].collect().toMap
+
   private def panel(ppm: Long) =
     Seq(("rows_nonnull", ppm, 900000L, true)).toDF("expectation", "metric_ppm", "threshold_ppm", "ok")
 
@@ -109,6 +116,8 @@ class StoreMetadataSpec extends AnyFunSuite {
     assert(api.DqHistory.append(panel(990000L), s"$d/dq", runSeq = 1L, batchId = Some("q1")))
     api.AnnIndex.build(vectors.where("vec_id < 40"), s"$d/ann", k = 4, iters = 1)
     assert(api.AnnIndex.update(vectors.where("vec_id >= 40 AND vec_id < 60"), s"$d/ann", Some("a1")))
+    api.SketchStore.build(langDocs(1L, 2L), s"$d/sketch")
+    assert(api.SketchStore.updateCms(langDocs(3L), s"$d/sketch", Some("k1")))
 
     noJobReplay("UpsertStore.update")(api.UpsertStore.update(
       kv((1L, 1L, "a"), (2L, 1L, "b")), up, "k", "version", nBuckets = 4, batchId = Some("u1")))
@@ -122,6 +131,12 @@ class StoreMetadataSpec extends AnyFunSuite {
       api.DqHistory.append(panel(990000L), s"$d/dq", runSeq = 1L, batchId = Some("q1")))
     noJobReplay("AnnIndex.update")(api.AnnIndex.update(
       vectors.where("vec_id >= 40 AND vec_id < 60"), s"$d/ann", Some("a1")))
+    noJobReplay("SketchStore.updateCms")(
+      api.SketchStore.updateCms(langDocs(3L), s"$d/sketch", Some("k1")))
+    val (geometry, geometryJobs) = jobsOf(api.SketchStore.cmsGeometry(spark, s"$d/sketch"))
+    assert(geometry == ((4, 1024L)))
+    assert(geometryJobs.isEmpty, s"cmsGeometry ran ${geometryJobs.size} Spark job(s): $geometryJobs")
+    assert(freq(s"$d/sketch", "hello")("hello") == 3L)
     api.StoreIO.delete(spark, d)
   }
 
@@ -291,6 +306,112 @@ class StoreMetadataSpec extends AnyFunSuite {
     api.StoreIO.delete(spark, d)
   }
 
+  test("SketchStore and MatView in the earlier layout keep their state and fold it in") {
+    val d = tmpDir("legacy_layout")
+    // SketchStore: cms/{counters,meta,applied} parquet, and the earlier
+    // swap's kept `.retired` copy of each sketch
+    def legacySketch(dir: String, cms: String, kmv: Seq[String]): Unit = {
+      api.SketchStore.cmsOf(langDocs(1L, 2L), 2048L).write.parquet(s"$dir/$cms/counters")
+      Seq((4, 2048L)).toDF("d", "w").write.parquet(s"$dir/$cms/meta")
+      legacyLedger(s"$dir/$cms/applied", "b1")
+      kmv.foreach(api.SketchStore.kmvOf(langDocs(1L, 2L)).write.parquet(_))
+    }
+    val sk = s"$d/sketch"
+    legacySketch(sk, "cms", Seq(s"$sk/kmv", s"$sk/kmv.retired"))
+    assert(api.SketchStore.cmsGeometry(spark, sk) == ((4, 2048L)))
+    assert(freq(sk, "hello", "number") == Map("hello" -> 2L, "number" -> 2L))
+    assert(!api.SketchStore.updateCms(langDocs(3L), sk, Some("b1")))
+    assert(freq(sk, "hello")("hello") == 2L)
+    api.SketchStore.update(langDocs(3L), sk, Some("b2"))
+    assert(new java.io.File(sk).list().sorted.toSeq == Seq("cms", "kmv"))
+    assert(new java.io.File(s"$sk/cms").list().sorted.toSeq == Seq("counters", "state.json"))
+    assert(api.SketchStore.cmsGeometry(spark, sk) == ((4, 2048L)))
+    noJobReplay("legacy SketchStore")(api.SketchStore.updateCms(langDocs(3L), sk, Some("b1")))
+    assert(freq(sk, "hello")("hello") == 3L)
+    assert(api.SketchStore.distinctEstimate(spark, sk).as[(String, Long)].collect().toSeq ==
+      Seq(("en", 3L)))
+
+    // the earlier crash state: a swap died between its renames, so only
+    // `cms.retired` and `kmv.retired` are left
+    val crashed = s"$d/crashed"
+    legacySketch(crashed, "cms.retired", Seq(s"$crashed/kmv.retired"))
+    assert(api.SketchStore.cmsGeometry(spark, crashed) == ((4, 2048L)))
+    assert(api.SketchStore.distinctEstimate(spark, crashed).as[(String, Long)].collect().toSeq ==
+      Seq(("en", 2L)))
+    assert(!api.SketchStore.updateCms(langDocs(3L), crashed, Some("b1")))
+    api.SketchStore.update(langDocs(3L), crashed, Some("b2"))
+    assert(new java.io.File(crashed).list().sorted.toSeq == Seq("cms", "kmv"))
+    assert(freq(crashed, "hello")("hello") == 3L)
+    assert(api.SketchStore.cmsGeometry(spark, crashed) == ((4, 2048L)))
+
+    // MatView: gen/ holds the state and `cursor.json`, no state.json
+    val st = s"$d/store"
+    val v = s"$d/view"
+    val grp = Seq("v" -> col("v"))
+    def state() = api.MatView.read(spark, v).select("v", "n_rows").as[(String, Long)]
+      .collect().sortBy(_._1).toSeq
+    api.UpsertStore.update(kv((1L, 1L, "a"), (2L, 1L, "b")), st, "k", "version",
+      nBuckets = 4, batchId = Some("c1"))
+    assert(api.MatView.refresh(spark, st, "k", v, grp, Seq("version")) == 1L)
+    val schema = api.MatView.read(spark, v).schema.json
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$v/gen/state.json"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$v/gen/cursor.json"),
+      s"""{"last_seq":1,"schema":${new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(schema)}}""")
+    assert(api.MatView.cursor(spark, v) == 1L)
+    assert(state() == Seq(("a", 1L), ("b", 1L)))
+    api.UpsertStore.update(kv((3L, 1L, "a"), (2L, 2L, "a")), st, "k", "version",
+      batchId = Some("c2"))
+    assert(api.MatView.refresh(spark, st, "k", v, grp, Seq("version")) == 2L)
+    // exactly the (1, 2] window: k=3 joins `a`, k=2 moves from `b` to `a`
+    assert(state() == Seq(("a", 3L)))
+    assert(new java.io.File(s"$v/gen").list().sorted.toSeq == Seq("state", "state.json"))
+    assert(api.MatView.cursor(spark, v) == 2L)
+    api.StoreIO.delete(spark, d)
+  }
+
+  test("SketchStore leaves no retired generation, heals a crashed swap, vacuums a dead staged write") {
+    val sk = tmpDir("sketch_debris")
+    api.SketchStore.build(langDocs(1L, 2L), sk)
+    api.SketchStore.update(langDocs(3L), sk, Some("b1"))
+    api.SketchStore.update(langDocs(4L), sk, Some("b2"))
+    assert(new java.io.File(sk).list().sorted.toSeq == Seq("cms", "kmv"))
+    // the staged writes of a real update, as a directory watcher sees them
+    val seen = new java.util.concurrent.ConcurrentSkipListSet[String]()
+    @volatile var watching = true
+    val watcher = new Thread(() =>
+      while (watching) {
+        Option(new java.io.File(sk).list()).toSeq.flatten.filter(_.contains("staged"))
+          .foreach(seen.add)
+        Thread.sleep(1)
+      })
+    watcher.start()
+    try api.SketchStore.update(langDocs(5L), sk, Some("b3"))
+    finally { watching = false; watcher.join() }
+    val staged = seen.asScala.toSeq
+    assert(staged.map(_.take(3)) == Seq("cms", "kmv"), s"staged writes: $staged")
+    // a writer that died after its staged write, before the swap, leaves
+    // that directory complete (a failed write job removes its own output)
+    val f = api.StoreIO.fs(spark, sk)
+    staged.foreach(n => org.apache.hadoop.fs.FileUtil.copy(f,
+      new org.apache.hadoop.fs.Path(s"$sk/${n.take(3)}"), f,
+      new org.apache.hadoop.fs.Path(s"$sk/$n"), false, f.getConf))
+    assert(api.StoreIO.vacuum(spark, sk) == ((2, 0)))
+    assert(new java.io.File(sk).list().sorted.toSeq == Seq("cms", "kmv"))
+    assert(api.SketchStore.distinctEstimate(spark, sk).as[(String, Long)].collect().toSeq ==
+      Seq(("en", 5L)))
+    assert(freq(sk, "hello")("hello") == 5L)
+    // a swap that died between its renames: only `<sketch>-old` is left
+    Seq("kmv", "cms").foreach(n =>
+      assert(new java.io.File(s"$sk/$n").renameTo(new java.io.File(s"$sk/$n-old"))))
+    assert(api.SketchStore.cmsGeometry(spark, sk) == ((4, 1024L)))
+    assert(freq(sk, "hello")("hello") == 5L)
+    noJobReplay("crashed SketchStore")(api.SketchStore.updateCms(langDocs(5L), sk, Some("b3")))
+    api.SketchStore.update(langDocs(6L), sk, Some("b4"))
+    assert(new java.io.File(sk).list().sorted.toSeq == Seq("cms", "kmv"))
+    assert(freq(sk, "hello")("hello") == 6L)
+    api.StoreIO.delete(spark, sk)
+  }
+
   test("the JSON ledger keeps the newest ledgerWindow ids") {
     val d = tmpDir("bounded")
     val hour = 3600000000L
@@ -317,10 +438,10 @@ class StoreMetadataSpec extends AnyFunSuite {
       .collect().sortBy(_._1).toSeq
     val want = state()
     assert(want == Seq(("a", 2L), ("b", 1L)))
-    val cursor = java.nio.file.Paths.get(s"$v/gen/cursor.json")
+    val record = java.nio.file.Paths.get(s"$v/gen/state.json")
     // not JSON at all, and valid JSON naming a non-struct type
     Seq("\"{not a schema\"", "\"\\\"integer\\\"\"").foreach { bad =>
-      java.nio.file.Files.writeString(cursor, s"""{"last_seq":1,"schema":$bad}""")
+      java.nio.file.Files.writeString(record, s"""{"applied":[],"last_seq":1,"schema":$bad}""")
       assert(state() == want, s"schema $bad")
       assert(api.MatView.cursor(spark, v) == 1L)
     }
