@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark. Prints ONE compact JSON line.
   *
@@ -77,16 +76,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-mode IO plumbing: no .crc shadow files, no /bin/chmod fork
-      // per created file (see graft.api.NioLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", classOf[graft.api.NioLocalFileSystem].getName)
-      .getOrCreate()
+    val spark = api.Sessions.minimal(api.Sessions.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM (codegen, parquet reader, shuffle paths) on the
     // flagship query so the first timed query doesn't absorb JIT cost;
@@ -102,9 +92,16 @@ object Bench {
     val names =
       if (sys.env.contains("SPARK_GRAFT_BENCH_ALL")) SparkEntry.queries.keys.toSeq.sorted
       else headline.filter(SparkEntry.queries.contains)
+    // a failure keeps its time-to-failure in the (contract-shaped) JSON
+    // line, so it is reported on stderr and listed in the dump file
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     def time(name: String): (String, Double) = {
       val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try { SparkEntry.queries(name)(spark, sfDir).count() }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        failed += name
+      }
       name -> (System.nanoTime() - t0) / 1e9
     }
     // load immunity (round-9 lesson: BENCH_r09 ran under driver-machine
@@ -166,9 +163,9 @@ object Bench {
       // Files.write throws on a bad path or full disk — a silently
       // truncated dump must never pass as complete baseline evidence
       java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        (all.sortBy(q => (-q._2, q._1)).map { case (k, v) =>
-          "\"" + k + "\":" + r3(v)
-        }.mkString("{", ",\n", "}") + "\n")
+        ((failed.map("\"" + _ + "\"").mkString("\"failed\":[", ",", "]") +:
+          all.sortBy(q => (-q._2, q._1)).map { case (k, v) => "\"" + k + "\":" + r3(v) })
+          .mkString("{", ",\n", "}") + "\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
     val out = line(keep, all.size - keep.size)

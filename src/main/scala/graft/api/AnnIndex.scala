@@ -180,7 +180,7 @@ object AnnIndex {
     */
   def search(assigned: DataFrame, centroids: DataFrame, probes: DataFrame,
       k: Int, nProbe: Int): DataFrame = {
-    graft.functions.CosineSimilarity.register(assigned.sparkSession)
+    graft.GraftExtensions.install(assigned.sparkSession)
     val cells = probeCells(probes, centroids, nProbe)
     val wTop = Window.partitionBy("p_id").orderBy(desc("sim"), col("vec_id"))
     assigned.join(broadcast(cells), "c_id")

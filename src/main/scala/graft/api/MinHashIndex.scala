@@ -36,7 +36,7 @@ object MinHashIndex {
     * the store can never drift from signatures computed fresh.
     */
   def signatures(docs: DataFrame): DataFrame = {
-    graft.functions.ShingleHashes.register(docs.sparkSession)
+    graft.GraftExtensions.install(docs.sparkSession)
     docs.where("size(split(lower(text), ' ')) >= 3")
       .select(col("doc_id"), expr("minhash_sig(shingle_hashes(text))").as("sig"))
   }

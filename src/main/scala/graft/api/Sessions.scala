@@ -4,11 +4,30 @@ import org.apache.spark.sql.SparkSession
 
 /** Opinionated session builders: the configuration surface that decides
   * whether the operator library survives 100 TB, collected in one place
-  * with the reasoning attached. Local test sessions (TestSpark, Verify,
-  * Bench) deliberately stay minimal; this is what a cluster deployment
-  * starts from.
+  * with the reasoning attached. [[production]] is what a cluster
+  * deployment starts from; [[minimal]] is the one minimal local session
+  * (the tests, `graft.Verify`, `graft.Bench` and the tools), and
+  * [[local]] is the production knobs on top of it.
   */
 object Sessions {
+
+  /** The mains' core count: `SPARK_GRAFT_CPUS`, 4 when unset. */
+  def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+
+  /** The minimal local session: `local[cores]`, one shuffle partition
+    * per core, UTC, no UI, and local-only I/O plumbing — `file://`
+    * without `.crc` shadow files and without Hadoop's
+    * fork-a-`/bin/chmod`-per-file permission fallback (see
+    * [[NioLocalFileSystem]]). A cluster run never takes this path; its
+    * data FS is HDFS/S3.
+    */
+  def minimal(cores: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
 
   /** Production defaults for a large cluster run.
     *
@@ -39,30 +58,24 @@ object Sessions {
   def production(
       appName: String,
       shufflePartitions: Int = 2048): SparkSession.Builder =
-    SparkSession.builder()
-      .appName(appName)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.files.maxPartitionBytes", (256L * 1024 * 1024).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+    SparkSession.builder().appName(appName).config(productionKnobs(shufflePartitions))
 
-  /** The same knobs scaled for a laptop/CI smoke run, plus local-only
-    * I/O plumbing: `file://` without `.crc` shadow files and without
-    * Hadoop's fork-a-`/bin/chmod`-per-file permission fallback (see
-    * [[NioLocalFileSystem]]) — a cluster run never takes this path, its
-    * data FS is HDFS/S3.
+  private def productionKnobs(shufflePartitions: Int): Map[String, Any] = Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    "spark.sql.files.maxPartitionBytes" -> (256L * 1024 * 1024).toString,
+    "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString,
+    "spark.sql.parquet.compression.codec" -> "zstd",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.cbo.enabled" -> "true",
+    "spark.sql.cbo.joinReorder.enabled" -> "true",
+    "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer")
+
+  /** The production knobs scaled for a laptop/CI smoke run, on top of
+    * [[minimal]].
     */
   def local(appName: String, cores: Int = 4): SparkSession.Builder =
-    production(appName, shufflePartitions = cores)
-      .master(s"local[$cores]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[NioLocalFileSystem].getName)
+    minimal(cores).appName(appName).config(productionKnobs(cores))
 }

@@ -149,8 +149,11 @@ object StoreIO {
   /** Commit the next generation of a ledgered store in ONE rename
     * ([[publishGen]] at `gen/`). A store without a table of its own
     * (AnnIndex, whose partitions are replay-overwritable in place)
-    * commits the ledger alone. Any legacy ledger or table directory is
-    * dropped once the generation holding its content has landed.
+    * commits the ledger alone. The first generation of a store in the
+    * legacy layout drops its legacy ledger and table directories once
+    * it has landed; later commits skip that sweep, since no reader
+    * consults the legacy paths once `gen` exists (so a leftover from a
+    * crash between the publish and the sweep is inert).
     */
   def commitGen(
       spark: SparkSession,
@@ -158,8 +161,9 @@ object StoreIO {
       applied: Seq[String],
       table: Option[(String, DataFrame)],
       fields: (String, Long)*): Unit = {
+    val first = !hasGenDir(spark, dir)
     publishGen(spark, s"$dir/gen", applied, table, fields)
-    (Seq("applied") ++ table.map(_._1)).foreach { n =>
+    if (first) (Seq("applied") ++ table.map(_._1)).foreach { n =>
       delete(spark, s"$dir/$n")
       delete(spark, s"$dir/$n-old")
     }

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** SQL access to Spark's runtime-filter Bloom expressions (Catalyst ships
   * them for its own InjectRuntimeFilter rule but does not register them
@@ -18,11 +16,6 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   * stay exact — false positives only reduce how much the filter prunes.
   */
 object BloomFunctions {
-  def register(spark: SparkSession): Unit = {
-    val fr = spark.sessionState.functionRegistry
-    fr.createOrReplaceTempFunction("bloom_agg",
-      exprs => new BloomFilterAggregate(exprs.head), "built-in")
-    fr.createOrReplaceTempFunction("bloom_might_contain",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-  }
+  /** Install the native functions ([[graft.GraftExtensions.install]]). */
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.install(spark)
 }

@@ -61,8 +61,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Idempotently register `cosine_sim(a, b)` for SQL/expr use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
+  /** Install the native functions ([[graft.GraftExtensions.install]]). */
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.install(spark)
 }

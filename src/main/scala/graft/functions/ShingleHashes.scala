@@ -121,11 +121,6 @@ case class SimHash32(child: Expression)
 }
 
 object ShingleHashes {
-  /** Idempotently register all three for SQL/expr use. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("shingle_hashes", e => ShingleHashes(e.head), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig", e => MinHashSig(e.head), "built-in")
-    reg.createOrReplaceTempFunction("simhash32", e => SimHash32(e.head), "built-in")
-  }
+  /** Install the native functions ([[graft.GraftExtensions.install]]). */
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.install(spark)
 }

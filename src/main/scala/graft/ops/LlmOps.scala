@@ -42,10 +42,7 @@ object LlmOps {
     * (same accumulation order; pinned by a test) but stays inside
     * whole-stage codegen with no per-row allocation.
     */
-  private def simCol(s: org.apache.spark.sql.SparkSession, a: String, b: String) = {
-    graft.functions.CosineSimilarity.register(s)
-    expr(s"cosine_sim($a, $b)")
-  }
+  private def simCol(a: String, b: String) = expr(s"cosine_sim($a, $b)")
 
   /** Same fold, DuckDB side (list_reduce is a sequential left-fold). */
   private def oDot(a: String, b: String): String =
@@ -502,7 +499,6 @@ object LlmOps {
     // overlap between unrelated documents near zero.
     Op("llm_dedup_minhash",
       (s, d) => {
-        graft.functions.ShingleHashes.register(s)
         val sigs = T.spread(T.t(s, d, "documents"))
           .where("size(split(lower(text), ' ')) >= 3")
           // JVM-native shingle-hash + signature (graft.functions): one eval
@@ -558,7 +554,6 @@ object LlmOps {
     // shuffle); candidate pairs are blocked on the top-16-bit prefix.
     Op("llm_dedup_simhash",
       (s, d) => {
-        graft.functions.ShingleHashes.register(s)
         val sh = T.spread(T.t(s, d, "documents"))
           .where("size(split(lower(text), ' ')) >= 3")
           // JVM-native shingle-hash + simhash (graft.functions): bit votes
@@ -716,7 +711,7 @@ object LlmOps {
     // broadcast.
     Op("llm_embedding_neardup",
       (s, d) => neardupCellCandidates(s, d)
-        .withColumn("sim", simCol(s, "e1", "e2"))
+        .withColumn("sim", simCol("e1", "e2"))
         .where(s"sim >= $neardupThr")
         .select("v1", "v2", "sim")
         .orderBy("v1", "v2"),
@@ -733,7 +728,7 @@ object LlmOps {
         val probe = emb.where("vec_id = 0").select(col("embedding").as("p_emb"))
         val scan = T.spread(emb)
         scan.where("vec_id <> 0").crossJoin(broadcast(probe))
-          .withColumn("sim", simCol(s, "embedding", "p_emb"))
+          .withColumn("sim", simCol("embedding", "p_emb"))
           .select("vec_id", "sim")
           .orderBy(desc("sim"), col("vec_id"))
           .limit(10)
@@ -749,7 +744,7 @@ object LlmOps {
           .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
         val w = Window.partitionBy("probe_id").orderBy(desc("sim"), col("neighbor_id"))
         emb.crossJoin(broadcast(probes)).where("vec_id <> probe_id")
-          .withColumn("sim", simCol(s, "embedding", "p_emb"))
+          .withColumn("sim", simCol("embedding", "p_emb"))
           .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("sim"))
           .withColumn("rn", row_number().over(w))
           .where("rn <= 3")
@@ -770,7 +765,7 @@ object LlmOps {
         val probe = emb.where("vec_id = 0")
           .select(col("embedding").as("p_emb"), col("label").as("p_label"))
         emb.join(broadcast(probe), col("label") === col("p_label") && col("vec_id") =!= 0)
-          .withColumn("sim", simCol(s, "embedding", "p_emb"))
+          .withColumn("sim", simCol("embedding", "p_emb"))
           .select("vec_id", "label", "sim")
           .orderBy(desc("sim"), col("vec_id"))
           .limit(5)
@@ -786,7 +781,6 @@ object LlmOps {
     // is one partition-pruned hash lookup, never a global cross join.
     Op("llm_ann_lsh",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val sigExpr =
           "aggregate(sequence(0, 7), 0, (acc, i) -> acc + CASE WHEN " +
             "aggregate(transform(sequence(0, 63), j -> CAST(element_at(embedding, j + 1) AS DOUBLE) * " +
@@ -819,7 +813,6 @@ object LlmOps {
     // appears.
     Op("llm_ann_refine",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val sigExpr =
           "aggregate(sequence(0, 7), 0, (acc, i) -> acc + CASE WHEN " +
             "aggregate(transform(sequence(0, 63), j -> CAST(element_at(embedding, j + 1) AS DOUBLE) * " +
@@ -1292,7 +1285,6 @@ object LlmOps {
     // lowest vec_id of each similar pair; reports per-cluster totals.
     Op("llm_semdedup",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val assigned = kmeansAssign(s, d)
         val pairs = assigned.as("x").join(assigned.as("y"),
             col("x.c_id") === col("y.c_id") && col("x.vec_id") < col("y.vec_id"))
@@ -1719,7 +1711,6 @@ object LlmOps {
     // candidate set never includes same-class vectors.
     Op("llm_hard_negatives",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val emb = T.t(s, d, "embeddings")
         val probes = emb.where("vec_id < 3")
           .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"),

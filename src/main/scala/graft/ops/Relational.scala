@@ -209,7 +209,6 @@ object Relational {
     // oracle-checked, unlike the sketch values themselves).
     Op("rel_join_bloom_prefilter",
       (s, d) => {
-        graft.functions.BloomFunctions.register(s)
         T.t(s, d, "orders").createOrReplaceTempView("orders")
         T.t(s, d, "customer").createOrReplaceTempView("customer")
         s.sql(

@@ -177,7 +177,6 @@ object Round10 {
     // neardup op's own oracle is the label-blocked ground truth.
     Op("llm_neardup_prune_audit",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         // one streaming aggregate over the LAZY candidate pipeline — never
         // materialize the pair frame (at 20x it is ~20M rows x 128 floats)
         val cand = LlmOps.neardupCellCandidates(s, d)

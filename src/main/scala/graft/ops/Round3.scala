@@ -651,7 +651,6 @@ object Round3 {
     // by probe id (bounded panel, fully parallel).
     Op("llm_ann_recall_audit",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val sigExpr =
           "aggregate(sequence(0, 7), 0, (acc, i) -> acc + CASE WHEN " +
             "aggregate(transform(sequence(0, 63), j -> CAST(element_at(embedding, j + 1) AS DOUBLE) * " +

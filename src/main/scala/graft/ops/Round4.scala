@@ -35,7 +35,6 @@ object Round4 {
     */
   private def minhashCandidates(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    graft.functions.ShingleHashes.register(s)
     val base = T.spread(T.t(s, d, "documents"))
       .where("size(split(lower(text), ' ')) >= 3")
       .select(col("doc_id"), expr("shingle_hashes(text)").as("ths"))
@@ -429,7 +428,6 @@ object Round4 {
     // the engine has a recall distribution, not a single anecdote.
     Op("llm_ann_ivf_recall_audit",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val emb = T.spread(T.t(s, d, "embeddings"))
         val probes = emb
           .withColumn("hkey", expr("substring(md5(CAST(vec_id AS STRING)), 1, 8)"))

@@ -100,7 +100,6 @@ object Round5 {
     // the production one, has a measured recall distribution.
     Op("llm_ann_ivf_trained_recall",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val emb = T.spread(T.t(s, d, "embeddings"))
         val cent = graft.api.AnnIndex.trainFor(s, d, k = 10, iters = 3)
         val assigned = graft.api.AnnIndex.assign(emb, cent)

@@ -81,7 +81,6 @@ object Round8 {
 
   /** Exact cosine top-k per probe: (p_id, id, cos_rank). */
   private def cosRank(emb: DataFrame, probes: DataFrame, topK: Int): DataFrame = {
-    graft.functions.CosineSimilarity.register(emb.sparkSession)
     val w = Window.partitionBy("p_id").orderBy(desc("sim"), col("vec_id"))
     emb.crossJoin(broadcast(probes)).where("vec_id <> p_id")
       .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))

@@ -243,7 +243,6 @@ object Round9b {
     // DuckDB's list_reduce left fold.
     Op("llm_mrl_recall",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val emb = T.t(s, d, "embeddings")
         val probes = emb.where("vec_id < 5")
           .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))

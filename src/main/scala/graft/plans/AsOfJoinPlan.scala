@@ -258,8 +258,8 @@ object AsOf {
   /** Join `left` to the matching `right` row per key ([[AsOfJoin]]
     * semantics); right columns in `payload` are appended (nullable).
     * `tiebreak` orders equal-ts right rows. Works on any session — the
-    * planner strategy is registered on the fly via `ExperimentalMethods`
-    * (sessions built with [[graft.GraftExtensions]] already have it).
+    * planner strategy and rules are installed on the fly
+    * ([[graft.GraftExtensions.install]]).
     *
     * @param direction "backward" (latest right ≤ left ts), "forward"
     *                  (earliest right ≥ left ts), or "nearest"
@@ -277,9 +277,7 @@ object AsOf {
       direction: String = "backward",
       tolerance: Option[Long] = None): DataFrame = {
     val spark: SparkSession = left.sparkSession
-    GraftSqlBridge.addStrategy(spark, AsOfJoinStrategy)
-    GraftSqlBridge.addOptimization(spark, AsOfPushdownRule)
-    GraftSqlBridge.addOptimization(spark, AsOfPruningRule)
+    graft.GraftExtensions.install(spark)
     val lPlan = GraftSqlBridge.analyzed(left)
     // Re-alias every right column so the right subtree carries fresh
     // exprIds: with a shared lineage (self-as-of) the analyzer's

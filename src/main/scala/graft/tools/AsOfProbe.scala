@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.plans.AsOf
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Head-to-head of the custom as-of merge exec vs the union+window
@@ -14,16 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object AsOfProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-mode IO plumbing: no .crc shadow files, no /bin/chmod fork
-      // per created file (see graft.api.NioLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", classOf[graft.api.NioLocalFileSystem].getName)
-      .getOrCreate()
+    val spark = graft.api.Sessions.minimal(graft.api.Sessions.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-clock breakdown of one registry query (optimization
   * triage: WHERE does a 3 s store op spend its time — how many Spark
@@ -16,16 +15,7 @@ import org.apache.spark.sql.SparkSession
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val Array(dir, keys @ _*) = args: @unchecked
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-mode IO plumbing: no .crc shadow files, no /bin/chmod fork
-      // per created file (see graft.api.NioLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", classOf[graft.api.NioLocalFileSystem].getName)
-      .getOrCreate()
+    val spark = graft.api.Sessions.minimal(graft.api.Sessions.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => }
     @volatile var jobs = List.empty[(Int, Long, Int, String)]

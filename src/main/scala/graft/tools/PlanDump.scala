@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `explain("formatted")` for selected registry queries to stdout
   * (source material for PLANS.md). Usage:
   *
@@ -9,16 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-mode IO plumbing: no .crc shadow files, no /bin/chmod fork
-      // per created file (see graft.api.NioLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", classOf[graft.api.NioLocalFileSystem].getName)
-      .getOrCreate()
+    val spark = graft.api.Sessions.minimal(graft.api.Sessions.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     args.foreach { k =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke: amplify the sf0.1 documents/embeddings tables (20x / 10x,
@@ -11,16 +10,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-mode IO plumbing: no .crc shadow files, no /bin/chmod fork
-      // per created file (see graft.api.NioLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", classOf[graft.api.NioLocalFileSystem].getName)
-      .getOrCreate()
+    val spark = graft.api.Sessions.minimal(graft.api.Sessions.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val big = "target/tmp/sfbig"
@@ -225,7 +215,7 @@ object ScaleProbe {
     // full corpus.
     {
       import org.apache.spark.sql.DataFrame
-      graft.functions.CosineSimilarity.register(spark)
+      graft.GraftExtensions.install(spark)
       val idxDir = "target/tmp/annmaint"
       org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(idxDir), true)

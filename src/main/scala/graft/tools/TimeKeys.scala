@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-key wall-clock probe on an arbitrary table dir — the local
   * triage companion to Bench (which always runs the full headline).
   * Usage:
@@ -11,23 +9,16 @@ import org.apache.spark.sql.SparkSession
   * Runs each key `reps` times in registry order and prints one PROBE
   * line per run, so warm-up effects and run-to-run variance are both
   * visible (the round-7 lesson: a contended driver run showed 12x on a
-  * query whose clean timing was flat).
+  * query whose clean timing was flat). With one key and many reps it is
+  * a `jstack` sampling target; its pid is printed after the warm-up.
   */
 object TimeKeys {
   def main(args: Array[String]): Unit = {
     val Array(dir, reps, keys @ _*) = args: @unchecked
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-mode IO plumbing: no .crc shadow files, no /bin/chmod fork
-      // per created file (see graft.api.NioLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl", classOf[graft.api.NioLocalFileSystem].getName)
-      .getOrCreate()
+    val spark = graft.api.Sessions.minimal(graft.api.Sessions.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => } // JIT warm
+    println(s"LOOPKEY_PID=${ProcessHandle.current().pid()}")
     for (rep <- 1 to reps.toInt; k <- keys) {
       val t0 = System.nanoTime()
       try {

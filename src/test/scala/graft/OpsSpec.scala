@@ -142,25 +142,71 @@ class OpsSpec extends AnyFunSuite {
     assert(pairs == Set((1L, 2L)))
   }
 
+  /** The graft functions (by `ExpressionInfo` class) in a session's registry. */
+  private def graftFunctions(s: org.apache.spark.sql.SparkSession): Set[String] = {
+    val reg = s.sessionState.functionRegistry
+    reg.listFunction().filter(reg.lookupFunction(_).exists(_.getClassName == "graft"))
+      .map(_.funcName).toSet
+  }
+
   test("GraftExtensions registers the native functions in a fresh session") {
     import org.apache.spark.sql.SparkSession
     val prev = spark // ensure base session exists first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val withExt = SparkSession.builder()
-        .master("local[2]").appName("graft-ext-test")
-        .config("spark.ui.enabled", "false")
+      val withExt = api.Sessions.minimal(4).appName("graft-ext-test")
         .withExtensions(new GraftExtensions).getOrCreate()
       val r = withExt.sql(
         "SELECT cosine_sim(array(CAST(1 AS FLOAT), CAST(0 AS FLOAT)), array(CAST(1 AS FLOAT), CAST(0 AS FLOAT))) AS s, " +
-        "simhash32(shingle_hashes('a b c d')) AS h").collect().head
+        "simhash32(shingle_hashes('a b c d')) AS h, " +
+        "bloom_might_contain((SELECT bloom_agg(xxhash64(id)) FROM range(10)), xxhash64(CAST(3 AS BIGINT))) AS b").collect().head
       assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
       assert(r.getLong(1) != 0L)
+      assert(r.getBoolean(2))
+      // the injected and the installed table are the same table
+      val installed = prev.newSession()
+      assert(graftFunctions(installed).isEmpty)
+      GraftExtensions.install(installed)
+      assert(graftFunctions(withExt) == graftFunctions(installed))
+      assert(graftFunctions(installed) == Set("cosine_sim", "shingle_hashes", "minhash_sig",
+        "simhash32", "bloom_agg", "bloom_might_contain"))
     } finally {
       SparkSession.setDefaultSession(prev)
       SparkSession.setActiveSession(prev)
     }
+  }
+
+  test("ops and entry points install the functions and as-of rules once, quietly") {
+    val fresh = spark.newSession() // no temp functions, no extra strategies
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-install-test", null, null, true, Array.empty) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        logged.add(e.getMessage.getFormattedMessage)
+    }
+    val root = org.apache.logging.log4j.LogManager.getRootLogger
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    appender.start()
+    root.addAppender(appender)
+    try {
+      for (_ <- 1 to 2; k <- Seq("llm_dedup_minhash", "rel_join_bloom_prefilter"))
+        Registry.byKey(k).query(fresh, sf)
+      val docs = fresh.read.parquet(s"$sf/documents.parquet")
+      assert(api.MinHashIndex.signatures(docs).count() > 0L)
+      val emb = fresh.read.parquet(s"$sf/embeddings.parquet").orderBy("vec_id")
+      val probes = emb.limit(2).select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))
+      val cells = emb.limit(1).select(lit(0).as("c_id"), col("embedding").as("c_vec"))
+      assert(api.AnnIndex.search(emb.withColumn("c_id", lit(0)), cells, probes, 2, 1).count() == 4L)
+      val ids = fresh.range(3).select(col("id").as("k"), col("id").as("ts"), col("id").as("v"))
+      assert(plans.AsOf.join(ids.drop("v"), ids, Seq("k"), "ts", "ts", Seq("v")).where("v = k")
+        .count() == 3L)
+    } finally { root.removeAppender(appender); appender.stop() }
+    val replaced = logged.toArray.filter(_.toString.contains("replaced a previously registered"))
+    assert(replaced.isEmpty, s"re-registrations logged: ${replaced.toSeq}")
+    val strategies = fresh.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .experimental.extraStrategies
+    assert(strategies.count(_ == plans.AsOfJoinStrategy) == 1, s"strategies: $strategies")
   }
 
   test("codegen CosineSimilarity is bit-identical to the declarative fold") {

@@ -15,8 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * and touched-bucket sets run no job of their own; per-commit schemas
   * read exactly like the merged footer read; the JSON ledger is bounded
   * and folds legacy parquet ledgers and the earlier SketchStore and
-  * MatView layouts in; a recorded schema that cannot be parsed falls
-  * back to inference; between batches, commit order wins.
+  * MatView layouts in, and only a store's first generation sweeps the
+  * legacy paths; a recorded schema that cannot be parsed falls back to
+  * inference; between batches, commit order wins.
   */
 class StoreMetadataSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -412,6 +413,33 @@ class StoreMetadataSpec extends AnyFunSuite {
     api.StoreIO.delete(spark, sk)
   }
 
+  test("only a store's first generation sweeps the legacy paths") {
+    val abs = new java.io.File(tmpDir("sweep")).getAbsolutePath
+    val dir = s"rec://$abs" // the local FS, recording every delete
+    spark.sparkContext.hadoopConfiguration.set("fs.rec.impl", classOf[DeleteRecordingFs].getName)
+    val legacy = Seq("applied", "applied-old", "t", "t-old")
+    def plantLegacy(): Unit = legacy.foreach(n => assert(new java.io.File(s"$abs/$n").mkdirs()))
+    def commit(ids: String*): Seq[String] = {
+      DeleteRecordingFs.deletes.clear()
+      api.StoreIO.commitGen(spark, dir, ids, Some("t" -> Seq(1L, 2L).toDF("k")))
+      DeleteRecordingFs.deletes.asScala.toSeq
+    }
+    plantLegacy()
+    commit("b1")
+    legacy.foreach(n => assert(!exists(s"$abs/$n"), s"first generation kept $n"))
+    // once `gen` exists, a commit deletes only inside its own swap, and
+    // legacy leftovers are inert: nothing reads them
+    plantLegacy()
+    val deletes = commit("b1", "b2")
+    assert(deletes.contains(s"$abs/gen-old"), s"deletes: $deletes")
+    val outside = deletes.filterNot(p => p == s"$abs/gen-old" || p.startsWith(s"$abs/gen-staged-"))
+    assert(outside.isEmpty, s"deletes outside the swap: $outside")
+    legacy.foreach(n => assert(exists(s"$abs/$n")))
+    assert(ledger(dir) == Seq("b1", "b2"))
+    assert(api.StoreIO.readTable(spark, dir, "t").count() == 2L)
+    api.StoreIO.delete(spark, abs)
+  }
+
   test("the JSON ledger keeps the newest ledgerWindow ids") {
     val d = tmpDir("bounded")
     val hour = 3600000000L
@@ -475,3 +503,11 @@ class StoreMetadataSpec extends AnyFunSuite {
     api.StoreIO.delete(spark, base)
   }
 }
+
+/** `rec://`: the local filesystem, recording the path of every delete. */
+class DeleteRecordingFs extends api.NioRawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("rec:///")
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    DeleteRecordingFs.deletes.add(p.toUri.getPath) && super.delete(p, recursive)
+}
+object DeleteRecordingFs { val deletes = new java.util.concurrent.ConcurrentLinkedQueue[String]() }

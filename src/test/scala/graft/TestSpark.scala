@@ -5,17 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local-mode IO plumbing: no .crc shadow files, no /bin/chmod fork
-      // per created file (see graft.api.NioLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.api.NioLocalFileSystem].getName)
-      .getOrCreate()
+    val s = api.Sessions.minimal(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
