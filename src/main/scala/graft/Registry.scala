@@ -9,11 +9,9 @@ import graft.ops._
   */
 object Registry {
   val all: Seq[Op] =
-    (Sources.ops ++ CoreOps.ops ++ Relational.ops ++ Functions.ops ++
-      StreamingOps.ops ++ LlmOps.ops ++ Multimodal.ops ++ Round3.ops ++ Round4.ops ++
-      Round5.ops ++ Round5b.ops ++ Round7.ops ++ Round8.ops ++ Round8b.ops ++
-      EventOps.ops ++ Round9.ops ++ Round9b.ops ++ Round9c.ops ++ Round10.ops ++
-      Round11.ops ++ Round12.ops).map { o =>
+    (Sources.ops ++ CoreOps.ops ++ StoreOps.ops ++ Relational.ops ++
+      Analytics.ops ++ EventOps.ops ++ Functions.ops ++ StreamingOps.ops ++
+      LlmDedup.ops ++ LlmText.ops ++ LlmVectors.ops ++ Multimodal.ops).map { o =>
       o.copy(query = (s, d) => { GraftExtensions.install(s); o.query(s, d) })
     }
 

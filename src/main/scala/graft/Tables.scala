@@ -69,6 +69,19 @@ object Tables {
     }
   }
 
+  /** `events` with a 1e-6 fixed-point `value` (`v`) and epoch-microsecond
+    * `ts` (`us`): the event-family projection. Its DuckDB twin is [[oEv]].
+    */
+  def eventsFp(s: SparkSession, d: String): DataFrame =
+    events(s, d).select(col("event_type"), col("user_id"), col("event_id"),
+      expr("unix_micros(CAST(ts AS TIMESTAMP))").as("us"),
+      expr("CAST(floor(value * 1000000) AS BIGINT)").as("v"))
+
+  /** DuckDB CTE `ev`: the same fixed-point event frame. */
+  val oEv: String =
+    "ev AS (SELECT event_type, user_id, event_id, epoch_us(ts) AS us, " +
+      "CAST(floor(value * 1000000) AS BIGINT) AS v FROM events)"
+
   /** Register temp views for spark.sql-authored operators. */
   def views(spark: SparkSession, dir: String): Unit = {
     plainNames.foreach(n => t(spark, dir, n).createOrReplaceTempView(n))
@@ -99,4 +112,18 @@ object Tables {
     s"CAST(ROUND(SUM(CAST($e AS DECIMAL(18,4))),2) AS DOUBLE)"
   def oAvg(e: String): String =
     s"CAST(ROUND(AVG(CAST($e AS DECIMAL(18,4))),2) AS DOUBLE)"
+
+  /** 60-bit md5 prefix hash of `e` — the house portable hash: Spark
+    * `conv(hex,16,10)`, DuckDB `'0x'||hex` cast ([[oH60]]), identical value.
+    */
+  def h60(e: String): String =
+    s"CAST(conv(substring(md5($e), 1, 15), 16, 10) AS BIGINT)"
+  def oH60(e: String): String =
+    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
+
+  /** 32-bit md5 prefix (bucket hashing), Spark and DuckDB sides. */
+  def h32(e: String): String =
+    s"CAST(conv(substring(md5($e), 1, 8), 16, 10) AS BIGINT)"
+  def oH32(e: String): String =
+    s"CAST(concat('0x', substr(md5($e), 1, 8)) AS BIGINT)"
 }

@@ -86,7 +86,7 @@ object SketchStore {
 
   /** CMS counter rows of a batch (shared builder with the operator). */
   def cmsOf(docs: DataFrame, width: Long = DefaultWidth): DataFrame =
-    graft.ops.Round7.cmsCounters(docs, width)
+    graft.ops.LlmText.cmsCounters(docs, width)
 
   /** KMV estimate of the corpus' distinct whitespace-token count — the
     * cardinality input to [[cmsWidthFor]]. One bounded sketch row comes

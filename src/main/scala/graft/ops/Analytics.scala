@@ -1,104 +1,19 @@
 package graft.ops
 
 import graft.{Op, Tables => T}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Round-8 second batch: DATA-QUALITY, GOVERNANCE, AND SELF-MEASURING
-  * ANALYTICS — the "is the data I'm about to train on actually sound"
-  * pass (FK integrity, expectations, ingestion gaps, masking), the
-  * approximate-query estimators that ship their own error (uniform +
-  * stratified sampling, bitmap distinct), and the statistics an
-  * experimentation/monitoring platform runs on the event stream
-  * (Welch t, CUPED, attribution, KS/PSI drift, MASE backtest,
-  * Kaplan-Meier, MAD anomalies, Gini).
+/** Statistical analytics over the relational and event tables:
+  * forecasting, A/B tests, drift tests, anomaly detection, estimation
+  * from samples, segmentation and concentration measures.
   *
-  * FILE-WIDE DETERMINISM RULE, learned the hard way (see
-  * rel_survival_km): no raw double is ever accumulated — not in an
-  * aggregate, not even in an ordered window whose evaluation order
-  * both engines define. Every double reduction is either a single
-  * closed-form expression over already-aggregated integers (identical
-  * IEEE tree on both engines) or quantized to fixed point BEFORE the
-  * sum. Running ln() doubles through a window cumsum drifted 1 ulp
-  * between Spark and DuckDB at sf0.01 and flipped a floor().
-  *
-  * 100-TB design notes, per op:
-  *
-  * - `core_fk_integrity`: every edge aggregates the CHILD side to
-  *   distinct keys FIRST and anti-joins the compact (key, count)
-  *   frame against the parent — the anti-join input is |distinct keys|
-  *   rows, not |child rows|, so a 100-TB lineitem probes orders with a
-  *   frame ~1000x smaller than itself and the counts ride along as
-  *   map-side partials.
-  * - `core_dq_expectations`: the whole expectation panel is ONE global
-  *   conditional aggregate — a single scan, no shuffle wider than one
-  *   row of counters (the uniqueness expectation adds the one distinct
-  *   aggregate the semantics genuinely require).
-  * - `rel_anomaly_mad`: exact median/MAD without sorting raw rows —
-  *   the heavy aggregate is keyed (event_type, value_fp), a
-  *   high-cardinality well-distributed key; only the COMPRESSED
-  *   value-frequency histogram flows through the per-type ordered
-  *   window, and the MAD pass re-groups that histogram, never the raw
-  *   events. A naive percentile over a 5-value partition key would put
-  *   the whole corpus in 5 tasks; this shape never does.
-  * - `rel_rolling_regression`: one hash exchange on user_id serves the
-  *   row-numbering window and all five rolling sums; the final top-20
-  *   is TakeOrdered (no global sort). All sums are integer fixed-point
-  *   so both engines agree bit-for-bit.
+  * Parity: doubles aggregate through DECIMAL or 1e-6 fixed point, floors
+  * carry the +1e-6 epsilon guard, ranks are tie-broken injectively.
   */
-object Round8b {
-
-  // ---- core_fk_integrity ------------------------------------------------
-
-  /** Audit one FK edge. `childKeys`/`parentKeys` each carry a single
-    * BIGINT column `k`. NULL FKs are excluded (a nullable FK is not a
-    * violation); the child aggregates to (k, count) before the anti
-    * join, so the probe frame is distinct-key-sized.
-    */
-  private def fkEdge(name: String, childKeys: DataFrame,
-      parentKeys: DataFrame): DataFrame = {
-    val g = childKeys.where(col("k").isNotNull)
-      .groupBy("k").agg(count(lit(1)).as("c"))
-    val t = g.agg(coalesce(sum("c"), lit(0L)).as("child_rows"),
-      count(lit(1)).as("child_keys"))
-    val o = g.join(parentKeys.where(col("k").isNotNull), Seq("k"), "left_anti")
-      .agg(coalesce(sum("c"), lit(0L)).as("orphan_rows"),
-        count(lit(1)).as("orphan_keys"))
-    t.crossJoin(broadcast(o)).select(lit(name).as("edge"),
-      col("child_rows"), col("child_keys"), col("orphan_rows"), col("orphan_keys"))
-  }
-
-  /** Seeded orphan keys (the synthetic star schema is FK-consistent, so
-    * without these every edge reports 0/0 and the driver compare would
-    * never exercise the violation path). Three lineitem order-orphans
-    * over two keys, one part orphan, one supplier orphan, two customer
-    * orphans over one key; the nation edge stays clean to pin the
-    * zero path. The oracle unions the identical literals.
-    */
-  private def seed(s: SparkSession, ks: Seq[Long]): DataFrame =
-    s.sql(s"SELECT CAST(v AS BIGINT) AS k FROM VALUES ${ks.map(k => s"($k)").mkString(",")} t(v)")
-
-  private def oSeed(ks: Seq[Long]): String =
-    ks.map(k => s" UNION ALL SELECT CAST($k AS BIGINT)").mkString
-
-  private def oEdge(i: Int, name: String, childCol: String, childTable: String,
-      seeds: Seq[Long], parentCol: String, parentTable: String): String =
-    s"c$i AS (SELECT $childCol AS k FROM $childTable${oSeed(seeds)}), " +
-      s"g$i AS (SELECT k, count(*) AS c FROM c$i WHERE k IS NOT NULL GROUP BY 1), " +
-      s"t$i AS (SELECT CAST(coalesce(SUM(c), 0) AS BIGINT) AS child_rows, " +
-      s"count(*) AS child_keys FROM g$i), " +
-      s"o$i AS (SELECT CAST(coalesce(SUM(c), 0) AS BIGINT) AS orphan_rows, " +
-      s"count(*) AS orphan_keys FROM g$i WHERE NOT EXISTS " +
-      s"(SELECT 1 FROM $parentTable p WHERE p.$parentCol = g$i.k)), " +
-      s"e$i AS (SELECT '$name' AS edge, t$i.*, o$i.* FROM t$i, o$i)"
-
-  private val fkEdges: Seq[(String, String, String, Seq[Long], String, String)] = Seq(
-    ("lineitem.l_orderkey->orders", "l_orderkey", "lineitem", Seq(-7L, -7L, -8L), "o_orderkey", "orders"),
-    ("lineitem.l_partkey->part", "l_partkey", "lineitem", Seq(-7L), "p_partkey", "part"),
-    ("lineitem.l_suppkey->supplier", "l_suppkey", "lineitem", Seq(-7L), "s_suppkey", "supplier"),
-    ("orders.o_custkey->customer", "o_custkey", "orders", Seq(-9L, -9L), "c_custkey", "customer"),
-    ("customer.c_nationkey->nation", "c_nationkey", "customer", Seq(), "n_nationkey", "nation"))
+object Analytics {
 
   // ---- rel_anomaly_mad --------------------------------------------------
 
@@ -115,7 +30,7 @@ object Round8b {
     * event type), safe to broadcast anywhere.
     */
   private[graft] def madThresholds(s: SparkSession, d: String): DataFrame =
-    madOf(eventsFp(s, d).select("event_type", "v"))
+    madOf(T.eventsFp(s, d).select("event_type", "v"))
 
   /** The histogram median/MAD pipeline over any (event_type, v) frame —
     * separated from the table loader so property tests can drive it
@@ -148,7 +63,7 @@ object Round8b {
 
   /** Histogram frame `h` again, for consumers needing the raw counts. */
   private def valueHistogram(s: SparkSession, d: String): DataFrame =
-    eventsFp(s, d).select("event_type", "v")
+    T.eventsFp(s, d).select("event_type", "v")
       .groupBy("event_type", "v").agg(count(lit(1)).as("c"))
 
   /** DuckDB twin of [[madThresholds]]: CTEs ending in `md(event_type,
@@ -180,6 +95,7 @@ object Round8b {
     "CAST(conv(substring(md5(concat(CAST(l_orderkey AS STRING), ':', " +
       "CAST(l_linenumber AS STRING), ':', CAST(l_partkey AS STRING), ':', " +
       "CAST(l_suppkey AS STRING))), 1, 8), 16, 10) AS BIGINT)"
+
   private val oRowHash =
     "CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', " +
       "CAST(l_linenumber AS VARCHAR), ':', CAST(l_partkey AS VARCHAR), ':', " +
@@ -194,7 +110,7 @@ object Round8b {
     * distinct values, never raw rows.
     */
   private def driftHistogram(s: SparkSession, d: String): DataFrame = {
-    val ev = eventsFp(s, d).select("event_type", "us", "v")
+    val ev = T.eventsFp(s, d).select("event_type", "us", "v")
     val b = ev.agg(expr("min(us) + (max(us) - min(us)) div 2").as("mid"))
     ev.crossJoin(broadcast(b))
       .groupBy("event_type", "v").agg(
@@ -213,93 +129,7 @@ object Round8b {
       "CAST(count_if(us >= b.mid) AS BIGINT) AS cb " +
       "FROM ev, b GROUP BY 1, 2)"
 
-  // ---- shared fixed-point event frame ----------------------------------
-
-  private def eventsFp(s: SparkSession, d: String): DataFrame =
-    T.events(s, d).select(col("event_type"), col("user_id"), col("event_id"),
-      expr("unix_micros(CAST(ts AS TIMESTAMP))").as("us"),
-      expr("CAST(floor(value * 1000000) AS BIGINT)").as("v"))
-
   val ops: Seq[Op] = Seq(
-
-    // Referential-integrity audit over the star schema's FK edges:
-    // per edge, total child rows/keys and orphan rows/keys (child FK
-    // values with no parent). The child aggregates to distinct keys
-    // BEFORE the anti join (see object doc); dim-sized parents
-    // (nation) resolve as broadcast anti-joins, fact-sized parents as
-    // shuffled ones — exactly what a 1000-executor plan wants.
-    Op("core_fk_integrity",
-      (s, d) => {
-        fkEdges.map { case (name, cc, ct, seeds, pc, pt) =>
-          val child0 = T.t(s, d, ct).select(col(cc).as("k"))
-          val child = if (seeds.isEmpty) child0 else child0.unionByName(seed(s, seeds))
-          fkEdge(name, child, T.t(s, d, pt).select(col(pc).as("k")))
-        }.reduce(_ unionByName _).orderBy("edge")
-      },
-      Some("WITH " +
-        fkEdges.zipWithIndex.map { case ((name, cc, ct, seeds, pc, pt), i) =>
-          oEdge(i, name, cc, ct, seeds, pc, pt)
-        }.mkString(", ") +
-        " SELECT * FROM (" +
-        fkEdges.indices.map(i => s"SELECT * FROM e$i").mkString(" UNION ALL ") +
-        ") ORDER BY edge")),
-
-    // Declarative data-quality expectation panel (the Deequ /
-    // Great-Expectations shape): completeness, range, set-membership,
-    // positivity, and key-uniqueness checks over lineitem, all
-    // evaluated in ONE scan as conditional aggregates, reported as
-    // integer ppm against a declared threshold. Two expectations
-    // genuinely FAIL on the synthetic data (discount<=5% holds for
-    // only ~55% of rows; (l_orderkey, l_linenumber) is not unique), so
-    // the fail path is exercised with real measured ratios.
-    Op("core_dq_expectations",
-      (s, d) => {
-        T.t(s, d, "lineitem").agg(
-          count(lit(1)).as("n"),
-          count(col("l_quantity")).as("qty_nn"),
-          expr("count_if(l_discount >= 0 AND l_discount <= 0.1)").as("disc_rng"),
-          expr("count_if(l_returnflag IN ('A','N','R'))").as("rf_set"),
-          expr("count_if(CAST(l_shipdate AS DATE) >= DATE '1994-01-01' AND " +
-            "CAST(l_shipdate AS DATE) < DATE '2003-01-01')").as("ship_rng"),
-          expr("count_if(l_extendedprice > 0)").as("price_pos"),
-          expr("count_if(l_discount <= 0.05)").as("disc_low"),
-          // injective integer pair key (TPC-H pins l_linenumber in 1..7):
-            // no per-row string concat/alloc on the 100-TB scan
-            countDistinct(expr("l_orderkey * 10 + l_linenumber")).as("ol_keys"))
-        .select(expr("stack(7, " +
-          "'completeness_quantity', CAST(qty_nn * 1000000 div greatest(1, n) AS BIGINT), CAST(1000000 AS BIGINT), " +
-          "'range_discount', CAST(disc_rng * 1000000 div greatest(1, n) AS BIGINT), CAST(1000000 AS BIGINT), " +
-          "'set_returnflag', CAST(rf_set * 1000000 div greatest(1, n) AS BIGINT), CAST(1000000 AS BIGINT), " +
-          "'window_shipdate', CAST(ship_rng * 1000000 div greatest(1, n) AS BIGINT), CAST(1000000 AS BIGINT), " +
-          "'positive_price', CAST(price_pos * 1000000 div greatest(1, n) AS BIGINT), CAST(1000000 AS BIGINT), " +
-          "'discount_le_5pct', CAST(disc_low * 1000000 div greatest(1, n) AS BIGINT), CAST(990000 AS BIGINT), " +
-          "'unique_orderline', CAST(ol_keys * 1000000 div greatest(1, n) AS BIGINT), CAST(1000000 AS BIGINT)" +
-          ") AS (expectation, metric_ppm, threshold_ppm)"))
-        .withColumn("ok", col("metric_ppm") >= col("threshold_ppm"))
-        .orderBy("expectation")
-      },
-      Some("WITH m AS (SELECT count(*) AS n, count(l_quantity) AS qty_nn, " +
-        "count_if(l_discount >= 0 AND l_discount <= 0.1) AS disc_rng, " +
-        "count_if(l_returnflag IN ('A','N','R')) AS rf_set, " +
-        "count_if(CAST(l_shipdate AS DATE) >= DATE '1994-01-01' AND " +
-        "CAST(l_shipdate AS DATE) < DATE '2003-01-01') AS ship_rng, " +
-        "count_if(l_extendedprice > 0) AS price_pos, " +
-        "count_if(l_discount <= 0.05) AS disc_low, " +
-        "count(DISTINCT l_orderkey * 10 + l_linenumber) AS ol_keys FROM lineitem), " +
-        "p AS (" + Seq(
-          ("completeness_quantity", "qty_nn", 1000000),
-          ("range_discount", "disc_rng", 1000000),
-          ("set_returnflag", "rf_set", 1000000),
-          ("window_shipdate", "ship_rng", 1000000),
-          ("positive_price", "price_pos", 1000000),
-          ("discount_le_5pct", "disc_low", 990000),
-          ("unique_orderline", "ol_keys", 1000000)).map { case (nm, c, thr) =>
-            s"SELECT '$nm' AS expectation, " +
-              s"CAST($c * 1000000 // greatest(1, n) AS BIGINT) AS metric_ppm, " +
-              s"CAST($thr AS BIGINT) AS threshold_ppm FROM m"
-          }.mkString(" UNION ALL ") + ") " +
-        "SELECT expectation, metric_ppm, threshold_ppm, " +
-        "metric_ppm >= threshold_ppm AS ok FROM p ORDER BY expectation")),
 
     // Robust per-type anomaly detection: exact (lower-)median and MAD
     // via a value-frequency histogram — never a sort of raw rows, never
@@ -326,28 +156,6 @@ object Round8b {
         "CAST(n_outliers * 1000000 // greatest(1, md.n) AS BIGINT) AS outlier_ppm " +
         "FROM md JOIN mad USING(event_type) JOIN outl USING(event_type) ORDER BY event_type")),
 
-    // Train-batch / serve-stream anomaly gating, batch-equivalent form:
-    // the SAME madThresholds frame the batch report computes becomes
-    // the broadcast static side of an alert gate, and alerts roll up
-    // per hour x type — the dashboard a production monitor tails. The
-    // Structured Streaming twin (Streams.anomalyAlerts) applies one
-    // shared gate helper to a live stream with these offline-trained
-    // thresholds; parity is pinned in StreamingParitySpec, so the
-    // monitor and the offline analysis cannot disagree on what an
-    // anomaly is.
-    Op("strm_anomaly_alerts",
-      (s, d) => graft.streaming.Streams.anomalyAlerts(
-        T.events(s, d).select("event_type", "ts", "value"),
-        madThresholds(s, d).select("event_type", "med", "mad"))
-        .withColumn("bucket", expr("CAST(bucket AS TIMESTAMP_NTZ)"))
-        .orderBy("bucket", "event_type"),
-      Some(s"WITH $oMadCtes " +
-        "SELECT date_trunc('hour', e.ts) AS bucket, e.event_type, count(*) AS n_alerts " +
-        "FROM events e JOIN md ON e.event_type = md.event_type " +
-        "JOIN mad ON e.event_type = mad.event_type " +
-        "WHERE abs(CAST(floor(e.value * 1000000) AS BIGINT) - md.med) > 5 * mad.mad " +
-        "GROUP BY 1, 2 ORDER BY 1, 2")),
-
     // Trailing-window OLS trend per user: the slope of value vs event
     // index over the last 8 events, integer fixed-point throughout
     // (x = per-user row number — slope is shift-invariant, so the
@@ -359,7 +167,7 @@ object Round8b {
       (s, d) => {
         val wOrd = Window.partitionBy("user_id").orderBy("us", "event_id")
         val wi = wOrd.rowsBetween(-7, 0)
-        eventsFp(s, d).select(col("user_id"), col("event_id"), col("us"), col("v").as("y"))
+        T.eventsFp(s, d).select(col("user_id"), col("event_id"), col("us"), col("v").as("y"))
           .withColumn("x", row_number().over(wOrd).cast("bigint"))
           .select(col("user_id"), col("event_id"),
             count(lit(1)).over(wi).as("wn"),
@@ -474,99 +282,6 @@ object Round8b {
         "CAST(abs(coalesce(sum_s * 64 // rt.k, 0) - exact_sum) * 1000000 // greatest(1, exact_sum) AS BIGINT) AS err_ppm " +
         "FROM ex JOIN rt ON ex.g = rt.g LEFT JOIN sm ON ex.g = sm.g ORDER BY ex.g")),
 
-    // Exact distinct counting via fixed-size bitmaps (the modern
-    // high-cardinality trick): bitmap_bucket_number partitions the key
-    // space into 4KB segments, bitmap_construct_agg ORs bits per
-    // (group, bucket) with map-side partials, and the final count is a
-    // sum of per-segment popcounts. The shuffle carries fixed 4KB
-    // bitmaps instead of raw keys, and huge distinct sets parallelize
-    // across buckets — count(DISTINCT) semantics at a fraction of the
-    // state. Oracle = plain COUNT(DISTINCT): the equality IS the test.
-    Op("rel_agg_bitmap_distinct",
-      (s, d) => {
-        T.views(s, d)
-        s.sql("SELECT g, CAST(SUM(cnt) AS BIGINT) AS distinct_parts FROM (" +
-          "SELECT l_returnflag AS g, bitmap_bucket_number(l_partkey) AS b, " +
-          "bitmap_count(bitmap_construct_agg(bitmap_bit_position(l_partkey))) AS cnt " +
-          "FROM lineitem GROUP BY 1, 2) GROUP BY g ORDER BY g")
-      },
-      Some("SELECT l_returnflag AS g, CAST(count(DISTINCT l_partkey) AS BIGINT) " +
-        "AS distinct_parts FROM lineitem GROUP BY 1 ORDER BY 1")),
-
-    // Ingestion-gap monitor: which hourly buckets received ZERO events
-    // per type, how many, and the longest consecutive outage run — the
-    // data-loss dashboard every feed needs. The heavy side is one
-    // distinct (type, hour) aggregate of the corpus (well-distributed
-    // key, map-side combinable); the hour x type grid it anti-joins is
-    // calendar-sized (a decade is <90k hours), so the gap analysis
-    // itself never touches raw events. Gap runs via the integer
-    // islands trick (hour index minus rank), engine-identical.
-    Op("core_ingest_gap_report",
-      (s, d) => {
-        val ev = T.events(s, d)
-        val eh = ev.select(col("event_type"),
-          expr("CAST(date_trunc('hour', ts) AS TIMESTAMP_NTZ)").as("h")).distinct()
-          .localCheckpoint()
-        val b = ev.agg(
-          expr("CAST(date_trunc('hour', min(ts)) AS TIMESTAMP_NTZ)").as("mn"),
-          expr("CAST(date_trunc('hour', max(ts)) AS TIMESTAMP_NTZ)").as("mx"))
-        val hrs = b.select(explode(expr("sequence(mn, mx, INTERVAL 1 HOUR)")).as("h"))
-        val types = eh.select("event_type").distinct()
-        val miss = hrs.crossJoin(broadcast(types))
-          .join(eh, Seq("event_type", "h"), "left_anti")
-        val runs = miss
-          .withColumn("grp", expr("unix_micros(CAST(h AS TIMESTAMP)) div 3600000000 - " +
-            "row_number() OVER (PARTITION BY event_type ORDER BY h)"))
-          .groupBy("event_type", "grp").agg(count(lit(1)).as("run"))
-        val perType = miss.groupBy("event_type")
-          .agg(count(lit(1)).as("n_hours_empty"), min("h").as("first_empty_hour"))
-        val maxGap = runs.groupBy("event_type").agg(max("run").as("max_gap_hours"))
-        val tot = hrs.agg(count(lit(1)).as("n_hours_total"))
-        types.crossJoin(broadcast(tot))
-          .join(perType, Seq("event_type"), "left")
-          .join(maxGap, Seq("event_type"), "left")
-          .select(col("event_type"), col("n_hours_total"),
-            expr("CAST(coalesce(n_hours_empty, 0) AS BIGINT)").as("n_hours_empty"),
-            expr("CAST(coalesce(max_gap_hours, 0) AS BIGINT)").as("max_gap_hours"),
-            col("first_empty_hour"))
-          .orderBy("event_type")
-      },
-      Some("WITH eh AS (SELECT DISTINCT event_type, date_trunc('hour', ts) AS h FROM events), " +
-        "b AS (SELECT date_trunc('hour', min(ts)) AS mn, date_trunc('hour', max(ts)) AS mx FROM events), " +
-        "hrs AS (SELECT unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS h FROM b), " +
-        "t AS (SELECT DISTINCT event_type FROM eh), " +
-        "miss AS (SELECT t.event_type, hrs.h FROM hrs, t WHERE NOT EXISTS " +
-        "(SELECT 1 FROM eh WHERE eh.event_type = t.event_type AND eh.h = hrs.h)), " +
-        "mi AS (SELECT event_type, h, epoch_us(h) // 3600000000 - " +
-        "row_number() OVER (PARTITION BY event_type ORDER BY h) AS grp FROM miss), " +
-        "runs AS (SELECT event_type, grp, count(*) AS run FROM mi GROUP BY 1, 2), " +
-        "mg AS (SELECT event_type, max(run) AS max_gap_hours FROM runs GROUP BY 1), " +
-        "pt AS (SELECT event_type, count(*) AS n_hours_empty, min(h) AS first_empty_hour " +
-        "FROM miss GROUP BY 1), " +
-        "tot AS (SELECT count(*) AS n_hours_total FROM hrs) " +
-        "SELECT t.event_type, tot.n_hours_total, " +
-        "CAST(coalesce(pt.n_hours_empty, 0) AS BIGINT) AS n_hours_empty, " +
-        "CAST(coalesce(mg.max_gap_hours, 0) AS BIGINT) AS max_gap_hours, pt.first_empty_hour " +
-        "FROM t CROSS JOIN tot LEFT JOIN pt ON t.event_type = pt.event_type " +
-        "LEFT JOIN mg ON t.event_type = mg.event_type ORDER BY t.event_type")),
-
-    // Data-governance masking: PII columns leave the trust boundary as
-    // deterministic md5 tokens (equality- and join-preserving — the
-    // masked key still groups/joins identically, pinned in spec) and
-    // quasi-identifiers are generalized (balances to 100-unit buckets)
-    // — the share-with-analysts projection. Everything is a codegen'd
-    // per-row projection: no shuffle, no state, scales linearly.
-    Op("core_column_mask",
-      (s, d) => T.t(s, d, "customer")
-        .select(col("c_custkey"),
-          expr("concat('cust_', substring(md5(c_name), 1, 12))").as("masked_name"),
-          expr("CAST(floor(c_acctbal / 100) * 100 AS DOUBLE)").as("acct_bucket"),
-          col("c_mktsegment"), col("c_nationkey"))
-        .orderBy("c_custkey"),
-      Some("SELECT c_custkey, concat('cust_', substr(md5(c_name), 1, 12)) AS masked_name, " +
-        "CAST(floor(c_acctbal / 100) * 100 AS DOUBLE) AS acct_bucket, " +
-        "c_mktsegment, c_nationkey FROM customer ORDER BY c_custkey")),
-
     // A/B experiment readout: users md5-hash into control/treatment
     // (derandomized — assignment survives restarts and engines agree),
     // and a Welch t-statistic per event type over PER-USER totals: the
@@ -581,7 +296,7 @@ object Round8b {
     // identical IEEE tree.
     Op("rel_ab_welch_ttest",
       (s, d) => {
-        eventsFp(s, d)
+        T.eventsFp(s, d)
           .withColumn("arm", expr(
             "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 2"))
           .groupBy("event_type", "user_id", "arm")
@@ -644,7 +359,7 @@ object Round8b {
     // aggregate and a 2-row arm rollup.
     Op("rel_ab_cuped",
       (s, d) => {
-        val ev = eventsFp(s, d).select(col("user_id"), col("us"),
+        val ev = T.eventsFp(s, d).select(col("user_id"), col("us"),
           expr("v div 1000").as("v3"))
         val b = ev.agg(expr("min(us) + (max(us) - min(us)) div 2").as("mid"))
         val pu = ev.crossJoin(broadcast(b)).groupBy("user_id").agg(
@@ -717,7 +432,7 @@ object Round8b {
     // per-type grid. All integer fixed-point, engine-identical.
     Op("rel_forecast_snaive_mase",
       (s, d) => {
-        val ev = eventsFp(s, d).select("event_type", "us")
+        val ev = T.eventsFp(s, d).select("event_type", "us")
         val b = ev.agg(min("us").as("anchor"))
         val cnt = ev.crossJoin(broadcast(b))
           .withColumn("hidx", expr("(us - anchor) div 3600000000"))
@@ -872,65 +587,6 @@ object Round8b {
         "SELECT event_type, CAST(SUM(term_fp) // 1000 AS BIGINT) AS psi_fp, " +
         "count(*) AS n_buckets FROM terms GROUP BY 1 ORDER BY 1")),
 
-    // Linear multi-touch attribution: every touch in a purchase's
-    // 7-day lookback shares the credit equally, in integer ppm with
-    // the division remainder assigned to the earliest touches — so
-    // credit is conserved EXACTLY (sum over channels == purchases x
-    // 1e6, spec-pinned as an invariant). The touch join is keyed
-    // user_id with a bounded per-user quadratic (the funnel-family
-    // discipline: a user's own history, never a global pair space);
-    // untouched purchases roll up under 'none'.
-    Op("rel_attribution_linear",
-      (s, d) => {
-        val ev = eventsFp(s, d)
-        // alias both self-join sides: p/t descend from one frame, and an
-        // unaliased p("user_id") === t("user_id") resolves to the same
-        // attribute (Spark's trivially-true-predicate warning)
-        val p = ev.where("event_type = 'purchase'")
-          .select(col("user_id"), col("event_id").as("pid"), col("us").as("pus"))
-          .alias("p")
-        val t = ev.where("event_type <> 'purchase'")
-          .select(col("user_id"), col("event_id").as("tid"),
-            col("event_type").as("channel"), col("us").as("tus"))
-          .alias("t")
-        val j = p.join(t, expr("p.user_id = t.user_id") &&
-            col("tus") < col("pus") && col("pus") - col("tus") <= 604800000000L)
-          .select("pid", "channel", "tus", "tid")
-          .localCheckpoint()
-        val wK = Window.partitionBy("pid")
-        val wR = Window.partitionBy("pid").orderBy("tus", "tid")
-        val ch = j.withColumn("k", count(lit(1)).over(wK))
-          .withColumn("rnk", row_number().over(wR))
-          .withColumn("credit", expr(
-            "CAST(1000000 div k + CASE WHEN rnk <= 1000000 % k THEN 1 ELSE 0 END AS BIGINT)"))
-          .groupBy("channel").agg(
-            expr("CAST(SUM(credit) AS BIGINT)").as("credit_total"),
-            count(lit(1)).as("n_touches"))
-        val none = p.join(j.select("pid"), Seq("pid"), "left_anti")
-          .agg(expr("CAST(count(*) * 1000000 AS BIGINT)").as("credit_total"),
-            count(lit(1)).as("n_touches"))
-          .where("n_touches > 0")
-          .select(lit("none").as("channel"), col("credit_total"), col("n_touches"))
-        ch.unionByName(none).orderBy("channel")
-      },
-      Some("WITH ev AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events), " +
-        "p AS (SELECT user_id, event_id AS pid, us AS pus FROM ev WHERE event_type = 'purchase'), " +
-        "t AS (SELECT user_id, event_id AS tid, event_type AS channel, us AS tus FROM ev " +
-        "WHERE event_type <> 'purchase'), " +
-        "j AS (SELECT p.pid, t.channel, t.tus, t.tid FROM p JOIN t ON p.user_id = t.user_id " +
-        "AND t.tus < p.pus AND p.pus - t.tus <= 604800000000), " +
-        "r AS (SELECT pid, channel, count(*) OVER (PARTITION BY pid) AS k, " +
-        "row_number() OVER (PARTITION BY pid ORDER BY tus, tid) AS rnk FROM j), " +
-        "c AS (SELECT pid, channel, CAST(1000000 // k + CASE WHEN rnk <= 1000000 % k " +
-        "THEN 1 ELSE 0 END AS BIGINT) AS credit FROM r), " +
-        "nt AS (SELECT 'none' AS channel, CAST(count(*) * 1000000 AS BIGINT) AS credit_total, " +
-        "CAST(count(*) AS BIGINT) AS n_touches FROM p " +
-        "WHERE NOT EXISTS (SELECT 1 FROM j WHERE j.pid = p.pid)), " +
-        "ch AS (SELECT channel, CAST(SUM(credit) AS BIGINT) AS credit_total, " +
-        "count(*) AS n_touches FROM c GROUP BY 1) " +
-        "SELECT * FROM (SELECT * FROM ch UNION ALL SELECT * FROM nt WHERE n_touches > 0) " +
-        "ORDER BY channel")),
-
     // Kaplan-Meier survival: time from a user's first event to their
     // first 'error', right-censored at last activity for users who
     // never error — the reliability curve (works unchanged for churn
@@ -943,7 +599,7 @@ object Round8b {
     // risk dies) pins survival to an exact 0 via a flag, not a -inf.
     Op("rel_survival_km",
       (s, d) => {
-        val u = eventsFp(s, d).groupBy("user_id").agg(
+        val u = T.eventsFp(s, d).groupBy("user_id").agg(
           min("us").as("first_us"), max("us").as("last_us"),
           min(when(col("event_type") === "error", col("us"))).as("err_us"))
           .select(expr("CASE WHEN err_us IS NOT NULL THEN (err_us - first_us) div 86400000000 " +
@@ -1009,7 +665,7 @@ object Round8b {
     // ranks, which the identity is invariant to.
     Op("rel_value_gini",
       (s, d) => {
-        val pu = eventsFp(s, d)
+        val pu = T.eventsFp(s, d)
           .groupBy("event_type", "user_id")
           .agg(expr("CAST(SUM(v div 1000) AS BIGINT)").as("s"))
         val wRank = Window.partitionBy("event_type").orderBy("s", "user_id")
@@ -1035,44 +691,565 @@ object Round8b {
         "(2.0 * ws - (n + 1.0) * total_fp) / (CAST(n AS DOUBLE) * total_fp) * 1000000) " +
         "AS BIGINT) ELSE 0 END AS gini_ppm FROM ag ORDER BY event_type")),
 
-    // Last-touch attribution: each purchase credits the user's most
-    // recent non-purchase event within a 7-day lookback (else 'none').
-    // One IGNORE NULLS window pass on the user_id exchange — the same
-    // single-shuffle discipline as the rest of the event family; the
-    // channel rollup is a tiny final aggregate.
-    Op("rel_attribution_last_touch",
+    // Per-user EWMA smoothed value state — the "current smoothed
+    // metric per entity" a monitoring/personalization pipeline keeps.
+    // Dyadic alpha = 1/2 truncated at 8 lags makes the smoother EXACT
+    // integer arithmetic: weights 2^(7-j) summed then ONE div 255
+    // (= the 1/(1 - 2^-8)-normalized truncated EWMA) — no float
+    // recursion, so engines and partitionings agree bit-for-bit. Both
+    // windows (lag chain, per-user count) sit on ONE user_id exchange;
+    // output is one row per qualifying user, never per event.
+    Op("rel_window_ewma",
       (s, d) => {
-        val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val attributed = eventsFp(s, d)
-          .withColumn("src_type",
-            last(when(col("event_type") =!= "purchase", col("event_type")), ignoreNulls = true).over(w))
-          .withColumn("src_us",
-            last(when(col("event_type") =!= "purchase", col("us")), ignoreNulls = true).over(w))
-          .where("event_type = 'purchase'")
-          .withColumn("channel", expr(
-            "CASE WHEN src_us IS NOT NULL AND us - src_us <= 604800000000 " +
-              "THEN src_type ELSE 'none' END"))
-        val total = attributed.agg(count(lit(1)).as("total"))
-        attributed.groupBy("channel").agg(count(lit(1)).as("n_purchases"))
-          .crossJoin(broadcast(total))
-          .select(col("channel"), col("n_purchases"),
-            expr("CAST(n_purchases * 1000000 div greatest(1, total) AS BIGINT)").as("share_ppm"))
-          .orderBy("channel")
+        val wAsc = Window.partitionBy("user_id").orderBy("us", "event_id")
+        val wAll = Window.partitionBy("user_id")
+        T.eventsFp(s, d)
+          .withColumn("rn", row_number().over(wAsc))
+          .withColumn("wsum", (0 to 7)
+            .map(j => coalesce(lag(col("v"), j).over(wAsc), lit(0L)) * lit(1L << (7 - j)))
+            .reduce(_ + _))
+          .withColumn("n_events", count(lit(1)).over(wAll))
+          .where("rn = n_events AND n_events >= 8")
+          .select(col("user_id"), col("n_events"),
+            expr("wsum div 255").as("ewma_fp"))
+          .orderBy("user_id")
       },
-      Some("WITH ev AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events), " +
-        "lt AS (SELECT *, " +
-        "last_value(CASE WHEN event_type <> 'purchase' THEN event_type END IGNORE NULLS) " +
-        "OVER w AS src_type, " +
-        "last_value(CASE WHEN event_type <> 'purchase' THEN us END IGNORE NULLS) " +
-        "OVER w AS src_us FROM ev " +
-        "WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)), " +
-        "at AS (SELECT CASE WHEN src_us IS NOT NULL AND us - src_us <= 604800000000 " +
-        "THEN src_type ELSE 'none' END AS channel FROM lt WHERE event_type = 'purchase'), " +
-        "tot AS (SELECT count(*) AS total FROM at) " +
-        "SELECT channel, count(*) AS n_purchases, " +
-        "CAST(count(*) * 1000000 // greatest(1, tot.total) AS BIGINT) AS share_ppm " +
-        "FROM at, tot GROUP BY channel, tot.total ORDER BY channel")),
-  )
+      Some("WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS us, " +
+        "CAST(floor(value * 1000000) AS BIGINT) AS v FROM events), " +
+        "l AS (SELECT user_id, row_number() OVER w AS rn, " +
+        "count(*) OVER (PARTITION BY user_id) AS n_events, " +
+        (0 to 7).map(j =>
+          s"coalesce(lag(v, $j) OVER w, 0) * ${1L << (7 - j)}").mkString(" + ") +
+        " AS wsum FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)) " +
+        "SELECT user_id, n_events, CAST(wsum // 255 AS BIGINT) AS ewma_fp FROM l " +
+        "WHERE rn = n_events AND n_events >= 8 ORDER BY user_id")),
+
+    // CUSUM changepoint detection on the hourly event-rate series per
+    // type: deviations from the per-type mean accumulate as
+    // y*H - total (PRE-SCALED by the hour count, so the running sum is
+    // exact integer — no mean division ever happens), and the hour
+    // attaining max |CUSUM| is the level-shift point; the peak is
+    // normalized to ppm of total*H through DECIMAL(38)/HUGEINT (the
+    // only product that can exceed int64). Complements KS/PSI: those
+    // ask IF the distribution moved, CUSUM asks WHEN the rate moved.
+    // The hour grid (zero-count hours included — a silent outage IS a
+    // level shift) is calendar-sized, never event-sized.
+    Op("rel_changepoint_cusum",
+      (s, d) => {
+        val ev = T.eventsFp(s, d)
+        val b = ev.agg(min("us").as("anchor"))
+        val cnt = ev.crossJoin(broadcast(b))
+          .select(col("event_type"), expr("(us - anchor) div 3600000000").as("hidx"))
+          .groupBy("event_type", "hidx").agg(count(lit(1)).as("y"))
+        val grid = cnt.groupBy("event_type").agg(max("hidx").as("maxh"))
+          .select(col("event_type"), explode(expr("sequence(0, maxh)")).as("hidx"))
+        val g = grid.join(cnt, Seq("event_type", "hidx"), "left")
+          .select(col("event_type"), col("hidx"),
+            coalesce(col("y"), lit(0L)).as("y"))
+        val tot = g.groupBy("event_type").agg(
+          count(lit(1)).as("nh"), expr("CAST(SUM(y) AS BIGINT)").as("total"))
+        val wCum = Window.partitionBy("event_type").orderBy("hidx")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val wMax = Window.partitionBy("event_type")
+          .orderBy(abs(col("cusum")).desc, col("hidx"))
+        g.join(broadcast(tot), "event_type")
+          .withColumn("cusum", sum(expr("y * nh - total")).over(wCum))
+          .withColumn("rn", row_number().over(wMax))
+          .where("rn = 1")
+          .select(col("event_type"), col("nh").as("n_hours"), col("total"),
+            col("hidx").as("cp_hidx"),
+            expr("CAST(abs(CAST(cusum AS DECIMAL(38,0))) * 1000000 " +
+              "div (CAST(total AS DECIMAL(38,0)) * nh) AS BIGINT)").as("cusum_peak_ppm"))
+          .orderBy("event_type")
+      },
+      Some("WITH ev AS (SELECT event_type, epoch_us(ts) AS us FROM events), " +
+        "b AS (SELECT min(us) AS anchor FROM ev), " +
+        "cnt AS (SELECT event_type, (us - b.anchor) // 3600000000 AS hidx, count(*) AS y " +
+        "FROM ev, b GROUP BY 1, 2), " +
+        "hm AS (SELECT event_type, max(hidx) AS maxh FROM cnt GROUP BY 1), " +
+        "grid AS (SELECT event_type, unnest(generate_series(0, maxh)) AS hidx FROM hm), " +
+        "g AS (SELECT grid.event_type, grid.hidx, CAST(coalesce(cnt.y, 0) AS BIGINT) AS y " +
+        "FROM grid LEFT JOIN cnt ON grid.event_type = cnt.event_type AND grid.hidx = cnt.hidx), " +
+        "tot AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nh, " +
+        "CAST(SUM(y) AS BIGINT) AS total FROM g GROUP BY 1), " +
+        "c AS (SELECT g.event_type, g.hidx, tot.nh, tot.total, " +
+        "SUM(g.y * tot.nh - tot.total) OVER (PARTITION BY g.event_type ORDER BY g.hidx " +
+        "ROWS UNBOUNDED PRECEDING) AS cusum FROM g JOIN tot USING (event_type)), " +
+        "dd AS (SELECT *, row_number() OVER (PARTITION BY event_type " +
+        "ORDER BY abs(cusum) DESC, hidx) AS rn FROM c) " +
+        "SELECT event_type, nh AS n_hours, total, hidx AS cp_hidx, " +
+        "CAST(abs(CAST(cusum AS HUGEINT)) * 1000000 // (CAST(total AS HUGEINT) * nh) AS BIGINT) " +
+        "AS cusum_peak_ppm FROM dd WHERE rn = 1 ORDER BY event_type")),
+
+    // Market-basket affinity: which part pairs co-occur in orders more
+    // often than independence predicts. Pairs are generated WITHIN a
+    // basket (self-join on l_orderkey after distinct-ing to one row
+    // per (order, part)), so the blow-up is bounded by max basket size
+    // (7 lines in this schema) — per-order work is O(b²) with tiny b,
+    // never O(|parts|²). Per-part supports are a |parts|-sized dim
+    // aggregate, broadcast against the pair stream; lift is exact
+    // integer ppm via DECIMAL(38)/HUGEINT (supp_ab * n_orders * 1e6
+    // overflows int64 once n_orders passes ~1e10). Top-100 under a
+    // total (support, lift, p1, p2) order.
+    Op("rel_market_basket",
+      (s, d) => {
+        // one scan + one distinct, materialized once: items feeds FIVE
+        // consumers (both self-join sides, both supports, n_orders) —
+        // without the checkpoint each re-scans lineitem and re-shuffles
+        // the distinct
+        val items = T.t(s, d, "lineitem")
+          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+          .distinct().localCheckpoint()
+        val tot = items.agg(count_distinct(col("ok")).as("n_orders"))
+        val supp = items.groupBy("pk").agg(count(lit(1)).as("supp"))
+        val a = items.select(col("ok"), col("pk").as("p1"))
+        val b = items.select(col("ok"), col("pk").as("p2"))
+        a.join(b, Seq("ok")).where("p1 < p2")
+          .groupBy("p1", "p2").agg(count(lit(1)).as("supp_ab"))
+          .where("supp_ab >= 2")
+          .join(broadcast(supp.select(col("pk").as("p1"), col("supp").as("supp1"))), Seq("p1"))
+          .join(broadcast(supp.select(col("pk").as("p2"), col("supp").as("supp2"))), Seq("p2"))
+          .crossJoin(broadcast(tot))
+          .withColumn("lift_ppm", expr(
+            "CAST(CAST(supp_ab AS DECIMAL(38,0)) * n_orders * 1000000 " +
+              "div (CAST(supp1 AS DECIMAL(38,0)) * supp2) AS BIGINT)"))
+          .select("p1", "p2", "supp_ab", "supp1", "supp2", "lift_ppm")
+          .orderBy(desc("supp_ab"), desc("lift_ppm"), col("p1"), col("p2"))
+          .limit(100)
+      },
+      Some("WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem), " +
+        "tot AS (SELECT count(DISTINCT ok) AS n_orders FROM items), " +
+        "supp AS (SELECT pk, count(*) AS supp FROM items GROUP BY 1), " +
+        "pairs AS (SELECT a.pk AS p1, b.pk AS p2, count(*) AS supp_ab " +
+        "FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk " +
+        "GROUP BY 1, 2 HAVING count(*) >= 2) " +
+        "SELECT p1, p2, supp_ab, s1.supp AS supp1, s2.supp AS supp2, " +
+        "CAST(CAST(supp_ab AS HUGEINT) * n_orders * 1000000 " +
+        "// (CAST(s1.supp AS HUGEINT) * s2.supp) AS BIGINT) AS lift_ppm " +
+        "FROM pairs JOIN supp s1 ON pairs.p1 = s1.pk JOIN supp s2 ON pairs.p2 = s2.pk, tot " +
+        "ORDER BY supp_ab DESC, lift_ppm DESC, p1, p2 LIMIT 100")),
+
+    // RFM segmentation: quintile scores on recency / frequency /
+    // monetary per customer, reported as segment sizes. The three
+    // quintile assignments are EXACT ntile(5) semantics but NOT global
+    // windows: each dimension's rank comes from DistOrder.rankCum
+    // (quantile-bucketed parallel rank — every WindowExec in the plan
+    // is partitioned by bucket, widest task ~1/64 of the customers)
+    // and the score is a codegen CASE over the rank. Monetary is 1e-2
+    // fixed point; every score order carries a custkey tiebreak so
+    // both engines bucket identically.
+    Op("rel_rfm_segmentation",
+      (s, d) => {
+        val o = T.t(s, d, "orders")
+        val mx = o.agg(expr("max(CAST(o_orderdate AS DATE))").as("maxd"))
+        val rfm = o.crossJoin(broadcast(mx)).groupBy("o_custkey").agg(
+          expr("CAST(datediff(min(maxd), max(CAST(o_orderdate AS DATE))) AS INT)").as("recency_days"),
+          count(lit(1)).as("frequency"),
+          expr("sum(CAST(floor(o_totalprice * 100) AS BIGINT))").as("monetary_cents"))
+          .localCheckpoint() // one orders scan feeds all three rankings
+        val rk = graft.api.DistOrder.rankCum(rfm,
+          col("recency_days"), Seq(col("recency_days").asc, col("o_custkey")),
+          rnCol = "rn_r")
+        val fk = graft.api.DistOrder.rankCum(rk.df,
+          -col("frequency"), Seq(col("frequency").desc, col("o_custkey")),
+          rnCol = "rn_f")
+        val mk = graft.api.DistOrder.rankCum(fk.df,
+          -col("monetary_cents"), Seq(col("monetary_cents").desc, col("o_custkey")),
+          rnCol = "rn_m")
+        val n = rk.n
+        mk.df
+          .withColumn("r_score", graft.api.DistOrder.ntileOf("rn_r", n, 5))
+          .withColumn("f_score", graft.api.DistOrder.ntileOf("rn_f", n, 5))
+          .withColumn("m_score", graft.api.DistOrder.ntileOf("rn_m", n, 5))
+          .groupBy("r_score", "f_score", "m_score").agg(
+            count(lit(1)).as("n_customers"),
+            expr("CAST(sum(CAST(monetary_cents AS DECIMAL(38,0))) div count(*) AS BIGINT)")
+              .as("avg_monetary_cents"))
+          .orderBy("r_score", "f_score", "m_score")
+      },
+      Some("WITH mx AS (SELECT max(CAST(o_orderdate AS DATE)) AS maxd FROM orders), " +
+        "rfm AS (SELECT o_custkey, " +
+        "CAST(min(maxd) - max(CAST(o_orderdate AS DATE)) AS INTEGER) AS recency_days, " +
+        "count(*) AS frequency, " +
+        "CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS monetary_cents " +
+        "FROM orders, mx GROUP BY 1), " +
+        "scored AS (SELECT *, " +
+        "CAST(ntile(5) OVER (ORDER BY recency_days ASC, o_custkey) AS INTEGER) AS r_score, " +
+        "CAST(ntile(5) OVER (ORDER BY frequency DESC, o_custkey) AS INTEGER) AS f_score, " +
+        "CAST(ntile(5) OVER (ORDER BY monetary_cents DESC, o_custkey) AS INTEGER) AS m_score FROM rfm) " +
+        "SELECT r_score, f_score, m_score, count(*) AS n_customers, " +
+        "CAST(sum(CAST(monetary_cents AS HUGEINT)) // count(*) AS BIGINT) AS avg_monetary_cents " +
+        "FROM scored GROUP BY 1, 2, 3 ORDER BY 1, 2, 3")),
+
+    // Hour-of-day seasonality profile per event type: traffic index
+    // (that hour's share of the type's events vs uniform, in ppm) and
+    // the hour's mean value (1e-6 fixed point). ONE scan feeds the
+    // (type, hour) aggregate; the per-type totals ride a window over
+    // the |types|*24-row RESULT, not the event stream. Hour comes from
+    // integer epoch-microsecond math ((us div 3.6e9) % 24) — no
+    // timezone/calendar dependency between engines.
+    Op("rel_seasonality_profile",
+      (s, d) => {
+        val g = T.eventsFp(s, d)
+          .withColumn("hh", expr("CAST((us div 3600000000) % 24 AS INT)"))
+          .groupBy("event_type", "hh").agg(
+            count(lit(1)).as("n"),
+            expr("CAST(coalesce(sum(CAST(v AS DECIMAL(38,0))), 0) AS DECIMAL(38,0))").as("sv"))
+        val wT = Window.partitionBy("event_type")
+        g.withColumn("n_t", sum("n").over(wT))
+          .withColumn("traffic_index_ppm",
+            expr("CAST(CAST(n AS DECIMAL(38,0)) * 24 * 1000000 div n_t AS BIGINT)"))
+          .withColumn("mean_v_micro", expr("CAST(sv div greatest(1, n) AS BIGINT)"))
+          .select("event_type", "hh", "n", "traffic_index_ppm", "mean_v_micro")
+          .orderBy("event_type", "hh")
+      },
+      Some("WITH ev AS (SELECT event_type, epoch_us(ts) AS us, " +
+        "CAST(floor(value * 1000000) AS BIGINT) AS v FROM events), " +
+        "g AS (SELECT event_type, CAST((us // 3600000000) % 24 AS INTEGER) AS hh, " +
+        "count(*) AS n, CAST(coalesce(sum(CAST(v AS HUGEINT)), 0) AS HUGEINT) AS sv " +
+        "FROM ev GROUP BY 1, 2) " +
+        "SELECT event_type, hh, n, " +
+        "CAST(CAST(n AS HUGEINT) * 24 * 1000000 // sum(n) OVER (PARTITION BY event_type) AS BIGINT) " +
+        "AS traffic_index_ppm, " +
+        "CAST(sv // greatest(1, n) AS BIGINT) AS mean_v_micro " +
+        "FROM g ORDER BY event_type, hh")),
+
+    // Double-exponential-smoothing (Holt) forecast BACKTEST on the
+    // daily order-count series: level and trend are both 8-lag dyadic
+    // EWMAs (level over y, trend over the first difference), frozen at
+    // an anchor 7 observations before the series end; the op reports
+    // forecast vs actual for the 7 held-out steps with MASE against
+    // the training mean absolute difference. Everything after the
+    // daily aggregate runs on the |days|-sized series (~thousands of
+    // rows at ANY corpus scale — a global window over a daily series
+    // is not a scale risk; the fact-table scan is the only big job).
+    Op("rel_forecast_des",
+      (s, d) => {
+        val w = Window.orderBy("day")
+        val daily = T.t(s, d, "orders")
+          .groupBy(expr("CAST(o_orderdate AS DATE)").as("day"))
+          .agg(count(lit(1)).as("y"))
+        val base = daily
+          .withColumn("rn", row_number().over(w))
+          .withColumn("n_days", count(lit(1)).over(
+            Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+          .withColumn("dy", col("y") - lag("y", 1).over(w))
+          .withColumn("lnum", (0 to 7)
+            .map(j => coalesce(lag(col("y"), j).over(w), lit(0L)) * lit(1L << (7 - j)))
+            .reduce(_ + _))
+          .withColumn("tnum", (0 to 7)
+            .map(j => coalesce(lag(col("dy"), j).over(w), lit(0L)) * lit(1L << (7 - j)))
+            .reduce(_ + _))
+        val anchor = base.where("rn = n_days - 7 AND rn >= 9")
+          .select(col("rn").as("arn"), col("lnum"), col("tnum"))
+        val tr = base.crossJoin(broadcast(anchor.select("arn")))
+          .where("rn >= 2 AND rn <= arn")
+          .agg(sum(abs(col("dy"))).as("scale_sum"), count(lit(1)).as("n_tr"))
+        base.select("rn", "y").crossJoin(broadcast(anchor))
+          .withColumn("h", expr("CAST(rn - arn AS BIGINT)"))
+          .where("h >= 1 AND h <= 7")
+          .withColumn("forecast", expr("(lnum + h * tnum) div 255"))
+          .withColumn("abs_err", expr("abs(forecast - y)"))
+          .crossJoin(broadcast(tr))
+          .withColumn("mase_ppm", expr(
+            "CAST(CAST(abs_err AS DECIMAL(38,0)) * n_tr * 1000000 " +
+              "div greatest(1, scale_sum) AS BIGINT)"))
+          .select(col("h"), col("forecast"), col("y").as("actual"),
+            col("abs_err"), col("mase_ppm"))
+          .orderBy("h")
+      },
+      Some("WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS y " +
+        "FROM orders GROUP BY 1), " +
+        "base AS (SELECT row_number() OVER w AS rn, count(*) OVER () AS n_days, y, " +
+        "y - lag(y, 1) OVER w AS dy, " +
+        (0 to 7).map(j => s"coalesce(lag(y, $j) OVER w, 0) * ${1L << (7 - j)}")
+          .mkString(" + ") + " AS lnum, " +
+        (0 to 7).map(j => s"coalesce(lag(y - lag_y, $j) OVER w, 0) * ${1L << (7 - j)}")
+          .mkString(" + ") + " AS tnum " +
+        "FROM (SELECT day, y, lag(y, 1) OVER (ORDER BY day) AS lag_y FROM daily) " +
+        "WINDOW w AS (ORDER BY day)), " +
+        "anchor AS (SELECT rn AS arn, lnum, tnum FROM base WHERE rn = n_days - 7 AND rn >= 9), " +
+        "tr AS (SELECT sum(abs(dy)) AS scale_sum, count(*) AS n_tr " +
+        "FROM base, anchor WHERE rn >= 2 AND rn <= arn) " +
+        "SELECT CAST(rn - arn AS BIGINT) AS h, " +
+        "(anchor.lnum + CAST(rn - arn AS BIGINT) * anchor.tnum) // 255 AS forecast, y AS actual, " +
+        "abs((anchor.lnum + CAST(rn - arn AS BIGINT) * anchor.tnum) // 255 - y) AS abs_err, " +
+        "CAST(CAST(abs((anchor.lnum + CAST(rn - arn AS BIGINT) * anchor.tnum) // 255 - y) AS HUGEINT) " +
+        "* n_tr * 1000000 // greatest(1, scale_sum) AS BIGINT) AS mase_ppm " +
+        "FROM base, anchor, tr WHERE rn - arn >= 1 AND rn - arn <= 7 ORDER BY h")),
+
+    // Benford first-digit audit on order totals — the classic
+    // fabricated-data / broken-generator screen: naturally-occurring
+    // multi-magnitude amounts follow P(d) = log10(1 + 1/d); uniform or
+    // hand-typed data does not. First digit comes from the BIGINT
+    // floor's decimal rendering (identical across engines — no
+    // float log10 in the comparison path); expected shares are the
+    // public Benford constants in ppm. One map-side-combinable
+    // 9-group aggregate; deviation_ppm is the per-digit |obs - exp|.
+    // (TPC-H totalprice is range-bounded, so it deviates — the AUDIT
+    // format is the operator; the verdict depends on the data.)
+    Op("rel_benford_audit",
+      (s, d) => {
+        val exp = Seq(301030L, 176091L, 124939L, 96910L, 79181L,
+          66947L, 57992L, 51153L, 45757L)
+        val expCase = exp.zipWithIndex
+          .map { case (p, i) => s"WHEN ${i + 1} THEN ${p}L" }
+          .mkString("CASE digit ", " ", " END")
+        T.t(s, d, "orders")
+          .where("o_totalprice >= 1")
+          .withColumn("digit", expr(
+            "CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT) AS STRING), 1, 1) AS INT)"))
+          .groupBy("digit").agg(count(lit(1)).as("n"))
+          .withColumn("total", sum("n").over(
+            Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+          .withColumn("observed_ppm", expr(
+            "CAST(CAST(n AS DECIMAL(38,0)) * 1000000 div total AS BIGINT)"))
+          .withColumn("benford_ppm", expr(expCase))
+          .withColumn("deviation_ppm", expr("abs(observed_ppm - benford_ppm)"))
+          .select("digit", "n", "observed_ppm", "benford_ppm", "deviation_ppm")
+          .orderBy("digit")
+      },
+      Some("WITH g AS (SELECT CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1) AS INTEGER) AS digit, " +
+        "count(*) AS n FROM orders WHERE o_totalprice >= 1 GROUP BY 1), " +
+        "t AS (SELECT digit, n, CAST(sum(n) OVER () AS BIGINT) AS total FROM g), " +
+        "e(digit, benford_ppm) AS (VALUES (1, CAST(301030 AS BIGINT)), (2, 176091), (3, 124939), " +
+        "(4, 96910), (5, 79181), (6, 66947), (7, 57992), (8, 51153), (9, 45757)) " +
+        "SELECT t.digit, n, CAST(CAST(n AS HUGEINT) * 1000000 // total AS BIGINT) AS observed_ppm, " +
+        "benford_ppm, abs(CAST(CAST(n AS HUGEINT) * 1000000 // total AS BIGINT) - benford_ppm) AS deviation_ppm " +
+        "FROM t JOIN e ON t.digit = e.digit ORDER BY t.digit")),
+
+    // Revenue concentration (Pareto / Lorenz points): the share of
+    // total revenue held by the top 1% / 10% / 50% of customers —
+    // the "do 20% of customers drive 80% of revenue" read, and the
+    // skew number that sizes customer-keyed partitioning. Customer
+    // revenue is 1e-2 fixed point; ranks carry a custkey tiebreak;
+    // the cut row per percentile is rn == ceil(n * p) picked with
+    // integer ceil math, so both engines choose the identical
+    // customer. Rank AND running revenue come from DistOrder.rankCum
+    // (quantile-bucketed parallel rank + prefix sums) — no global
+    // window anywhere; n and the revenue total are the helper's exact
+    // driver-side scalars, burned in as literals.
+    Op("rel_pareto_concentration",
+      (s, d) => {
+        val rev = T.t(s, d, "orders")
+          .groupBy("o_custkey")
+          .agg(expr("sum(CAST(floor(o_totalprice * 100) AS BIGINT))").as("r"))
+        val rk = graft.api.DistOrder.rankCum(rev,
+          -col("r"), Seq(desc("r"), col("o_custkey")), value = Some(col("r")))
+        val n = rk.n
+        val c1 = (n + 99) / 100
+        val c10 = (n + 9) / 10
+        val c50 = (n + 1) / 2
+        rk.df.where(col("rn") === c1 || col("rn") === c10 || col("rn") === c50)
+          .withColumn("pct", expr(
+            s"CASE WHEN rn = $c1 THEN 1 WHEN rn = $c10 THEN 10 ELSE 50 END"))
+          .groupBy("pct").agg( // small n can collapse cut rows; keep ONE per pct
+            min("rn").as("k_customers_i"),
+            expr("CAST(min(cum) AS BIGINT)").as("cum_cents"))
+          .select(col("pct"),
+            expr("CAST(k_customers_i AS BIGINT)").as("k_customers"),
+            expr("CAST(CAST(cum_cents AS DECIMAL(38,0)) * 1000000 " +
+              s"div greatest(1, ${rk.total}) AS BIGINT)").as("share_ppm"))
+          .orderBy("pct")
+      },
+      Some("WITH rev AS (SELECT o_custkey, " +
+        "CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS r " +
+        "FROM orders GROUP BY 1), " +
+        "t AS (SELECT r, o_custkey, row_number() OVER w AS rn, count(*) OVER () AS n, " +
+        "CAST(sum(r) OVER (ORDER BY r DESC, o_custkey " +
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum, " +
+        "CAST(sum(r) OVER () AS BIGINT) AS tot FROM rev " +
+        "WINDOW w AS (ORDER BY r DESC, o_custkey)) " +
+        "SELECT pct, CAST(min(rn) AS BIGINT) AS k_customers, " +
+        "CAST(CAST(min(cum) AS HUGEINT) * 1000000 // greatest(1, min(tot)) AS BIGINT) AS share_ppm " +
+        "FROM (SELECT *, CASE WHEN rn = (n + 99) // 100 THEN 1 " +
+        "WHEN rn = (n + 9) // 10 THEN 10 ELSE 50 END AS pct FROM t " +
+        "WHERE rn = (n + 99) // 100 OR rn = (n + 9) // 10 OR rn = (n + 1) // 2) " +
+        "GROUP BY pct ORDER BY pct")),
+
+    // Customer revenue deciles — the second DistOrder consumer: exact
+    // ntile(10) over (revenue desc, custkey) without a global window
+    // (bucketed parallel rank + codegen decile CASE), reporting size
+    // and revenue mass per decile. The concentration read finance asks
+    // for weekly, shaped to survive 1e9 customers.
+    Op("rel_customer_deciles",
+      (s, d) => {
+        val rev = T.t(s, d, "orders")
+          .groupBy("o_custkey")
+          .agg(expr("sum(CAST(floor(o_totalprice * 100) AS BIGINT))").as("r"))
+        val rk = graft.api.DistOrder.rankCum(rev,
+          -col("r"), Seq(desc("r"), col("o_custkey")))
+        rk.df.withColumn("decile", graft.api.DistOrder.ntileOf("rn", rk.n, 10))
+          .groupBy("decile").agg(
+            count(lit(1)).as("n_customers"),
+            expr("CAST(sum(r) AS BIGINT)").as("revenue_cents"))
+          .orderBy("decile")
+      },
+      Some("WITH rev AS (SELECT o_custkey, " +
+        "CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS r " +
+        "FROM orders GROUP BY 1), " +
+        "t AS (SELECT r, CAST(ntile(10) OVER (ORDER BY r DESC, o_custkey) AS INTEGER) AS decile FROM rev) " +
+        "SELECT decile, count(*) AS n_customers, CAST(sum(r) AS BIGINT) AS revenue_cents " +
+        "FROM t GROUP BY 1 ORDER BY 1")),
+
+    // EXACT global percentiles of a FACT-cardinality column (p50/p90/
+    // p99/p99.9 of lineitem extended price, 1e-2 fixed point) — the
+    // DistOrder flagship: where rfm/pareto rank customer AGGREGATES,
+    // this ranks the fact table itself, and still plans with zero
+    // global windows (bucketed parallel rank; cut ranks are exact
+    // ceil(p*n) literals; a broadcast join fans one ranked row out per
+    // requested percentile, so coinciding cuts at tiny n behave
+    // identically on both engines).
+    Op("rel_global_percentiles",
+      (s, d) => {
+        val v = T.t(s, d, "lineitem").select(
+          expr("CAST(floor(l_extendedprice * 100) AS BIGINT)").as("cents"),
+          col("l_orderkey"), col("l_linenumber"))
+        val bps = Seq(5000, 9000, 9900, 9990)
+        def cutsOf(n: Long) = bps.map(bp => (n * bp + 9999L) / 10000L)
+        // exact k-selection: only the buckets containing a cut rank are
+        // ever sorted — a few /64ths of the fact table, not all of it
+        val (rows, n) = graft.api.DistOrder.selectRanks(v, col("cents"),
+          Seq(col("cents").asc, col("l_orderkey"), col("l_linenumber")),
+          cutsOf)
+        import s.implicits._
+        val cuts = bps.map(bp => (bp, (n * bp + 9999L) / 10000L))
+          .toDF("pct_bp", "cut")
+        rows.join(broadcast(cuts), col("rn") === col("cut"))
+          .select(col("pct_bp"), col("cents").as("value_cents"))
+          .orderBy("pct_bp")
+      },
+      Some("WITH v AS (SELECT CAST(floor(l_extendedprice * 100) AS BIGINT) AS cents, " +
+        "l_orderkey, l_linenumber FROM lineitem), " +
+        "t AS (SELECT cents, row_number() OVER (ORDER BY cents, l_orderkey, l_linenumber) AS rn, " +
+        "count(*) OVER () AS n FROM v), " +
+        "c AS (SELECT unnest([5000, 9000, 9900, 9990]) AS pct_bp) " +
+        "SELECT c.pct_bp, t.cents AS value_cents FROM t JOIN c " +
+        "ON t.rn = (t.n * c.pct_bp + 9999) // 10000 ORDER BY pct_bp")),
+
+    // Chi-squared independence test (market segment x nation band on
+    // customer) — the categorical companion to rel_ks_drift_test /
+    // rel_psi_drift / rel_ab_welch_ttest: per-cell observed counts,
+    // expected under independence, and the chi2 contribution, all in
+    // integer fixed point ((o*n - r*c)^2 * 1e6 div (r*c*n) — no
+    // cross-engine float summation to trust; DECIMAL(38) headroom
+    // holds to ~1e8 rows x 1e8 cell counts, normalize first beyond).
+    // One map-side-combinable groupBy builds the 25-cell contingency;
+    // margins and the total are bounded broadcast joins off it.
+    Op("rel_chi2_independence",
+      (s, d) => {
+        val cell = T.t(s, d, "customer")
+          .groupBy(col("c_mktsegment"), expr("c_nationkey % 5").as("nat_band"))
+          .agg(count(lit(1)).as("o"))
+        val rm = cell.groupBy("c_mktsegment").agg(sum("o").as("r"))
+        val cm = cell.groupBy("nat_band").agg(sum("o").as("c"))
+        val nn = cell.agg(sum("o").as("n"))
+        val dlt = "(CAST(o AS DECIMAL(38,0)) * n - CAST(r AS DECIMAL(38,0)) * c)"
+        cell.join(broadcast(rm), "c_mktsegment")
+          .join(broadcast(cm), "nat_band")
+          .crossJoin(broadcast(nn))
+          .select(col("c_mktsegment"), col("nat_band"), col("o").as("n_obs"),
+            expr("CAST(CAST(r AS DECIMAL(38,0)) * c * 1000000 div n AS BIGINT)")
+              .as("expected_ppm"),
+            expr(s"CAST($dlt * $dlt * 1000000 div " +
+              "(CAST(r AS DECIMAL(38,0)) * c * n) AS BIGINT)").as("contrib_ppm"))
+          .orderBy("c_mktsegment", "nat_band")
+      },
+      Some("WITH cell AS (SELECT c_mktsegment, c_nationkey % 5 AS nat_band, " +
+        "count(*) AS o FROM customer GROUP BY 1, 2), " +
+        "r AS (SELECT c_mktsegment, sum(o) AS r FROM cell GROUP BY 1), " +
+        "c AS (SELECT nat_band, sum(o) AS c FROM cell GROUP BY 1), " +
+        "nn AS (SELECT sum(o) AS n FROM cell) " +
+        "SELECT cell.c_mktsegment, cell.nat_band, o AS n_obs, " +
+        "CAST(CAST(r.r AS HUGEINT) * c.c * 1000000 // nn.n AS BIGINT) AS expected_ppm, " +
+        "CAST((CAST(o AS HUGEINT) * nn.n - CAST(r.r AS HUGEINT) * c.c) * " +
+        "(CAST(o AS HUGEINT) * nn.n - CAST(r.r AS HUGEINT) * c.c) * 1000000 // " +
+        "(CAST(r.r AS HUGEINT) * c.c * nn.n) AS BIGINT) AS contrib_ppm " +
+        "FROM cell JOIN r USING (c_mktsegment) JOIN c USING (nat_band), nn " +
+        "ORDER BY c_mktsegment, nat_band")),
+
+    // HOLT-WINTERS additive seasonal forecast — the seasonal companion
+    // to rel_forecast_des: level + trend via the same 8-tap geometric
+    // windows (alpha ~ 0.5, integer-exact), plus a weekly seasonal
+    // index per day-of-week = the mean deviation of y from its
+    // CENTERED 7-day moving average over the training span (held-out
+    // last week never peeks: dev rows stop 3 days before the anchor so
+    // the centered window sees no test actuals). All integer fixed
+    // point; the one portability trap is negative integer division
+    // (Spark `div` truncates toward zero, flooring engines differ), so
+    // every div rides a large positive offset — numerators stay
+    // positive and trunc == floor on both engines. Day-of-week derives
+    // from an epoch subtraction, not dayofweek() (whose origin
+    // convention differs across engines).
+    Op("rel_forecast_hw",
+      (s, d) => {
+        val w = Window.orderBy("day")
+        val K = 1000000000000L // positivity offset for exact cross-engine div
+        val daily = T.t(s, d, "orders")
+          .groupBy(expr("CAST(o_orderdate AS DATE)").as("day"))
+          .agg(count(lit(1)).as("y"))
+        val base = daily
+          .withColumn("rn", row_number().over(w))
+          .withColumn("n_days", count(lit(1)).over(
+            Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+          .withColumn("dy", col("y") - lag("y", 1).over(w))
+          .withColumn("lnum", (0 to 7)
+            .map(j => coalesce(lag(col("y"), j).over(w), lit(0L)) * lit(1L << (7 - j)))
+            .reduce(_ + _))
+          .withColumn("tnum", (0 to 7)
+            .map(j => coalesce(lag(col("dy"), j).over(w), lit(0L)) * lit(1L << (7 - j)))
+            .reduce(_ + _))
+          .withColumn("dowk", expr("datediff(day, DATE '1992-01-01') % 7"))
+          .withColumn("ma7sum", sum("y").over(w.rowsBetween(-3, 3)))
+          .withColumn("ma7cnt", count(lit(1)).over(w.rowsBetween(-3, 3)))
+        val anchor = base.where("rn = n_days - 7 AND rn >= 16")
+          .select(col("rn").as("arn"), col("lnum").as("alnum"), col("tnum").as("atnum"))
+        val season = base.crossJoin(broadcast(anchor.select("arn")))
+          .where("ma7cnt = 7 AND rn <= arn - 3")
+          .groupBy("dowk")
+          .agg(sum(lit(7L) * col("y") - col("ma7sum")).as("dev_sum"),
+            count(lit(1)).as("dev_cnt"))
+        base.select("rn", "y", "dowk").crossJoin(broadcast(anchor))
+          .withColumn("h", expr("CAST(rn - arn AS BIGINT)"))
+          .where("h >= 1 AND h <= 7")
+          .join(broadcast(season), Seq("dowk"), "left")
+          .withColumn("s_adj", expr(
+            s"(coalesce(dev_sum, 0) + ${7 * K} * coalesce(dev_cnt, 1)) " +
+              s"div (7 * coalesce(dev_cnt, 1)) - $K"))
+          .withColumn("forecast", expr(
+            s"(alnum + h * atnum + ${255 * K}) div 255 - $K + s_adj"))
+          .withColumn("abs_err", expr("abs(forecast - y)"))
+          .select(col("h"), col("dowk").cast("long").as("dowk"), col("forecast"),
+            col("y").as("actual"), col("abs_err"))
+          .orderBy("h")
+      },
+      Some("WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS y " +
+        "FROM orders GROUP BY 1), " +
+        "lagd AS (SELECT day, y, lag(y, 1) OVER (ORDER BY day) AS lag_y FROM daily), " +
+        "base AS (SELECT row_number() OVER w AS rn, count(*) OVER () AS n_days, day, y, " +
+        (0 to 7).map(j => s"coalesce(lag(y, $j) OVER w, 0) * ${1L << (7 - j)}")
+          .mkString(" + ") + " AS lnum, " +
+        (0 to 7).map(j => s"coalesce(lag(y - lag_y, $j) OVER w, 0) * ${1L << (7 - j)}")
+          .mkString(" + ") + " AS tnum, " +
+        "(day - DATE '1992-01-01') % 7 AS dowk, " +
+        "sum(y) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS ma7sum, " +
+        "count(*) OVER (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS ma7cnt " +
+        "FROM lagd WINDOW w AS (ORDER BY day)), " +
+        "anchor AS (SELECT rn AS arn, lnum AS alnum, tnum AS atnum FROM base " +
+        "WHERE rn = n_days - 7 AND rn >= 16), " +
+        "season AS (SELECT dowk, CAST(sum(7 * y - ma7sum) AS BIGINT) AS dev_sum, " +
+        "count(*) AS dev_cnt " +
+        "FROM base, anchor WHERE ma7cnt = 7 AND rn <= arn - 3 GROUP BY 1) " +
+        "SELECT CAST(rn - arn AS BIGINT) AS h, base.dowk, " +
+        "CAST((alnum + CAST(rn - arn AS BIGINT) * atnum + 255000000000000) // 255 " +
+        "- 1000000000000 + " +
+        "((coalesce(dev_sum, 0) + 7000000000000 * coalesce(dev_cnt, 1)) " +
+        "// (7 * coalesce(dev_cnt, 1)) - 1000000000000) AS BIGINT) AS forecast, " +
+        "y AS actual, " +
+        "CAST(abs((alnum + CAST(rn - arn AS BIGINT) * atnum + 255000000000000) // 255 " +
+        "- 1000000000000 + " +
+        "((coalesce(dev_sum, 0) + 7000000000000 * coalesce(dev_cnt, 1)) " +
+        "// (7 * coalesce(dev_cnt, 1)) - 1000000000000) - y) AS BIGINT) AS abs_err " +
+        "FROM base CROSS JOIN anchor LEFT JOIN season ON season.dowk = base.dowk " +
+        "WHERE rn - arn >= 1 AND rn - arn <= 7 ORDER BY h")))
 }

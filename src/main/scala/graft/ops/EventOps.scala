@@ -1,9 +1,9 @@
 package graft.ops
 
 import graft.{Op, Tables => T}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Event-analytics family over the `events` stream: batch sessionization,
   * funnel conversion, cohort retention, and path analysis — the four
@@ -256,6 +256,389 @@ object EventOps {
         "ORDER BY n_sessions DESC, path LIMIT 20"),
       doc = "Top-20 session paths (first 5 event types, '>'-joined): " +
         "session assignment + row_number + sorted collect, all on the " +
-        "one user_id exchange; path histogram is a tiny final aggregate.")
+        "one user_id exchange; path histogram is a tiny final aggregate."),
+
+    // Linear multi-touch attribution: every touch in a purchase's
+    // 7-day lookback shares the credit equally, in integer ppm with
+    // the division remainder assigned to the earliest touches — so
+    // credit is conserved EXACTLY (sum over channels == purchases x
+    // 1e6, spec-pinned as an invariant). The touch join is keyed
+    // user_id with a bounded per-user quadratic (the funnel-family
+    // discipline: a user's own history, never a global pair space);
+    // untouched purchases roll up under 'none'.
+    Op("rel_attribution_linear",
+      (s, d) => {
+        val ev = T.eventsFp(s, d)
+        // alias both self-join sides: p/t descend from one frame, and an
+        // unaliased p("user_id") === t("user_id") resolves to the same
+        // attribute (Spark's trivially-true-predicate warning)
+        val p = ev.where("event_type = 'purchase'")
+          .select(col("user_id"), col("event_id").as("pid"), col("us").as("pus"))
+          .alias("p")
+        val t = ev.where("event_type <> 'purchase'")
+          .select(col("user_id"), col("event_id").as("tid"),
+            col("event_type").as("channel"), col("us").as("tus"))
+          .alias("t")
+        val j = p.join(t, expr("p.user_id = t.user_id") &&
+            col("tus") < col("pus") && col("pus") - col("tus") <= 604800000000L)
+          .select("pid", "channel", "tus", "tid")
+          .localCheckpoint()
+        val wK = Window.partitionBy("pid")
+        val wR = Window.partitionBy("pid").orderBy("tus", "tid")
+        val ch = j.withColumn("k", count(lit(1)).over(wK))
+          .withColumn("rnk", row_number().over(wR))
+          .withColumn("credit", expr(
+            "CAST(1000000 div k + CASE WHEN rnk <= 1000000 % k THEN 1 ELSE 0 END AS BIGINT)"))
+          .groupBy("channel").agg(
+            expr("CAST(SUM(credit) AS BIGINT)").as("credit_total"),
+            count(lit(1)).as("n_touches"))
+        val none = p.join(j.select("pid"), Seq("pid"), "left_anti")
+          .agg(expr("CAST(count(*) * 1000000 AS BIGINT)").as("credit_total"),
+            count(lit(1)).as("n_touches"))
+          .where("n_touches > 0")
+          .select(lit("none").as("channel"), col("credit_total"), col("n_touches"))
+        ch.unionByName(none).orderBy("channel")
+      },
+      Some("WITH ev AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events), " +
+        "p AS (SELECT user_id, event_id AS pid, us AS pus FROM ev WHERE event_type = 'purchase'), " +
+        "t AS (SELECT user_id, event_id AS tid, event_type AS channel, us AS tus FROM ev " +
+        "WHERE event_type <> 'purchase'), " +
+        "j AS (SELECT p.pid, t.channel, t.tus, t.tid FROM p JOIN t ON p.user_id = t.user_id " +
+        "AND t.tus < p.pus AND p.pus - t.tus <= 604800000000), " +
+        "r AS (SELECT pid, channel, count(*) OVER (PARTITION BY pid) AS k, " +
+        "row_number() OVER (PARTITION BY pid ORDER BY tus, tid) AS rnk FROM j), " +
+        "c AS (SELECT pid, channel, CAST(1000000 // k + CASE WHEN rnk <= 1000000 % k " +
+        "THEN 1 ELSE 0 END AS BIGINT) AS credit FROM r), " +
+        "nt AS (SELECT 'none' AS channel, CAST(count(*) * 1000000 AS BIGINT) AS credit_total, " +
+        "CAST(count(*) AS BIGINT) AS n_touches FROM p " +
+        "WHERE NOT EXISTS (SELECT 1 FROM j WHERE j.pid = p.pid)), " +
+        "ch AS (SELECT channel, CAST(SUM(credit) AS BIGINT) AS credit_total, " +
+        "count(*) AS n_touches FROM c GROUP BY 1) " +
+        "SELECT * FROM (SELECT * FROM ch UNION ALL SELECT * FROM nt WHERE n_touches > 0) " +
+        "ORDER BY channel")),
+
+    // Last-touch attribution: each purchase credits the user's most
+    // recent non-purchase event within a 7-day lookback (else 'none').
+    // One IGNORE NULLS window pass on the user_id exchange — the same
+    // single-shuffle discipline as the rest of the event family; the
+    // channel rollup is a tiny final aggregate.
+    Op("rel_attribution_last_touch",
+      (s, d) => {
+        val w = Window.partitionBy("user_id").orderBy("us", "event_id")
+          .rowsBetween(Window.unboundedPreceding, -1)
+        val attributed = T.eventsFp(s, d)
+          .withColumn("src_type",
+            last(when(col("event_type") =!= "purchase", col("event_type")), ignoreNulls = true).over(w))
+          .withColumn("src_us",
+            last(when(col("event_type") =!= "purchase", col("us")), ignoreNulls = true).over(w))
+          .where("event_type = 'purchase'")
+          .withColumn("channel", expr(
+            "CASE WHEN src_us IS NOT NULL AND us - src_us <= 604800000000 " +
+              "THEN src_type ELSE 'none' END"))
+        val total = attributed.agg(count(lit(1)).as("total"))
+        attributed.groupBy("channel").agg(count(lit(1)).as("n_purchases"))
+          .crossJoin(broadcast(total))
+          .select(col("channel"), col("n_purchases"),
+            expr("CAST(n_purchases * 1000000 div greatest(1, total) AS BIGINT)").as("share_ppm"))
+          .orderBy("channel")
+      },
+      Some("WITH ev AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events), " +
+        "lt AS (SELECT *, " +
+        "last_value(CASE WHEN event_type <> 'purchase' THEN event_type END IGNORE NULLS) " +
+        "OVER w AS src_type, " +
+        "last_value(CASE WHEN event_type <> 'purchase' THEN us END IGNORE NULLS) " +
+        "OVER w AS src_us FROM ev " +
+        "WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id " +
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)), " +
+        "at AS (SELECT CASE WHEN src_us IS NOT NULL AND us - src_us <= 604800000000 " +
+        "THEN src_type ELSE 'none' END AS channel FROM lt WHERE event_type = 'purchase'), " +
+        "tot AS (SELECT count(*) AS total FROM at) " +
+        "SELECT channel, count(*) AS n_purchases, " +
+        "CAST(count(*) * 1000000 // greatest(1, tot.total) AS BIGINT) AS share_ppm " +
+        "FROM at, tot GROUP BY channel, tot.total ORDER BY channel")),
+
+    // First-order Markov transition matrix of the event stream: per
+    // (from_type, to_type), the count of consecutive-pair transitions
+    // within a user's timeline and the row-normalized probability in
+    // ppm — the base table for Markov attribution / next-event
+    // prediction. One lead() on the user_id exchange, a tiny
+    // type-pair aggregate, and a broadcast row-total join; nothing
+    // after the window touches more than |types|^2 rows.
+    Op("rel_markov_transitions",
+      (s, d) => {
+        val w = Window.partitionBy("user_id").orderBy("us", "event_id")
+        val tr = T.eventsFp(s, d)
+          .withColumn("next_type", lead(col("event_type"), 1).over(w))
+          .where("next_type IS NOT NULL")
+          .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
+          .agg(count(lit(1)).as("n"))
+          // |types|^2 rows; pinned so the row-total rollup reuses them
+          // instead of re-scanning and re-shuffling the event stream
+          .localCheckpoint()
+        val tot = tr.groupBy("from_type").agg(sum("n").as("n_from"))
+        tr.join(broadcast(tot), "from_type")
+          .select(col("from_type"), col("to_type"), col("n"),
+            expr("CAST(n * 1000000 div n_from AS BIGINT)").as("p_ppm"))
+          .orderBy("from_type", "to_type")
+      },
+      Some("WITH ev AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events), " +
+        "tr AS (SELECT event_type AS from_type, " +
+        "lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY us, event_id) AS to_type " +
+        "FROM ev), " +
+        "cnt AS (SELECT from_type, to_type, count(*) AS n FROM tr " +
+        "WHERE to_type IS NOT NULL GROUP BY 1, 2), " +
+        "tot AS (SELECT from_type, CAST(SUM(n) AS BIGINT) AS n_from FROM cnt GROUP BY 1) " +
+        "SELECT cnt.from_type, cnt.to_type, cnt.n, " +
+        "CAST(cnt.n * 1000000 // tot.n_from AS BIGINT) AS p_ppm " +
+        "FROM cnt JOIN tot USING (from_type) ORDER BY from_type, to_type")),
+
+    // Click-to-purchase conversion-lag distribution: per user, the
+    // first click and the first purchase at-or-after it; lag buckets
+    // to whole hours with user counts and a cumulative ppm curve (the
+    // "X% convert within N hours" readout). One user_id aggregate
+    // produces one row per converting user; the histogram and its
+    // cumulative window touch only lag-bucket rows.
+    Op("rel_conversion_lag",
+      (s, d) => {
+        val ev = T.eventsFp(s, d)
+        val u = ev.groupBy("user_id").agg(
+          min(when(col("event_type") === "click", col("us"))).as("c_us"))
+        val conv = ev.where("event_type = 'purchase'")
+          .join(u, "user_id")
+          .where("c_us IS NOT NULL AND us >= c_us")
+          .groupBy("user_id").agg(min("us").as("p_us"), min("c_us").as("c0"))
+          .select(expr("(p_us - c0) div 3600000000").as("lag_hours"))
+        val h = conv.groupBy("lag_hours").agg(count(lit(1)).as("n_users"))
+          // lag-bucket rows; pinned so the total and the cumulative
+          // window don't each re-aggregate the event stream
+          .localCheckpoint()
+        val tot = h.agg(expr("CAST(SUM(n_users) AS BIGINT)").as("t"))
+        val wCum = Window.orderBy("lag_hours")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        h.crossJoin(broadcast(tot))
+          .withColumn("cum", sum("n_users").over(wCum))
+          .select(col("lag_hours"), col("n_users"),
+            expr("CAST(cum * 1000000 div t AS BIGINT)").as("cum_ppm"))
+          .orderBy("lag_hours")
+      },
+      Some("WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events), " +
+        "u AS (SELECT user_id, min(CASE WHEN event_type = 'click' THEN us END) AS c_us " +
+        "FROM ev GROUP BY 1), " +
+        "conv AS (SELECT (min(ev.us) - min(u.c_us)) // 3600000000 AS lag_hours " +
+        "FROM ev JOIN u USING (user_id) " +
+        "WHERE ev.event_type = 'purchase' AND u.c_us IS NOT NULL AND ev.us >= u.c_us " +
+        "GROUP BY ev.user_id), " +
+        "h AS (SELECT lag_hours, CAST(count(*) AS BIGINT) AS n_users FROM conv GROUP BY 1), " +
+        "tot AS (SELECT CAST(SUM(n_users) AS BIGINT) AS t FROM h) " +
+        "SELECT h.lag_hours, h.n_users, " +
+        "CAST(SUM(h.n_users) OVER (ORDER BY h.lag_hours ROWS UNBOUNDED PRECEDING) " +
+        "* 1000000 // tot.t AS BIGINT) AS cum_ppm FROM h, tot ORDER BY h.lag_hours")),
+
+    // Time-weighted average value per event type over irregular
+    // per-user series (piecewise-constant hold between consecutive
+    // events of the same (user, type) stream) — the correct mean for
+    // unevenly sampled gauges, where the plain avg over-weights chatty
+    // periods. One (user_id, type) exchange carries the lead() window
+    // AND the first aggregate; the pooled per-type TWA divides
+    // DECIMAL(38) sums (v*dur reaches ~1e22 per segment — int64 is
+    // gone long before 100 TB). Streams with <2 events carry no
+    // duration and drop out, exactly as on the oracle side.
+    Op("rel_time_weighted_avg",
+      (s, d) => {
+        val w = Window.partitionBy("user_id", "event_type").orderBy("us", "event_id")
+        T.eventsFp(s, d)
+          .withColumn("nxt", lead("us", 1).over(w))
+          .where("nxt IS NOT NULL")
+          .withColumn("dur", expr("nxt - us"))
+          .groupBy("user_id", "event_type").agg(
+            expr("CAST(coalesce(sum(CAST(v AS DECIMAL(38,0)) * dur), 0) AS DECIMAL(38,0))").as("num"),
+            expr("CAST(coalesce(sum(CAST(dur AS DECIMAL(38,0))), 0) AS DECIMAL(38,0))").as("den"),
+            count(lit(1)).as("n_seg"))
+          .groupBy("event_type").agg(
+            count(lit(1)).as("n_streams"),
+            sum("n_seg").as("n_segments"),
+            expr("CAST(sum(num) div greatest(CAST(1 AS DECIMAL(38,0)), sum(den)) AS BIGINT)")
+              .as("twa_micro"))
+          .orderBy("event_type")
+      },
+      Some(s"WITH ${T.oEv}, " +
+        "seg AS (SELECT event_type, user_id, v, " +
+        "lead(us) OVER (PARTITION BY user_id, event_type ORDER BY us, event_id) - us AS dur " +
+        "FROM ev), " +
+        "st AS (SELECT user_id, event_type, " +
+        "CAST(coalesce(sum(CAST(v AS HUGEINT) * dur), 0) AS HUGEINT) AS num, " +
+        "CAST(coalesce(sum(CAST(dur AS HUGEINT)), 0) AS HUGEINT) AS den, " +
+        "count(*) AS n_seg FROM seg WHERE dur IS NOT NULL GROUP BY 1, 2) " +
+        "SELECT event_type, count(*) AS n_streams, " +
+        "CAST(sum(n_seg) AS BIGINT) AS n_segments, " +
+        "CAST(sum(num) // greatest(CAST(1 AS HUGEINT), sum(den)) AS BIGINT) AS twa_micro " +
+        "FROM st GROUP BY 1 ORDER BY 1")),
+
+    // User-growth curve: per active day, DAU, newly-seen users and the
+    // cumulative user count — the growth dashboard base table. Day ids
+    // are integer epoch-day math (no calendar/timezone dependency);
+    // everything flows from ONE distinct (user, day) projection — the
+    // DAU aggregate, the per-user first-day, and the new-user rollup;
+    // the cumulative sum is a window over the |days|-sized result.
+    Op("rel_user_growth",
+      (s, d) => {
+        val ud = T.events(s, d).select(col("user_id"),
+            expr("unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000").as("day_id"))
+          .distinct().localCheckpoint()
+        val dau = ud.groupBy("day_id").agg(count(lit(1)).as("dau"))
+        val nu = ud.groupBy("user_id").agg(min("day_id").as("day_id"))
+          .groupBy("day_id").agg(count(lit(1)).as("new_users"))
+        dau.join(nu, Seq("day_id"), "left")
+          .withColumn("new_users", coalesce(col("new_users"), lit(0L)))
+          .withColumn("cum_users", sum("new_users").over(
+            Window.orderBy("day_id")
+              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .select("day_id", "dau", "new_users", "cum_users")
+          .orderBy("day_id")
+      },
+      Some("WITH ud AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day_id FROM events), " +
+        "dau AS (SELECT day_id, count(*) AS dau FROM ud GROUP BY 1), " +
+        "nu AS (SELECT day_id, count(*) AS new_users FROM " +
+        "(SELECT user_id, min(day_id) AS day_id FROM ud GROUP BY 1) GROUP BY 1) " +
+        "SELECT day_id, dau, coalesce(new_users, 0) AS new_users, " +
+        "CAST(sum(coalesce(new_users, 0)) OVER (ORDER BY day_id " +
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users " +
+        "FROM dau LEFT JOIN nu USING (day_id) ORDER BY day_id")),
+
+    // DAU/MAU stickiness: per active day, the 28-day trailing distinct
+    // actives (MAU) and the DAU/MAU ratio in ppm. ADAPTIVE plan on the
+    // distinct (user, day) cardinality (one count off the checkpointed
+    // frame): below the threshold, EXACT rolling distinct via coverage
+    // expansion (each pair marks the 28 days it keeps the user
+    // "monthly active" — a bounded 28x of the PAIRS, the audit-grade
+    // form the oracle validates); above it, the 100-TB production path
+    // — per-day HLL sketches merged over a |days| x 28 grid
+    // (rel_dau_mau_hll's shape, data-size-independent), where `mau` is
+    // the sketch estimate (~1.6% typical at lgConfigK=12). A fact-scale
+    // corpus therefore never pays a 28x fact-cardinality exchange; the
+    // exact expansion only ever runs at audit-bounded sizes.
+    // Windows before day 28 of the series are partial by definition.
+    Op("rel_dau_mau_stickiness",
+      (s, d) => {
+        val ud = T.events(s, d).select(col("user_id"),
+            expr("unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000").as("day_id"))
+          .distinct().localCheckpoint()
+        val dau = ud.groupBy("day_id").agg(count(lit(1)).as("dau"))
+        // 20M pairs -> a 560M-row bounded expansion, the most an exact
+        // audit should ever shuffle; real fact scale goes to sketches
+        val maxExactPairs = 20000000L
+        val mau =
+          if (ud.count() <= maxExactPairs)
+            ud.select(col("user_id"),
+                explode(expr("sequence(day_id, day_id + 27)")).as("day_id"))
+              .distinct()
+              .groupBy("day_id").agg(count(lit(1)).as("mau"))
+          else
+            ud.groupBy("day_id").agg(expr("hll_sketch_agg(user_id)").as("sk"))
+              .select(col("sk"),
+                explode(expr("sequence(day_id, day_id + 27)")).as("day_id"))
+              .groupBy("day_id")
+              .agg(expr("hll_sketch_estimate(hll_union_agg(sk))").as("mau"))
+        dau.join(mau, Seq("day_id"))
+          .withColumn("sticky_ppm",
+            expr("CAST(CAST(dau AS DECIMAL(38,0)) * 1000000 div mau AS BIGINT)"))
+          .orderBy("day_id")
+      },
+      Some("WITH ud AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day_id FROM events), " +
+        "dau AS (SELECT day_id, count(*) AS dau FROM ud GROUP BY 1), " +
+        "mau AS (SELECT day_id, count(*) AS mau FROM " +
+        "(SELECT DISTINCT user_id, unnest(range(day_id, day_id + 28)) AS day_id FROM ud) " +
+        "GROUP BY 1) " +
+        "SELECT day_id, dau, mau, " +
+        "CAST(CAST(dau AS HUGEINT) * 1000000 // mau AS BIGINT) AS sticky_ppm " +
+        "FROM dau JOIN mau USING (day_id) ORDER BY day_id")),
+
+    // DAU/MAU via MERGED DAILY HLL SKETCHES — the 100-TB form of
+    // rel_dau_mau_stickiness' exact expansion: one fixed-size HLL per
+    // active day (the mergeable daily artifact a pipeline would persist
+    // in the SketchStore), trailing-28-day MAU by sketch union — the
+    // merge grid is |days| x 28 SKETCH rows, data-size-independent,
+    // where the exact expansion is 28x the (user, day) pairs. The op
+    // ships the exact values plus a measured error-bound boolean
+    // (|est - exact| <= 5% — HLL lgConfigK=12 is ~1.6% typical), the
+    // same oracle pattern as rel_agg_approx_distinct.
+    Op("rel_dau_mau_hll",
+      (s, d) => {
+        val ud = T.events(s, d).select(col("user_id"),
+            expr("unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000").as("day_id"))
+          .distinct().localCheckpoint()
+        val daily = ud.groupBy("day_id").agg(
+          expr("hll_sketch_agg(user_id)").as("sk"),
+          count(lit(1)).as("dau"))
+        val est = daily
+          .select(col("sk"), explode(expr("sequence(day_id, day_id + 27)")).as("day_id"))
+          .groupBy("day_id")
+          .agg(expr("hll_sketch_estimate(hll_union_agg(sk))").as("mau_est"))
+        val exact = ud
+          .select(col("user_id"), explode(expr("sequence(day_id, day_id + 27)")).as("day_id"))
+          .distinct()
+          .groupBy("day_id").agg(count(lit(1)).as("mau"))
+        daily.select("day_id", "dau")
+          .join(exact, Seq("day_id")).join(est, Seq("day_id"))
+          .select(col("day_id"), col("dau"), col("mau"),
+            (abs(col("mau_est") - col("mau")) <= col("mau") * lit(0.05)).as("hll_ok"))
+          .orderBy("day_id")
+      },
+      Some("WITH ud AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day_id FROM events), " +
+        "dau AS (SELECT day_id, count(*) AS dau FROM ud GROUP BY 1), " +
+        "mau AS (SELECT day_id, count(*) AS mau FROM " +
+        "(SELECT DISTINCT user_id, unnest(range(day_id, day_id + 28)) AS day_id FROM ud) " +
+        "GROUP BY 1) " +
+        "SELECT day_id, dau, mau, true AS hll_ok " +
+        "FROM dau JOIN mau USING (day_id) ORDER BY day_id")),
+
+    // Position-based (U-shaped 40/20/40) attribution — completes the
+    // family beside last-touch and linear: first and last touch in the
+    // 7-day pre-purchase window take 400000 ppm each, the middles share
+    // 200000 ppm (integer division, remainder to the earliest middles,
+    // so every purchase credits exactly 1e6); 1-touch paths take all,
+    // 2-touch paths split 50/50. Same join discipline as
+    // rel_attribution_linear: one time-bounded (user, window) join,
+    // per-purchase windows partitioned by pid.
+    Op("rel_attribution_position",
+      (s, d) => {
+        val ev = T.eventsFp(s, d)
+        val p = ev.where("event_type = 'purchase'")
+          .select(col("user_id"), col("event_id").as("pid"), col("us").as("pus"))
+          .alias("p")
+        val t = ev.where("event_type <> 'purchase'")
+          .select(col("user_id"), col("event_id").as("tid"),
+            col("event_type").as("channel"), col("us").as("tus"))
+          .alias("t")
+        val j = p.join(t, expr("p.user_id = t.user_id") &&
+            col("tus") < col("pus") && col("pus") - col("tus") <= 604800000000L)
+          .select("pid", "channel", "tus", "tid")
+        val wK = Window.partitionBy("pid")
+        val wR = Window.partitionBy("pid").orderBy("tus", "tid")
+        j.withColumn("k", count(lit(1)).over(wK))
+          .withColumn("rnk", row_number().over(wR))
+          .withColumn("credit", expr(
+            "CAST(CASE WHEN k = 1 THEN 1000000 WHEN k = 2 THEN 500000 " +
+              "WHEN rnk = 1 OR rnk = k THEN 400000 " +
+              "ELSE 200000 div (k - 2) + " +
+              "CASE WHEN rnk - 1 <= 200000 % (k - 2) THEN 1 ELSE 0 END END AS BIGINT)"))
+          .groupBy("channel").agg(
+            expr("CAST(SUM(credit) AS BIGINT)").as("credit_total"),
+            count(lit(1)).as("n_touches"))
+          .orderBy("channel")
+      },
+      Some("WITH ev AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events), " +
+        "p AS (SELECT user_id, event_id AS pid, us AS pus FROM ev WHERE event_type = 'purchase'), " +
+        "t AS (SELECT user_id, event_id AS tid, event_type AS channel, us AS tus FROM ev " +
+        "WHERE event_type <> 'purchase'), " +
+        "j AS (SELECT p.pid, t.channel, t.tus, t.tid FROM p JOIN t ON p.user_id = t.user_id " +
+        "AND t.tus < p.pus AND p.pus - t.tus <= 604800000000), " +
+        "r AS (SELECT pid, channel, count(*) OVER (PARTITION BY pid) AS k, " +
+        "row_number() OVER (PARTITION BY pid ORDER BY tus, tid) AS rnk FROM j) " +
+        "SELECT channel, CAST(SUM(CASE WHEN k = 1 THEN 1000000 WHEN k = 2 THEN 500000 " +
+        "WHEN rnk = 1 OR rnk = k THEN 400000 " +
+        "ELSE 200000 // (k - 2) + CASE WHEN rnk - 1 <= 200000 % (k - 2) THEN 1 ELSE 0 END END) " +
+        "AS BIGINT) AS credit_total, count(*) AS n_touches " +
+        "FROM r GROUP BY 1 ORDER BY 1"))
   )
 }

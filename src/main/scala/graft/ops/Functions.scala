@@ -1,8 +1,9 @@
 package graft.ops
 
 import graft.{Op, Tables => T}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType}
+import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType, DoubleType}
 
 /** SURVEY.md §2-D — scalar function families, one combined query per family.
   * Return types are aligned with DuckDB explicitly (DuckDB length/year/rank
@@ -318,5 +319,145 @@ object Functions {
         "regexp_extract(url, '[?&]lang=([^&]*)', 1) AS q_lang " +
         "FROM (SELECT doc_id, concat('https://', source, '.example.com/d/', doc_id, " +
         "'?lang=', lang, '&v=2') AS url FROM documents) ORDER BY doc_id")),
+
+    // Regex family extension: extract-all, global replace, split_part,
+    // regexp_like. Array results render as joined strings (driver's
+    // checker cannot hash raw list cells).
+    Op("fn_regex_extra",
+      (s, d) => T.t(s, d, "part").select(
+          col("p_partkey"),
+          expr("array_join(regexp_extract_all(p_name, '[a-z]+', 0), '|')").as("words"),
+          expr("CAST(size(regexp_extract_all(p_name, '[a-z]+', 0)) AS INT)").as("n_words"),
+          expr("regexp_replace(p_name, '[aeiou]', '*')").as("starred"),
+          expr("split_part(p_type, ' ', 2)").as("type_mid"),
+          expr("regexp_like(p_name, '^[a-z]')").as("starts_lower"))
+        .orderBy("p_partkey"),
+      Some("SELECT p_partkey, " +
+        "array_to_string(regexp_extract_all(p_name, '[a-z]+'), '|') AS words, " +
+        "CAST(len(regexp_extract_all(p_name, '[a-z]+')) AS INTEGER) AS n_words, " +
+        "regexp_replace(p_name, '[aeiou]', '*', 'g') AS starred, " +
+        "split_part(p_type, ' ', 2) AS type_mid, " +
+        "regexp_matches(p_name, '^[a-z]') AS starts_lower " +
+        "FROM part ORDER BY p_partkey")),
+
+    // Edit distance between consecutive part names within a brand (lag
+    // window gives bounded deterministic pairs without a self-join).
+    Op("fn_levenshtein",
+      (s, d) => {
+        val w = Window.partitionBy("p_brand").orderBy("p_partkey")
+        T.t(s, d, "part")
+          .withColumn("prev_name", lag("p_name", 1).over(w))
+          .where(col("prev_name").isNotNull)
+          .select(col("p_partkey"), col("p_brand"),
+            expr("CAST(levenshtein(p_name, prev_name) AS INT)").as("lev"),
+            expr("CAST(levenshtein(substring(p_name, 1, 10), substring(prev_name, 1, 10)) AS INT)").as("lev10"))
+          .orderBy("p_partkey")
+      },
+      Some("SELECT p_partkey, p_brand, " +
+        "CAST(levenshtein(p_name, prev_name) AS INTEGER) AS lev, " +
+        "CAST(levenshtein(substring(p_name, 1, 10), substring(prev_name, 1, 10)) AS INTEGER) AS lev10 " +
+        "FROM (SELECT p_partkey, p_brand, p_name, " +
+        "lag(p_name, 1) OVER (PARTITION BY p_brand ORDER BY p_partkey) AS prev_name FROM part) " +
+        "WHERE prev_name IS NOT NULL ORDER BY p_partkey")),
+
+    // INTERVAL arithmetic family over TIMESTAMP_NTZ order dates (all
+    // midnight-aligned, so boundary-counting date_diff and complete-unit
+    // timestampdiff agree; month addition clamps to month end in both).
+    Op("fn_interval",
+      (s, d) => T.t(s, d, "orders").select(
+          col("o_orderkey"),
+          expr("CAST(o_orderdate + INTERVAL 3 DAY AS TIMESTAMP_NTZ)").as("plus3d"),
+          expr("CAST(o_orderdate - INTERVAL 90 MINUTE AS TIMESTAMP_NTZ)").as("minus90m"),
+          expr("CAST(o_orderdate + INTERVAL 2 HOUR + INTERVAL 45 SECOND AS TIMESTAMP_NTZ)").as("plus2h45s"),
+          expr("CAST(o_orderdate + INTERVAL 2 MONTH AS TIMESTAMP_NTZ)").as("plus2mo"),
+          expr("timestampdiff(HOUR, o_orderdate, TIMESTAMP_NTZ '2002-01-01 00:00:00')").as("hours_to_2002"),
+          expr("timestampdiff(DAY, o_orderdate, TIMESTAMP_NTZ '2002-01-01 00:00:00')").as("days_left"))
+        .orderBy("o_orderkey"),
+      Some("SELECT o_orderkey, o_orderdate + INTERVAL 3 DAY AS plus3d, " +
+        "o_orderdate - INTERVAL 90 MINUTE AS minus90m, " +
+        "o_orderdate + INTERVAL 2 HOUR + INTERVAL 45 SECOND AS plus2h45s, " +
+        "o_orderdate + INTERVAL 2 MONTH AS plus2mo, " +
+        "date_diff('hour', o_orderdate, TIMESTAMP '2002-01-01') AS hours_to_2002, " +
+        "date_diff('day', o_orderdate, TIMESTAMP '2002-01-01') AS days_left " +
+        "FROM orders ORDER BY o_orderkey")),
+
+    // Character-code family: ascii / chr round-trips.
+    Op("fn_char",
+      (s, d) => T.t(s, d, "customer").select(
+          col("c_custkey"),
+          expr("ascii(c_name)").as("a_first"),
+          expr("ascii(substring(c_mktsegment, 2, 1))").as("a_second"),
+          expr("chr(65 + c_nationkey % 26)").as("letter"),
+          expr("concat(chr(ascii(c_mktsegment)), lower(substring(c_mktsegment, 2)))").as("recased"))
+        .orderBy("c_custkey"),
+      Some("SELECT c_custkey, CAST(ascii(c_name) AS INTEGER) AS a_first, " +
+        "CAST(ascii(substring(c_mktsegment, 2, 1)) AS INTEGER) AS a_second, " +
+        "chr(65 + c_nationkey % 26) AS letter, " +
+        "concat(chr(ascii(c_mktsegment)), lower(substring(c_mktsegment, 2))) AS recased " +
+        "FROM customer ORDER BY c_custkey")),
+
+    // Spark 4 VariantType path through semi-structured data: parse_json
+    // into a Variant and extract typed fields with variant_get — the
+    // binary-encoded, shreddable successor to string-walking
+    // get_json_object (fn_json keeps the classic path for contrast).
+    // Null props flow through as null variants.
+    Op("fn_variant",
+      (s, d) => T.events(s, d).select(
+          col("event_id"),
+          expr("variant_get(parse_json(props), '$.k', 'int')").as("k_int"),
+          expr("variant_get(parse_json(props), '$.k', 'int') * 2").as("k_doubled"),
+          expr("variant_get(parse_json(props), '$.k', 'int') IS NOT NULL").as("has_k"))
+        .orderBy("event_id"),
+      Some("SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_int, " +
+        "CAST(json_extract_string(props, '$.k') AS INTEGER) * 2 AS k_doubled, " +
+        "CAST(json_extract_string(props, '$.k') AS INTEGER) IS NOT NULL AS has_k " +
+        "FROM events ORDER BY event_id")),
+
+    // Error-safe TRY functions (the ANSI-mode companions): try_cast on
+    // strings that may not parse, try_divide by zero, try_to_number with
+    // a format. Under ANSI semantics the plain forms would throw; the
+    // TRY forms degrade to NULL identically in both engines.
+    Op("fn_try",
+      (s, d) => T.t(s, d, "part").select(
+          col("p_partkey"),
+          expr("try_cast(substring(p_name, 1, 2) AS INT)").as("head_int"),
+          expr("try_cast(p_brand AS DOUBLE)").as("brand_num"),
+          expr("try_divide(p_retailprice, p_size - p_size)").as("div0"),
+          expr("try_divide(p_retailprice, CAST(p_size AS DOUBLE))").as("per_size"),
+          expr("CAST(try_cast(CASE WHEN p_partkey % 2 = 0 THEN '2024-01-15' " +
+            "ELSE 'not-a-date' END AS DATE) AS STRING)").as("maybe_date"))
+        .orderBy("p_partkey"),
+      Some("SELECT p_partkey, " +
+        "TRY_CAST(substring(p_name, 1, 2) AS INTEGER) AS head_int, " +
+        "TRY_CAST(p_brand AS DOUBLE) AS brand_num, " +
+        "CASE WHEN p_size - p_size = 0 THEN NULL ELSE p_retailprice / (p_size - p_size) END AS div0, " +
+        "p_retailprice / CAST(p_size AS DOUBLE) AS per_size, " +
+        "CAST(TRY_CAST(CASE WHEN p_partkey % 2 = 0 THEN '2024-01-15' ELSE 'not-a-date' END AS DATE) AS VARCHAR) AS maybe_date " +
+        "FROM part ORDER BY p_partkey")),
+
+    // Predicate/combining higher-order functions over array columns —
+    // exists / forall / filter-count / zip_with+aggregate fold — the
+    // part of the HOF suite fn_array doesn't exercise. All stay inside
+    // whole-stage codegen; the fold lands in an epsilon-guarded fixed
+    // point so the sequential double accumulation compares exactly.
+    Op("fn_hof_predicates",
+      (s, d) => T.spread(T.t(s, d, "embeddings")).select(
+          col("vec_id"),
+          expr("exists(embedding, x -> x > 0.9D)").as("any_hot"),
+          expr("forall(embedding, x -> x >= -1.0D)").as("all_bounded"),
+          expr("CAST(size(filter(embedding, x -> x < 0D)) AS INT)").as("n_neg"),
+          expr("CAST(floor(aggregate(zip_with(embedding, reverse(embedding), " +
+            "(a, b) -> CAST(a AS DOUBLE) * CAST(b AS DOUBLE)), CAST(0 AS DOUBLE), " +
+            "(acc, v) -> acc + v) * 10000 + 0.000001) AS BIGINT)").as("dotrev_fp"))
+        .orderBy("vec_id"),
+      Some("SELECT vec_id, " +
+        "len(list_filter(embedding, x -> CAST(x AS DOUBLE) > 0.9)) > 0 AS any_hot, " +
+        "len(list_filter(embedding, x -> NOT (CAST(x AS DOUBLE) >= -1.0))) = 0 AS all_bounded, " +
+        "CAST(len(list_filter(embedding, x -> CAST(x AS DOUBLE) < 0)) AS INTEGER) AS n_neg, " +
+        "CAST(floor(list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
+        "list_transform(range(len(embedding)), i -> " +
+        "CAST(embedding[i + 1] AS DOUBLE) * CAST(embedding[len(embedding) - i] AS DOUBLE))), " +
+        "(a, v) -> a + v) * 10000 + 0.000001) AS BIGINT) AS dotrev_fp " +
+        "FROM embeddings ORDER BY vec_id"))
   )
 }

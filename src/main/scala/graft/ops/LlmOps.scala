@@ -1,19 +1,12 @@
 package graft.ops
 
-import graft.{Op, Tables => T}
+import graft.{Tables => T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** SURVEY.md §2-F plus the driver-mandated training-data-pipeline surface:
-  * dedup (exact, sorted-signature fuzzy, MinHash+LSH, SimHash, n-gram
-  * Jaccard, embedding near-dup), similarity search (brute-force top-k, k-NN
-  * join, partition-pruned IVF-style ANN), text analysis (stats, top terms,
-  * language-ID, quality score, token counts, rolling-hash fingerprint) and
-  * the multimodal struct-column bundle.
-  *
-  * Scale rules baked in: no collect(); probes/params broadcast; pair
-  * generation is always blocked/bucketed (LSH band, simhash prefix, shared
-  * shingle, label) so the quadratic term is per-bucket, never global.
+/** Kernels the LLM family modules ([[LlmDedup]], [[LlmText]],
+  * [[LlmVectors]]) share: the cosine-similarity fold with its DuckDB
+  * twin, and the nearest-seed k-means assignment with its oracle CTE.
   *
   * Float parity: cosine similarity is computed as an explicit sequential
   * left-fold over the vector in DOUBLE on BOTH engines (Spark
@@ -21,14 +14,6 @@ import org.apache.spark.sql.functions._
   * the results bit-identical and needs no rounding.
   */
 object LlmOps {
-
-  /** Max DISTINCT texts a (lang, n_chars) levenshtein block may hold
-    * before the first-2-token prefix sub-blocking kicks in (see
-    * llm_dedup_levenshtein). Low enough that the sf0.1 corpus exercises
-    * the capped path under the DuckDB oracle; at 100 TB the cap bounds
-    * every block's all-pairs term to prefix-equivalence classes.
-    */
-  private[graft] val levenshteinBlockCap = 32
 
   /** Sequential double dot-product fold, Spark side. */
   private[graft] def dot(a: String, b: String): String =
@@ -42,7 +27,7 @@ object LlmOps {
     * (same accumulation order; pinned by a test) but stays inside
     * whole-stage codegen with no per-row allocation.
     */
-  private def simCol(a: String, b: String) = expr(s"cosine_sim($a, $b)")
+  private[ops] def simCol(a: String, b: String) = expr(s"cosine_sim($a, $b)")
 
   /** Same fold, DuckDB side (list_reduce is a sequential left-fold). */
   private def oDot(a: String, b: String): String =
@@ -53,78 +38,12 @@ object LlmOps {
   private[ops] def oSim(a: String, b: String): String =
     s"${oDot(a, b)} / sqrt(${oDot(a, a)} * ${oDot(b, b)})"
 
-  private[ops] val neardupThr = 0.35
-
-  /** Ball-pruned candidate pairs for embedding near-dup: vectors are
-    * assigned to 32 coarse cells (nearest seed vector on the unit
-    * sphere, the IVF coarse-quantizer shape); a cell PAIR is admissible
-    * only if the seed distance minus both cell radii can still reach
-    * the cosine threshold (unit sphere: sim >= t <=> ||ux-uy|| <=
-    * sqrt(2-2t), and the triangle inequality gives ||ux-uy|| >=
-    * d(sa,sb) - ra - rb). The candidate join is equi on (label,
-    * admissible-partner cell) — EXACT (no recall loss, unlike LSH
-    * candidates), with the quadratic bounded per admissible cell pair
-    * instead of per label: at 100 TB the per-task work is
-    * |cell_a| x |cell_b| for nearby cells only, and tighter clustering
-    * prunes more. Cell stats are one bounded collect (<= 32 rows + 32
-    * seed vectors); admissibility is a <= 1024-row broadcast. Returns
-    * (v1, v2, e1, e2) with v1 < v2.
-    */
-  private[ops] def neardupCellCandidates(
-      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val nSeeds = 32
-    val emb = T.spread(T.t(s, d, "embeddings"))
-    val unit = emb.withColumn("u",
-      expr(s"transform(embedding, x -> CAST(x AS DOUBLE) / sqrt(${dot("embedding", "embedding")}))"))
-    // seeds are selected DATA-DEPENDENTLY (first nSeeds rows by vec_id
-    // via a bounded sort-limit, one driver collect of <= 32 rows) — a
-    // fixed `vec_id < 32` filter silently returned ZERO candidate
-    // pairs on any input whose ids happen to start above 32
-    import s.implicits._
-    val seedRows = unit.select(col("vec_id"), col("u"))
-      .orderBy("vec_id").limit(nSeeds).collect()
-    val seeds = seedRows.zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](1)) }.toSeq
-      .toDF("c_id", "c_vec")
-    val d2u = "aggregate(zip_with(u, c_vec, (x, c) -> (x - c) * (x - c)), " +
-      "CAST(0 AS DOUBLE), (a, v) -> a + v)"
-    val assigned = unit.crossJoin(broadcast(seeds))
-      .withColumn("d2", expr(d2u))
-      .withColumn("rnc", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("d2"), col("c_id"))))
-      .where("rnc = 1")
-      .select(col("vec_id"), col("label"), col("embedding"),
-        col("c_id").as("cell"), col("d2"))
-      .localCheckpoint()
-    val radii = assigned.groupBy("cell").agg(max("d2").as("r2")).collect()
-      .map(r => r.getInt(0) -> math.sqrt(r.getDouble(1))).toMap
-    val seedVecs = seedRows.zipWithIndex
-      .map { case (r, i) => i -> r.getSeq[Double](1).toArray }.toMap
-    // fp slack on the admit side only: a falsely admitted pair costs a
-    // sim evaluation, a falsely pruned one would cost correctness
-    val bound = math.sqrt(2.0 - 2.0 * neardupThr) + 1e-9
-    val adm = for {
-      (a, va) <- seedVecs.toSeq if radii.contains(a)
-      (b, vb) <- seedVecs.toSeq if radii.contains(b)
-      dist = math.sqrt(va.zip(vb).map { case (p, q) => (p - q) * (p - q) }.sum)
-      if dist - radii(a) - radii(b) <= bound
-    } yield (a, b)
-    val admDf = adm.toDF("cell", "cell2")
-    val x = assigned.join(broadcast(admDf), "cell")
-      .select(col("vec_id").as("v1"), col("embedding").as("e1"),
-        col("label"), col("cell2"))
-    val y = assigned.select(col("vec_id").as("v2"), col("embedding").as("e2"),
-      col("label"), col("cell").as("cell2"))
-    x.join(y, Seq("label", "cell2")).where("v1 < v2")
-      .select("v1", "v2", "e1", "e2")
-  }
-
   /** Nearest-of-10-seed-centroids assignment (shared by llm_kmeans_step
     * and llm_semdedup): bounded seed set broadcast against the vector
     * stream, squared-L2 as a sequential fold, argmin via window with
     * c_id tiebreak. Returns (vec_id, embedding, c_id).
     */
-  private def kmeansAssign(s: org.apache.spark.sql.SparkSession, d: String) = {
+  private[ops] def kmeansAssign(s: org.apache.spark.sql.SparkSession, d: String) = {
     val emb = T.t(s, d, "embeddings")
     val seeds = emb.where("vec_id < 10")
       .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
@@ -142,7 +61,7 @@ object LlmOps {
   /** The kmeans-assignment CTE prefix shared by the kmeans/semdedup
     * oracles (must stay textually in sync with [[kmeansAssign]]).
     */
-  private val oKmeansAssign: String =
+  private[ops] val oKmeansAssign: String =
     "WITH seeds AS (SELECT vec_id AS c_id, embedding AS c_vec FROM embeddings WHERE vec_id < 10), " +
       "a AS (SELECT e.vec_id, e.embedding, s.c_id, " +
       "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
@@ -153,1713 +72,4 @@ object LlmOps {
       "b AS (SELECT vec_id, embedding, c_id, " +
       "row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_id) AS rn FROM a), " +
       "m AS (SELECT vec_id, embedding, c_id FROM b WHERE rn = 1)"
-
-  /** DuckDB CTE prefix replaying [[graft.api.AnnIndex.train]]'s three
-    * unrolled fixed-point Lloyd iterations over 64-dim embeddings;
-    * terminal CTE is `c3(c_id, n, c_vec)`. Shared by llm_kmeans_train
-    * and the trained-IVF family, so the trained index's oracle IS the
-    * training oracle.
-    */
-  private[ops] def oKmeansIter(i: Int, prev: String): String =
-    s"a$i AS (SELECT e.vec_id, e.embedding, c.c_id, " +
-      "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-      "list_transform(range(1, 65), k -> " +
-      "(CAST(e.embedding[k] AS DOUBLE) - c.c_vec[k]) * " +
-      s"(CAST(e.embedding[k] AS DOUBLE) - c.c_vec[k]))), (x, y) -> x + y) AS d2 " +
-      s"FROM embeddings e, $prev c), " +
-    s"b$i AS (SELECT vec_id, embedding, c_id, " +
-      s"row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_id) AS rn FROM a$i), " +
-    s"m$i AS (SELECT c_id, embedding FROM b$i WHERE rn = 1), " +
-    s"s$i AS (SELECT c_id, t.range AS pos, " +
-      s"CAST(floor(CAST(embedding[t.range] AS DOUBLE) * 10000) AS BIGINT) AS fp FROM m$i, range(1, 65) t), " +
-    s"g$i AS (SELECT c_id, pos, CAST(SUM(fp) AS BIGINT) AS s, count(*) AS cnt FROM s$i GROUP BY c_id, pos), " +
-    s"h$i AS (SELECT c_id, max(cnt) AS n, list(s ORDER BY pos) AS ss FROM g$i GROUP BY c_id), " +
-    s"c$i AS (SELECT c_id, n, list_transform(ss, x -> CAST(x AS DOUBLE) / (10000.0 * n)) AS c_vec FROM h$i)"
-
-  private[ops] val oKmeansTrainedPrefix: String =
-    "WITH c0 AS (SELECT vec_id AS c_id, " +
-      "list_transform(embedding, x -> CAST(x AS DOUBLE)) AS c_vec " +
-      "FROM embeddings WHERE vec_id < 10), " +
-      oKmeansIter(1, "c0") + ", " + oKmeansIter(2, "c1") + ", " + oKmeansIter(3, "c2")
-
-  /** Trigram-shingle Jaccard near-dup pairs (tau = 0.2), shared by
-    * llm_ngram_jaccard (emits the pairs) and llm_dedup_cluster (connected
-    * components over them). Inverted-index self-join on 64-bit shingle
-    * hashes (8-byte shuffle keys; the oracle keeps exact strings — a
-    * collision would perturb one shared-count at ~2^-40 odds), with a
-    * posting-list cap: shingles in >256 docs are non-discriminative and
-    * would make the hottest list quadratic, so they're dropped from pair
-    * GENERATION only (denominators still count every shingle).
-    * Returns (d1, d2, jaccard).
-    */
-  /** Distinct trigram shingles of `toks`, hashed to 64 bits in-place:
-    * the cached frames and every downstream shuffle carry 8-byte keys
-    * instead of ~30-byte strings (the oracle keeps exact strings; a
-    * collision would perturb one shared-count at ~2^-40 odds).
-    */
-  private[ops] val shingleHashExpr: String =
-    "transform(array_distinct(transform(sequence(1, size(toks) - 2), " +
-      "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1), ' ', element_at(toks, i + 2)))), " +
-      "sh -> xxhash64(sh))"
-
-  /** EXACT-DEDUP-FIRST (the dedup_cluster quotient trick, round 4 also
-    * applied here): shingling and the inverted-index self-join run on ONE
-    * representative per identical-(lowered-)text group, with each
-    * shingle's document frequency weighted by group size so the rare cap
-    * sees full-corpus df. Pairs then expand back to every member:
-    *  - inter-group: every (a in g1, b in g2) pair shares the rep pair's
-    *    jaccard (identical shingle sets per member);
-    *  - intra-group: identical docs share exactly their rare shingles, so
-    *    the pair value is r_sh / (2*n_sh - r_sh), emitted when >= 0.2.
-    * Output is row-identical to the naive all-docs form (the oracle still
-    * computes all pairs); the quadratic candidate term runs on |reps|,
-    * which on a duplicate-heavy corpus is the whole ballgame — the 20x
-    * scale probe drops from 117 s to the quotient cost.
-    *
-    * ADAPTIVE: the quotient pays a text shuffle plus member-expansion
-    * joins, which only pay off when duplicates are plentiful. One cheap
-    * partial-agg job (count + approx distinct text-hash) picks the plan:
-    * >= ~10% duplicate docs -> quotient, else the direct inverted-index
-    * join. Both paths emit identical rows.
-    *
-    * The `gl` projection is deliberately NOT persisted even though the
-    * decision agg, the gid grouping, and the member expansion each scan
-    * it: re-running a columnar projection is linear and cheap, while
-    * caching a corpus-wide text column is exactly the memory footprint
-    * that kills a 100-TB run. Scans stay O(n); memory stays O(reps).
-    */
-  private[ops] def jaccardPairs(
-      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    // one build per session serves llm_ngram_jaccard AND the recall
-    // audit's truth side (the result is checkpointed, so the memo
-    // returns settled rows)
-    CorpusStats.memoDf(s, d, "jaccardPairs")(jaccardPairsImpl(s, d))
-
-  private def jaccardPairsImpl(
-      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    // gid pairs the 64-bit hash with the text length: collisions then
-    // require equal lengths too — the negligible-at-any-scale fingerprint
-    // (a same-length 64-bit collision, ~2^-64 per length class).
-    val gl = T.spread(T.t(s, d, "documents"))
-      .select(col("doc_id"), lower(col("text")).as("ltext"))
-      .withColumn("gid", struct(xxhash64(col("ltext")), length(col("ltext"))))
-    if (CorpusStats.mostlyUnique(s, d)) {
-      // near-duplicate-free corpus: direct inverted-index self-join
-      val sid = gl
-        .withColumn("toks", split(col("ltext"), " "))
-        .where("size(toks) >= 3")
-        .select(col("doc_id"), explode(expr(shingleHashExpr)).as("sid"))
-        .persist()
-      val counts = sid.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-      val rare = sid.groupBy("sid").agg(count(lit(1)).as("df"))
-        .where(s"df <= ${CorpusStats.rareDfCap(s, d)}")
-        .select("sid")
-      val shRare = sid.join(rare, "sid")
-      val pairs = shRare.as("x").join(shRare.as("y"),
-          col("x.sid") === col("y.sid") && col("x.doc_id") < col("y.doc_id"))
-        .groupBy(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        .agg(count(lit(1)).as("shared"))
-        .join(counts.select(col("doc_id").as("d1"), col("n_sh").as("n1")), "d1")
-        .join(counts.select(col("doc_id").as("d2"), col("n_sh").as("n2")), "d2")
-        .withColumn("jaccard", expr("CAST(shared AS DOUBLE) / (n1 + n2 - shared)"))
-        .where("jaccard >= 0.2")
-        .select("d1", "d2", "jaccard")
-        .localCheckpoint()
-      sid.unpersist()
-      return pairs
-    }
-    val gidRep = gl.groupBy("gid")
-      .agg(min("doc_id").as("rep"), first("ltext").as("ltext"),
-        count(lit(1)).as("n_dup"))
-      .persist()
-    val sid = gidRep
-      .withColumn("toks", split(col("ltext"), " "))
-      .where("size(toks) >= 3")
-      .select(col("rep"), col("n_dup"), explode(expr(shingleHashExpr)).as("sid"))
-      .persist() // feeds the inverted-index self-join and the counts
-    val counts = sid.groupBy("rep").agg(count(lit(1)).as("n_sh"))
-    val rare = sid.groupBy("sid").agg(sum("n_dup").as("df"))
-      .where(s"df <= ${CorpusStats.rareDfCap(s, d)}")
-      .select("sid")
-    val shRare = sid.join(rare, "sid").select("rep", "sid").persist()
-    val repPairs = shRare.as("x").join(shRare.as("y"),
-        col("x.sid") === col("y.sid") && col("x.rep") < col("y.rep"))
-      .groupBy(col("x.rep").as("r1"), col("y.rep").as("r2"))
-      .agg(count(lit(1)).as("shared"))
-      .join(counts.select(col("rep").as("r1"), col("n_sh").as("n1")), "r1")
-      .join(counts.select(col("rep").as("r2"), col("n_sh").as("n2")), "r2")
-      .withColumn("jaccard", expr("CAST(shared AS DOUBLE) / (n1 + n2 - shared)"))
-      .where("jaccard >= 0.2")
-      .select("r1", "r2", "jaccard")
-    val members = gl.join(gidRep.select("gid", "rep"), "gid")
-      .select(col("rep"), col("doc_id"))
-    val inter = repPairs
-      .join(members.select(col("rep").as("r1"), col("doc_id").as("a")), "r1")
-      .join(members.select(col("rep").as("r2"), col("doc_id").as("b")), "r2")
-      .select(least(col("a"), col("b")).as("d1"),
-        greatest(col("a"), col("b")).as("d2"), col("jaccard"))
-    val rareCounts = shRare.groupBy("rep").agg(count(lit(1)).as("r_sh"))
-    val intra = gidRep.where("n_dup >= 2").select("rep")
-      .join(counts, "rep").join(rareCounts, "rep")
-      .withColumn("jaccard", expr("CAST(r_sh AS DOUBLE) / (2 * n_sh - r_sh)"))
-      .where("jaccard >= 0.2")
-      .select("rep", "jaccard")
-      .join(members.select(col("rep"), col("doc_id").as("a")), "rep")
-      .join(members.select(col("rep"), col("doc_id").as("b")), "rep")
-      .where("a < b")
-      .select(col("a").as("d1"), col("b").as("d2"), col("jaccard"))
-    // pairs are tiny on real corpora (near-dup survivors); pinning them
-    // lets the caches be released instead of leaking per invocation
-    val pairs = inter.unionByName(intra).localCheckpoint()
-    Seq(gidRep, sid, shRare).foreach(_.unpersist())
-    pairs
-  }
-
-  /** DuckDB CTE list matching [[jaccardPairs]]; terminal CTE is
-    * `pairs(d1, d2, jaccard)`. Callers prepend WITH / WITH RECURSIVE.
-    */
-  private[ops] val oJaccardPairs: String =
-    "sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(toks) - 1), " +
-      "i -> concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2])))) AS shingle " +
-      "FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents) WHERE len(toks) >= 3), " +
-      "counts AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id), " +
-      s"rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= ${CorpusStats.oRareDfCap}), " +
-      "shrare AS (SELECT doc_id, shingle FROM sh JOIN rare USING (shingle)), " +
-      "shared AS (SELECT x.doc_id AS d1, y.doc_id AS d2, count(*) AS shared FROM shrare x JOIN shrare y " +
-      "ON x.shingle = y.shingle AND x.doc_id < y.doc_id GROUP BY x.doc_id, y.doc_id), " +
-      "pairs AS (SELECT d1, d2, CAST(shared AS DOUBLE) / (n1 + n2 - shared) AS jaccard " +
-      "FROM shared JOIN (SELECT doc_id AS d1, n_sh AS n1 FROM counts) c1 USING (d1) " +
-      "JOIN (SELECT doc_id AS d2, n_sh AS n2 FROM counts) c2 USING (d2) " +
-      "WHERE CAST(shared AS DOUBLE) / (n1 + n2 - shared) >= 0.2)"
-
-  /** Contiguous token-budget shard packing (per language, doc_id order,
-    * ~2000-token shards) — shared by llm_pack_shards (per-doc
-    * assignment), llm_shard_manifest, and llm_packing_efficiency.
-    *
-    * Two-level cumulative sum so no single partition ever holds a whole
-    * language: docs bucket into contiguous doc_id ranges of 4096, the
-    * running sum is computed inside each bounded (lang, bucket) group,
-    * and per-bucket offsets (an exclusive prefix over the 4096x-smaller
-    * bucket-totals table) reconcile it to the exact per-lang global
-    * cumulative sum. Output is numerically identical to a single
-    * per-lang window; at 100 TB the dominant language splits across
-    * corpus/4096 parallel window partitions instead of one.
-    */
-  private[ops] def packShards(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val B = 4096
-    val docs = T.t(s, d, "documents")
-      .withColumn("n_tokens", expr("size(split(text, ' '))"))
-      .withColumn("bucket", expr(s"CAST(doc_id div $B AS INT)"))
-    val wLocal = Window.partitionBy("lang", "bucket").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wOffset = Window.partitionBy("lang").orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = docs.groupBy("lang", "bucket").agg(sum("n_tokens").as("btok"))
-      .withColumn("off", coalesce(sum("btok").over(wOffset), lit(0L)))
-      .select("lang", "bucket", "off")
-    docs.withColumn("lcum", sum("n_tokens").over(wLocal))
-      .join(offsets, Seq("lang", "bucket"))
-      .withColumn("cum", col("off") + col("lcum"))
-      .withColumn("shard_id", expr("CAST((cum - n_tokens) div 2000 AS INT)"))
-      .select("doc_id", "lang", "n_tokens", "shard_id")
-  }
-
-  /** DuckDB equivalent of [[packShards]] as a CTE named `packed`. */
-  private val oPackShards: String =
-    "packed AS (SELECT doc_id, lang, n_tokens, CAST((cum - n_tokens) // 2000 AS INTEGER) AS shard_id FROM (" +
-      "SELECT doc_id, lang, CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens, " +
-      "CAST(SUM(len(string_split(text, ' '))) OVER (PARTITION BY lang ORDER BY doc_id " +
-      "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum " +
-      "FROM documents))"
-
-  /** Deterministic 32-bit token hash for the MinHash/SimHash oracles:
-    * first 8 hex digits of md5 — the Spark side computes the same value in
-    * graft.functions.ShingleHashes.
-    */
-  private val duckTokHash = "CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT)"
-
-  /** N-gram-heuristic language ID (shared by llm_lang_id and
-    * llm_langid_confusion): top-20 tokens per labeled language form the
-    * profile; a doc's prediction is the profile with most distinct-token
-    * matches (p_lang tiebreak), 'unknown' when nothing matches. Returns
-    * (doc_id, lang, pred_lang, matches).
-    */
-  private[ops] def langIdPredictions(
-      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val docs = T.t(s, d, "documents")
-    val tok = T.spread(docs).select(col("doc_id"), col("lang"),
-      explode(split(col("text"), " ")).as("token"))
-    val wp = Window.partitionBy("lang").orderBy(desc("cnt"), col("token"))
-    val profile = tok.groupBy("lang", "token").agg(count(lit(1)).as("cnt"))
-      .withColumn("rnk", row_number().over(wp)).where("rnk <= 20")
-      .select(col("lang").as("p_lang"), col("token"))
-    val docTok = tok.select("doc_id", "token").distinct()
-    val wb = Window.partitionBy("doc_id").orderBy(desc("matches"), col("p_lang"))
-    val best = docTok.join(broadcast(profile), "token")
-      .groupBy("doc_id", "p_lang").agg(count(lit(1)).as("matches"))
-      .withColumn("rn", row_number().over(wb)).where("rn = 1")
-      .select(col("doc_id"), col("p_lang").as("pred_lang"), col("matches"))
-    docs.select("doc_id", "lang").join(best, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("lang"),
-        coalesce(col("pred_lang"), lit("unknown")).as("pred_lang"),
-        coalesce(col("matches"), lit(0L)).as("matches"))
-  }
-
-  /** DuckDB CTE prefix matching [[langIdPredictions]]; terminal CTE is
-    * `best(doc_id, p_lang, matches)` (join back to documents for the
-    * unmatched-doc 'unknown' fallback).
-    */
-  private[ops] val oLangIdCtes: String =
-    "WITH tok AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS token FROM documents), " +
-      "profile AS (SELECT p_lang, token FROM (SELECT lang AS p_lang, token, count(*) AS cnt, " +
-      "row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, token) AS rnk " +
-      "FROM tok GROUP BY lang, token) WHERE rnk <= 20), " +
-      "doctok AS (SELECT DISTINCT doc_id, token FROM tok), " +
-      "scores AS (SELECT doc_id, p_lang, count(*) AS matches FROM doctok JOIN profile USING (token) GROUP BY doc_id, p_lang), " +
-      "best AS (SELECT doc_id, p_lang, matches FROM (SELECT doc_id, p_lang, matches, " +
-      "row_number() OVER (PARTITION BY doc_id ORDER BY matches DESC, p_lang) AS rn FROM scores) WHERE rn = 1)"
-
-  /** DuckDB CTE list for the 20-token shared-window (exact-substring)
-    * pairs; terminal CTE is `spairs(d1, d2, n_shared)`. Shared by
-    * llm_dedup_substring and the composed llm_dedup_verdicts oracle.
-    * MUST be declared before `ops` (vals initialize in order).
-    */
-  private[ops] val oSubstringCtes: String =
-    "w AS (SELECT doc_id, unnest(list_distinct(list_transform(" +
-      "range(1, len(toks) - 18), i -> array_to_string(list_slice(toks, i, i + 19), ' ')))) AS w " +
-      "FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents) " +
-      "WHERE len(toks) >= 20), " +
-      s"rare AS (SELECT w FROM w GROUP BY w HAVING count(*) <= ${CorpusStats.oRareDfCap}), " +
-      "wr AS (SELECT doc_id, w FROM w JOIN rare USING (w)), " +
-      "spairs AS (SELECT x.doc_id AS d1, y.doc_id AS d2, count(*) AS n_shared " +
-      "FROM wr x JOIN wr y ON x.w = y.w AND x.doc_id < y.doc_id GROUP BY 1, 2)"
-
-  val ops: Seq[Op] = Seq(
-
-    // ---- deduplication -------------------------------------------------
-
-    Op("llm_dedup_exact",
-      (s, d) => T.t(s, d, "documents")
-        .groupBy(sha2(lower(trim(col("text"))), 256).as("h"))
-        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_dups"))
-        .select("keep_id", "n_dups")
-        .orderBy("keep_id"),
-      // oracle groups on the normalized text itself — same partition as the
-      // hash, minus the (collision-free) sha2 step DuckDB 1.0 lacks.
-      Some("SELECT min(doc_id) AS keep_id, count(*) AS n_dups FROM documents " +
-        "GROUP BY lower(trim(text)) ORDER BY keep_id")),
-
-    Op("llm_dedup_fuzzy",
-      (s, d) => {
-        // the window partitions on a 256-bit HASH of the signature, not
-        // the signature text itself: the shuffle key is fixed-width
-        // instead of document-sized (collision-free at corpus
-        // cardinalities, same posture as llm_dedup_exact)
-        val w = Window.partitionBy("sigh")
-        T.t(s, d, "documents")
-          .withColumn("sigh",
-            sha2(expr("array_join(array_sort(array_distinct(split(lower(text), ' '))), ' ')"), 256))
-          .withColumn("grp_n", count(lit(1)).over(w))
-          .withColumn("rep", min("doc_id").over(w))
-          .where("grp_n > 1")
-          .select("doc_id", "rep")
-          .orderBy("rep", "doc_id")
-      },
-      Some("SELECT doc_id, rep FROM (SELECT doc_id, " +
-        "min(doc_id) OVER (PARTITION BY sig) AS rep, " +
-        "count(*) OVER (PARTITION BY sig) AS grp_n FROM (" +
-        "SELECT doc_id, array_to_string(list_sort(list_distinct(string_split(lower(text), ' '))), ' ') AS sig " +
-        "FROM documents)) WHERE grp_n > 1 ORDER BY rep, doc_id")),
-
-    // the end-product operator of a dedup pipeline: the cleaned corpus —
-    // one representative (min doc_id) per sorted-token-signature group,
-    // singletons included.
-    Op("llm_corpus_dedupe",
-      (s, d) => {
-        // fixed-width shuffle key, as in llm_dedup_fuzzy above
-        val w = Window.partitionBy("sigh")
-        T.t(s, d, "documents")
-          .withColumn("sigh",
-            sha2(expr("array_join(array_sort(array_distinct(split(lower(text), ' '))), ' ')"), 256))
-          .withColumn("rep", min("doc_id").over(w))
-          .where("doc_id = rep")
-          .select("doc_id", "lang", "source", "n_chars")
-          .orderBy("doc_id")
-      },
-      Some("SELECT doc_id, lang, source, n_chars FROM (SELECT doc_id, lang, source, n_chars, " +
-        "min(doc_id) OVER (PARTITION BY sig) AS rep FROM (" +
-        "SELECT doc_id, lang, source, n_chars, " +
-        "array_to_string(list_sort(list_distinct(string_split(lower(text), ' '))), ' ') AS sig " +
-        "FROM documents)) WHERE doc_id = rep ORDER BY doc_id")),
-
-    // MinHash(k=16) over 3-gram shingles + LSH(4 bands of 4): signatures
-    // are computed per-doc inside whole-stage codegen (no exploded
-    // shuffle); the only shuffle is the banded candidate join — the shape
-    // that scales to 100 TB. Shingles (not raw tokens) keep the random
-    // overlap between unrelated documents near zero.
-    Op("llm_dedup_minhash",
-      (s, d) => {
-        val sigs = T.spread(T.t(s, d, "documents"))
-          .where("size(split(lower(text), ' ')) >= 3")
-          // JVM-native shingle-hash + signature (graft.functions): one eval
-          // per row instead of interpreted lambda folds; min is commutative
-          // so the result matches the oracle's fold exactly.
-          .select(col("doc_id"), expr("minhash_sig(shingle_hashes(text))").as("sig"))
-          // materialize the (small) signature table once — it feeds the
-          // band explode and both pair-join sides.
-          .persist()
-        val banded = sigs
-          .select(col("doc_id"), col("sig"), explode(expr("sequence(0, 3)")).as("band"))
-          .withColumn("band_sig",
-            expr("array_join(transform(slice(sig, band * 4 + 1, 4), x -> CAST(x AS STRING)), ',')"))
-          .select("doc_id", "band", "band_sig")
-        val pairs = banded.as("x").join(banded.as("y"),
-            col("x.band") === col("y.band") && col("x.band_sig") === col("y.band_sig") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2")).distinct()
-        // near-dup survivors are tiny — pin them and release the
-        // signature cache instead of leaking one copy per invocation
-        val out = pairs
-          .join(sigs.select(col("doc_id").as("d1"), col("sig").as("s1")), "d1")
-          .join(sigs.select(col("doc_id").as("d2"), col("sig").as("s2")), "d2")
-          .withColumn("est_jaccard",
-            expr("CAST(size(filter(sequence(1, 16), i -> element_at(s1, i) = element_at(s2, i))) AS DOUBLE) / 16"))
-          .where("est_jaccard >= 0.5")
-          .select("d1", "d2", "est_jaccard")
-          .localCheckpoint()
-        sigs.unpersist()
-        out.orderBy("d1", "d2")
-      },
-      Some("WITH ths AS (SELECT doc_id, list_transform(" +
-        "list_distinct(list_transform(range(1, len(toks) - 1), i -> concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2]))), " +
-        s"tok -> $duckTokHash) AS ths " +
-        "FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents) WHERE len(toks) >= 3), " +
-        "sigs AS (SELECT doc_id, list_reduce(list_prepend(" +
-        "list_transform(range(0, 16), x -> CAST(2038074743 AS BIGINT)), " +
-        "list_transform(ths, h -> list_transform(range(0, 16), i -> " +
-        "([3,5,7,11,13,17,19,23,29,31,37,41,43,47,53,59][i + 1] * h + " +
-        "[101,103,107,109,113,127,131,137,139,149,151,157,163,167,173,179][i + 1]) % 2038074743))), " +
-        "(acc, v) -> list_transform(range(1, 17), i -> least(acc[i], v[i]))) AS sig FROM ths), " +
-        "banded AS (SELECT doc_id, b.band AS band, " +
-        "array_to_string(list_transform(list_slice(sig, band * 4 + 1, band * 4 + 4), x -> CAST(x AS VARCHAR)), ',') AS band_sig " +
-        "FROM sigs, (SELECT unnest(range(0, 4)) AS band) b), " +
-        "pairs AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2 FROM banded x JOIN banded y " +
-        "ON x.band = y.band AND x.band_sig = y.band_sig AND x.doc_id < y.doc_id) " +
-        "SELECT d1, d2, est_jaccard FROM (" +
-        "SELECT d1, d2, CAST(len(list_filter(range(1, 17), i -> s1.sig[i] = s2.sig[i])) AS DOUBLE) / 16 AS est_jaccard " +
-        "FROM pairs JOIN sigs s1 ON pairs.d1 = s1.doc_id JOIN sigs s2 ON pairs.d2 = s2.doc_id) " +
-        "WHERE est_jaccard >= 0.5 ORDER BY d1, d2")),
-
-    // 32-bit SimHash computed per-doc as one nested fold (codegen, no
-    // shuffle); candidate pairs are blocked on the top-16-bit prefix.
-    Op("llm_dedup_simhash",
-      (s, d) => {
-        val sh = T.spread(T.t(s, d, "documents"))
-          .where("size(split(lower(text), ' ')) >= 3")
-          // JVM-native shingle-hash + simhash (graft.functions): bit votes
-          // are commutative integer sums, so this matches the oracle's
-          // declarative fold exactly.
-          .select(col("doc_id"), expr("simhash32(shingle_hashes(text))").as("simhash"))
-          .withColumn("bucket", expr("shiftright(simhash, 16)"))
-          // materialize once — both self-join sides read it.
-          .persist()
-        // survivors are tiny — pin them, release the simhash cache
-        val out = sh.as("x").join(sh.as("y"),
-            col("x.bucket") === col("y.bucket") && col("x.doc_id") < col("y.doc_id"))
-          .withColumn("hamming", expr("bit_count(x.simhash ^ y.simhash)"))
-          .where("hamming <= 8")
-          .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"), col("hamming"))
-          .localCheckpoint()
-        sh.unpersist()
-        out.orderBy("d1", "d2")
-      },
-      Some("WITH ths AS (SELECT doc_id, list_transform(" +
-        "list_distinct(list_transform(range(1, len(toks) - 1), i -> concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2]))), " +
-        s"tok -> $duckTokHash) AS ths " +
-        "FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents) WHERE len(toks) >= 3), " +
-        "bits AS (SELECT doc_id, list_reduce(list_prepend(" +
-        "list_transform(range(0, 32), x -> 0), " +
-        "list_transform(ths, h -> list_transform(range(0, 32), j -> " +
-        "CASE WHEN ((h >> j) & 1) = 1 THEN 1 ELSE -1 END))), " +
-        "(acc, v) -> list_transform(range(1, 33), i -> acc[i] + v[i])) AS bits FROM ths), " +
-        "sh AS (SELECT doc_id, CAST(list_sum(list_transform(range(0, 32), j -> " +
-        "CASE WHEN bits[j + 1] > 0 " +
-        "THEN (CAST(1 AS BIGINT) << j) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS simhash FROM bits), " +
-        "b AS (SELECT doc_id, simhash, simhash >> 16 AS bucket FROM sh) " +
-        "SELECT x.doc_id AS d1, y.doc_id AS d2, CAST(bit_count(xor(x.simhash, y.simhash)) AS INTEGER) AS hamming " +
-        "FROM b x JOIN b y ON x.bucket = y.bucket AND x.doc_id < y.doc_id " +
-        "WHERE bit_count(xor(x.simhash, y.simhash)) <= 8 ORDER BY d1, d2")),
-
-    Op("llm_ngram_jaccard",
-      (s, d) => jaccardPairs(s, d)
-        .select("d1", "d2", "jaccard")
-        .orderBy("d1", "d2"),
-      Some("WITH " + oJaccardPairs +
-        " SELECT d1, d2, jaccard FROM pairs ORDER BY d1, d2")),
-
-    // near-dup clustering: connected components over the jaccard pair
-    // graph — the step that turns pairwise near-dup hits into dedup
-    // groups (keep min-id per component, drop the rest).
-    //
-    // EXACT-DEDUP-FIRST: pair generation runs on one representative per
-    // identical-(lowered-)text group, with each shingle's document
-    // frequency weighted by group size so the rare-shingle cap sees the
-    // FULL corpus df. Identical texts have identical shingle sets, so the
-    // representative graph is the exact quotient of the full pair graph:
-    // connectivity — and therefore the min-id component labels — are
-    // unchanged (the oracle recursive CTE still runs over ALL docs). On
-    // duplicate-heavy corpora this collapses the quadratic candidate
-    // term before it exists: the 20x-duplicated scale probe drops from
-    // 389 s to seconds. A group joins the graph on its own (no external
-    // pair) iff its identical copies near-dup EACH OTHER under the same
-    // τ: jaccard(A, A') = r/(2n - r) ≥ 0.2 ⟺ 3r ≥ n, where r of the
-    // n shingles survive the rare cap — the integer form is exact.
-    //
-    // Bounded min-label propagation on the representative graph: each
-    // round every node takes the smallest label in its neighborhood
-    // (one join + one aggregate per round; self-loops carry the own
-    // label and the fixed-point signal), converging in <= diameter
-    // rounds. At 100 TB this is the alternating large-star/small-star
-    // shape; labels persist so lineage stays flat.
-    Op("llm_dedup_cluster",
-      (s, d) => {
-        // ONE aggregation both collapses the groups and elects the
-        // representative (min doc_id) — `first(ltext)` is deterministic
-        // in value because every member of a gid group has the same
-        // lowered text. n_dup rides along into the shingle frame so the
-        // weighted df needs no join at all.
-        val gl = T.t(s, d, "documents")
-          .select(col("doc_id"), lower(col("text")).as("ltext"))
-          .withColumn("gid", struct(xxhash64(col("ltext")), length(col("ltext"))))
-        // adaptive like jaccardPairs: on a duplicate-free corpus the
-        // quotient grouping (text shuffle) and the member expansion are
-        // pure overhead — every doc is its own representative
-        val dupFree = CorpusStats.mostlyUnique(s, d)
-        val gidRep =
-          (if (dupFree) gl.select(col("doc_id"), col("ltext"), lit(1L).as("n_dup"))
-           else gl.groupBy("gid")
-             .agg(min("doc_id").as("doc_id"), first("ltext").as("ltext"),
-               count(lit(1)).as("n_dup")))
-            .persist()
-        val sid = T.spread(gidRep)
-          .withColumn("toks", split(col("ltext"), " "))
-          .where("size(toks) >= 3")
-          .select(col("doc_id"), col("n_dup"), explode(expr(shingleHashExpr)).as("sid"))
-          .persist()
-        val counts = sid.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-        // full-corpus df = multiplicity-weighted rep df
-        val rare = sid.groupBy("sid").agg(sum("n_dup").as("df"))
-          .where(s"df <= ${CorpusStats.rareDfCap(s, d)}").select("sid")
-        // persisted: feeds both sides of the pair self-join AND the
-        // rare-count aggregate
-        val shRare = sid.join(rare, "sid").select("doc_id", "sid").persist()
-        val rareCounts = shRare.groupBy("doc_id").agg(count(lit(1)).as("r_sh"))
-        val pairs = shRare.as("x").join(shRare.as("y"),
-            col("x.sid") === col("y.sid") && col("x.doc_id") < col("y.doc_id"))
-          .groupBy(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-          .agg(count(lit(1)).as("shared"))
-          .join(counts.select(col("doc_id").as("d1"), col("n_sh").as("n1")), "d1")
-          .join(counts.select(col("doc_id").as("d2"), col("n_sh").as("n2")), "d2")
-          .where("CAST(shared AS DOUBLE) / (n1 + n2 - shared) >= 0.2")
-          .select("d1", "d2").persist()
-        // self-connected multi-doc groups (identical copies near-dup
-        // each other) are nodes even without an external pair
-        val selfGroups = gidRep.where("n_dup >= 2").select("doc_id")
-          .join(counts, "doc_id").join(rareCounts, "doc_id")
-          .where("3 * r_sh >= n_sh")
-          .select(col("doc_id").as("d1"))
-        // bounded min-label propagation with pointer doubling — the
-        // shared GraphOps primitive (llm_minhash_cluster runs the same
-        // loop over the MinHash-verified pair graph). Labels and the
-        // gid->representative map are small (one row per node / per
-        // distinct text); every intermediate cache is released.
-        val finalLabels = GraphOps.connectedComponents(pairs, Seq(selfGroups))
-        // expand representative labels back to every member of the group
-        // (identity when every doc is its own representative)
-        val expanded =
-          if (dupFree)
-            finalLabels.select(col("id").as("doc_id"), col("lbl").as("cluster"))
-          else {
-            val gidMap = gidRep.select(col("gid"), col("doc_id").as("rep")).localCheckpoint()
-            gl.select("doc_id", "gid")
-              .join(gidMap, "gid")
-              .join(finalLabels.withColumnRenamed("id", "rep"), "rep")
-              .select(col("doc_id"), col("lbl").as("cluster"))
-          }
-        Seq(sid, shRare, pairs, gidRep).foreach(_.unpersist())
-        expanded.orderBy("doc_id")
-      },
-      Some("WITH RECURSIVE " + oJaccardPairs + ", " +
-        "edges AS (SELECT d1, d2 FROM pairs UNION ALL SELECT d2, d1 FROM pairs), " +
-        "nodes AS (SELECT DISTINCT d1 AS id FROM edges), " +
-        "reach(id, lbl) AS (SELECT id, id FROM nodes " +
-        "UNION SELECT e.d2, r.lbl FROM reach r JOIN edges e ON e.d1 = r.id) " +
-        "SELECT id AS doc_id, min(lbl) AS cluster FROM reach GROUP BY id ORDER BY doc_id")),
-
-    // Embedding near-dup with BALL-PRUNED blocking: vectors are assigned
-    // to 32 coarse cells (nearest seed vector on the unit sphere, the
-    // IVF coarse-quantizer shape); a cell PAIR is admissible only if the
-    // seed distance minus both cell radii can still reach the cosine
-    // threshold (unit sphere: sim >= t  <=>  ||ux-uy|| <= sqrt(2-2t), and
-    // triangle inequality gives ||ux-uy|| >= d(sa,sb) - ra - rb). The
-    // candidate join is equi on (label, admissible-partner cell) — EXACT
-    // (no recall loss, unlike LSH candidates), with the quadratic bounded
-    // per admissible cell pair instead of per label: at 100 TB the
-    // per-task work is |cell_a| x |cell_b| for nearby cells only, and
-    // tighter clustering prunes more. Cell stats are one bounded collect
-    // (<= 32 rows + 32 seed vectors); admissibility is a <=1024-row
-    // broadcast.
-    Op("llm_embedding_neardup",
-      (s, d) => neardupCellCandidates(s, d)
-        .withColumn("sim", simCol("e1", "e2"))
-        .where(s"sim >= $neardupThr")
-        .select("v1", "v2", "sim")
-        .orderBy("v1", "v2"),
-      Some("SELECT v1, v2, sim FROM (SELECT x.vec_id AS v1, y.vec_id AS v2, " +
-        s"${oSim("x.embedding", "y.embedding")} AS sim " +
-        "FROM embeddings x JOIN embeddings y ON x.label = y.label AND x.vec_id < y.vec_id) " +
-        "WHERE sim >= 0.35 ORDER BY v1, v2")),
-
-    // ---- similarity search --------------------------------------------
-
-    Op("llm_similarity_topk",
-      (s, d) => {
-        val emb = T.t(s, d, "embeddings")
-        val probe = emb.where("vec_id = 0").select(col("embedding").as("p_emb"))
-        val scan = T.spread(emb)
-        scan.where("vec_id <> 0").crossJoin(broadcast(probe))
-          .withColumn("sim", simCol("embedding", "p_emb"))
-          .select("vec_id", "sim")
-          .orderBy(desc("sim"), col("vec_id"))
-          .limit(10)
-      },
-      Some("WITH p AS (SELECT embedding AS p_emb FROM embeddings WHERE vec_id = 0) " +
-        s"SELECT vec_id, ${oSim("embedding", "p_emb")} AS sim " +
-        "FROM embeddings, p WHERE vec_id <> 0 ORDER BY sim DESC, vec_id LIMIT 10")),
-
-    Op("llm_knn_join",
-      (s, d) => {
-        val emb = T.t(s, d, "embeddings")
-        val probes = emb.where("vec_id < 5")
-          .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
-        val w = Window.partitionBy("probe_id").orderBy(desc("sim"), col("neighbor_id"))
-        emb.crossJoin(broadcast(probes)).where("vec_id <> probe_id")
-          .withColumn("sim", simCol("embedding", "p_emb"))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("sim"))
-          .withColumn("rn", row_number().over(w))
-          .where("rn <= 3")
-          .orderBy("probe_id", "rn")
-      },
-      Some("SELECT * FROM (SELECT probe_id, neighbor_id, sim, " +
-        "CAST(row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rn " +
-        "FROM (SELECT p.vec_id AS probe_id, e.vec_id AS neighbor_id, " +
-        s"${oSim("e.embedding", "p.embedding")} AS sim " +
-        "FROM embeddings e, (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5) p " +
-        "WHERE e.vec_id <> p.vec_id)) WHERE rn <= 3 ORDER BY probe_id, rn")),
-
-    // IVF-style ANN: search only the probe's coarse bucket (label stands in
-    // for the centroid assignment), i.e. partition-pruned similarity.
-    Op("llm_ann_ivf",
-      (s, d) => {
-        val emb = T.t(s, d, "embeddings")
-        val probe = emb.where("vec_id = 0")
-          .select(col("embedding").as("p_emb"), col("label").as("p_label"))
-        emb.join(broadcast(probe), col("label") === col("p_label") && col("vec_id") =!= 0)
-          .withColumn("sim", simCol("embedding", "p_emb"))
-          .select("vec_id", "label", "sim")
-          .orderBy(desc("sim"), col("vec_id"))
-          .limit(5)
-      },
-      Some("WITH p AS (SELECT embedding AS p_emb, label AS p_label FROM embeddings WHERE vec_id = 0) " +
-        s"SELECT vec_id, label, ${oSim("embedding", "p_emb")} AS sim " +
-        "FROM embeddings, p WHERE label = p_label AND vec_id <> 0 " +
-        "ORDER BY sim DESC, vec_id LIMIT 5")),
-
-    // LSH-bucketed ANN: 8 deterministic integer-valued random hyperplanes
-    // -> 8-bit sign bucket; the probe is searched only against its own
-    // bucket. The 100 TB shape: bucketing is a narrow map, candidate scan
-    // is one partition-pruned hash lookup, never a global cross join.
-    Op("llm_ann_lsh",
-      (s, d) => {
-        val sigExpr =
-          "aggregate(sequence(0, 7), 0, (acc, i) -> acc + CASE WHEN " +
-            "aggregate(transform(sequence(0, 63), j -> CAST(element_at(embedding, j + 1) AS DOUBLE) * " +
-            "CAST(((i * 7 + j * 13) % 11) - 5 AS DOUBLE)), CAST(0 AS DOUBLE), (a, v) -> a + v) > 0 " +
-            "THEN shiftleft(1, i) ELSE 0 END)"
-        val withSig = T.spread(T.t(s, d, "embeddings")).withColumn("bsig", expr(sigExpr))
-        val probe = withSig.where("vec_id = 0")
-          .select(col("embedding").as("p_emb"), col("bsig").as("p_sig"))
-        withSig.join(broadcast(probe), col("bsig") === col("p_sig") && col("vec_id") =!= 0)
-          .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
-          .select("vec_id", "bsig", "sim")
-          .orderBy(desc("sim"), col("vec_id"))
-          .limit(5)
-      },
-      Some("WITH s AS (SELECT vec_id, embedding, CAST(list_sum(list_transform(range(0, 8), i -> " +
-        "CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        "list_transform(range(0, 64), j -> CAST(embedding[j + 1] AS DOUBLE) * " +
-        "CAST(((i * 7 + j * 13) % 11) - 5 AS DOUBLE))), (a, v) -> a + v) > 0 " +
-        "THEN (1 << i) ELSE 0 END)) AS INTEGER) AS bsig FROM embeddings), " +
-        "p AS (SELECT embedding AS p_emb, bsig AS p_sig FROM s WHERE vec_id = 0) " +
-        s"SELECT vec_id, bsig, ${oSim("embedding", "p_emb")} AS sim " +
-        "FROM s, p WHERE bsig = p_sig AND vec_id <> 0 ORDER BY sim DESC, vec_id LIMIT 5")),
-
-    // two-stage ANN: multi-probe LSH (the probe's bucket PLUS the 8
-    // buckets at Hamming distance 1 — recall recovered without widening
-    // any single bucket) -> exact cosine re-rank of the candidate union
-    // -> top-5. Each vector lands in exactly one candidate bucket, so the
-    // union needs no dedup; at 100 TB the candidate scan stays one
-    // bucket-pruned lookup per probe bucket and the quadratic term never
-    // appears.
-    Op("llm_ann_refine",
-      (s, d) => {
-        val sigExpr =
-          "aggregate(sequence(0, 7), 0, (acc, i) -> acc + CASE WHEN " +
-            "aggregate(transform(sequence(0, 63), j -> CAST(element_at(embedding, j + 1) AS DOUBLE) * " +
-            "CAST(((i * 7 + j * 13) % 11) - 5 AS DOUBLE)), CAST(0 AS DOUBLE), (a, v) -> a + v) > 0 " +
-            "THEN shiftleft(1, i) ELSE 0 END)"
-        val withSig = T.spread(T.t(s, d, "embeddings")).withColumn("bsig", expr(sigExpr))
-        val probes = withSig.where("vec_id = 0")
-          .select(col("embedding").as("p_emb"),
-            explode(expr("array_union(array(bsig), transform(sequence(0, 7), i -> bsig ^ shiftleft(1, i)))"))
-              .as("cand_sig"))
-        withSig.join(broadcast(probes), col("bsig") === col("cand_sig") && col("vec_id") =!= 0)
-          .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
-          .select("vec_id", "bsig", "sim")
-          .orderBy(desc("sim"), col("vec_id"))
-          .limit(5)
-      },
-      Some("WITH s AS (SELECT vec_id, embedding, CAST(list_sum(list_transform(range(0, 8), i -> " +
-        "CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        "list_transform(range(0, 64), j -> CAST(embedding[j + 1] AS DOUBLE) * " +
-        "CAST(((i * 7 + j * 13) % 11) - 5 AS DOUBLE))), (a, v) -> a + v) > 0 " +
-        "THEN (1 << i) ELSE 0 END)) AS INTEGER) AS bsig FROM embeddings), " +
-        "p AS (SELECT embedding AS p_emb, unnest(list_prepend(bsig, " +
-        "list_transform(range(0, 8), i -> xor(bsig, 1 << i)))) AS cand_sig " +
-        "FROM s WHERE vec_id = 0) " +
-        s"SELECT vec_id, bsig, ${oSim("embedding", "p_emb")} AS sim " +
-        "FROM s, p WHERE bsig = cand_sig AND vec_id <> 0 ORDER BY sim DESC, vec_id LIMIT 5")),
-
-    // kmeans TRAINED for 3 Lloyd iterations (llm_kmeans_step is one):
-    // the whole loop unrolls into a single declarative plan — per
-    // iteration a broadcast-assignment (cross join against <= 10 tiny
-    // centroids, argmin window) and a two-level centroid rebuild
-    // (posexplode -> per-(cluster, dim) fixed-point integer sums ->
-    // array reassembly), so every arithmetic step is order-independent
-    // and both engines produce bit-identical centroids. New centroid
-    // component = floor-scaled integer sum / (10^4 · n): an exact
-    // rational, hence the same double everywhere. Clusters that lose all
-    // members drop out on both engines.
-    Op("llm_kmeans_train",
-      (s, d) => graft.api.AnnIndex.trainFor(s, d, k = 10, iters = 3)
-        .select(col("c_id"), col("n"),
-          expr("element_at(c_vec, 1)").as("c1"),
-          expr("element_at(c_vec, 2)").as("c2"))
-        .orderBy("c_id"),
-      Some(oKmeansTrainedPrefix +
-        " SELECT c_id, n, c_vec[1] AS c1, c_vec[2] AS c2 FROM c3 ORDER BY c_id")),
-
-    // ---- text analysis -------------------------------------------------
-
-    Op("llm_text_stats",
-      (s, d) => T.t(s, d, "documents").groupBy("lang")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          round(avg(expr("CAST(size(split(text, ' ')) AS DOUBLE)")), 4).as("avg_tokens"),
-          sum("n_chars").as("total_chars"),
-          min("n_chars").as("min_chars"),
-          max("n_chars").as("max_chars"))
-        .orderBy("lang"),
-      Some("SELECT lang, count(*) AS n_docs, " +
-        "ROUND(AVG(CAST(len(string_split(text, ' ')) AS DOUBLE)), 4) AS avg_tokens, " +
-        "CAST(SUM(n_chars) AS BIGINT) AS total_chars, min(n_chars) AS min_chars, " +
-        "max(n_chars) AS max_chars FROM documents GROUP BY lang ORDER BY lang")),
-
-    Op("llm_top_terms",
-      (s, d) => {
-        val w = Window.partitionBy("lang").orderBy(desc("cnt"), col("token"))
-        T.t(s, d, "documents")
-          .select(col("lang"), explode(split(col("text"), " ")).as("token"))
-          .groupBy("lang", "token").agg(count(lit(1)).as("cnt"))
-          .withColumn("rnk", row_number().over(w))
-          .where("rnk <= 5")
-          .orderBy("lang", "rnk")
-      },
-      Some("SELECT * FROM (SELECT lang, token, cnt, " +
-        "CAST(row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, token) AS INTEGER) AS rnk " +
-        "FROM (SELECT lang, token, count(*) AS cnt FROM (" +
-        "SELECT lang, unnest(string_split(text, ' ')) AS token FROM documents) " +
-        "GROUP BY lang, token)) WHERE rnk <= 5 ORDER BY lang, rnk")),
-
-    // language-ID by n-gram/token-profile overlap: profiles are the top-20
-    // tokens per language derived from the corpus itself (pure integer
-    // logic, fully deterministic), prediction is the best-overlap language.
-    Op("llm_lang_id",
-      (s, d) => langIdPredictions(s, d).orderBy("doc_id"),
-      Some(oLangIdCtes +
-        " SELECT d.doc_id, d.lang, COALESCE(b.p_lang, 'unknown') AS pred_lang, " +
-        "COALESCE(b.matches, 0) AS matches FROM documents d LEFT JOIN best b ON d.doc_id = b.doc_id " +
-        "ORDER BY d.doc_id")),
-
-    Op("llm_quality_score",
-      (s, d) => T.t(s, d, "documents").select(
-          col("doc_id"),
-          expr("size(split(text, ' '))").as("n_tokens"),
-          col("n_chars"),
-          expr("round(CAST(length(replace(text, ' ', '')) AS DOUBLE) / size(split(text, ' ')), 4)").as("avg_word_len"),
-          expr("round(CAST(length(regexp_replace(text, '[^0-9]', '')) AS DOUBLE) / length(text), 4)").as("digit_ratio"),
-          expr("round(CAST(size(filter(split(text, ' '), x -> length(x) <= 3)) AS DOUBLE) / size(split(text, ' ')), 4)").as("short_tok_ratio"))
-        .orderBy("doc_id"),
-      Some("SELECT doc_id, CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens, n_chars, " +
-        "ROUND(CAST(length(replace(text, ' ', '')) AS DOUBLE) / len(string_split(text, ' ')), 4) AS avg_word_len, " +
-        "ROUND(CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text), 4) AS digit_ratio, " +
-        "ROUND(CAST(len(list_filter(string_split(text, ' '), x -> length(x) <= 3)) AS DOUBLE) / len(string_split(text, ' ')), 4) AS short_tok_ratio " +
-        "FROM documents ORDER BY doc_id")),
-
-    // token counting: whitespace tokens plus a BPE-ish regex token count.
-    Op("llm_token_count",
-      (s, d) => T.t(s, d, "documents").select(
-          col("doc_id"),
-          expr("size(split(text, ' '))").as("ws_tokens"),
-          expr("size(regexp_extract_all(text, '[a-z]+|[A-Z]+|[0-9]+', 0))").as("re_tokens"))
-        .orderBy("doc_id"),
-      Some("SELECT doc_id, CAST(len(string_split(text, ' ')) AS INTEGER) AS ws_tokens, " +
-        "CAST(len(regexp_extract_all(text, '[a-z]+|[A-Z]+|[0-9]+', 0)) AS INTEGER) AS re_tokens " +
-        "FROM documents ORDER BY doc_id")),
-
-    // rolling-hash document fingerprint: identical BIGINT left-fold over
-    // character code points on both engines.
-    Op("llm_fingerprint",
-      (s, d) => T.t(s, d, "documents").select(
-          col("doc_id"),
-          expr("aggregate(transform(sequence(1, length(text)), i -> ascii(substring(text, i, 1))), " +
-            "CAST(0 AS BIGINT), (acc, x) -> (acc * 31 + x) % 1000000007)").as("fp"))
-        .orderBy("doc_id"),
-      Some("SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        "list_transform(range(1, length(text) + 1), i -> CAST(ascii(substring(text, i, 1)) AS BIGINT))), " +
-        "(acc, x) -> (acc * 31 + x) % 1000000007) AS fp FROM documents ORDER BY doc_id")),
-
-    // TF-IDF: integer tf/df with a rounded ln-based idf; top-scoring term
-    // per document (deterministic tiebreak on the term itself).
-    Op("llm_tfidf",
-      (s, d) => {
-        val docs = T.t(s, d, "documents")
-        val n = docs.agg(count(lit(1)).as("n_docs"))
-        val tf = T.spread(docs)
-          .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("token"))
-          .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-        val df_ = tf.groupBy("token").agg(count(lit(1)).as("df"))
-        val w = Window.partitionBy("doc_id").orderBy(desc("score"), col("token"))
-        tf.join(df_, "token").crossJoin(broadcast(n))
-          .withColumn("score", expr("round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6)"))
-          .withColumn("rn", row_number().over(w)).where("rn = 1")
-          .select(col("doc_id"), col("token").as("top_term"), col("score"))
-          .orderBy("doc_id")
-      },
-      Some("WITH tf AS (SELECT doc_id, token, count(*) AS tf FROM (" +
-        "SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token FROM documents) " +
-        "GROUP BY doc_id, token), " +
-        "df AS (SELECT token, count(*) AS df FROM tf GROUP BY token), " +
-        "n AS (SELECT count(*) AS n_docs FROM documents), " +
-        "scored AS (SELECT doc_id, token, " +
-        "round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS score FROM tf JOIN df USING (token), n) " +
-        "SELECT doc_id, token AS top_term, score FROM (SELECT doc_id, token, score, " +
-        "row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, token) AS rn FROM scored) " +
-        "WHERE rn = 1 ORDER BY doc_id")),
-
-    // reproducible stratified sampling: hash-mod selection is stable
-    // across runs, partitionings, and engines (unlike rand()-based
-    // sampling) — the only sampling admissible in a training-data
-    // pipeline that must be auditable.
-    Op("llm_sample_stratified",
-      (s, d) => T.t(s, d, "documents")
-        .where("CAST(conv(substring(md5(concat(lang, ':', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 100 < 20")
-        .select("doc_id", "lang", "source", "n_chars")
-        .orderBy("doc_id"),
-      Some("SELECT doc_id, lang, source, n_chars FROM documents " +
-        "WHERE CAST(concat('0x', substr(md5(concat(lang, ':', CAST(doc_id AS VARCHAR))), 1, 8)) AS BIGINT) % 100 < 20 " +
-        "ORDER BY doc_id")),
-
-    // corpus composition: per-source language mix with exact-ratio
-    // percentages (integer counts divided once -> deterministic doubles).
-    Op("llm_source_mix",
-      (s, d) => {
-        val w = Window.partitionBy("source")
-        T.t(s, d, "documents")
-          .groupBy("source", "lang").agg(count(lit(1)).as("n_docs"))
-          .withColumn("pct", expr(
-            "round(CAST(n_docs AS DOUBLE) * 100 / CAST(sum(n_docs) OVER (PARTITION BY source) AS DOUBLE), 4)"))
-          .select("source", "lang", "n_docs", "pct")
-          .orderBy("source", "lang")
-      },
-      Some("SELECT source, lang, n_docs, " +
-        "round(CAST(n_docs AS DOUBLE) * 100 / CAST(SUM(n_docs) OVER (PARTITION BY source) AS DOUBLE), 4) AS pct " +
-        "FROM (SELECT source, lang, count(*) AS n_docs FROM documents GROUP BY source, lang) " +
-        "ORDER BY source, lang")),
-
-    // PII-style scrubbing: redact digit runs, report redaction counts.
-    Op("llm_pii_scrub",
-      (s, d) => T.t(s, d, "documents")
-        .select(
-          col("doc_id"),
-          expr("substring(regexp_replace(text, '[0-9]+', '[NUM]'), 1, 60)").as("scrubbed_head"),
-          expr("length(regexp_replace(text, '[0-9]+', '[NUM]'))").as("scrubbed_len"),
-          expr("size(regexp_extract_all(text, '[0-9]+', 0))").as("n_redactions"))
-        .orderBy("doc_id"),
-      Some("SELECT doc_id, " +
-        "substring(regexp_replace(text, '[0-9]+', '[NUM]', 'g'), 1, 60) AS scrubbed_head, " +
-        "CAST(length(regexp_replace(text, '[0-9]+', '[NUM]', 'g')) AS INTEGER) AS scrubbed_len, " +
-        "CAST(len(regexp_extract_all(text, '[0-9]+', 0)) AS INTEGER) AS n_redactions " +
-        "FROM documents ORDER BY doc_id")),
-
-    // training-shard packing: contiguous docs (per language, doc_id
-    // order) packed into ~2000-token shards — the deterministic variant
-    // of greedy sequence packing. Range-bucketed two-level cumulative
-    // sum (see packShards) so the dominant language never lands in a
-    // single window partition.
-    Op("llm_pack_shards",
-      (s, d) => packShards(s, d).orderBy("doc_id"),
-      Some("WITH " + oPackShards +
-        " SELECT doc_id, lang, n_tokens, shard_id FROM packed ORDER BY doc_id")),
-
-    // ---- multimodal ----------------------------------------------------
-
-    // typed multimodal bundle: text + metadata + embedding in one struct
-    // column, flattened for the oracle compare.
-    Op("llm_multimodal_schema",
-      (s, d) => T.t(s, d, "documents")
-        .join(T.t(s, d, "embeddings"), col("doc_id") === col("vec_id"))
-        .withColumn("bundle", expr("struct(text, lang, embedding)"))
-        .select(
-          col("doc_id"), col("lang"), col("n_chars"), col("label"),
-          expr("size(bundle.embedding)").as("dim"),
-          expr("CAST(element_at(bundle.embedding, 1) AS DOUBLE)").as("emb_first"))
-        .orderBy("doc_id"),
-      Some("SELECT doc_id, lang, n_chars, label, CAST(len(embedding) AS INTEGER) AS dim, " +
-        "CAST(embedding[1] AS DOUBLE) AS emb_first " +
-        "FROM documents JOIN embeddings ON doc_id = vec_id ORDER BY doc_id")),
-
-    // fixed-size token chunking with overlap (context-window packing prep):
-    // 32-token chunks every 24 tokens. One narrow shuffle-free pass —
-    // sequence+explode stays inside codegen; at 100 TB this is a pure map
-    // stage whose output partitioning follows the input.
-    Op("llm_doc_chunk",
-      (s, d) => {
-        val cs = 32; val step = 24
-        T.t(s, d, "documents")
-          .select(col("doc_id"), split(col("text"), " ").as("toks"))
-          .select(col("doc_id"), col("toks"),
-            explode(sequence(lit(1), size(col("toks")), lit(step))).as("start"))
-          .select(col("doc_id"), col("start").cast("int").as("chunk_start"),
-            array_join(slice(col("toks"), col("start"), lit(cs)), " ").as("chunk_text"),
-            size(slice(col("toks"), col("start"), lit(cs))).cast("int").as("n_tokens"))
-          .orderBy("doc_id", "chunk_start")
-      },
-      Some("WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents), " +
-        "s AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks), 24)) AS start FROM t) " +
-        "SELECT doc_id, CAST(start AS INTEGER) AS chunk_start, " +
-        "array_to_string(toks[start:least(start + 31, len(toks))], ' ') AS chunk_text, " +
-        "CAST(least(start + 31, len(toks)) - start + 1 AS INTEGER) AS n_tokens " +
-        "FROM s ORDER BY doc_id, chunk_start")),
-
-    // stopword-ratio quality signal with CORPUS-DERIVED stopwords (top-20
-    // most frequent tokens): the stopword list is a bounded aggregate ->
-    // broadcast back against the token stream; two shuffles total
-    // regardless of corpus size.
-    Op("llm_stopword_ratio",
-      (s, d) => {
-        val toks = T.t(s, d, "documents")
-          .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tok"))
-        val stop = toks.groupBy("tok").agg(count(lit(1)).as("tf"))
-          .orderBy(col("tf").desc, col("tok")).limit(20).select("tok")
-        toks.join(broadcast(stop.withColumn("is_stop", lit(1))), Seq("tok"), "left")
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_toks"),
-            sum(coalesce(col("is_stop"), lit(0))).as("n_stop"))
-          .withColumn("stop_ratio",
-            round(col("n_stop") * 10000L / col("n_toks"), 0).cast("long"))
-          .select("doc_id", "n_toks", "n_stop", "stop_ratio")
-          .orderBy("doc_id")
-      },
-      Some("WITH toks AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents), " +
-        "stop AS (SELECT tok FROM (SELECT tok, count(*) AS tf FROM toks GROUP BY tok " +
-        "ORDER BY tf DESC, tok LIMIT 20)) " +
-        "SELECT doc_id, count(*) AS n_toks, " +
-        "CAST(SUM(CASE WHEN tok IN (SELECT tok FROM stop) THEN 1 ELSE 0 END) AS BIGINT) AS n_stop, " +
-        "CAST(round(CAST(SUM(CASE WHEN tok IN (SELECT tok FROM stop) THEN 1 ELSE 0 END) AS BIGINT) * 10000 " +
-        "/ count(*), 0) AS BIGINT) AS stop_ratio " +
-        "FROM toks GROUP BY doc_id ORDER BY doc_id")),
-
-    // document-length histogram (50-char buckets) — the one-pass profile
-    // every corpus intake job runs first.
-    Op("llm_length_histogram",
-      (s, d) => T.t(s, d, "documents")
-        .groupBy((floor(col("n_chars") / 50) * 50).cast("long").as("bucket_lo"))
-        .agg(count(lit(1)).as("n_docs"),
-          min("n_chars").as("min_chars"), max("n_chars").as("max_chars"))
-        .orderBy("bucket_lo"),
-      Some("SELECT CAST(floor(n_chars / 50) * 50 AS BIGINT) AS bucket_lo, count(*) AS n_docs, " +
-        "min(n_chars) AS min_chars, max(n_chars) AS max_chars " +
-        "FROM documents GROUP BY 1 ORDER BY bucket_lo")),
-
-    // end-to-end corpus cleaning as a declared DAG (snapflow's named-node
-    // graph ergonomics via graft.Pipeline): language filter -> quality
-    // gate -> exact dedup -> per-(lang, source) stats. Every stage is a
-    // narrow transform except the dedup window and the final aggregate —
-    // two shuffles total on a 100 TB corpus.
-    Op("llm_clean_pipeline",
-      (s, d) => {
-        val p = graft.Pipeline(
-          "docs" -> graft.Pipeline.source(T.t(s, d, "documents")),
-          "lang" -> graft.Pipeline.map1("docs")(
-            _.where("lang IN ('en', 'de', 'fr')")),
-          "quality" -> graft.Pipeline.map1("lang")(
-            _.where("n_chars BETWEEN 100 AND 500 AND size(split(text, ' ')) >= 20")),
-          "dedup" -> graft.Pipeline.map1("quality") { df =>
-            val w = Window.partitionBy("sig").orderBy("doc_id")
-            df.withColumn("sig", sha2(lower(trim(col("text"))), 256))
-              .withColumn("rn", row_number().over(w))
-              .where("rn = 1").drop("sig", "rn")
-          },
-          "stats" -> graft.Pipeline.map1("dedup")(
-            _.groupBy("lang", "source")
-              .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))))
-        p.run("stats").orderBy("lang", "source")
-      },
-      Some("WITH l AS (SELECT * FROM documents WHERE lang IN ('en', 'de', 'fr')), " +
-        "q AS (SELECT * FROM l WHERE n_chars BETWEEN 100 AND 500 AND len(string_split(text, ' ')) >= 20), " +
-        "dd AS (SELECT * FROM (SELECT *, row_number() OVER (" +
-        "PARTITION BY lower(trim(text)) ORDER BY doc_id) AS rn FROM q) WHERE rn = 1) " +
-        "SELECT lang, source, count(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars " +
-        "FROM dd GROUP BY lang, source ORDER BY lang, source")),
-
-    // one Lloyd/k-means iteration (the IVF coarse-quantizer training
-    // primitive): assign every vector to its nearest of 10 deterministic
-    // seed centroids (squared L2, sequential fold), then recompute each
-    // centroid per dimension. Seeds are bounded -> broadcast; assignment
-    // is a map stage; the update is one groupBy over (cluster, dim).
-    // Centroid sums go through floor(x*1e4) fixed-point so the
-    // cross-partition/engine accumulation is exact-integer.
-    Op("llm_kmeans_step",
-      (s, d) => {
-        kmeansAssign(s, d)
-          .select(col("c_id"), posexplode(col("embedding")))
-          .groupBy("c_id", "pos")
-          .agg(
-            sum(expr("CAST(floor(CAST(col AS DOUBLE) * 10000) AS BIGINT)")).as("c_fp"),
-            count(lit(1)).as("n"))
-          .select(col("c_id"), col("pos").cast("int").as("pos"),
-            col("c_fp"), col("n"),
-            // exact-integer / exact-integer double division (rule 12):
-            // bit-identical in both engines. round(double, 3) here sat on
-            // .0005 boundaries and diverged in the driver's DuckDB build
-            // (CORRECTNESS_r01 hash_match=false) — never reintroduce it.
-            (col("c_fp") / (col("n") * lit(10000L))).as("centroid"))
-          .orderBy("c_id", "pos")
-      },
-      Some(oKmeansAssign +
-        ", c AS (SELECT c_id, embedding, unnest(range(1, len(embedding) + 1)) AS i FROM m) " +
-        "SELECT c_id, CAST(i - 1 AS INTEGER) AS pos, " +
-        "CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * 10000) AS BIGINT)) AS BIGINT) AS c_fp, " +
-        "count(*) AS n, " +
-        "CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * 10000) AS BIGINT)) AS BIGINT) " +
-        "/ (count(*) * 10000) AS centroid " +
-        "FROM c GROUP BY c_id, i ORDER BY c_id, pos")),
-
-    // edit-distance near-dup (record-linkage style): candidate pairs are
-    // blocked on (lang, exact n_chars) so the quadratic term — and the
-    // O(len^2) levenshtein — runs on small buckets only. Both engines
-    // implement the same DP distance, so values match exactly.
-    //
-    // BOUNDED BLOCKS (round 5 — the engine's last quadratic term): a
-    // popular (lang, length) class grows linearly with corpus size, so
-    // on its own it cannot bound the within-block all-pairs join. Blocks
-    // whose DISTINCT-text count exceeds [[levenshteinBlockCap]] are
-    // therefore sub-blocked by a first-2-token prefix signature, which
-    // near-duplicate documents overwhelmingly share (an edit script that
-    // rewrites the opening tokens is rare at dist <= n/5). This is a
-    // DOCUMENTED RECALL TRADEOFF, active only above the cap — and it is
-    // part of the operator's semantics, not an approximation of them:
-    // the oracle applies the identical rule, so correctness is exact at
-    // every scale. Identical texts share any prefix, so the quotient's
-    // intra-group (dist = 0) pairs are never affected.
-    Op("llm_dedup_levenshtein",
-      (s, d) => {
-        // adaptive exact-dedup-first quotient (as in jaccardPairs): the
-        // per-pair cost here is a full O(len^2) edit distance, so on a
-        // duplicate-heavy corpus computing it once per representative
-        // pair instead of once per member pair is the whole cost. The
-        // quotient group key (lang, n_chars, xxhash64(text)) collides
-        // only within a length class — a 128-bit-grade fingerprint —
-        // and its members are fully interchangeable; intra-group
-        // distance is 0 by construction (always within tolerance).
-        // lang/text null rows are excluded up front: the blocking
-        // equi-join (and the oracle's) can never pair them, so keeping
-        // them would only let the quotient's intra-group path diverge.
-        // seeded near-dup pair: the synthetic corpus has no true
-        // within-tolerance pair at small SFs, which would leave the
-        // driver's oracle compare vacuous (0 == 0 rows). Two constructed
-        // same-length docs in a lang ('zz') no generated row uses, one
-        // substitution apart, exercise the block-join + DP-distance path
-        // end-to-end; the oracle unions the identical rows.
-        val raw = T.t(s, d, "documents")
-          .where("n_chars < 200 AND lang IS NOT NULL AND text IS NOT NULL")
-          .select("doc_id", "lang", "n_chars", "text")
-          .unionByName(s.createDataFrame(
-            java.util.Arrays.asList(
-              org.apache.spark.sql.Row(900000001L, "zz", 23L, "zzlev fixture alpha one"),
-              org.apache.spark.sql.Row(900000002L, "zz", 23L, "zzlev fixture alpha oze")),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("doc_id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("lang",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("n_chars",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("text",
-                org.apache.spark.sql.types.StringType)))))
-        val blocks = raw.groupBy("lang", "n_chars")
-          .agg(countDistinct("text").as("ndt"))
-        val docs = raw.join(blocks, Seq("lang", "n_chars"))
-          .withColumn("sub", when(col("ndt") > lit(levenshteinBlockCap),
-            expr("concat_ws(' ', slice(split(text, ' '), 1, 2))")).otherwise(lit("")))
-          .withColumn("gid", xxhash64(col("text")))
-        val blockKeys = Seq("lang", "n_chars", "sub")
-        def blockJoin(x: String, y: String) =
-          blockKeys.map(k => col(s"$x.$k") === col(s"$y.$k")).reduce(_ && _)
-        val pairs =
-          if (CorpusStats.mostlyUnique(s, d)) {
-            docs.as("x").join(docs.as("y"),
-                blockJoin("x", "y") && col("x.doc_id") < col("y.doc_id"))
-              .withColumn("dist", levenshtein(col("x.text"), col("y.text")))
-              .where("dist <= CAST(x.n_chars AS INT) / 5")
-              .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"),
-                col("dist").cast("int").as("dist"))
-          } else {
-            val rep = docs.groupBy("lang", "n_chars", "gid")
-              .agg(min("doc_id").as("rep"), first("text").as("text"),
-                first("sub").as("sub"), count(lit(1)).as("n_dup"))
-              .persist()
-            val repPairs = rep.as("x").join(rep.as("y"),
-                blockJoin("x", "y") && col("x.rep") < col("y.rep"))
-              .withColumn("dist", levenshtein(col("x.text"), col("y.text")))
-              .where("dist <= CAST(x.n_chars AS INT) / 5")
-              .select(col("x.rep").as("r1"), col("y.rep").as("r2"),
-                col("dist").cast("int").as("dist"))
-            val members = docs.join(rep.select("lang", "n_chars", "gid", "rep"),
-                Seq("lang", "n_chars", "gid"))
-              .select("rep", "doc_id")
-            val inter = repPairs
-              .join(members.select(col("rep").as("r1"), col("doc_id").as("a")), "r1")
-              .join(members.select(col("rep").as("r2"), col("doc_id").as("b")), "r2")
-              .select(least(col("a"), col("b")).as("d1"),
-                greatest(col("a"), col("b")).as("d2"), col("dist"))
-            val intra = rep.where("n_dup >= 2").select("rep")
-              .join(members.select(col("rep"), col("doc_id").as("a")), "rep")
-              .join(members.select(col("rep"), col("doc_id").as("b")), "rep")
-              .where("a < b")
-              .select(col("a").as("d1"), col("b").as("d2"), lit(0).cast("int").as("dist"))
-            val out = inter.unionByName(intra).localCheckpoint()
-            rep.unpersist()
-            out
-          }
-        pairs.orderBy("d1", "d2")
-      },
-      Some("WITH dd AS (SELECT doc_id, lang, n_chars, text FROM documents " +
-        "WHERE n_chars < 200 AND lang IS NOT NULL AND text IS NOT NULL " +
-        "UNION ALL SELECT 900000001, 'zz', 23, 'zzlev fixture alpha one' " +
-        "UNION ALL SELECT 900000002, 'zz', 23, 'zzlev fixture alpha oze'), " +
-        "bc AS (SELECT lang, n_chars, count(DISTINCT text) AS ndt FROM dd GROUP BY lang, n_chars), " +
-        s"e AS (SELECT dd.*, CASE WHEN ndt > $levenshteinBlockCap THEN " +
-        "array_to_string(list_slice(string_split(text, ' '), 1, 2), ' ') ELSE '' END AS sub " +
-        "FROM dd JOIN bc USING (lang, n_chars)) " +
-        "SELECT x.doc_id AS d1, y.doc_id AS d2, CAST(levenshtein(x.text, y.text) AS INTEGER) AS dist " +
-        "FROM e x JOIN e y " +
-        "ON x.lang = y.lang AND x.n_chars = y.n_chars AND x.sub = y.sub AND x.doc_id < y.doc_id " +
-        "WHERE levenshtein(x.text, y.text) <= x.n_chars / 5 " +
-        "ORDER BY d1, d2")),
-
-    // SemDeDup-style semantic dedup: cluster by nearest centroid, then
-    // pairwise cosine ONLY within a cluster — the quadratic term is
-    // per-cluster (at 100 TB: more centroids, same shape). Keeps the
-    // lowest vec_id of each similar pair; reports per-cluster totals.
-    Op("llm_semdedup",
-      (s, d) => {
-        val assigned = kmeansAssign(s, d)
-        val pairs = assigned.as("x").join(assigned.as("y"),
-            col("x.c_id") === col("y.c_id") && col("x.vec_id") < col("y.vec_id"))
-          .where("cosine_sim(x.embedding, y.embedding) >= 0.3")
-          .select(col("x.c_id").as("c_id"), col("y.vec_id").as("v2"))
-        val perCluster = assigned.groupBy("c_id").agg(count(lit(1)).as("n_vecs"))
-        val dupAgg = pairs.groupBy("c_id")
-          .agg(count(lit(1)).as("n_pairs"), countDistinct("v2").as("n_dropped"))
-        perCluster.join(dupAgg, Seq("c_id"), "left")
-          .select(col("c_id"), col("n_vecs"),
-            coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-            coalesce(col("n_dropped"), lit(0L)).as("n_dropped"))
-          .orderBy("c_id")
-      },
-      Some(oKmeansAssign +
-        ", p AS (SELECT x.c_id AS c_id, y.vec_id AS v2 FROM m x JOIN m y " +
-        "ON x.c_id = y.c_id AND x.vec_id < y.vec_id " +
-        s"WHERE ${oSim("x.embedding", "y.embedding")} >= 0.3), " +
-        "pc AS (SELECT c_id, count(*) AS n_vecs FROM m GROUP BY c_id), " +
-        "da AS (SELECT c_id, count(*) AS n_pairs, count(DISTINCT v2) AS n_dropped FROM p GROUP BY c_id) " +
-        "SELECT pc.c_id, n_vecs, COALESCE(n_pairs, 0) AS n_pairs, " +
-        "COALESCE(n_dropped, 0) AS n_dropped " +
-        "FROM pc LEFT JOIN da USING (c_id) ORDER BY pc.c_id")),
-
-    // symmetric int8 quantization of embeddings (4x memory cut for ANN
-    // serving): per-vector scale = max|x|/127, elements floored to int8
-    // range (floor, not round — identical rounding on both engines), plus
-    // the sequential-fold reconstruction error. Pure per-row map stage.
-    Op("llm_embedding_quantize",
-      (s, d) => T.t(s, d, "embeddings")
-        .withColumn("maxabs", expr(
-          "aggregate(embedding, CAST(0 AS DOUBLE), (acc, v) -> greatest(acc, abs(CAST(v AS DOUBLE))))"))
-        .where("maxabs > 0")
-        .withColumn("scale", expr("maxabs / 127.0"))
-        .withColumn("q", expr(
-          "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) / scale) AS INT))"))
-        .select(col("vec_id"), col("scale"),
-          expr("element_at(q, 1)").as("q1"),
-          expr("aggregate(q, CAST(0 AS BIGINT), (acc, x) -> acc + CAST(x AS BIGINT))").as("q_sum"),
-          expr("aggregate(zip_with(embedding, q, (x, qq) -> " +
-            "abs(CAST(x AS DOUBLE) - CAST(qq AS DOUBLE) * scale)), CAST(0 AS DOUBLE), " +
-            "(acc, v) -> acc + v)").as("err"))
-        .orderBy("vec_id"),
-      Some("WITH t AS (SELECT vec_id, embedding, " +
-        "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        "list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))), " +
-        "(a, b) -> greatest(a, b)) AS maxabs FROM embeddings), " +
-        "u AS (SELECT vec_id, embedding, maxabs / 127.0 AS scale, " +
-        "list_transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) / (maxabs / 127.0)) AS INTEGER)) AS q " +
-        "FROM t WHERE maxabs > 0) " +
-        "SELECT vec_id, scale, q[1] AS q1, " +
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(q, x -> CAST(x AS BIGINT))), " +
-        "(a, b) -> a + b) AS q_sum, " +
-        "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        "list_transform(range(1, len(embedding) + 1), i -> " +
-        "abs(CAST(embedding[i] AS DOUBLE) - CAST(q[i] AS DOUBLE) * scale))), " +
-        "(a, b) -> a + b) AS err " +
-        "FROM u ORDER BY vec_id")),
-
-    // benchmark-contamination scan: probe phrases (8-token spans drawn
-    // deterministically from every 100th doc) substring-matched against the
-    // whole corpus. Probe set is bounded -> broadcast; the corpus side
-    // streams, so the scan stays embarrassingly parallel at any scale.
-    Op("llm_contamination_check",
-      (s, d) => {
-        val docs = T.t(s, d, "documents")
-        val probes = docs
-          .where("doc_id % 100 = 7 AND size(split(text, ' ')) >= 10")
-          .select(col("doc_id").as("probe_id"),
-            array_join(slice(split(col("text"), " "), 3, 8), " ").as("phrase"))
-        docs.join(broadcast(probes),
-            col("doc_id") =!= col("probe_id") && instr(col("text"), col("phrase")) > 0)
-          .select("doc_id", "probe_id", "phrase")
-          .orderBy("doc_id", "probe_id")
-      },
-      Some("WITH probes AS (SELECT doc_id AS probe_id, " +
-        "array_to_string((string_split(text, ' '))[3:10], ' ') AS phrase " +
-        "FROM documents WHERE doc_id % 100 = 7 AND len(string_split(text, ' ')) >= 10) " +
-        "SELECT d.doc_id, probe_id, phrase FROM documents d, probes " +
-        "WHERE d.doc_id <> probe_id AND strpos(d.text, phrase) > 0 " +
-        "ORDER BY d.doc_id, probe_id")),
-
-    // deterministic train/val/test assignment: md5-bucket each doc_id into
-    // 100 buckets, split 90/5/5. Hash-based (not random) so the split is
-    // stable under re-runs, additions, and re-partitioning — the property
-    // a training pipeline actually needs. Pure map stage + tiny agg.
-    Op("llm_train_split",
-      (s, d) => T.t(s, d, "documents")
-        .withColumn("bucket",
-          expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 100"))
-        .withColumn("split",
-          expr("CASE WHEN bucket < 90 THEN 'train' WHEN bucket < 95 THEN 'val' ELSE 'test' END"))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").as("sum_chars"),
-          min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-        .orderBy("split"),
-      Some("WITH b AS (SELECT *, CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS bucket " +
-        "FROM documents) " +
-        "SELECT CASE WHEN bucket < 90 THEN 'train' WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split, " +
-        "count(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars, " +
-        "min(doc_id) AS min_id, max(doc_id) AS max_id " +
-        "FROM b GROUP BY 1 ORDER BY split")),
-
-    // Gopher-style repetition filter: fraction of repeated words and of
-    // repeated word-bigrams per document; docs over threshold are flagged
-    // for removal. All ratios are exact int/int double divisions (rule 12)
-    // — no rounding, no drift. Pure per-row map stage at any scale.
-    Op("llm_repetition_filter",
-      (s, d) => T.t(s, d, "documents")
-        .withColumn("toks", split(lower(col("text")), " "))
-        .where("size(toks) >= 2")
-        .withColumn("bigrams", expr(
-          "transform(sequence(1, size(toks) - 1), " +
-            "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"))
-        .select(col("doc_id"),
-          size(col("toks")).cast("long").as("n_toks"),
-          (size(col("toks")) - size(array_distinct(col("toks")))).cast("long").as("rep_toks"),
-          expr("CAST(size(toks) - size(array_distinct(toks)) AS BIGINT) / size(toks)").as("rep_tok_ratio"),
-          expr("CAST(size(bigrams) - size(array_distinct(bigrams)) AS BIGINT) / size(bigrams)").as("rep_bigram_ratio"))
-        .withColumn("flagged",
-          col("rep_tok_ratio") > 0.3 || col("rep_bigram_ratio") > 0.15)
-        .orderBy("doc_id"),
-      Some("SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_toks, " +
-        "CAST(len(toks) - len(list_distinct(toks)) AS BIGINT) AS rep_toks, " +
-        "CAST(len(toks) - len(list_distinct(toks)) AS BIGINT) / len(toks) AS rep_tok_ratio, " +
-        "CAST(len(bigrams) - len(list_distinct(bigrams)) AS BIGINT) / len(bigrams) AS rep_bigram_ratio, " +
-        "(CAST(len(toks) - len(list_distinct(toks)) AS BIGINT) / len(toks) > 0.3 OR " +
-        "CAST(len(bigrams) - len(list_distinct(bigrams)) AS BIGINT) / len(bigrams) > 0.15) AS flagged " +
-        "FROM (SELECT doc_id, toks, list_transform(range(1, len(toks)), " +
-        "i -> concat(toks[i], ' ', toks[i + 1])) AS bigrams " +
-        "FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents) " +
-        "WHERE len(toks) >= 2) ORDER BY doc_id")),
-
-    // unigram-LM negative log-likelihood per doc (the CCNet-style quality
-    // proxy, with corpus frequencies standing in for the external LM):
-    // nll = -avg_t ln(freq(t)/total). Per-token ln goes through
-    // floor(x*1e6) fixed point so the per-doc sum is an exact-integer
-    // aggregation (order-independent across partitions AND engines);
-    // the final division is exact-int/exact-int (rule 12). Corpus freq
-    // table is a groupBy; the doc join shuffles on the token.
-    Op("llm_perplexity_proxy",
-      (s, d) => {
-        val toks = T.spread(T.t(s, d, "documents"))
-          .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("tok"))
-        val freq = toks.groupBy("tok").agg(count(lit(1)).as("freq"))
-        val total = toks.count()
-        toks.join(freq, "tok")
-          // +1e-6 epsilon before the floor: a 1-ulp JVM-vs-libm ln()
-          // difference exactly at a fixed-point boundary would otherwise
-          // flip the integer on one engine only (nudging by 1e-6 of a
-          // fixed-point unit moves values off the knife edge while never
-          // crossing a boundary legitimately).
-          .withColumn("nll_fp", expr(
-            s"CAST(floor(-ln(CAST(freq AS DOUBLE) / $total) * 1000000 + 0.000001) AS BIGINT)"))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_toks"), sum("nll_fp").as("nll_fp"))
-          .select(col("doc_id"), col("n_toks"),
-            (col("nll_fp") / (col("n_toks") * lit(1000000L))).as("nll"))
-          .orderBy("doc_id")
-      },
-      Some("WITH toks AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents), " +
-        "freq AS (SELECT tok, count(*) AS freq FROM toks GROUP BY tok), " +
-        "total AS (SELECT count(*) AS n FROM toks), " +
-        "per AS (SELECT doc_id, " +
-        "CAST(floor(-ln(CAST(freq AS DOUBLE) / n) * 1000000 + 0.000001) AS BIGINT) AS nll_fp " +
-        "FROM toks JOIN freq USING (tok), total) " +
-        "SELECT doc_id, count(*) AS n_toks, " +
-        "CAST(SUM(nll_fp) AS BIGINT) / (count(*) * 1000000) AS nll " +
-        "FROM per GROUP BY doc_id ORDER BY doc_id")),
-
-    // shard manifest: the summary a training loader reads instead of
-    // listing files — doc count, token total and doc-id range per
-    // (lang, shard). One partial-aggregated shuffle over the packing
-    // output; at 100 TB the manifest is millions of rows describing
-    // billions, which is the point.
-    Op("llm_shard_manifest",
-      (s, d) => packShards(s, d)
-        .groupBy("lang", "shard_id")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("total_tokens"),
-          min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
-        .orderBy("lang", "shard_id"),
-      Some("WITH " + oPackShards + " SELECT lang, shard_id, count(*) AS n_docs, " +
-        "CAST(SUM(n_tokens) AS BIGINT) AS total_tokens, " +
-        "min(doc_id) AS first_doc, max(doc_id) AS last_doc " +
-        "FROM packed GROUP BY lang, shard_id ORDER BY lang, shard_id")),
-
-    // source-mix rebalancing: per-source sampling weights that steer the
-    // corpus toward a uniform target mix (weight > 1 ⇒ upsample, < 1 ⇒
-    // downsample), plus the post-cap kept-doc count. The counts shuffle
-    // is one partial-agg pass; the total is a broadcast scalar — the
-    // standard first step of training-mix curation at any scale.
-    Op("llm_domain_rebalance",
-      (s, d) => {
-        val counts = T.t(s, d, "documents").groupBy("source")
-          .agg(count(lit(1)).as("n_docs"))
-        val total = counts.agg(sum("n_docs").as("total"))
-        val nSrc = counts.agg(count(lit(1)).as("n_sources"))
-        counts.crossJoin(total).crossJoin(nSrc)
-          .withColumn("share", expr("round(CAST(n_docs AS DOUBLE) / total, 6)"))
-          .withColumn("weight", expr(
-            "round((CAST(total AS DOUBLE) / n_sources) / n_docs, 6)"))
-          .withColumn("n_keep", expr(
-            "CAST(least(CAST(n_docs AS DOUBLE), floor(n_docs * ((CAST(total AS DOUBLE) / n_sources) / n_docs))) AS BIGINT)"))
-          .select("source", "n_docs", "share", "weight", "n_keep")
-          .orderBy("source")
-      },
-      Some("WITH counts AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source), " +
-        "t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS total, count(*) AS n_sources FROM counts) " +
-        "SELECT source, n_docs, round(CAST(n_docs AS DOUBLE) / total, 6) AS share, " +
-        "round((CAST(total AS DOUBLE) / n_sources) / n_docs, 6) AS weight, " +
-        "CAST(least(CAST(n_docs AS DOUBLE), floor(n_docs * ((CAST(total AS DOUBLE) / n_sources) / n_docs))) AS BIGINT) AS n_keep " +
-        "FROM counts, t ORDER BY source")),
-
-    // quality-gate audit: per-rule rejection counts and rates across the
-    // corpus — the report a data-curation run emits BEFORE anyone drops a
-    // row. Single aggregation pass computing every rule at once (sum of
-    // flags), unpivoted to one row per rule; no per-rule rescans.
-    Op("llm_quality_gate_report",
-      (s, d) => {
-        val flagged = T.t(s, d, "documents").select(
-          expr("CASE WHEN n_chars < 150 THEN 1 ELSE 0 END").as("f_short"),
-          expr("CASE WHEN n_chars > 450 THEN 1 ELSE 0 END").as("f_long"),
-          expr("CASE WHEN CAST(length(regexp_replace(text, '[^0-9]', '')) AS DOUBLE) / length(text) > 0.05 THEN 1 ELSE 0 END").as("f_digit"),
-          expr("CASE WHEN CAST(size(array_distinct(split(lower(text), ' '))) AS DOUBLE) / size(split(text, ' ')) < 0.5 THEN 1 ELSE 0 END").as("f_repeat"))
-        val agg = flagged.agg(
-          sum("f_short").as("too_short"), sum("f_long").as("too_long"),
-          sum("f_digit").as("digit_heavy"), sum("f_repeat").as("repetitive"),
-          count(lit(1)).as("n_total"))
-        agg.select(expr(
-            "stack(4, 'digit_heavy', digit_heavy, 'repetitive', repetitive, " +
-            "'too_long', too_long, 'too_short', too_short) AS (rule, n_fail)"),
-            col("n_total"))
-          .withColumn("fail_rate", expr("round(CAST(n_fail AS DOUBLE) / n_total, 6)"))
-          .select("rule", "n_fail", "fail_rate")
-          .orderBy("rule")
-      },
-      Some("WITH f AS (SELECT " +
-        "CAST(SUM(CASE WHEN n_chars < 150 THEN 1 ELSE 0 END) AS BIGINT) AS too_short, " +
-        "CAST(SUM(CASE WHEN n_chars > 450 THEN 1 ELSE 0 END) AS BIGINT) AS too_long, " +
-        "CAST(SUM(CASE WHEN CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / length(text) > 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS digit_heavy, " +
-        "CAST(SUM(CASE WHEN CAST(len(list_distinct(string_split(lower(text), ' '))) AS DOUBLE) / len(string_split(text, ' ')) < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS repetitive, " +
-        "count(*) AS n_total FROM documents) " +
-        "SELECT rule, n_fail, round(CAST(n_fail AS DOUBLE) / n_total, 6) AS fail_rate FROM (" +
-        "SELECT 'digit_heavy' AS rule, digit_heavy AS n_fail, n_total FROM f " +
-        "UNION ALL SELECT 'repetitive', repetitive, n_total FROM f " +
-        "UNION ALL SELECT 'too_long', too_long, n_total FROM f " +
-        "UNION ALL SELECT 'too_short', too_short, n_total FROM f) ORDER BY rule")),
-
-    // frequency-ranked tokenizer vocabulary: top-1024 tokens with dense
-    // ids and cumulative corpus coverage — the deterministic skeleton of
-    // vocab construction (a real BPE adds merges on top; the counting
-    // and ranking shape is identical). floor() for the coverage share
-    // (parity rule: round() is unsafe on exact rationals).
-    Op("llm_tokenizer_vocab",
-      (s, d) => {
-        val freq = T.t(s, d, "documents")
-          .select(explode(split(lower(col("text")), " ")).as("token"))
-          .groupBy("token").agg(count(lit(1)).as("freq"))
-        val total = freq.agg(sum("freq").as("total"))
-        // top-N via TakeOrderedAndProject (per-partition top-N, driver
-        // merges N per partition) — never a global no-partition window
-        // over the unbounded distinct-token table. Rank + running sum
-        // are then recovered inside the bounded 1024-row set by a
-        // broadcast theta self-join: (freq desc, token) is a total
-        // order, so rank = |{b : b at-or-before a}| and the inclusive
-        // prefix sum = sum(freq of that set). 1024^2 comparisons is a
-        // constant regardless of corpus size.
-        val top = freq.orderBy(desc("freq"), col("token")).limit(1024)
-        top.as("a")
-          .join(broadcast(top.as("b")), expr(
-            "b.freq > a.freq OR (b.freq = a.freq AND b.token <= a.token)"))
-          .groupBy(col("a.token").as("token"), col("a.freq").as("freq"))
-          .agg(count(lit(1)).cast("int").as("id"), sum(col("b.freq")).as("cumfreq"))
-          .crossJoin(broadcast(total))
-          .withColumn("cum_share",
-            expr("floor(CAST(cumfreq AS DOUBLE) / total * 1000000) / 1000000"))
-          .select("id", "token", "freq", "cum_share")
-          .orderBy("id")
-      },
-      Some("WITH freq AS (SELECT token, count(*) AS freq FROM " +
-        "(SELECT unnest(string_split(lower(text), ' ')) AS token FROM documents) GROUP BY token), " +
-        "t AS (SELECT CAST(SUM(freq) AS BIGINT) AS total FROM freq) " +
-        "SELECT id, token, freq, cum_share FROM (" +
-        "SELECT CAST(row_number() OVER (ORDER BY freq DESC, token) AS INTEGER) AS id, token, freq, " +
-        "floor(CAST(SUM(freq) OVER (ORDER BY freq DESC, token " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / total * 1000000) / 1000000 AS cum_share " +
-        "FROM freq, t) WHERE id <= 1024 ORDER BY id")),
-
-    // out-of-vocabulary rate: per-doc fraction of token OCCURRENCES not
-    // covered by the top-16 corpus vocabulary — the coverage check run
-    // after building any tokenizer vocab (a high OOV tail is how you
-    // catch domains the vocab under-serves). The vocab is bounded and
-    // broadcast; the rate is an exact integer ratio.
-    Op("llm_vocab_oov_rate",
-      (s, d) => {
-        val toks = T.spread(T.t(s, d, "documents"))
-          .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("token"))
-        // top-16 selection as TakeOrderedAndProject — no global window
-        val vocab = toks.groupBy("token").agg(count(lit(1)).as("freq"))
-          .orderBy(desc("freq"), col("token")).limit(16).select("token")
-        toks.join(broadcast(vocab.withColumn("in_vocab", lit(1))), Seq("token"), "left")
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_tokens"),
-            sum(when(col("in_vocab").isNull, 1L).otherwise(0L)).as("n_oov"))
-          .withColumn("oov_rate", expr("CAST(n_oov AS DOUBLE) / n_tokens"))
-          .orderBy("doc_id")
-      },
-      Some("WITH toks AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token FROM documents), " +
-        "vocab AS (SELECT token FROM (SELECT token, row_number() OVER " +
-        "(ORDER BY count(*) DESC, token) AS id FROM toks GROUP BY token) WHERE id <= 16) " +
-        "SELECT doc_id, count(*) AS n_tokens, " +
-        "CAST(SUM(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov, " +
-        "CAST(SUM(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS oov_rate " +
-        "FROM toks t LEFT JOIN vocab v ON t.token = v.token " +
-        "GROUP BY doc_id ORDER BY doc_id")),
-
-    // curriculum ordering: phase docs easy -> hard by length band, with a
-    // deterministic in-phase shuffle (md5 of the text as the sort key) so
-    // every run and every engine produces the same training order. At
-    // scale the output is range-partitioned by (phase, ord) so shard N
-    // of the curriculum is one partition — no global sort at read time.
-    Op("llm_curriculum_order",
-      (s, d) => T.t(s, d, "documents")
-        .withColumn("phase", expr(
-          "CASE WHEN n_chars < 250 THEN 0 WHEN n_chars < 400 THEN 1 ELSE 2 END"))
-        .withColumn("ord", row_number().over(
-          Window.partitionBy("phase").orderBy(md5(col("text")), col("doc_id"))))
-        .select("doc_id", "phase", "ord")
-        .orderBy("phase", "ord"),
-      Some("SELECT doc_id, phase, CAST(row_number() OVER " +
-        "(PARTITION BY phase ORDER BY md5(text), doc_id) AS INTEGER) AS ord " +
-        "FROM (SELECT doc_id, text, CASE WHEN n_chars < 250 THEN 0 " +
-        "WHEN n_chars < 400 THEN 1 ELSE 2 END AS phase FROM documents) " +
-        "ORDER BY phase, ord")),
-
-    // exact-k per-stratum reservoir sample, derandomized: rank docs
-    // inside each language by a content hash and keep the first 20 —
-    // the reproducible equivalent of reservoir sampling (same sample on
-    // every run and every engine). Runs on the bounded MinKByKeyAggregator
-    // (map-side partial top-k over the FULL md5 key, identical to the
-    // window formulation), so the shuffle carries ≤ 20 rows per stratum
-    // per mapper — never the stratum itself. The tiny winner set then
-    // broadcasts back against the corpus to fetch payload columns.
-    Op("llm_reservoir_sample",
-      (s, d) => {
-        val docs = T.t(s, d, "documents")
-        val winners = docs
-          .groupBy("lang")
-          .agg(graft.functions.MinKByKeyAggregator.minKByKey(20)(
-            md5(col("text")), col("doc_id")).as("top"))
-          .select(posexplode(col("top")).as(Seq("pos", "e")))
-          .select(expr("CAST(pos + 1 AS INT)").as("rk"), col("e.id").as("doc_id"))
-        docs.join(broadcast(winners), "doc_id")
-          .select("lang", "rk", "doc_id", "source")
-          .orderBy("lang", "rk")
-      },
-      Some("SELECT lang, rk, doc_id, source FROM (" +
-        "SELECT lang, doc_id, source, CAST(row_number() OVER " +
-        "(PARTITION BY lang ORDER BY md5(text), doc_id) AS INTEGER) AS rk " +
-        "FROM documents) WHERE rk <= 20 ORDER BY lang, rk")),
-
-    // length-bucketed batching: docs grouped into batches of similar
-    // token length (bucket = n_tokens div 50, batch = 8 docs per bucket
-    // in doc_id order) so training batches waste minimal padding — the
-    // standard seq-len bucketing pass. Padding waste per batch is
-    // reported as max_len·8 − sum_len, all integers.
-    Op("llm_length_bucket_pack",
-      (s, d) => {
-        val docs = T.t(s, d, "documents")
-          .withColumn("n_tokens", expr("size(split(text, ' '))"))
-          .withColumn("bucket", expr("CAST(n_tokens div 50 AS INT)"))
-          .withColumn("seq", row_number().over(
-            Window.partitionBy("bucket").orderBy("doc_id")))
-          .withColumn("batch_id", expr("CAST((seq - 1) div 8 AS INT)"))
-        docs.groupBy("bucket", "batch_id")
-          .agg(count(lit(1)).as("n_docs"), max("n_tokens").as("max_len"),
-            sum("n_tokens").as("sum_len"))
-          .withColumn("padding_waste", expr("CAST(max_len * n_docs - sum_len AS BIGINT)"))
-          .orderBy("bucket", "batch_id")
-      },
-      Some("SELECT bucket, batch_id, count(*) AS n_docs, max(n_tokens) AS max_len, " +
-        "CAST(SUM(n_tokens) AS BIGINT) AS sum_len, " +
-        "CAST(max(n_tokens) * count(*) - SUM(n_tokens) AS BIGINT) AS padding_waste " +
-        "FROM (SELECT bucket, CAST((seq - 1) // 8 AS INTEGER) AS batch_id, n_tokens FROM (" +
-        "SELECT n_tokens, bucket, row_number() OVER (PARTITION BY bucket ORDER BY doc_id) AS seq " +
-        "FROM (SELECT doc_id, CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens, " +
-        "CAST(len(string_split(text, ' ')) // 50 AS INTEGER) AS bucket FROM documents))) " +
-        "GROUP BY bucket, batch_id ORDER BY bucket, batch_id")),
-
-    // span-corruption prep (T5-style denoising, derandomized): token
-    // spans of length 2 starting at positions ≡ 1 (mod 7) are replaced
-    // by sentinels; the op reports per-doc corruption stats (masked
-    // token count, sentinel count, corrupted-text digest). A pure
-    // codegen map stage — the shape of masking at 100 TB is a narrow
-    // pass whose output partitioning follows the input.
-    Op("llm_span_corrupt",
-      (s, d) => T.t(s, d, "documents")
-        .withColumn("toks", split(col("text"), " "))
-        .withColumn("masked", expr(
-          "transform(toks, (t, i) -> CASE WHEN i % 7 = 0 THEN '<extra_id>' " +
-            "WHEN i % 7 = 1 THEN NULL ELSE t END)"))
-        .select(
-          col("doc_id"),
-          expr("size(toks)").as("n_tokens"),
-          expr("size(filter(masked, t -> t IS NULL)) + size(filter(masked, t -> t = '<extra_id>'))")
-            .as("n_masked"),
-          expr("size(filter(masked, t -> t = '<extra_id>'))").as("n_sentinels"),
-          md5(expr("concat_ws(' ', filter(masked, t -> t IS NOT NULL))")).as("digest"))
-        .orderBy("doc_id"),
-      Some("SELECT doc_id, CAST(len(toks) AS INTEGER) AS n_tokens, " +
-        "CAST(len(list_filter(masked, t -> t IS NULL)) + len(list_filter(masked, t -> t = '<extra_id>')) AS INTEGER) AS n_masked, " +
-        "CAST(len(list_filter(masked, t -> t = '<extra_id>')) AS INTEGER) AS n_sentinels, " +
-        "md5(array_to_string(list_filter(masked, t -> t IS NOT NULL), ' ')) AS digest " +
-        "FROM (SELECT doc_id, toks, list_transform(range(1, len(toks) + 1), " +
-        "i -> CASE WHEN (i - 1) % 7 = 0 THEN '<extra_id>' WHEN (i - 1) % 7 = 1 THEN NULL ELSE toks[i] END) AS masked " +
-        "FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)) ORDER BY doc_id")),
-
-    // hard-negative mining for retrieval training: for each probe
-    // vector, the top-3 most similar vectors with a DIFFERENT label —
-    // near-misses that teach an embedding model the decision boundary.
-    // Probes broadcast; the corpus is scanned once; per-probe top-k via
-    // window (bounded: 3 probes). The filter is label-based, so the
-    // candidate set never includes same-class vectors.
-    Op("llm_hard_negatives",
-      (s, d) => {
-        val emb = T.t(s, d, "embeddings")
-        val probes = emb.where("vec_id < 3")
-          .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"),
-            col("label").as("p_label"))
-        emb.crossJoin(broadcast(probes))
-          .where("label <> p_label")
-          .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("p_id").orderBy(desc("sim"), col("vec_id"))))
-          .where("rn <= 3")
-          .select(col("p_id"), expr("CAST(rn AS INT)").as("rn"),
-            col("vec_id").as("neg_id"), col("label").as("neg_label"), col("sim"))
-          .orderBy("p_id", "rn")
-      },
-      Some("WITH p AS (SELECT vec_id AS p_id, embedding AS p_emb, label AS p_label " +
-        "FROM embeddings WHERE vec_id < 3) " +
-        "SELECT p_id, CAST(rn AS INTEGER) AS rn, neg_id, neg_label, sim FROM (" +
-        s"SELECT p_id, e.vec_id AS neg_id, e.label AS neg_label, ${oSim("e.embedding", "p_emb")} AS sim, " +
-        "row_number() OVER (PARTITION BY p_id ORDER BY " +
-        s"${oSim("e.embedding", "p_emb")} DESC, e.vec_id) AS rn " +
-        "FROM embeddings e, p WHERE e.label <> p.p_label) WHERE rn <= 3 ORDER BY p_id, rn")),
-
-    // bigram language-model estimation: for every token, its most likely
-    // successor with count and conditional probability — the counting
-    // core of n-gram LM training. Two partial-aggregated shuffles
-    // (bigram counts, then per-head argmax via window); probabilities
-    // are exact integer ratios so the doubles agree across engines.
-    Op("llm_bigram_lm",
-      (s, d) => {
-        val bi = T.spread(T.t(s, d, "documents"))
-          .withColumn("toks", split(lower(col("text")), " "))
-          .where("size(toks) >= 2")
-          .select(explode(expr(
-            "transform(sequence(1, size(toks) - 1), " +
-              "i -> struct(element_at(toks, i) AS w1, element_at(toks, i + 1) AS w2))"))
-            .as("b"))
-          .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
-          .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-        val heads = bi.groupBy("w1").agg(sum("c12").as("c1"))
-        bi.join(heads, "w1")
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("w1").orderBy(desc("c12"), col("w2"))))
-          .where("rn = 1")
-          .select(col("w1"), col("w2"), col("c12"),
-            expr("CAST(c1 AS BIGINT)").as("c1"),
-            expr("CAST(c12 AS DOUBLE) / c1").as("p"))
-          .orderBy("w1")
-      },
-      Some("WITH bi AS (SELECT w1, w2, count(*) AS c12 FROM (" +
-        "SELECT toks[i] AS w1, toks[i + 1] AS w2 " +
-        "FROM (SELECT string_split(lower(text), ' ') AS toks FROM documents) , " +
-        "unnest(range(1, len(toks))) t(i) WHERE len(toks) >= 2) GROUP BY w1, w2), " +
-        "heads AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1 FROM bi GROUP BY w1) " +
-        "SELECT w1, w2, c12, c1, CAST(c12 AS DOUBLE) / c1 AS p FROM (" +
-        "SELECT bi.w1, w2, c12, c1, row_number() OVER " +
-        "(PARTITION BY bi.w1 ORDER BY c12 DESC, w2) AS rn FROM bi JOIN heads ON bi.w1 = heads.w1) " +
-        "WHERE rn = 1 ORDER BY w1")),
-
-    // dataset card: the one-row corpus summary a published dataset ships
-    // with — doc/token/vocab sizes, language and source spread, exact-dup
-    // rate, mean length. One aggregation pass; ratios are exact integer
-    // quotients (floor-scaled where they can sit on rounding boundaries).
-    Op("llm_dataset_card",
-      (s, d) => T.t(s, d, "documents").agg(
-          count(lit(1)).as("n_docs"),
-          expr("CAST(SUM(size(split(text, ' '))) AS BIGINT)").as("n_tokens"),
-          countDistinct(col("lang")).as("n_langs"),
-          countDistinct(col("source")).as("n_sources"),
-          expr("floor((1 - CAST(count(DISTINCT lower(trim(text))) AS DOUBLE) / count(1)) * 1000000) / 1000000")
-            .as("dup_rate"),
-          expr("CAST(SUM(n_chars) AS DOUBLE) / count(1)").as("avg_chars")),
-      Some("SELECT count(*) AS n_docs, " +
-        "CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens, " +
-        "count(DISTINCT lang) AS n_langs, count(DISTINCT source) AS n_sources, " +
-        "floor((1 - CAST(count(DISTINCT lower(trim(text))) AS DOUBLE) / count(*)) * 1000000) / 1000000 AS dup_rate, " +
-        "CAST(SUM(n_chars) AS DOUBLE) / count(*) AS avg_chars FROM documents")),
-
-    // exact-substring dedup (the \"deduplicating training data\" op): doc
-    // pairs sharing ANY run of 20 identical consecutive tokens, found by
-    // hashing every 20-token window and inverted-index self-joining the
-    // window hashes — the scalable stand-in for a suffix array, with the
-    // same df cap as the jaccard pairs so a boilerplate window shared by
-    // thousands of docs can't go quadratic. Spark joins on 8-byte window
-    // hashes; the oracle joins the literal window strings.
-    Op("llm_dedup_substring",
-      (s, d) => {
-        // exact-dedup-first quotient (as in jaccardPairs): window-hash and
-        // self-join one representative per identical text, df weighted by
-        // group size; expand rep pairs to members. Intra-group pairs share
-        // exactly the doc's rare windows (n_shared = r_w). Adaptive like
-        // jaccardPairs: direct join when the corpus is duplicate-free.
-        val gl = T.spread(T.t(s, d, "documents"))
-          .select(col("doc_id"), lower(col("text")).as("ltext"))
-          .withColumn("gid", struct(xxhash64(col("ltext")), length(col("ltext"))))
-        val winExpr = "array_distinct(transform(sequence(1, size(toks) - 19), " +
-          "i -> xxhash64(concat_ws(' ', slice(toks, i, 20)))))"
-        if (CorpusStats.mostlyUnique(s, d)) {
-          val win = gl
-            .withColumn("toks", split(col("ltext"), " "))
-            .where("size(toks) >= 20")
-            .select(col("doc_id"), explode(expr(winExpr)).as("w"))
-            .persist()
-          val rare = win.groupBy("w").agg(count(lit(1)).as("df"))
-            .where(s"df <= ${CorpusStats.rareDfCap(s, d)}").select("w")
-          val wr = win.join(rare, "w")
-          val out = wr.as("x").join(wr.as("y"),
-              col("x.w") === col("y.w") && col("x.doc_id") < col("y.doc_id"))
-            .groupBy(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-            .agg(count(lit(1)).as("n_shared"))
-            .localCheckpoint()
-          win.unpersist()
-          out.orderBy("d1", "d2")
-        } else {
-        val gidRep = gl.groupBy("gid")
-          .agg(min("doc_id").as("rep"), first("ltext").as("ltext"),
-            count(lit(1)).as("n_dup"))
-          .persist()
-        val win = gidRep
-          .withColumn("toks", split(col("ltext"), " "))
-          .where("size(toks) >= 20")
-          .select(col("rep"), col("n_dup"), explode(expr(winExpr)).as("w"))
-          .persist()
-        val rare = win.groupBy("w").agg(sum("n_dup").as("df"))
-          .where(s"df <= ${CorpusStats.rareDfCap(s, d)}").select("w")
-        val wr = win.join(rare, "w").select("rep", "w").persist()
-        val repPairs = wr.as("x").join(wr.as("y"),
-            col("x.w") === col("y.w") && col("x.rep") < col("y.rep"))
-          .groupBy(col("x.rep").as("r1"), col("y.rep").as("r2"))
-          .agg(count(lit(1)).as("n_shared"))
-        val members = gl.join(gidRep.select("gid", "rep"), "gid")
-          .select(col("rep"), col("doc_id"))
-        val inter = repPairs
-          .join(members.select(col("rep").as("r1"), col("doc_id").as("a")), "r1")
-          .join(members.select(col("rep").as("r2"), col("doc_id").as("b")), "r2")
-          .select(least(col("a"), col("b")).as("d1"),
-            greatest(col("a"), col("b")).as("d2"), col("n_shared"))
-        val intra = gidRep.where("n_dup >= 2").select("rep")
-          .join(wr.groupBy("rep").agg(count(lit(1)).as("n_shared")), "rep")
-          .join(members.select(col("rep"), col("doc_id").as("a")), "rep")
-          .join(members.select(col("rep"), col("doc_id").as("b")), "rep")
-          .where("a < b")
-          .select(col("a").as("d1"), col("b").as("d2"), col("n_shared"))
-        // shared-window pairs are tiny — pin them, release the caches
-        val out = inter.unionByName(intra).localCheckpoint()
-        Seq(gidRep, win, wr).foreach(_.unpersist())
-        out.orderBy("d1", "d2")
-        }
-      },
-      Some("WITH " + oSubstringCtes +
-        " SELECT d1, d2, n_shared FROM spairs ORDER BY d1, d2")),
-  )
 }

@@ -1,8 +1,9 @@
 package graft.ops
 
 import graft.{Op, Tables => T}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Multimodal columns: image/audio/video as opaque `binary` payloads with
   * typed metadata, processed partition-wise in batches (the Scala analogue
@@ -249,5 +250,20 @@ object Multimodal {
         "md5(substr(text, off + 1, 64)) AS digest " +
         "FROM (SELECT doc_id, text, unnest(range(0, strlen(text), 256)) AS off FROM documents) " +
         "ORDER BY asset_id, frame_idx")),
+
+    // typed multimodal bundle: text + metadata + embedding in one struct
+    // column, flattened for the oracle compare.
+    Op("llm_multimodal_schema",
+      (s, d) => T.t(s, d, "documents")
+        .join(T.t(s, d, "embeddings"), col("doc_id") === col("vec_id"))
+        .withColumn("bundle", expr("struct(text, lang, embedding)"))
+        .select(
+          col("doc_id"), col("lang"), col("n_chars"), col("label"),
+          expr("size(bundle.embedding)").as("dim"),
+          expr("CAST(element_at(bundle.embedding, 1) AS DOUBLE)").as("emb_first"))
+        .orderBy("doc_id"),
+      Some("SELECT doc_id, lang, n_chars, label, CAST(len(embedding) AS INTEGER) AS dim, " +
+        "CAST(embedding[1] AS DOUBLE) AS emb_first " +
+        "FROM documents JOIN embeddings ON doc_id = vec_id ORDER BY doc_id"))
   )
 }

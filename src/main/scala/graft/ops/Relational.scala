@@ -1,9 +1,11 @@
 package graft.ops
 
+import graft.functions.KmvAggregator
 import graft.{Op, Tables => T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SURVEY.md §2-C — the relational surface snapflow exposes through SQL
   * transforms (it delegates these to Postgres/SQLite; we own them natively
@@ -33,6 +35,64 @@ object Relational {
       "WINDOW w AS (PARTITION BY user_id ORDER BY ts, is_click, event_id " +
       "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) " +
       "WHERE is_click = 1 ORDER BY click_id"
+  }
+
+  /** Auto-sized CMS join-cardinality estimate: KMV-sketch the left
+    * side's key set (k=64 longs of state), size the counter width
+    * `w = max(1024, 2·n̂)` from the estimate (expected ≤ ½ distinct key
+    * per cell), build both sides' d=4×w counter tables at that width,
+    * and report the collision-corrected inner-product estimate
+    * Ĵ = avg_i (w·ip_i − n_A·n_B)/(w−1) next to the exact join size
+    * (audit-only). The 1-row sizing frame is pinned (localCheckpoint)
+    * so the KMV scan runs once, not once per consumer; products go
+    * through DECIMAL(38,0) so n_A·n_B cannot overflow at any scale.
+    */
+  private[graft] def autosizedJoinEstimate(
+      a: DataFrame, keyA: String, b: DataFrame, keyB: String): DataFrame = {
+    val k = 64
+    val wdf = a
+      .select(expr(T.h60(s"CAST($keyA AS STRING)")).as("h"))
+      .agg(KmvAggregator.kmv(k)(col("h")).as("mins"))
+      .select(expr(
+        s"CASE WHEN size(mins) < $k THEN CAST(size(mins) AS BIGINT) ELSE " +
+          s"CAST(floor((CAST(${k - 1} AS DOUBLE) * 1152921504606846976.0) / " +
+          s"CAST(element_at(mins, $k) AS DOUBLE)) AS BIGINT) END").as("n_keys_est"))
+      .select(col("n_keys_est"),
+        expr("greatest(CAST(1024 AS BIGINT), 2 * n_keys_est)").as("w"))
+      .localCheckpoint()
+    def cms(df: DataFrame, key: String, cName: String) = df
+      .groupBy(col(key).as("k0")).agg(count(lit(1)).as("f"))
+      .crossJoin(broadcast(wdf.select("w")))
+      .select(col("f"), posexplode(expr(
+        "transform(sequence(0, 3), i -> " +
+          T.h32(s"concat(CAST(i AS STRING), ':', CAST(k0 AS STRING))") +
+          " % w)")))
+      .withColumnRenamed("pos", "row_i")
+      .withColumnRenamed("col", "bucket")
+      .groupBy("row_i", "bucket").agg(sum("f").as(cName))
+    val ca = cms(a, keyA, "ca")
+    val cb = cms(b, keyB, "cb")
+    val na = a.agg(count(lit(1)).as("na"))
+    val nb = b.agg(count(lit(1)).as("nb"))
+    val est = ca.join(cb, Seq("row_i", "bucket"))
+      .groupBy("row_i").agg(sum(expr("ca * cb")).as("ip"))
+      .crossJoin(broadcast(na)).crossJoin(broadcast(nb))
+      .crossJoin(broadcast(wdf))
+      // clamp before the integer division so truncating (Spark div) and
+      // flooring (DuckDB //) semantics coincide on the non-negative value
+      .withColumn("corr", expr(
+        "greatest(CAST(w AS DECIMAL(38,0)) * ip - CAST(na AS DECIMAL(38,0)) * nb, " +
+          "CAST(0 AS DECIMAL(38,0))) div (w - 1)"))
+      .agg(first("n_keys_est").as("n_keys_est"), first("w").as("w"),
+        first("na").as("na"), first("nb").as("nb"),
+        expr("sum(corr) div 4").as("est_rows"))
+    val exact = a.join(b, col(keyA) === col(keyB))
+      .agg(count(lit(1)).as("exact_rows"))
+    est.crossJoin(exact)
+      .select(col("n_keys_est"), col("w"), col("na"), col("nb"),
+        col("est_rows"), col("exact_rows"),
+        expr("abs(est_rows - exact_rows) * 1000000 div exact_rows")
+          .as("err_abs_ppm"))
   }
 
   val ops: Seq[Op] = Seq(
@@ -951,5 +1011,596 @@ object Relational {
         "/ (CAST(epoch(nh) AS DOUBLE) - epoch(ph)) END AS v_filled, " +
         "(v IS NULL) AS interpolated " +
         "FROM carried ORDER BY event_type, h")),
+
+    // Null-safe equi join: <=> matches NULL keys to each other instead of
+    // dropping them (IS NOT DISTINCT FROM). Aggregated so the null-block
+    // cross product stays bounded in the output.
+    Op("rel_join_null_safe",
+      (s, d) => {
+        val n1 = T.t(s, d, "nation")
+          .select(col("n_nationkey").as("k1"), expr("nullif(n_nationkey % 5, 0)").as("jk"))
+        val n2 = T.t(s, d, "nation")
+          .select(col("n_nationkey").as("k2"), expr("nullif(n_nationkey % 5, 0)").as("jk2"))
+        n1.join(n2, col("jk") <=> col("jk2"), "inner")
+          .groupBy("k1")
+          .agg(count(lit(1)).as("n_matches"), min("k2").as("min_match"))
+          .orderBy("k1")
+      },
+      Some("WITH n1 AS (SELECT n_nationkey AS k1, nullif(n_nationkey % 5, 0) AS jk FROM nation), " +
+        "n2 AS (SELECT n_nationkey AS k2, nullif(n_nationkey % 5, 0) AS jk2 FROM nation) " +
+        "SELECT k1, count(*) AS n_matches, min(k2) AS min_match " +
+        "FROM n1 JOIN n2 ON jk IS NOT DISTINCT FROM jk2 GROUP BY k1 ORDER BY k1")),
+
+    // Several COUNT(DISTINCT ...) in one aggregation — Catalyst plans one
+    // Expand + single shuffle rather than N self-joins.
+    Op("rel_agg_multi_distinct",
+      (s, d) => T.t(s, d, "orders")
+        .groupBy("o_orderstatus")
+        .agg(
+          countDistinct(col("o_custkey")).as("n_cust"),
+          countDistinct(expr("year(o_orderdate)")).as("n_years"),
+          countDistinct(col("o_orderpriority")).as("n_prio"),
+          count(lit(1)).as("n_rows"))
+        .orderBy("o_orderstatus"),
+      Some("SELECT o_orderstatus, count(DISTINCT o_custkey) AS n_cust, " +
+        "count(DISTINCT year(o_orderdate)) AS n_years, " +
+        "count(DISTINCT o_orderpriority) AS n_prio, count(*) AS n_rows " +
+        "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus")),
+
+    // Exact interpolated median plus a deterministic mode: both engines
+    // pick ARBITRARY rows on modal ties, so the mode is computed as
+    // highest-count-then-smallest-value — tie-free by construction
+    // (parity rule 18 applied to mode).
+    Op("rel_agg_median_mode",
+      (s, d) => {
+        val part = T.t(s, d, "part")
+        val counts = part.groupBy("p_size", "p_brand").agg(count(lit(1)).as("cnt"))
+        val mode = counts
+          .withColumn("rn", row_number().over(
+            Window.partitionBy("p_size").orderBy(desc("cnt"), col("p_brand"))))
+          .where("rn = 1")
+          .select(col("p_size"), col("p_brand").as("modal_brand"), col("cnt").as("modal_cnt"))
+        val med = part.groupBy("p_size")
+          .agg(expr("median(p_retailprice)").as("median_price"), count(lit(1)).as("n"))
+        mode.join(med, "p_size").orderBy("p_size")
+      },
+      Some("WITH c AS (SELECT p_size, p_brand, count(*) AS cnt FROM part GROUP BY p_size, p_brand), " +
+        "m AS (SELECT p_size, p_brand AS modal_brand, cnt AS modal_cnt FROM " +
+        "(SELECT *, row_number() OVER (PARTITION BY p_size ORDER BY cnt DESC, p_brand) AS rn FROM c) " +
+        "WHERE rn = 1), " +
+        "md AS (SELECT p_size, median(p_retailprice) AS median_price, count(*) AS n FROM part GROUP BY p_size) " +
+        "SELECT p_size, modal_brand, modal_cnt, median_price, n FROM m JOIN md USING (p_size) ORDER BY p_size")),
+
+    // Inline VALUES relation (snapflow static DataBlock): a literal
+    // lookup table joined broadcast against a source table.
+    Op("rel_values_inline",
+      (s, d) => {
+        import s.implicits._
+        val tiers = Seq(
+          ("AMERICA", "west"), ("ASIA", "east"), ("EUROPE", "west"),
+          ("AFRICA", "south"), ("MIDDLE EAST", "south")).toDF("r_name", "tier")
+        T.t(s, d, "region").join(broadcast(tiers), Seq("r_name"), "left")
+          .select("r_regionkey", "r_name", "tier")
+          .orderBy("r_regionkey")
+      },
+      Some("SELECT r_regionkey, r_name, tier FROM region LEFT JOIN " +
+        "(VALUES ('AMERICA', 'west'), ('ASIA', 'east'), ('EUROPE', 'west'), " +
+        "('AFRICA', 'south'), ('MIDDLE EAST', 'south')) AS t(r_name, tier) " +
+        "USING (r_name) ORDER BY r_regionkey")),
+
+    // Explicit NULLS FIRST / NULLS LAST semantics: Spark defaults
+    // NULLS-FIRST-on-ASC, DuckDB NULLS-LAST — both sides spell the
+    // ordering out so the contract is pinned, in the window AND the
+    // final total order.
+    Op("rel_order_nulls",
+      (s, d) => T.t(s, d, "customer")
+        .withColumn("nk", expr("nullif(c_nationkey % 6, 0)"))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("c_mktsegment")
+            .orderBy(col("nk").desc_nulls_last, col("c_custkey"))))
+        .select("c_custkey", "c_mktsegment", "nk", "rn")
+        .orderBy(col("nk").asc_nulls_first, col("c_custkey")),
+      Some("SELECT c_custkey, c_mktsegment, nullif(c_nationkey % 6, 0) AS nk, " +
+        "CAST(row_number() OVER (PARTITION BY c_mktsegment " +
+        "ORDER BY nullif(c_nationkey % 6, 0) DESC NULLS LAST, c_custkey) AS INTEGER) AS rn " +
+        "FROM customer ORDER BY nk ASC NULLS FIRST, c_custkey")),
+
+    // Centered (symmetric) window frame: 7-row moving stats around each
+    // lineitem in supplier ship order. The mean goes through
+    // SUM(DECIMAL)/COUNT — DuckDB's AVG(DECIMAL) detours through DOUBLE
+    // (parity rule 14) so the exact-rational route is used on both sides.
+    // (l_orderkey, l_linenumber) is NOT unique in this corpus, so the
+    // window order is widened to the full-tuple key (verified unique)
+    // and the output order covers every emitted column — ties then only
+    // occur between value-identical rows.
+    Op("rel_window_centered",
+      (s, d) => {
+        val ord = "ORDER BY l_shipdate, l_orderkey, l_linenumber, l_partkey, l_extendedprice, l_quantity"
+        val w = Window.partitionBy("l_suppkey")
+          .orderBy("l_shipdate", "l_orderkey", "l_linenumber",
+            "l_partkey", "l_extendedprice", "l_quantity")
+          .rowsBetween(-3, 3)
+        T.t(s, d, "lineitem")
+          .withColumn("c_avg", expr(
+            "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) OVER (" +
+              s"PARTITION BY l_suppkey $ord " +
+              "ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS DOUBLE) / " +
+              s"COUNT(*) OVER (PARTITION BY l_suppkey $ord " +
+              "ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)"))
+          .withColumn("c_min", min("l_extendedprice").over(w))
+          .withColumn("c_max", max("l_extendedprice").over(w))
+          .select("l_orderkey", "l_linenumber", "l_suppkey", "c_avg", "c_min", "c_max")
+          .orderBy("l_orderkey", "l_linenumber", "l_suppkey", "c_avg", "c_min", "c_max")
+      },
+      Some("SELECT l_orderkey, l_linenumber, l_suppkey, " +
+        "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) OVER w AS DOUBLE) / count(*) OVER w AS c_avg, " +
+        "min(l_extendedprice) OVER w AS c_min, max(l_extendedprice) OVER w AS c_max " +
+        "FROM lineitem WINDOW w AS (PARTITION BY l_suppkey " +
+        "ORDER BY l_shipdate, l_orderkey, l_linenumber, l_partkey, l_extendedprice, l_quantity " +
+        "ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) " +
+        "ORDER BY l_orderkey, l_linenumber, l_suppkey, c_avg, c_min, c_max")),
+
+    // Mergeable quantile sketch (approx_percentile / Greenwald-Khanna):
+    // the distributed path for percentiles when an exact sort-based
+    // quantile is too expensive — partial sketches merge associatively,
+    // so the exchange carries one sketch per mapper, not the rows.
+    // Sketch estimates are engine-specific, so (as with the HLL op) the
+    // oracle asserts a genuinely computed error-bound boolean: the
+    // estimate must land within the value-range tolerance implied by the
+    // sketch accuracy, against DuckDB's exact interpolated quantile.
+    Op("rel_agg_approx_percentile",
+      (s, d) => T.t(s, d, "lineitem").groupBy("l_returnflag")
+        .agg(
+          expr("approx_percentile(l_extendedprice, array(0.5, 0.95), 5000)").as("ap"),
+          expr("percentile(l_extendedprice, 0.5)").as("p50_exact"),
+          expr("percentile(l_extendedprice, 0.95)").as("p95_exact"),
+          min("l_extendedprice").as("lo"), max("l_extendedprice").as("hi"))
+        .select(col("l_returnflag"),
+          expr("floor(p50_exact * 100 + 0.000001) / 100").as("p50_exact"),
+          expr("floor(p95_exact * 100 + 0.000001) / 100").as("p95_exact"),
+          expr("abs(element_at(ap, 1) - p50_exact) <= (hi - lo) * 0.02").as("p50_within_bounds"),
+          expr("abs(element_at(ap, 2) - p95_exact) <= (hi - lo) * 0.02").as("p95_within_bounds"))
+        .orderBy("l_returnflag"),
+      Some("SELECT l_returnflag, " +
+        "floor(quantile_cont(l_extendedprice, 0.5) * 100 + 0.000001) / 100 AS p50_exact, " +
+        "floor(quantile_cont(l_extendedprice, 0.95) * 100 + 0.000001) / 100 AS p95_exact, " +
+        "true AS p50_within_bounds, true AS p95_within_bounds " +
+        "FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag")),
+
+    // Ordered string aggregation via Spark 4's native listagg WITHIN
+    // GROUP — the SQL-standard form (rel_agg_collect keeps the
+    // collect_list + sort-before-render equivalent for contrast).
+    Op("rel_agg_listagg",
+      (s, d) => {
+        T.t(s, d, "nation").createOrReplaceTempView("nation")
+        s.sql("SELECT n_regionkey, " +
+          "listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS names, " +
+          "count(*) AS n FROM nation GROUP BY n_regionkey ORDER BY n_regionkey")
+      },
+      Some("SELECT n_regionkey, string_agg(n_name, ',' ORDER BY n_name) AS names, " +
+        "count(*) AS n FROM nation GROUP BY n_regionkey ORDER BY n_regionkey")),
+
+    // Parameterized SQL + IDENTIFIER (Spark 4): the injection-safe
+    // templated-query surface — table name bound through IDENTIFIER(),
+    // values through named parameters. Same plan as the literal query.
+    Op("rel_parameterized_sql",
+      (s, d) => {
+        T.t(s, d, "orders").createOrReplaceTempView("orders_pv")
+        s.sql(
+          "SELECT o_orderstatus, count(*) AS n, max(o_totalprice) AS max_price " +
+            "FROM IDENTIFIER(:tbl) WHERE o_totalprice > :floor " +
+            "GROUP BY o_orderstatus ORDER BY o_orderstatus",
+          Map("tbl" -> "orders_pv", "floor" -> 100000))
+      },
+      Some("SELECT o_orderstatus, count(*) AS n, max(o_totalprice) AS max_price " +
+        "FROM orders WHERE o_totalprice > 100000 " +
+        "GROUP BY o_orderstatus ORDER BY o_orderstatus")),
+
+    // Composite-key as-of through the native merge exec: for each even
+    // event, the latest EARLIER odd event of the same (user_id,
+    // event_type) — "what did this user last do of this kind". Both
+    // sides shuffle once on the two-column key; the oracle is the
+    // window emulation.
+    Op("rel_join_asof_multikey",
+      (s, d) => {
+        val ev = T.events(s, d)
+        val left = ev.where("event_id % 2 = 0")
+          .select("event_id", "user_id", "event_type", "ts")
+        val right = ev.where("event_id % 2 = 1")
+          .select(col("user_id"), col("event_type"), col("ts").as("rts"),
+            col("event_id").as("prev_event_id"), col("value").as("prev_value"))
+        graft.plans.AsOf.join(left, right, Seq("user_id", "event_type"), "ts", "rts",
+            payload = Seq("prev_event_id", "prev_value"), tiebreak = Seq("prev_event_id"))
+          .select("event_id", "user_id", "event_type", "prev_event_id", "prev_value")
+          .orderBy("event_id")
+      },
+      Some("WITH l AS (SELECT event_id, user_id, event_type, ts FROM events WHERE event_id % 2 = 0), " +
+        "r AS (SELECT user_id, event_type, ts AS rts, event_id AS prev_event_id, value AS prev_value " +
+        "FROM events WHERE event_id % 2 = 1), " +
+        "j AS (SELECT l.event_id, l.user_id, l.event_type, r.prev_event_id, r.prev_value, " +
+        "row_number() OVER (PARTITION BY l.event_id ORDER BY r.rts DESC, r.prev_event_id DESC) AS rn " +
+        "FROM l LEFT JOIN r ON l.user_id = r.user_id AND l.event_type = r.event_type AND r.rts <= l.ts) " +
+        "SELECT event_id, user_id, event_type, prev_event_id, prev_value FROM j WHERE rn = 1 " +
+        "ORDER BY event_id")),
+
+    // K-minimum-values distinct sketch per language: the bounded
+    // alternative to count(DISTINCT text) when the key set itself is
+    // 100-TB-sized. The KmvAggregator keeps the k=64 smallest DISTINCT
+    // 60-bit text hashes per group with map-side partial aggregation,
+    // so the shuffle carries at most k longs per (group, mapper) —
+    // never the keys. Estimate: exact size while the sketch is not
+    // full (it then holds every distinct hash), else the KMV estimator
+    // (k-1)·2^60 / h_(k). The oracle replays the sketch definition
+    // exactly (k smallest distinct hashes via one window) so tri-SF
+    // data exercises both the exact and the estimating branch.
+    Op("rel_agg_kmv_distinct",
+      (s, d) => {
+        val k = 64
+        val h = T.spread(
+            T.t(s, d, "documents")
+              .where("lang IS NOT NULL AND text IS NOT NULL"))
+          .select(col("lang"), expr(T.h60("text")).as("h"))
+        h.groupBy("lang")
+          .agg(KmvAggregator.kmv(k)(col("h")).as("mins"))
+          .select(col("lang"),
+            when(expr(s"size(mins) = $k"), expr(s"element_at(mins, $k)"))
+              .otherwise(lit(-1L)).as("kth_min"),
+            when(expr(s"size(mins) < $k"), expr("CAST(size(mins) AS BIGINT)"))
+              .otherwise(expr(
+                s"CAST(floor((CAST(${k - 1} AS DOUBLE) * 1152921504606846976.0) " +
+                  s"/ CAST(element_at(mins, $k) AS DOUBLE)) AS BIGINT)"))
+              .as("n_est"))
+          .orderBy("lang")
+      },
+      Some("WITH h AS (SELECT DISTINCT lang, " + T.oH60("text") + " AS h " +
+        "FROM documents WHERE lang IS NOT NULL AND text IS NOT NULL), " +
+        "r AS (SELECT lang, h, row_number() OVER (PARTITION BY lang ORDER BY h) AS rn FROM h), " +
+        "s AS (SELECT lang, count(*) AS nd, max(CASE WHEN rn = 64 THEN h END) AS kth " +
+        "FROM r GROUP BY lang) " +
+        "SELECT lang, COALESCE(kth, -1) AS kth_min, " +
+        "CASE WHEN nd < 64 THEN nd ELSE " +
+        "CAST(floor((CAST(63 AS DOUBLE) * 1152921504606846976.0) / CAST(kth AS DOUBLE)) AS BIGINT) " +
+        "END AS n_est FROM s ORDER BY lang")),
+
+    // Sketch join-cardinality estimation (AMS/count-min): each side is
+    // profiled independently into a 4×1024 counter table (one scan,
+    // partial-agg combined); |A ⋈ B| = Σ_k f_A(k)·f_B(k) appears per
+    // hash row as the 1024-cell inner product ip_i = J + collision
+    // noise whose EXPECTATION is (n_A·n_B − J)/w. The raw min-of-rows
+    // (est_upper) is the classic one-sided bound, but with w ≪ keys
+    // the noise dominates (measured: 15.6× at sf0.01) — so the
+    // operator also reports the unbiased estimator
+    // Ĵ_i = (w·ip_i − n_A·n_B)/(w−1) averaged over the 4 rows, which
+    // is what an optimizer would actually consult before committing a
+    // 100-TB shuffle without catalog stats. The exact join is
+    // audit-only; err_abs_ppm ships the measured estimator error.
+    Op("rel_join_size_estimate",
+      (s, d) => {
+        def cms(df: org.apache.spark.sql.DataFrame, key: String, cName: String) = df
+          .groupBy(col(key).as("k")).agg(count(lit(1)).as("f"))
+          .select(col("f"), posexplode(expr(
+            "transform(sequence(0, 3), i -> CAST(" +
+              T.h32("concat(CAST(i AS STRING), ':', CAST(k AS STRING))") +
+              " % 1024 AS INT))")))
+          .withColumnRenamed("pos", "row_i")
+          .withColumnRenamed("col", "bucket")
+          .groupBy("row_i", "bucket").agg(sum("f").as(cName))
+        val ca = cms(T.t(s, d, "orders"), "o_orderkey", "ca")
+        val cb = cms(T.t(s, d, "lineitem"), "l_orderkey", "cb")
+        val na = T.t(s, d, "orders").agg(count(lit(1)).as("na"))
+        val nb = T.t(s, d, "lineitem").agg(count(lit(1)).as("nb"))
+        val est = ca.join(cb, Seq("row_i", "bucket"))
+          .groupBy("row_i").agg(sum(expr("ca * cb")).as("ip"))
+          .crossJoin(broadcast(na)).crossJoin(broadcast(nb))
+          // clamp before the integer division so truncating (Spark div)
+          // and flooring (DuckDB //) semantics coincide
+          .withColumn("corr",
+            expr("greatest(1024 * ip - na * nb, CAST(0 AS BIGINT)) div 1023"))
+          .agg(min("ip").as("est_upper"),
+            expr("sum(corr) div 4").as("est_rows"),
+            first("na").as("na"), first("nb").as("nb"))
+        val exact = T.t(s, d, "orders").join(
+            T.t(s, d, "lineitem"),
+            expr("o_orderkey = l_orderkey"))
+          .agg(count(lit(1)).as("exact_rows"))
+        est.crossJoin(exact)
+          .select(col("na"), col("nb"), col("est_upper"),
+            col("est_rows"), col("exact_rows"),
+            expr("abs(est_rows - exact_rows) * 1000000 div exact_rows")
+              .as("err_abs_ppm"))
+      },
+      Some("WITH fa AS (SELECT o_orderkey AS k, count(*) AS f FROM orders GROUP BY 1), " +
+        "fb AS (SELECT l_orderkey AS k, count(*) AS f FROM lineitem GROUP BY 1), " +
+        "ba AS (SELECT f, i AS row_i, CAST(" +
+        T.oH32("concat(CAST(i AS VARCHAR), ':', CAST(k AS VARCHAR))") +
+        " % 1024 AS INTEGER) AS bucket FROM fa, range(0, 4) t(i)), " +
+        "bb AS (SELECT f, i AS row_i, CAST(" +
+        T.oH32("concat(CAST(i AS VARCHAR), ':', CAST(k AS VARCHAR))") +
+        " % 1024 AS INTEGER) AS bucket FROM fb, range(0, 4) t(i)), " +
+        "ca AS (SELECT row_i, bucket, CAST(SUM(f) AS BIGINT) AS ca FROM ba GROUP BY 1, 2), " +
+        "cb AS (SELECT row_i, bucket, CAST(SUM(f) AS BIGINT) AS cb FROM bb GROUP BY 1, 2), " +
+        "nn AS (SELECT (SELECT count(*) FROM orders) AS na, " +
+        "(SELECT count(*) FROM lineitem) AS nb), " +
+        "ip AS (SELECT ca.row_i, CAST(SUM(ca * cb) AS BIGINT) AS ip " +
+        "FROM ca JOIN cb ON ca.row_i = cb.row_i AND ca.bucket = cb.bucket GROUP BY 1), " +
+        "co AS (SELECT row_i, ip, greatest(1024 * ip - na * nb, 0) // 1023 AS corr FROM ip, nn), " +
+        "e AS (SELECT MIN(ip) AS est_upper, CAST(SUM(corr) AS BIGINT) // 4 AS est_rows FROM co), " +
+        "x AS (SELECT count(*) AS exact_rows FROM orders o JOIN lineitem l " +
+        "ON o.o_orderkey = l.l_orderkey) " +
+        "SELECT na, nb, est_upper, est_rows, exact_rows, " +
+        "abs(est_rows - exact_rows) * 1000000 // exact_rows AS err_abs_ppm " +
+        "FROM e, x, nn")),
+
+    // Bloom-filter false-positive-rate audit: build a deterministic
+    // Bloom filter (m=131072 bits, j=6 double-hashed probes) over the
+    // customer keys, probe it with 10k keys disjoint by construction,
+    // and report the MEASURED false-positive rate next to the
+    // (1-e^{-jn/m})^j theory value — the check run before trusting a
+    // Bloom prefilter (rel_join_bloom_prefilter) to gate a 100-TB
+    // shuffle. The filter is a distinct-bit-position table (≤ m rows,
+    // broadcast); build and probe are one explode + one join each.
+    Op("rel_bloom_fpr_audit",
+      (s, d) => {
+        val m = 131072
+        def bitsOf(k: String) =
+          s"transform(sequence(0, 5), i -> (" +
+            T.h32(s"concat('b1:', CAST($k AS STRING))") + " + i * " +
+            T.h32(s"concat('b2:', CAST($k AS STRING))") + s") % $m)"
+        val keys = T.t(s, d, "customer").select(col("c_custkey").as("k"))
+        val bits = keys.select(explode(expr(bitsOf("k"))).as("bit")).distinct()
+        val probes = s.range(1000000000L, 1000010000L).select(col("id").as("k"))
+        val hit = probes
+          .select(col("k"), explode(expr(bitsOf("k"))).as("bit"))
+          .join(broadcast(bits.withColumn("b1", lit(1L))), Seq("bit"), "left")
+          .groupBy("k").agg(sum(coalesce(col("b1"), lit(0L))).as("nset"))
+          .agg(count(lit(1)).as("n_probes"),
+            sum(when(col("nset") === 6L, 1L).otherwise(0L)).as("false_pos"))
+        keys.agg(count(lit(1)).as("n_keys"))
+          .crossJoin(broadcast(bits.agg(count(lit(1)).as("bits_set"))))
+          .crossJoin(broadcast(hit))
+          .withColumn("p", expr(
+            s"1.0 - exp((0.0 - CAST(6 * n_keys AS DOUBLE)) / $m.0)"))
+          .select(col("n_keys"), col("bits_set"), col("n_probes"), col("false_pos"),
+            expr("false_pos * 1000000 div n_probes").as("fpr_ppm"),
+            expr("CAST(floor((((((p * p) * p) * p) * p) * p) * 1000000.0) AS BIGINT)")
+              .as("theory_ppm"))
+      },
+      Some("WITH keys AS (SELECT c_custkey AS k FROM customer), " +
+        "kh AS (SELECT k, " +
+        T.oH32("concat('b1:', CAST(k AS VARCHAR))") + " AS h1, " +
+        T.oH32("concat('b2:', CAST(k AS VARCHAR))") + " AS h2 FROM keys), " +
+        "bits AS (SELECT DISTINCT (h1 + i * h2) % 131072 AS bit FROM kh, range(0, 6) t(i)), " +
+        "ph AS (SELECT k, " +
+        T.oH32("concat('b1:', CAST(k AS VARCHAR))") + " AS h1, " +
+        T.oH32("concat('b2:', CAST(k AS VARCHAR))") + " AS h2 " +
+        "FROM range(1000000000, 1000010000) t(k)), " +
+        "pb AS (SELECT k, (h1 + i * h2) % 131072 AS bit FROM ph, range(0, 6) t(i)), " +
+        "hit AS (SELECT CAST(count(*) AS BIGINT) AS n_probes, " +
+        "CAST(SUM(CASE WHEN nset = 6 THEN 1 ELSE 0 END) AS BIGINT) AS false_pos FROM (" +
+        "SELECT pb.k, SUM(CASE WHEN b.bit IS NOT NULL THEN 1 ELSE 0 END) AS nset " +
+        "FROM pb LEFT JOIN bits b ON pb.bit = b.bit GROUP BY pb.k)), " +
+        "agg AS (SELECT (SELECT count(*) FROM keys) AS n_keys, " +
+        "(SELECT count(*) FROM bits) AS bits_set, n_probes, false_pos FROM hit), " +
+        "pp AS (SELECT *, 1.0 - exp((0.0 - CAST(6 * n_keys AS DOUBLE)) / 131072.0) AS p FROM agg) " +
+        "SELECT n_keys, bits_set, n_probes, false_pos, " +
+        "false_pos * 1000000 // n_probes AS fpr_ppm, " +
+        "CAST(floor((((((p * p) * p) * p) * p) * p) * 1000000.0) AS BIGINT) AS theory_ppm " +
+        "FROM pp")),
+
+    // Histogram-driven selectivity estimation with measured error: the
+    // range-predicate cardinality an optimizer reads off the histogram
+    // (full bins above the threshold + linear interpolation inside the
+    // straddling bin) vs the exact count. Threshold = lo + 0.75·range,
+    // so the estimate always exercises the interpolation path. The
+    // whole estimate touches 20 histogram rows; the exact count is
+    // audit-only — at 100 TB the histogram IS the answer.
+    Op("rel_selectivity_estimate",
+      (s, d) => {
+        val o = T.t(s, d, "orders")
+        val mm = o.agg(min("o_totalprice").as("lo"), max("o_totalprice").as("hi"))
+          // zero-width guard as in core_column_histogram (ANSI NaN casts)
+          .withColumn("w", expr("CASE WHEN hi = lo THEN 1.0 ELSE (hi - lo) / 20.0 END"))
+          .withColumn("t", expr("lo + (hi - lo) * 0.75"))
+        val binned = o.crossJoin(broadcast(mm))
+          .withColumn("bin", expr(
+            "CAST(least(floor((o_totalprice - lo) / w), 19.0) AS INT)"))
+          .groupBy("bin").agg(count(lit(1)).as("n_rows"))
+        val est = binned.crossJoin(broadcast(mm))
+          .withColumn("tb", expr("CAST(least(floor((t - lo) / w), 19.0) AS INT)"))
+          .agg(
+            first("t").as("t"),
+            sum(when(col("bin") > col("tb"), col("n_rows")).otherwise(0L)).as("above"),
+            sum(when(col("bin") === col("tb"), col("n_rows")).otherwise(0L)).as("straddle"),
+            first(expr("(lo + (CAST(tb AS DOUBLE) + 1.0) * w - t) / w")).as("frac"))
+          .select(col("t"),
+            expr("above + CAST(floor(CAST(straddle AS DOUBLE) * frac) AS BIGINT)")
+              .as("est_rows"))
+        val exact = o.crossJoin(broadcast(mm))
+          .where("o_totalprice >= t")
+          .agg(count(lit(1)).as("exact_rows"))
+        est.crossJoin(exact)
+          .select(
+            expr("CAST(floor(t * 100.0) AS BIGINT)").as("threshold_fp"),
+            col("est_rows"), col("exact_rows"),
+            expr("abs(est_rows - exact_rows) * 1000000 div exact_rows")
+              .as("err_abs_ppm"))
+      },
+      Some("WITH mm AS (SELECT min(o_totalprice) AS lo, max(o_totalprice) AS hi, " +
+        "CASE WHEN max(o_totalprice) = min(o_totalprice) THEN 1.0 " +
+        "ELSE (max(o_totalprice) - min(o_totalprice)) / 20.0 END AS w, " +
+        "min(o_totalprice) + (max(o_totalprice) - min(o_totalprice)) * 0.75 AS t FROM orders), " +
+        "bi AS (SELECT CAST(least(floor((o_totalprice - lo) / w), 19.0) AS INTEGER) AS bin, " +
+        "count(*) AS n_rows FROM orders, mm GROUP BY 1), " +
+        "tb AS (SELECT CAST(least(floor((t - lo) / w), 19.0) AS INTEGER) AS tb FROM mm), " +
+        "e AS (SELECT CAST(SUM(CASE WHEN bin > tb THEN n_rows ELSE 0 END) AS BIGINT) AS above, " +
+        "CAST(SUM(CASE WHEN bin = tb THEN n_rows ELSE 0 END) AS BIGINT) AS straddle FROM bi, tb), " +
+        "f AS (SELECT (lo + (CAST(tb AS DOUBLE) + 1.0) * w - t) / w AS frac FROM mm, tb), " +
+        "x AS (SELECT count(*) AS exact_rows FROM orders, mm WHERE o_totalprice >= t), " +
+        "g AS (SELECT above + CAST(floor(CAST(straddle AS DOUBLE) * frac) AS BIGINT) AS est_rows FROM e, f) " +
+        "SELECT CAST(floor(t * 100.0) AS BIGINT) AS threshold_fp, est_rows, exact_rows, " +
+        "abs(est_rows - exact_rows) * 1000000 // exact_rows AS err_abs_ppm FROM g, x, mm")),
+
+    // Quantile-sketch audit — completes the mergeable profile triple
+    // (distinct = KMV, frequency = CMS, quantiles = histogram): p50/
+    // p90/p99 of l_extendedprice read off a 256-bin equi-width
+    // histogram by linear interpolation inside the target bin, audited
+    // against the exact percentiles. The histogram is the mergeable
+    // artifact (bin counts add across shards once bounds are fixed);
+    // the quantile read-off touches ≤256 rows however large the table.
+    Op("rel_quantile_sketch_audit",
+      (s, d) => {
+        import s.implicits._
+        val li = T.t(s, d, "lineitem").select(col("l_extendedprice").as("x"))
+        val mm = li.agg(min("x").as("lo"), max("x").as("hi"), count(lit(1)).as("n"))
+          .withColumn("w", expr("CASE WHEN hi = lo THEN 1.0 ELSE (hi - lo) / 256.0 END"))
+        val bins = li.crossJoin(broadcast(mm))
+          .withColumn("bin", expr("CAST(least(floor((x - lo) / w), 255.0) AS INT)"))
+          .groupBy("bin").agg(count(lit(1)).as("bn"))
+        val cum = bins.as("a")
+          .join(broadcast(bins.as("b")), expr("b.bin <= a.bin"))
+          .groupBy(col("a.bin").as("bin"), col("a.bn").as("bn"))
+          .agg(sum("b.bn").as("cum"))
+        val first = Seq(0.5, 0.9, 0.99).toDF("q")
+          .crossJoin(broadcast(cum)).crossJoin(broadcast(mm))
+          .where("CAST(cum AS DOUBLE) >= q * CAST(n AS DOUBLE)")
+          .groupBy("q").agg(min("bin").as("qbin"))
+        val est = first.join(broadcast(cum), expr("qbin = bin"))
+          .crossJoin(broadcast(mm))
+          .withColumn("est_q", expr(
+            "round(lo + CAST(qbin AS DOUBLE) * w + " +
+              "((q * CAST(n AS DOUBLE) - CAST(cum - bn AS DOUBLE)) / CAST(bn AS DOUBLE)) * w, 4)"))
+        val ex = li.agg(
+          expr("round(percentile(x, 0.5), 4)").as("e50"),
+          expr("round(percentile(x, 0.9), 4)").as("e90"),
+          expr("round(percentile(x, 0.99), 4)").as("e99"))
+        est.crossJoin(broadcast(ex))
+          .withColumn("exact_q", expr(
+            "CASE WHEN q = 0.5 THEN e50 WHEN q = 0.9 THEN e90 ELSE e99 END"))
+          .select(
+            expr("CAST(floor(q * 100.0 + 0.5) AS INT)").as("q_pct"),
+            col("est_q"), col("exact_q"),
+            expr("CAST(floor(abs(est_q - exact_q) / exact_q * 1000000.0) AS BIGINT)")
+              .as("err_ppm"))
+          .orderBy("q_pct")
+      },
+      Some("WITH li AS (SELECT l_extendedprice AS x FROM lineitem), " +
+        "mm AS (SELECT min(x) AS lo, max(x) AS hi, count(*) AS n, " +
+        "CASE WHEN max(x) = min(x) THEN 1.0 ELSE (max(x) - min(x)) / 256.0 END AS w FROM li), " +
+        "bins AS (SELECT CAST(least(floor((x - lo) / w), 255.0) AS INTEGER) AS bin, " +
+        "count(*) AS bn FROM li, mm GROUP BY 1), " +
+        "cum AS (SELECT a.bin, a.bn, CAST(SUM(b.bn) AS BIGINT) AS cum " +
+        "FROM bins a JOIN bins b ON b.bin <= a.bin GROUP BY a.bin, a.bn), " +
+        "fb AS (SELECT q, min(bin) AS qbin FROM (SELECT unnest([0.5, 0.9, 0.99]) AS q), cum, mm " +
+        "WHERE CAST(cum AS DOUBLE) >= q * CAST(n AS DOUBLE) GROUP BY q), " +
+        "est AS (SELECT q, round(lo + CAST(qbin AS DOUBLE) * w + " +
+        "((q * CAST(n AS DOUBLE) - CAST(cum - bn AS DOUBLE)) / CAST(bn AS DOUBLE)) * w, 4) AS est_q " +
+        "FROM fb JOIN cum ON qbin = cum.bin, mm), " +
+        "ex AS (SELECT round(quantile_cont(x, 0.5), 4) AS e50, " +
+        "round(quantile_cont(x, 0.9), 4) AS e90, round(quantile_cont(x, 0.99), 4) AS e99 FROM li) " +
+        "SELECT CAST(floor(q * 100.0 + 0.5) AS INTEGER) AS q_pct, est_q, " +
+        "CASE WHEN q = 0.5 THEN e50 WHEN q = 0.9 THEN e90 ELSE e99 END AS exact_q, " +
+        "CAST(floor(abs(est_q - (CASE WHEN q = 0.5 THEN e50 WHEN q = 0.9 THEN e90 ELSE e99 END)) / " +
+        "(CASE WHEN q = 0.5 THEN e50 WHEN q = 0.9 THEN e90 ELSE e99 END) * 1000000.0) AS BIGINT) AS err_ppm " +
+        "FROM est, ex ORDER BY q_pct")),
+
+    // The KMV→CMS sizing loop on a real join: part ⋈ lineitem on
+    // partkey. Round 7's fixed-width op measured why this matters; this
+    // op is the production shape — the optimizer-facing estimate whose
+    // width was chosen BY the data's own cardinality sketch. The oracle
+    // replays the KMV estimate, the derived width, and the counter
+    // tables with identical integer arithmetic, so even the
+    // data-dependent geometry hash-matches.
+    Op("rel_join_size_autosized",
+      (s, d) => autosizedJoinEstimate(
+        T.t(s, d, "part"), "p_partkey",
+        T.t(s, d, "lineitem"), "l_partkey"),
+      Some("WITH h AS (SELECT DISTINCT " + T.oH60("CAST(p_partkey AS VARCHAR)") + " AS h FROM part), " +
+        "r AS (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM h), " +
+        "sk AS (SELECT count(*) AS nd, max(CASE WHEN rn = 64 THEN h END) AS kth FROM r), " +
+        "wv AS (SELECT CASE WHEN nd < 64 THEN nd ELSE " +
+        "CAST(floor((CAST(63 AS DOUBLE) * 1152921504606846976.0) / CAST(kth AS DOUBLE)) AS BIGINT) " +
+        "END AS n_keys_est FROM sk), " +
+        "w2 AS (SELECT n_keys_est, greatest(1024, 2 * n_keys_est) AS w FROM wv), " +
+        "fa AS (SELECT p_partkey AS k0, count(*) AS f FROM part GROUP BY 1), " +
+        "fb AS (SELECT l_partkey AS k0, count(*) AS f FROM lineitem GROUP BY 1), " +
+        "ba AS (SELECT f, i AS row_i, " +
+        T.oH32("concat(CAST(i AS VARCHAR), ':', CAST(k0 AS VARCHAR))") +
+        " % w AS bucket FROM fa, range(0, 4) t(i), w2), " +
+        "bb AS (SELECT f, i AS row_i, " +
+        T.oH32("concat(CAST(i AS VARCHAR), ':', CAST(k0 AS VARCHAR))") +
+        " % w AS bucket FROM fb, range(0, 4) t(i), w2), " +
+        "ca AS (SELECT row_i, bucket, CAST(SUM(f) AS BIGINT) AS ca FROM ba GROUP BY 1, 2), " +
+        "cb AS (SELECT row_i, bucket, CAST(SUM(f) AS BIGINT) AS cb FROM bb GROUP BY 1, 2), " +
+        "nn AS (SELECT (SELECT count(*) FROM part) AS na, " +
+        "(SELECT count(*) FROM lineitem) AS nb), " +
+        "ip AS (SELECT ca.row_i, CAST(SUM(ca * cb) AS BIGINT) AS ip " +
+        "FROM ca JOIN cb ON ca.row_i = cb.row_i AND ca.bucket = cb.bucket GROUP BY 1), " +
+        "co AS (SELECT greatest(CAST(w AS HUGEINT) * ip - CAST(na AS HUGEINT) * nb, 0) " +
+        "// (w - 1) AS corr FROM ip, nn, w2), " +
+        "e AS (SELECT CAST(CAST(SUM(corr) AS HUGEINT) // 4 AS BIGINT) AS est_rows FROM co), " +
+        "x AS (SELECT count(*) AS exact_rows FROM part p JOIN lineitem l ON p.p_partkey = l.l_partkey) " +
+        "SELECT n_keys_est, w, na, nb, est_rows, exact_rows, " +
+        "abs(est_rows - exact_rows) * 1000000 // exact_rows AS err_abs_ppm " +
+        "FROM w2, nn, e, x")),
+
+    // Exact distinct counting via fixed-size bitmaps (the modern
+    // high-cardinality trick): bitmap_bucket_number partitions the key
+    // space into 4KB segments, bitmap_construct_agg ORs bits per
+    // (group, bucket) with map-side partials, and the final count is a
+    // sum of per-segment popcounts. The shuffle carries fixed 4KB
+    // bitmaps instead of raw keys, and huge distinct sets parallelize
+    // across buckets — count(DISTINCT) semantics at a fraction of the
+    // state. Oracle = plain COUNT(DISTINCT): the equality IS the test.
+    Op("rel_agg_bitmap_distinct",
+      (s, d) => {
+        T.views(s, d)
+        s.sql("SELECT g, CAST(SUM(cnt) AS BIGINT) AS distinct_parts FROM (" +
+          "SELECT l_returnflag AS g, bitmap_bucket_number(l_partkey) AS b, " +
+          "bitmap_count(bitmap_construct_agg(bitmap_bit_position(l_partkey))) AS cnt " +
+          "FROM lineitem GROUP BY 1, 2) GROUP BY g ORDER BY g")
+      },
+      Some("SELECT l_returnflag AS g, CAST(count(DISTINCT l_partkey) AS BIGINT) " +
+        "AS distinct_parts FROM lineitem GROUP BY 1 ORDER BY 1")),
+
+    // As-of query over the SCD2 dimension (the read side of core_scd2):
+    // each user's state at the corpus-midpoint instant — the row whose
+    // validity interval covers T. The probe instant is integer
+    // epoch-micros math both engines replay; the dimension filter is a
+    // plain codegen predicate, no join, no window beyond the SCD2 build
+    // itself (per-user partitions).
+    Op("rel_scd2_asof_query",
+      (s, d) => {
+        val ev = T.events(s, d)
+        val midRow = ev.agg(expr(
+          "(unix_micros(CAST(min(ts) AS TIMESTAMP)) + " +
+            "unix_micros(CAST(max(ts) AS TIMESTAMP))) div 2").as("t"))
+          .head()
+        val mid = if (midRow.isNullAt(0)) 0L else midRow.getLong(0)
+        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+        val changes = ev
+          .withColumn("prev_type", lag("event_type", 1).over(w))
+          .where("prev_type IS NULL OR prev_type <> event_type")
+          .select(col("user_id"), col("event_type"),
+            col("ts").as("valid_from"), col("event_id"))
+        val w2 = Window.partitionBy("user_id").orderBy("valid_from", "event_id")
+        changes
+          .withColumn("valid_to", lead("valid_from", 1).over(w2))
+          .where(expr(s"unix_micros(CAST(valid_from AS TIMESTAMP)) <= $mid") &&
+            expr(s"valid_to IS NULL OR unix_micros(CAST(valid_to AS TIMESTAMP)) > $mid"))
+          .select("user_id", "event_type", "valid_from")
+          .orderBy("user_id")
+      },
+      Some("WITH mid AS (SELECT (epoch_us(min(ts)) + epoch_us(max(ts))) // 2 AS t FROM events), " +
+        "o AS (SELECT user_id, event_type, ts, event_id, " +
+        "lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type FROM events), " +
+        "c AS (SELECT user_id, event_type, ts AS valid_from, event_id FROM o " +
+        "WHERE prev_type IS NULL OR prev_type <> event_type), " +
+        "v AS (SELECT user_id, event_type, valid_from, " +
+        "lead(valid_from) OVER (PARTITION BY user_id ORDER BY valid_from, event_id) AS valid_to " +
+        "FROM c) " +
+        "SELECT user_id, event_type, valid_from FROM v, mid " +
+        "WHERE epoch_us(valid_from) <= mid.t " +
+        "AND (valid_to IS NULL OR epoch_us(valid_to) > mid.t) " +
+        "ORDER BY user_id"))
   )
 }

@@ -1,9 +1,10 @@
 package graft.ops
 
 import graft.{Op, Tables => T}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SURVEY.md §2-A — sources & sinks.
   *
@@ -72,6 +73,23 @@ object Sources {
     T.t(s, d, "supplier").write.mode("overwrite").parquet(tmp)
     s.read.parquet(tmp).orderBy("s_suppkey")
   }
+
+  /** DuckDB replay of WebhookModule.deliveries: terminal CTE
+    * `del(delivery_id, event_key, event, payload, amount_cents,
+    * signature, sig_ok)`.
+    */
+  private lazy val oDeliveries: String =
+    "WITH raw AS (SELECT o_orderkey AS delivery_id, o_orderkey // 2 AS event_key, " +
+      "CASE WHEN o_orderstatus = 'F' THEN 'payment.settled' " +
+      "WHEN o_orderstatus = 'O' THEN 'payment.created' " +
+      "ELSE 'payment.pending' END AS event, " +
+      "concat('{\"customer\":', CAST(o_custkey AS VARCHAR), ',\"amount_cents\":', " +
+      "CAST(CAST(floor(o_totalprice * 100) AS BIGINT) AS VARCHAR), '}') AS payload, " +
+      "CAST(floor(o_totalprice * 100) AS BIGINT) AS amount_cents FROM orders), " +
+      "del AS (SELECT delivery_id, event_key, event, payload, amount_cents, " +
+      "CASE WHEN delivery_id % 7 = 0 THEN 'deadbeef' " +
+      "ELSE sha256(concat(payload, 'whsec_demo')) END AS signature, " +
+      "delivery_id % 7 <> 0 AS sig_ok FROM raw)"
 
   val ops: Seq[Op] = Seq(
     Op("src_parquet_scan",
@@ -359,5 +377,156 @@ object Sources {
       },
       Some("SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus " +
         "FROM orders WHERE o_orderstatus = 'F' ORDER BY o_orderkey")),
+
+    // CSV with non-default dialect options: '|' delimiter, explicit NULL
+    // sentinel, header — written then read back with a declared schema
+    // (the snapflow import_csv surface beyond the happy path).
+    Op("src_csv_options",
+      (s, d) => {
+        import org.apache.spark.sql.types._
+        val tmp = s"target/tmp/csvopt_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+        T.t(s, d, "supplier")
+          .withColumn("maybe_nation", expr("nullif(s_nationkey % 7, 0)"))
+          .select("s_suppkey", "s_name", "maybe_nation", "s_acctbal")
+          .write.mode("overwrite")
+          .option("header", "true").option("sep", "|").option("nullValue", "NULL")
+          .csv(tmp)
+        val schema = StructType(Seq(
+          StructField("s_suppkey", LongType), StructField("s_name", StringType),
+          StructField("maybe_nation", IntegerType), StructField("s_acctbal", DoubleType)))
+        s.read.schema(schema)
+          .option("header", "true").option("sep", "|").option("nullValue", "NULL")
+          .csv(tmp)
+          .orderBy("s_suppkey")
+      },
+      Some("SELECT s_suppkey, s_name, nullif(s_nationkey % 7, 0) AS maybe_nation, s_acctbal " +
+        "FROM supplier ORDER BY s_suppkey")),
+
+    // Clustered sink: repartition by key + sortWithinPartitions before
+    // the write — the layout knob that makes parquet min/max row-group
+    // skipping effective on the read side (zone-map locality at 100 TB).
+    // Content round-trips unchanged; the oracle checks exactly that.
+    Op("snk_sorted_write",
+      (s, d) => {
+        val tmp = s"target/tmp/sorted_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+        T.events(s, d)
+          .select("event_id", "user_id", "event_type", "value")
+          .repartition(4, col("user_id"))
+          .sortWithinPartitions("user_id", "event_id")
+          .write.mode("overwrite").parquet(tmp)
+        s.read.parquet(tmp).orderBy("event_id")
+      },
+      Some("SELECT event_id, user_id, event_type, value FROM events ORDER BY event_id")),
+
+    // Parquet column BLOOM FILTERS on the sink: the point-lookup
+    // story for a 100-TB key-addressed table — a reader probing
+    // o_orderkey skips every row group whose bloom filter rejects the
+    // key, without any sort/cluster requirement (complementing
+    // snk_sorted_write's min/max pruning, which needs clustering, and
+    // core_zorder_cluster's multi-column layout). The op writes with
+    // filters enabled + sized (expected NDV), reads three
+    // deterministic point keys back, and the oracle checks the rows;
+    // a spec checks the footer actually CARRIES the bloom filter
+    // (an ignored write option would silently degrade to full scans).
+    Op("snk_parquet_bloom",
+      (s, d) => {
+        val dir = s"target/tmp/bloom_${java.util.UUID.randomUUID().toString.take(8)}"
+        val orders = T.t(s, d, "orders")
+          .select("o_orderkey", "o_custkey", "o_totalprice")
+        orders.write
+          .option("parquet.bloom.filter.enabled#o_orderkey", "true")
+          .option("parquet.bloom.filter.expected.ndv#o_orderkey", "200000")
+          .mode("overwrite").parquet(dir)
+        val keys = orders.where("o_orderkey % 7 = 0")
+          .orderBy("o_orderkey").limit(3)
+          .collect().map(_.getLong(0))
+        val got = s.read.parquet(dir)
+          .where(col("o_orderkey").isin(keys.toIndexedSeq: _*))
+          .localCheckpoint()
+        graft.api.StoreIO.delete(s, dir)
+        got.orderBy("o_orderkey")
+      },
+      Some("SELECT o_orderkey, o_custkey, o_totalprice FROM orders " +
+        "WHERE o_orderkey IN (SELECT o_orderkey FROM orders WHERE o_orderkey % 7 = 0 " +
+        "ORDER BY o_orderkey LIMIT 3) ORDER BY o_orderkey")),
+
+    // Parquet footer-stats integrity audit: per-column value and null
+    // counts read from the ROW-GROUP METADATA (parquet-hadoop footer
+    // API, no data pages touched), verified against the data by the
+    // oracle. Footer stats are what every stats-based file/row-group
+    // skip trusts — min/max pruning, null-aware rewrites, bloom
+    // routing — so "footer == data" is the audit that makes skipping
+    // safe to enable. The driver-side loop is bounded by metadata size
+    // (row-groups x columns), never rows.
+    Op("src_parquet_rowgroup_stats",
+      (s, d) => {
+        import scala.jdk.CollectionConverters._
+        import org.apache.hadoop.fs.Path
+        val conf = s.sparkContext.hadoopConfiguration
+        val root = new Path(s"$d/lineitem.parquet")
+        val hfs = root.getFileSystem(conf)
+        val files =
+          if (hfs.getFileStatus(root).isDirectory)
+            hfs.listStatus(root).map(_.getPath)
+              .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+          else Array(root)
+        val chunks = files.flatMap { fp =>
+          val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(fp, conf))
+          try rd.getFooter.getBlocks.asScala.flatMap(b => b.getColumns.asScala.map(c =>
+            (c.getPath.toDotString, c.getValueCount,
+              Option(c.getStatistics).filter(!_.isEmpty).map(_.getNumNulls).getOrElse(0L))))
+          finally rd.close()
+        }
+        import s.implicits._
+        chunks.toSeq.groupBy(_._1).toSeq
+          .map { case (name, cs) => (name, cs.map(_._2).sum, cs.map(_._3).sum) }
+          .sortBy(_._1)
+          .toDF("col_name", "n_values", "n_nulls")
+      },
+      Some(Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
+          "l_extendedprice", "l_discount", "l_tax", "l_returnflag", "l_linestatus",
+          "l_shipdate")
+        .map(c => s"SELECT '$c' AS col_name, count(*) AS n_values, " +
+          s"count(*) - count($c) AS n_nulls FROM lineitem")
+        .mkString("", " UNION ALL ", " ORDER BY col_name"))),
+
+    // Webhook module, op 1: envelope verify + parse. Real BinaryType-free
+    // but real-crypto path: the signature is lowercase-hex SHA-256 over
+    // payload || secret, and the per-group min(signature) column forces
+    // BOTH engines to hash every payload — a digest drift anywhere
+    // breaks the compare. One codegen projection + one map-side-combined
+    // aggregate.
+    Op("mod_webhook_parse",
+      (s, d) => graft.api.WebhookModule.parse(graft.api.WebhookModule.deliveries(s, d))
+        .groupBy("event", "sig_ok").agg(
+          count(lit(1)).as("n_deliveries"),
+          sum("amount_cents").as("amount_cents_sum"),
+          min("signature").as("min_sig"))
+        .orderBy("event", "sig_ok"),
+      Some(oDeliveries +
+        " SELECT event, sig_ok, count(*) AS n_deliveries, " +
+        "CAST(sum(amount_cents) AS BIGINT) AS amount_cents_sum, " +
+        "min(signature) AS min_sig " +
+        "FROM del GROUP BY 1, 2 ORDER BY 1, 2")),
+
+    // Webhook module, op 2: at-least-once replay dedup — providers
+    // retry, retries share event_key — keep the FIRST valid delivery
+    // per event (min delivery_id among signature-verified rows), then
+    // report per event type. One keyed exchange on event_key.
+    Op("mod_webhook_replay_dedup",
+      (s, d) => graft.api.WebhookModule.dedupeReplays(
+          graft.api.WebhookModule.parse(graft.api.WebhookModule.deliveries(s, d))
+            .where(col("sig_ok")))
+        .groupBy("event").agg(
+          count(lit(1)).as("n_events"),
+          sum("amount_cents").as("amount_cents_sum"))
+        .orderBy("event"),
+      Some(oDeliveries + ", first AS (SELECT * FROM " +
+        "(SELECT *, row_number() OVER (PARTITION BY event_key ORDER BY delivery_id) AS rn " +
+        "FROM del WHERE sig_ok) WHERE rn = 1) " +
+        "SELECT event, count(*) AS n_events, " +
+        "CAST(sum(amount_cents) AS BIGINT) AS amount_cents_sum " +
+        "FROM first GROUP BY 1 ORDER BY 1"))
   )
 }

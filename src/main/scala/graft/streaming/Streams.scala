@@ -602,7 +602,7 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Round5b.rowDigest(batch.toDF())
+        graft.ops.CoreOps.rowDigest(batch.toDF())
           .withColumn("run_key", lit(runKey))
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")
@@ -618,7 +618,7 @@ object Streams {
     * (per-lang rows in the `core_row_checksum` schema).
     */
   def corpusChecksum(spark: SparkSession, digestDir: String): DataFrame =
-    graft.ops.Round5b.foldDigests(
+    graft.ops.CoreOps.foldDigests(
       spark.read.parquet(digestDir).drop("run_key", "batch_id"))
 
   /** Streaming twin of the count-min counter build (the production
@@ -642,7 +642,7 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Round7.cmsCounters(batch.toDF())
+        graft.ops.LlmText.cmsCounters(batch.toDF())
           .withColumn("run_key", lit(runKey))
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")

@@ -207,7 +207,7 @@ class PropertySpec extends AnyFunSuite {
       } yield (t, v))
     } yield rows
     forSamples(valuesGen, n = 8) { rows =>
-      val got = graft.ops.Round8b.madOf(rows.toDF("event_type", "v"))
+      val got = graft.ops.Analytics.madOf(rows.toDF("event_type", "v"))
         .select("event_type", "med", "mad", "n")
         .as[(String, Long, Long, Long)].collect()
         .map(r => r._1 -> (r._2, r._3, r._4)).toMap

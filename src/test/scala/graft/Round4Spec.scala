@@ -153,8 +153,8 @@ class Round4Spec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val fps = docs
       .withColumn("toks", split(lower(col("text")), " "))
-      .withColumn("hs", expr(ops.Round4.winnowHashExpr))
-      .withColumn("fps", expr(ops.Round4.winnowFpsExpr))
+      .withColumn("hs", expr(ops.LlmDedup.winnowHashExpr))
+      .withColumn("fps", expr(ops.LlmDedup.winnowFpsExpr))
       .select("doc_id", "fps")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     cases.foreach { case (i1, _, i2, _) =>

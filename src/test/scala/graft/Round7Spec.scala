@@ -105,7 +105,7 @@ class Round7Spec extends AnyFunSuite {
     q.awaitTermination()
     val folded = graft.streaming.Streams.corpusCms(spark, cmsDir)
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val batch = graft.ops.Round7.cmsCounters(docs)
+    val batch = graft.ops.LlmText.cmsCounters(docs)
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     assert(folded == batch)
     assert(spark.read.parquet(cmsDir).select("batch_id").distinct().count() > 1,

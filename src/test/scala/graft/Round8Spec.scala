@@ -17,7 +17,7 @@ class Round8Spec extends AnyFunSuite {
     // The KMV-derived width must absorb the cardinality jump by design.
     val a = spark.range(0L, 200000L).select(col("id").as("ka"))
     val b = spark.range(0L, 600000L).select((col("id") % 200000L).as("kb"))
-    val r = ops.Round8.autosizedJoinEstimate(a, "ka", b, "kb").head()
+    val r = ops.Relational.autosizedJoinEstimate(a, "ka", b, "kb").head()
     val (nEst, w, est, exact) = (r.getLong(0), r.getLong(1), r.getLong(4), r.getLong(5))
     assert(exact == 600000L)
     assert(w >= 2 * nEst && w >= 1024L, s"width must come from the estimate: w=$w n=$nEst")
@@ -54,7 +54,7 @@ class Round8Spec extends AnyFunSuite {
       s"~2100 distinct tokens must size the width beyond the 1024 default: $w")
     // the wider sketch keeps one-sided error and, at load ≤ ½, the
     // heavy hitters' estimates should collapse onto the exact counts
-    val exact = ops.Round7.tokenCounts(docs).orderBy(desc("exact"), asc("tok"))
+    val exact = ops.LlmText.tokenCounts(docs).orderBy(desc("exact"), asc("tok"))
       .limit(20).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val ests = api.SketchStore.freqEstimate(spark, dir, exact.keys.toSeq.sorted)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
