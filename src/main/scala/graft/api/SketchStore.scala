@@ -80,7 +80,7 @@ object SketchStore {
   def kmvOf(docs: DataFrame): DataFrame =
     docs.where("lang IS NOT NULL AND text IS NOT NULL")
       .select(col("lang"), expr(
-        "CAST(conv(substring(md5(text), 1, 15), 16, 10) AS BIGINT)").as("h"))
+        graft.Tables.h60("text")).as("h"))
       .groupBy("lang")
       .agg(graft.functions.KmvAggregator.kmv(K)(col("h")).as("mins"))
 
@@ -97,7 +97,7 @@ object SketchStore {
       .select(explode(split(col("text"), " ")).as("tok"))
       .where("tok <> ''")
       .select(expr(
-        "CAST(conv(substring(md5(tok), 1, 15), 16, 10) AS BIGINT)").as("h"))
+        graft.Tables.h60("tok")).as("h"))
       .agg(graft.functions.KmvAggregator.kmv(K)(col("h")).as("mins"))
       .head().getSeq[Long](0)
     if (mins.length < K) mins.length.toLong
@@ -210,7 +210,7 @@ object SketchStore {
     toks.toDF("tok")
       .select(col("tok"), posexplode(expr(
         s"transform(sequence(0, ${g.d - 1}), i -> CAST(" +
-          "CAST(conv(substring(md5(concat(CAST(i AS STRING), ':', tok)), 1, 8), 16, 10) AS BIGINT)" +
+          graft.Tables.h32("concat(CAST(i AS STRING), ':', tok)") +
           s" % CAST(${g.w} AS BIGINT) AS INT))")))
       .withColumnRenamed("pos", "row_i")
       .withColumnRenamed("col", "bucket")

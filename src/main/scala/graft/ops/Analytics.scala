@@ -91,15 +91,13 @@ object Analytics {
     * coin. Hashing row CONTENT (not a random()) keeps the sample
     * deterministic across engines, retries, and partitionings.
     */
-  private val rowHash =
-    "CAST(conv(substring(md5(concat(CAST(l_orderkey AS STRING), ':', " +
-      "CAST(l_linenumber AS STRING), ':', CAST(l_partkey AS STRING), ':', " +
-      "CAST(l_suppkey AS STRING))), 1, 8), 16, 10) AS BIGINT)"
+  private val rowHash = T.h32("concat(CAST(l_orderkey AS STRING), ':', " +
+    "CAST(l_linenumber AS STRING), ':', CAST(l_partkey AS STRING), ':', " +
+    "CAST(l_suppkey AS STRING))")
 
-  private val oRowHash =
-    "CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', " +
-      "CAST(l_linenumber AS VARCHAR), ':', CAST(l_partkey AS VARCHAR), ':', " +
-      "CAST(l_suppkey AS VARCHAR))), 1, 8)) AS BIGINT)"
+  private val oRowHash = T.oH32("concat(CAST(l_orderkey AS VARCHAR), ':', " +
+    "CAST(l_linenumber AS VARCHAR), ':', CAST(l_partkey AS VARCHAR), ':', " +
+    "CAST(l_suppkey AS VARCHAR))")
 
   // ---- distribution drift (KS / PSI) ------------------------------------
 
@@ -298,7 +296,7 @@ object Analytics {
       (s, d) => {
         T.eventsFp(s, d)
           .withColumn("arm", expr(
-            "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 2"))
+            s"${T.h32("CAST(user_id AS STRING)")} % 2"))
           .groupBy("event_type", "user_id", "arm")
           .agg(expr("CAST(SUM(v div 1000) AS BIGINT)").as("uv")) // 1e-3 fixed point
           .groupBy("event_type").agg(
@@ -324,7 +322,7 @@ object Analytics {
       },
       Some("WITH v AS (SELECT event_type, user_id, " +
         "CAST(floor(value * 1000000) AS BIGINT) // 1000 AS v3, " +
-        "CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) % 2 AS arm " +
+        s"${T.oH32("CAST(user_id AS VARCHAR)")} % 2 AS arm " +
         "FROM events), " +
         "pu AS (SELECT event_type, user_id, arm, CAST(SUM(v3) AS BIGINT) AS uv " +
         "FROM v GROUP BY 1, 2, 3), " +
@@ -366,7 +364,7 @@ object Analytics {
           expr("CAST(coalesce(SUM(CASE WHEN us < mid THEN v3 END), 0) AS BIGINT)").as("x"),
           expr("CAST(coalesce(SUM(CASE WHEN us >= mid THEN v3 END), 0) AS BIGINT)").as("y"))
           .withColumn("arm", expr(
-            "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 2"))
+            s"${T.h32("CAST(user_id AS STRING)")} % 2"))
         pu.agg(
           expr("count_if(arm = 0)").as("n0"), expr("count_if(arm = 1)").as("n1"),
           expr("CAST(coalesce(SUM(CASE WHEN arm = 0 THEN x END), 0) AS BIGINT)").as("sx0"),
@@ -399,7 +397,7 @@ object Analytics {
         "CAST(coalesce(SUM(CASE WHEN us < b.mid THEN v3 END), 0) AS BIGINT) AS x, " +
         "CAST(coalesce(SUM(CASE WHEN us >= b.mid THEN v3 END), 0) AS BIGINT) AS y " +
         "FROM ev, b GROUP BY user_id), " +
-        "pa AS (SELECT x, y, CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) % 2 AS arm FROM pu), " +
+        s"pa AS (SELECT x, y, ${T.oH32("CAST(user_id AS VARCHAR)")} % 2 AS arm FROM pu), " +
         "ag AS (SELECT CAST(count_if(arm = 0) AS BIGINT) AS n0, CAST(count_if(arm = 1) AS BIGINT) AS n1, " +
         "CAST(coalesce(SUM(CASE WHEN arm = 0 THEN x END), 0) AS BIGINT) AS sx0, " +
         "CAST(coalesce(SUM(CASE WHEN arm = 1 THEN x END), 0) AS BIGINT) AS sx1, " +

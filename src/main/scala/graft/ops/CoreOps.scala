@@ -50,7 +50,7 @@ object CoreOps {
     */
   private[graft] def rowDigest(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     docs.withColumn("h", expr(
-        "CAST(conv(substring(md5(concat_ws('|', CAST(doc_id AS STRING), text)), 1, 15), 16, 10) AS BIGINT)"))
+        T.h60("concat_ws('|', CAST(doc_id AS STRING), text)")))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_rows"),
         expr("bit_xor(h)").as("digest_xor"),
@@ -521,7 +521,7 @@ object CoreOps {
     Op("core_row_checksum",
       (s, d) => rowDigest(T.t(s, d, "documents")).orderBy("lang"),
       Some("WITH h AS (SELECT lang, " +
-        "CAST(concat('0x', substr(md5(concat_ws('|', CAST(doc_id AS VARCHAR), text)), 1, 15)) AS BIGINT) AS h " +
+        s"${T.oH60("concat_ws('|', CAST(doc_id AS VARCHAR), text)")} AS h " +
         "FROM documents) " +
         "SELECT lang, count(*) AS n_rows, bit_xor(h) AS digest_xor, " +
         "CAST(SUM(h % 100000007) AS BIGINT) AS digest_sum " +

@@ -241,12 +241,6 @@ object LlmDedup {
       "JOIN (SELECT doc_id AS d2, n_sh AS n2 FROM counts) c2 USING (d2) " +
       "WHERE CAST(shared AS DOUBLE) / (n1 + n2 - shared) >= 0.2)"
 
-  /** Deterministic 32-bit token hash for the MinHash/SimHash oracles:
-    * first 8 hex digits of md5 — the Spark side computes the same value in
-    * graft.functions.ShingleHashes.
-    */
-  private val duckTokHash = "CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT)"
-
   /** DuckDB CTE list for the 20-token shared-window (exact-substring)
     * pairs; terminal CTE is `spairs(d1, d2, n_shared)`. Shared by
     * llm_dedup_substring and the composed llm_dedup_verdicts oracle.
@@ -269,6 +263,45 @@ object LlmDedup {
   private[graft] val contamWindow: String =
     (1 to 13).map(i => f"zzq$i%02d").mkString(" ")
 
+  /** LSH candidate pairs `(d1, d2)`, `d1 < d2`, of a `(doc_id, sig)`
+    * frame: docs sharing a bucket of [[graft.api.MinHashIndex.banded]]
+    * (4 bands of 4). DuckDB side: [[oMinhashCtes]] and [[oLshPairs]].
+    */
+  private def lshPairs(sigs: DataFrame): DataFrame = {
+    val banded = graft.api.MinHashIndex.banded(sigs)
+    banded.as("x").join(banded.as("y"),
+        col("x.band") === col("y.band") && col("x.band_sig") === col("y.band_sig") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2")).distinct()
+  }
+
+  /** DuckDB side of the MinHash signatures and LSH bands over
+    * `src(doc_id, text)`: CTEs `ths(doc_id, ths)` (3-gram shingle
+    * hashes, first 8 hex digits of md5 as graft.functions.ShingleHashes
+    * computes them), `sigs(doc_id, [ths,] sig)` (16 min-hashes) and
+    * `<banded>(doc_id, band, band_sig)`, equal to `shingle_hashes`,
+    * `minhash_sig` and [[graft.api.MinHashIndex.banded]].
+    */
+  private def oMinhashCtes(src: String, keepThs: Boolean, banded: String = "banded"): String =
+    "ths AS (SELECT doc_id, list_transform(" +
+      "list_distinct(list_transform(range(1, len(toks) - 1), i -> concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2]))), " +
+      s"tok -> ${T.oH32("tok")}) AS ths " +
+      s"FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM $src) WHERE len(toks) >= 3), " +
+      s"sigs AS (SELECT doc_id, ${if (keepThs) "ths, " else ""}list_reduce(list_prepend(" +
+      "list_transform(range(0, 16), x -> CAST(2038074743 AS BIGINT)), " +
+      "list_transform(ths, h -> list_transform(range(0, 16), i -> " +
+      "([3,5,7,11,13,17,19,23,29,31,37,41,43,47,53,59][i + 1] * h + " +
+      "[101,103,107,109,113,127,131,137,139,149,151,157,163,167,173,179][i + 1]) % 2038074743))), " +
+      "(acc, v) -> list_transform(range(1, 17), i -> least(acc[i], v[i]))) AS sig FROM ths), " +
+      s"$banded AS (SELECT doc_id, b.band AS band, " +
+      "array_to_string(list_transform(list_slice(sig, band * 4 + 1, band * 4 + 4), x -> CAST(x AS VARCHAR)), ',') AS band_sig " +
+      "FROM sigs, (SELECT unnest(range(0, 4)) AS band) b)"
+
+  /** DuckDB side of [[lshPairs]]: CTE `<name>(d1, d2)` over `banded`. */
+  private def oLshPairs(name: String): String =
+    s"$name AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2 FROM banded x JOIN banded y " +
+      "ON x.band = y.band AND x.band_sig = y.band_sig AND x.doc_id < y.doc_id)"
+
   /** Shared MinHash-LSH candidate generation: the shingle+signature base
     * (persisted — caller unpersists) and the distinct band-bucket
     * candidate pairs. One definition for llm_minhash_verified and
@@ -282,16 +315,7 @@ object LlmDedup {
       .select(col("doc_id"), expr("shingle_hashes(text)").as("ths"))
       .withColumn("sig", expr("minhash_sig(ths)"))
       .persist()
-    val banded = base
-      .select(col("doc_id"), explode(expr("sequence(0, 3)")).as("band"), col("sig"))
-      .withColumn("band_sig",
-        expr("array_join(transform(slice(sig, band * 4 + 1, 4), x -> CAST(x AS STRING)), ',')"))
-      .select("doc_id", "band", "band_sig")
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.band_sig") === col("y.band_sig") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2")).distinct()
-    (base, cand)
+    (base, lshPairs(base))
   }
 
   /** DuckDB CTE list replaying the full MinHash-LSH + exact-jaccard
@@ -300,21 +324,7 @@ object LlmDedup {
     * llm_dedup_verdicts oracle.
     */
   private[ops] val oMinhashVerifiedCtes: String =
-    "ths AS (SELECT doc_id, list_transform(" +
-      "list_distinct(list_transform(range(1, len(toks) - 1), i -> concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2]))), " +
-      "tok -> CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT)) AS ths " +
-      "FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents) WHERE len(toks) >= 3), " +
-      "sigs AS (SELECT doc_id, ths, list_reduce(list_prepend(" +
-      "list_transform(range(0, 16), x -> CAST(2038074743 AS BIGINT)), " +
-      "list_transform(ths, h -> list_transform(range(0, 16), i -> " +
-      "([3,5,7,11,13,17,19,23,29,31,37,41,43,47,53,59][i + 1] * h + " +
-      "[101,103,107,109,113,127,131,137,139,149,151,157,163,167,173,179][i + 1]) % 2038074743))), " +
-      "(acc, v) -> list_transform(range(1, 17), i -> least(acc[i], v[i]))) AS sig FROM ths), " +
-      "banded AS (SELECT doc_id, b.band AS band, " +
-      "array_to_string(list_transform(list_slice(sig, band * 4 + 1, band * 4 + 4), x -> CAST(x AS VARCHAR)), ',') AS band_sig " +
-      "FROM sigs, (SELECT unnest(range(0, 4)) AS band) b), " +
-      "cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2 FROM banded x JOIN banded y " +
-      "ON x.band = y.band AND x.band_sig = y.band_sig AND x.doc_id < y.doc_id), " +
+    oMinhashCtes("documents", keepThs = true) + ", " + oLshPairs("cand") + ", " +
       "mvpairs AS (SELECT d1, d2, jaccard FROM (" +
       "SELECT d1, d2, CAST(len(list_intersect(a.ths, b.ths)) AS DOUBLE) / " +
       "(len(a.ths) + len(b.ths) - len(list_intersect(a.ths, b.ths))) AS jaccard " +
@@ -328,8 +338,7 @@ object LlmDedup {
     */
   private[graft] val winnowHashExpr: String =
     "transform(sequence(1, size(toks) - 2), i -> " +
-      "CAST(conv(substring(md5(concat(element_at(toks, i), ' ', " +
-      "element_at(toks, i + 1), ' ', element_at(toks, i + 2))), 1, 8), 16, 10) AS BIGINT))"
+      T.h32("concat(element_at(toks, i), ' ', element_at(toks, i + 1), ' ', element_at(toks, i + 2))") + ")"
 
   private[graft] val winnowFpsExpr: String =
     "array_distinct(transform(sequence(1, size(hs) - 7), j -> array_min(slice(hs, j, 8))))"
@@ -344,7 +353,7 @@ object LlmDedup {
     val tok = T.spread(T.t(s, d, "documents"))
       .select(col("doc_id"),
         posexplode(split(lower(col("text")), " ")).as(Seq("pos", "tok")))
-      .withColumn("h", expr("CAST(conv(substring(md5(tok), 1, 8), 16, 10) AS BIGINT)"))
+      .withColumn("h", expr(T.h32("tok")))
     val wDoc = Window.partitionBy("doc_id").orderBy("pos")
       .rowsBetween(Window.unboundedPreceding, -1)
     tok.withColumn("chunk_id",
@@ -362,7 +371,7 @@ object LlmDedup {
       "i -> {'pos': i, 'tok': ts[i + 1]})) AS u " +
       "FROM (SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents)), " +
       "t2 AS (SELECT doc_id, CAST(u.pos AS INTEGER) AS pos, " +
-      "CAST(concat('0x', substr(md5(u.tok), 1, 8)) AS BIGINT) AS h FROM tk), " +
+      s"${T.oH32("u.tok")} AS h FROM tk), " +
       "t3 AS (SELECT doc_id, pos, h, COALESCE(CAST(SUM(CASE WHEN h % 16 = 0 THEN 1 ELSE 0 END) " +
       "OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0) AS chunk_id FROM t2), " +
       "chunks AS (SELECT doc_id, chunk_id, CAST(count(*) AS INTEGER) AS n_tokens, " +
@@ -473,15 +482,7 @@ object LlmDedup {
           // materialize the (small) signature table once — it feeds the
           // band explode and both pair-join sides.
           .persist()
-        val banded = sigs
-          .select(col("doc_id"), col("sig"), explode(expr("sequence(0, 3)")).as("band"))
-          .withColumn("band_sig",
-            expr("array_join(transform(slice(sig, band * 4 + 1, 4), x -> CAST(x AS STRING)), ',')"))
-          .select("doc_id", "band", "band_sig")
-        val pairs = banded.as("x").join(banded.as("y"),
-            col("x.band") === col("y.band") && col("x.band_sig") === col("y.band_sig") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2")).distinct()
+        val pairs = lshPairs(sigs)
         // near-dup survivors are tiny — pin them and release the
         // signature cache instead of leaking one copy per invocation
         val out = pairs
@@ -495,21 +496,7 @@ object LlmDedup {
         sigs.unpersist()
         out.orderBy("d1", "d2")
       },
-      Some("WITH ths AS (SELECT doc_id, list_transform(" +
-        "list_distinct(list_transform(range(1, len(toks) - 1), i -> concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2]))), " +
-        s"tok -> $duckTokHash) AS ths " +
-        "FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents) WHERE len(toks) >= 3), " +
-        "sigs AS (SELECT doc_id, list_reduce(list_prepend(" +
-        "list_transform(range(0, 16), x -> CAST(2038074743 AS BIGINT)), " +
-        "list_transform(ths, h -> list_transform(range(0, 16), i -> " +
-        "([3,5,7,11,13,17,19,23,29,31,37,41,43,47,53,59][i + 1] * h + " +
-        "[101,103,107,109,113,127,131,137,139,149,151,157,163,167,173,179][i + 1]) % 2038074743))), " +
-        "(acc, v) -> list_transform(range(1, 17), i -> least(acc[i], v[i]))) AS sig FROM ths), " +
-        "banded AS (SELECT doc_id, b.band AS band, " +
-        "array_to_string(list_transform(list_slice(sig, band * 4 + 1, band * 4 + 4), x -> CAST(x AS VARCHAR)), ',') AS band_sig " +
-        "FROM sigs, (SELECT unnest(range(0, 4)) AS band) b), " +
-        "pairs AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2 FROM banded x JOIN banded y " +
-        "ON x.band = y.band AND x.band_sig = y.band_sig AND x.doc_id < y.doc_id) " +
+      Some("WITH " + oMinhashCtes("documents", keepThs = false) + ", " + oLshPairs("pairs") + " " +
         "SELECT d1, d2, est_jaccard FROM (" +
         "SELECT d1, d2, CAST(len(list_filter(range(1, 17), i -> s1.sig[i] = s2.sig[i])) AS DOUBLE) / 16 AS est_jaccard " +
         "FROM pairs JOIN sigs s1 ON pairs.d1 = s1.doc_id JOIN sigs s2 ON pairs.d2 = s2.doc_id) " +
@@ -540,7 +527,7 @@ object LlmDedup {
       },
       Some("WITH ths AS (SELECT doc_id, list_transform(" +
         "list_distinct(list_transform(range(1, len(toks) - 1), i -> concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2]))), " +
-        s"tok -> $duckTokHash) AS ths " +
+        s"tok -> ${T.oH32("tok")}) AS ths " +
         "FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents) WHERE len(toks) >= 3), " +
         "bits AS (SELECT doc_id, list_reduce(list_prepend(" +
         "list_transform(range(0, 32), x -> 0), " +
@@ -1081,21 +1068,7 @@ object LlmDedup {
         base.unpersist()
         out
       },
-      Some("WITH ths AS (SELECT doc_id, list_transform(" +
-        "list_distinct(list_transform(range(1, len(toks) - 1), i -> concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2]))), " +
-        "tok -> CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT)) AS ths " +
-        "FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents) WHERE len(toks) >= 3), " +
-        "sigs AS (SELECT doc_id, ths, list_reduce(list_prepend(" +
-        "list_transform(range(0, 16), x -> CAST(2038074743 AS BIGINT)), " +
-        "list_transform(ths, h -> list_transform(range(0, 16), i -> " +
-        "([3,5,7,11,13,17,19,23,29,31,37,41,43,47,53,59][i + 1] * h + " +
-        "[101,103,107,109,113,127,131,137,139,149,151,157,163,167,173,179][i + 1]) % 2038074743))), " +
-        "(acc, v) -> list_transform(range(1, 17), i -> least(acc[i], v[i]))) AS sig FROM ths), " +
-        "banded AS (SELECT doc_id, b.band AS band, " +
-        "array_to_string(list_transform(list_slice(sig, band * 4 + 1, band * 4 + 4), x -> CAST(x AS VARCHAR)), ',') AS band_sig " +
-        "FROM sigs, (SELECT unnest(range(0, 4)) AS band) b), " +
-        "cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2 FROM banded x JOIN banded y " +
-        "ON x.band = y.band AND x.band_sig = y.band_sig AND x.doc_id < y.doc_id), " +
+      Some("WITH " + oMinhashCtes("documents", keepThs = true) + ", " + oLshPairs("cand") + ", " +
         "j AS (SELECT " +
         "len(list_filter(range(1, 17), i -> a.sig[i] = b.sig[i])) >= 8 AS est_hit, " +
         "CAST(len(list_intersect(a.ths, b.ths)) AS DOUBLE) / " +
@@ -1130,7 +1103,7 @@ object LlmDedup {
         .orderBy("doc_id"),
       Some("WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents), " +
         "h AS (SELECT doc_id, list_transform(range(1, len(toks) - 1), i -> " +
-        "CAST(concat('0x', substr(md5(concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2])), 1, 8)) AS BIGINT)) AS hs " +
+        s"${T.oH32("concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2])")}) AS hs " +
         "FROM t WHERE len(toks) >= 10), " +
         "f AS (SELECT doc_id, list_distinct(list_transform(range(1, len(hs) - 6), " +
         "j -> list_min(list_slice(hs, j, j + 7)))) AS fps FROM h) " +
@@ -1676,19 +1649,7 @@ object LlmDedup {
       Some("WITH du AS (SELECT doc_id, text FROM documents " +
         s"UNION ALL SELECT 899999997, '$mhIncBatchText' " +
         s"UNION ALL SELECT 899999998, '$mhIncCorpusText'), " +
-        "ths AS (SELECT doc_id, list_transform(" +
-        "list_distinct(list_transform(range(1, len(toks) - 1), i -> concat(toks[i], ' ', toks[i + 1], ' ', toks[i + 2]))), " +
-        "tok -> CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT)) AS ths " +
-        "FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM du) WHERE len(toks) >= 3), " +
-        "sigs AS (SELECT doc_id, list_reduce(list_prepend(" +
-        "list_transform(range(0, 16), x -> CAST(2038074743 AS BIGINT)), " +
-        "list_transform(ths, h -> list_transform(range(0, 16), i -> " +
-        "([3,5,7,11,13,17,19,23,29,31,37,41,43,47,53,59][i + 1] * h + " +
-        "[101,103,107,109,113,127,131,137,139,149,151,157,163,167,173,179][i + 1]) % 2038074743))), " +
-        "(acc, v) -> list_transform(range(1, 17), i -> least(acc[i], v[i]))) AS sig FROM ths), " +
-        "bb AS (SELECT doc_id, b.band AS band, " +
-        "array_to_string(list_transform(list_slice(sig, band * 4 + 1, band * 4 + 4), x -> CAST(x AS VARCHAR)), ',') AS band_sig " +
-        "FROM sigs, (SELECT unnest(range(0, 4)) AS band) b), " +
+        oMinhashCtes("du", keepThs = false, banded = "bb") + ", " +
         "cand AS (SELECT DISTINCT x.doc_id AS batch_id, y.doc_id AS corpus_id " +
         "FROM bb x JOIN bb y ON x.band = y.band AND x.band_sig = y.band_sig " +
         "WHERE x.doc_id % 17 = 5 AND y.doc_id % 17 <> 5) " +

@@ -232,11 +232,11 @@ object LlmText {
     // pipeline that must be auditable.
     Op("llm_sample_stratified",
       (s, d) => T.t(s, d, "documents")
-        .where("CAST(conv(substring(md5(concat(lang, ':', CAST(doc_id AS STRING))), 1, 8), 16, 10) AS BIGINT) % 100 < 20")
+        .where(s"${T.h32("concat(lang, ':', CAST(doc_id AS STRING))")} % 100 < 20")
         .select("doc_id", "lang", "source", "n_chars")
         .orderBy("doc_id"),
       Some("SELECT doc_id, lang, source, n_chars FROM documents " +
-        "WHERE CAST(concat('0x', substr(md5(concat(lang, ':', CAST(doc_id AS VARCHAR))), 1, 8)) AS BIGINT) % 100 < 20 " +
+        s"WHERE ${T.oH32("concat(lang, ':', CAST(doc_id AS VARCHAR))")} % 100 < 20 " +
         "ORDER BY doc_id")),
 
     // corpus composition: per-source language mix with exact-ratio
@@ -382,7 +382,7 @@ object LlmText {
     Op("llm_train_split",
       (s, d) => T.t(s, d, "documents")
         .withColumn("bucket",
-          expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 100"))
+          expr(s"${T.h32("CAST(doc_id AS STRING)")} % 100"))
         .withColumn("split",
           expr("CASE WHEN bucket < 90 THEN 'train' WHEN bucket < 95 THEN 'val' ELSE 'test' END"))
         .groupBy("split")
@@ -390,7 +390,7 @@ object LlmText {
           sum("n_chars").as("sum_chars"),
           min("doc_id").as("min_id"), max("doc_id").as("max_id"))
         .orderBy("split"),
-      Some("WITH b AS (SELECT *, CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS bucket " +
+      Some(s"WITH b AS (SELECT *, ${T.oH32("CAST(doc_id AS VARCHAR)")} % 100 AS bucket " +
         "FROM documents) " +
         "SELECT CASE WHEN bucket < 90 THEN 'train' WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split, " +
         "count(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars, " +
@@ -884,14 +884,14 @@ object LlmText {
         // would make w a Decimal column and break float parity
         .withColumn("w", expr("least(1.0D, 40.0D / n_toks)"))
         .withColumn("u",
-          expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 10000"))
+          expr(s"${T.h32("CAST(doc_id AS STRING)")} % 10000"))
         .where("u < CAST(floor(w * 10000 + 0.000001) AS BIGINT)")
         .select("doc_id", "n_toks", "w")
         .orderBy("doc_id"),
       Some("SELECT doc_id, n_toks, w FROM (SELECT doc_id, " +
         "CAST(len(string_split(text, ' ')) AS INTEGER) AS n_toks, " +
         "least(1.0, 40.0 / len(string_split(text, ' '))) AS w, " +
-        "CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000 AS u " +
+        s"${T.oH32("CAST(doc_id AS VARCHAR)")} % 10000 AS u " +
         "FROM documents) WHERE u < CAST(floor(w * 10000 + 0.000001) AS BIGINT) ORDER BY doc_id")),
 
     // Adjacent-token PMI: the association-mining companion to the bigram
@@ -1245,7 +1245,7 @@ object LlmText {
       Some("SELECT doc_id, shard, CAST(row_number() OVER " +
         "(PARTITION BY shard ORDER BY hkey, doc_id) - 1 AS BIGINT) AS pos " +
         "FROM (SELECT doc_id, substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS hkey, " +
-        "CAST(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 8 AS INTEGER) AS shard " +
+        s"CAST(${T.oH32("CAST(doc_id AS VARCHAR)")} % 8 AS INTEGER) AS shard " +
         "FROM documents) ORDER BY shard, pos")),
 
     // Language-RELATIVE quality gating: a fixed global threshold

@@ -44,16 +44,60 @@ object LlmVectors {
       "FROM embeddings WHERE vec_id < 10), " +
       oKmeansIter(1, "c0") + ", " + oKmeansIter(2, "c1") + ", " + oKmeansIter(3, "c2")
 
-  /** DuckDB cosine similarity as a sequential left fold — same operand
-    * order as graft.functions.CosineSimilarity (mirrors LlmOps.oSim).
+  /** The recall audits' 32-probe panel: embeddings ordered by the md5
+    * of `vec_id`, so the panel spans the id space.
     */
-  private[ops] def oDotSql(a: String, b: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-      s"list_transform(range(1, len($a) + 1), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))), " +
-      "(acc, v) -> acc + v)"
+  private def probePanel(emb: DataFrame): DataFrame = emb
+    .withColumn("hkey", expr("substring(md5(CAST(vec_id AS STRING)), 1, 8)"))
+    .orderBy("hkey", "vec_id").limit(32)
 
-  private[ops] def oSimSql(a: String, b: String): String =
-    s"${oDotSql(a, b)} / sqrt(${oDotSql(a, a)} * ${oDotSql(b, b)})"
+  /** Per-probe top-5 `(p_id, vec_id)` by cosine over candidate rows
+    * `(p_id, p_emb, vec_id, embedding)`, ties broken by `vec_id`.
+    */
+  private def top5(cands: DataFrame): DataFrame = cands
+    .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
+    .withColumn("rn", row_number().over(
+      Window.partitionBy("p_id").orderBy(desc("sim"), col("vec_id"))))
+    .where("rn <= 5")
+    .select("p_id", "vec_id")
+
+  /** Recall@5 of an ANN search: `approx5(p_id, vec_id)`, the index's
+    * top-5 per probe, against the exact top-5 of `probes(p_id, p_emb)`
+    * over all of `emb`. One row `(n_probes, k, mean_recall,
+    * min_recall)`; mean recall says how good the index is on average,
+    * min recall exposes the worst-served probe. DuckDB side:
+    * [[oRecallAt5]].
+    */
+  private def recallAt5(emb: DataFrame, probes: DataFrame, approx5: DataFrame): DataFrame =
+    top5(emb.crossJoin(broadcast(probes)).where("vec_id <> p_id"))
+      .join(approx5.select(col("p_id"), col("vec_id"), lit(1).as("hit")),
+        Seq("p_id", "vec_id"), "left")
+      .groupBy("p_id").agg(sum(coalesce(col("hit"), lit(0))).as("hits"))
+      .agg(count(lit(1)).as("n_probes"), sum("hits").as("total_hits"),
+        min("hits").as("min_hits"))
+      .select(col("n_probes"), lit(5).as("k"),
+        expr("CAST(total_hits AS DOUBLE) / (5 * n_probes)").as("mean_recall"),
+        expr("CAST(min_hits AS DOUBLE) / 5").as("min_recall"))
+
+  /** DuckDB CTE `<name>(p_id, vec_id)`: per-probe top-5 by cosine of
+    * `s.embedding` against `pEmb` over `from`, probes aliased `p`.
+    */
+  private def oTop5(name: String, p: String, pEmb: String, from: String): String =
+    s"$name AS (SELECT p_id, vec_id FROM (SELECT $p.p_id, s.vec_id, " +
+      s"row_number() OVER (PARTITION BY $p.p_id ORDER BY ${LlmOps.oSim("s.embedding", pEmb)} DESC, s.vec_id) AS rn " +
+      s"FROM $from) WHERE rn <= 5)"
+
+  /** DuckDB side of [[recallAt5]]: the exact top-5 CTE `e`, the CTEs
+    * ending in the approximate one `a` (both top-5s are [[oTop5]]), then
+    * the hits roll-up.
+    */
+  private def oRecallAt5(e: String, a: String): String =
+    e + ", " + a + ", " +
+      "h AS (SELECT e.p_id, CAST(SUM(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits " +
+      "FROM e LEFT JOIN a ON e.p_id = a.p_id AND e.vec_id = a.vec_id GROUP BY e.p_id) " +
+      "SELECT count(*) AS n_probes, 5 AS k, " +
+      "CAST(SUM(hits) AS DOUBLE) / (5 * count(*)) AS mean_recall, " +
+      "CAST(MIN(hits) AS DOUBLE) / 5 AS min_recall FROM h"
 
   /** DuckDB CTEs shared by the trained-IVF ops: the kmeans prefix (ends
     * `c3`) plus the full-corpus assignment to the trained centroids.
@@ -183,7 +227,7 @@ object LlmVectors {
   private def oCosRank(topK: Int): String =
     "cr AS (SELECT p_id, id, cos_rank FROM (" +
       "SELECT pp.p_id, e.vec_id AS id, row_number() OVER (PARTITION BY pp.p_id " +
-      s"ORDER BY ${oSimSql("e.embedding", "pp.p_emb")} DESC, e.vec_id) AS cos_rank " +
+      s"ORDER BY ${LlmOps.oSim("e.embedding", "pp.p_emb")} DESC, e.vec_id) AS cos_rank " +
       s"FROM embeddings e, pp WHERE e.vec_id <> pp.p_id) WHERE cos_rank <= $topK)"
 
   private def oTokRank(topK: Int): String =
@@ -511,34 +555,16 @@ object LlmVectors {
             "CAST(((i * 7 + j * 13) % 11) - 5 AS DOUBLE)), CAST(0 AS DOUBLE), (a, v) -> a + v) > 0 " +
             "THEN shiftleft(1, i) ELSE 0 END)"
         val emb = T.spread(T.t(s, d, "embeddings")).withColumn("bsig", expr(sigExpr))
-        val probes = emb
-          .withColumn("hkey", expr("substring(md5(CAST(vec_id AS STRING)), 1, 8)"))
-          .orderBy("hkey", "vec_id").limit(32)
+        val probes = probePanel(emb)
           .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"),
             col("bsig").as("p_sig"))
-        val wTop = Window.partitionBy("p_id").orderBy(desc("sim"), col("vec_id"))
-        val exact5 = emb.crossJoin(broadcast(probes))
-          .where("vec_id <> p_id")
-          .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
-          .withColumn("rn", row_number().over(wTop)).where("rn <= 5")
-          .select("p_id", "vec_id")
         // multi-probe candidates: the probe's own bucket plus all 8
         // Hamming-1 buckets — audits the same candidate generation the
         // production llm_ann_lsh/llm_ann_refine index uses
         val variants = probes.withColumn("p_probe", explode(expr(
           "concat(array(p_sig), transform(sequence(0, 7), i -> CAST(p_sig ^ shiftleft(1, i) AS INT)))")))
-        val approx5 = emb.join(broadcast(variants),
-            col("bsig") === col("p_probe") && col("vec_id") =!= col("p_id"))
-          .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
-          .withColumn("rn", row_number().over(wTop)).where("rn <= 5")
-          .select(col("p_id"), col("vec_id"), lit(1).as("hit"))
-        exact5.join(approx5, Seq("p_id", "vec_id"), "left")
-          .groupBy("p_id").agg(sum(coalesce(col("hit"), lit(0))).as("hits"))
-          .agg(count(lit(1)).as("n_probes"), sum("hits").as("total_hits"),
-            min("hits").as("min_hits"))
-          .select(col("n_probes"), lit(5).as("k"),
-            expr("CAST(total_hits AS DOUBLE) / (5 * n_probes)").as("mean_recall"),
-            expr("CAST(min_hits AS DOUBLE) / 5").as("min_recall"))
+        recallAt5(emb, probes, top5(emb.join(broadcast(variants),
+          col("bsig") === col("p_probe") && col("vec_id") =!= col("p_id"))))
       },
       Some("WITH s AS (SELECT vec_id, embedding, CAST(list_sum(list_transform(range(0, 8), i -> " +
         "CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
@@ -547,19 +573,10 @@ object LlmVectors {
         "THEN (1 << i) ELSE 0 END)) AS INTEGER) AS bsig FROM embeddings), " +
         "p AS (SELECT vec_id AS p_id, embedding AS p_emb, bsig AS p_sig FROM s " +
         "ORDER BY substr(md5(CAST(vec_id AS VARCHAR)), 1, 8), vec_id LIMIT 32), " +
-        "e AS (SELECT p_id, vec_id FROM (SELECT p.p_id, s.vec_id, " +
-        s"row_number() OVER (PARTITION BY p.p_id ORDER BY ${oSimSql("s.embedding", "p_emb")} DESC, s.vec_id) AS rn " +
-        "FROM s, p WHERE s.vec_id <> p.p_id) WHERE rn <= 5), " +
-        "pv AS (SELECT p_id, p_emb, unnest(list_prepend(p_sig, " +
-        "list_transform(range(0, 8), i -> xor(p_sig, (1 << i))))) AS p_probe FROM p), " +
-        "a AS (SELECT p_id, vec_id FROM (SELECT pv.p_id, s.vec_id, " +
-        s"row_number() OVER (PARTITION BY pv.p_id ORDER BY ${oSimSql("s.embedding", "p_emb")} DESC, s.vec_id) AS rn " +
-        "FROM s JOIN pv ON s.bsig = pv.p_probe AND s.vec_id <> pv.p_id) WHERE rn <= 5), " +
-        "h AS (SELECT e.p_id, CAST(SUM(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits " +
-        "FROM e LEFT JOIN a ON e.p_id = a.p_id AND e.vec_id = a.vec_id GROUP BY e.p_id) " +
-        "SELECT count(*) AS n_probes, 5 AS k, " +
-        "CAST(SUM(hits) AS DOUBLE) / (5 * count(*)) AS mean_recall, " +
-        "CAST(MIN(hits) AS DOUBLE) / 5 AS min_recall FROM h")),
+        oRecallAt5(oTop5("e", "p", "p_emb", "s, p WHERE s.vec_id <> p.p_id"),
+          "pv AS (SELECT p_id, p_emb, unnest(list_prepend(p_sig, " +
+            "list_transform(range(0, 8), i -> xor(p_sig, (1 << i))))) AS p_probe FROM p), " +
+            oTop5("a", "pv", "p_emb", "s JOIN pv ON s.bsig = pv.p_probe AND s.vec_id <> pv.p_id")))),
 
     // IVF recall audit over the same 32-probe panel as the LSH one: the
     // IVF index prunes the search to the probe's own cell (= label
@@ -570,43 +587,16 @@ object LlmVectors {
     Op("llm_ann_ivf_recall_audit",
       (s, d) => {
         val emb = T.spread(T.t(s, d, "embeddings"))
-        val probes = emb
-          .withColumn("hkey", expr("substring(md5(CAST(vec_id AS STRING)), 1, 8)"))
-          .orderBy("hkey", "vec_id").limit(32)
+        val probes = probePanel(emb)
           .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"),
             col("label").as("p_label"))
-        val wTop = Window.partitionBy("p_id").orderBy(desc("sim"), col("vec_id"))
-        val exact5 = emb.crossJoin(broadcast(probes))
-          .where("vec_id <> p_id")
-          .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
-          .withColumn("rn", row_number().over(wTop)).where("rn <= 5")
-          .select("p_id", "vec_id")
-        val approx5 = emb.join(broadcast(probes),
-            col("label") === col("p_label") && col("vec_id") =!= col("p_id"))
-          .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
-          .withColumn("rn", row_number().over(wTop)).where("rn <= 5")
-          .select(col("p_id"), col("vec_id"), lit(1).as("hit"))
-        exact5.join(approx5, Seq("p_id", "vec_id"), "left")
-          .groupBy("p_id").agg(sum(coalesce(col("hit"), lit(0))).as("hits"))
-          .agg(count(lit(1)).as("n_probes"), sum("hits").as("total_hits"),
-            min("hits").as("min_hits"))
-          .select(col("n_probes"), lit(5).as("k"),
-            expr("CAST(total_hits AS DOUBLE) / (5 * n_probes)").as("mean_recall"),
-            expr("CAST(min_hits AS DOUBLE) / 5").as("min_recall"))
+        recallAt5(emb, probes, top5(emb.join(broadcast(probes),
+          col("label") === col("p_label") && col("vec_id") =!= col("p_id"))))
       },
       Some("WITH p AS (SELECT vec_id AS p_id, embedding AS p_emb, label AS p_label " +
         "FROM embeddings ORDER BY substr(md5(CAST(vec_id AS VARCHAR)), 1, 8), vec_id LIMIT 32), " +
-        "e AS (SELECT p_id, vec_id FROM (SELECT p.p_id, s.vec_id, " +
-        s"row_number() OVER (PARTITION BY p.p_id ORDER BY ${oSimSql("s.embedding", "p_emb")} DESC, s.vec_id) AS rn " +
-        "FROM embeddings s, p WHERE s.vec_id <> p.p_id) WHERE rn <= 5), " +
-        "a AS (SELECT p_id, vec_id FROM (SELECT p.p_id, s.vec_id, " +
-        s"row_number() OVER (PARTITION BY p.p_id ORDER BY ${oSimSql("s.embedding", "p_emb")} DESC, s.vec_id) AS rn " +
-        "FROM embeddings s JOIN p ON s.label = p.p_label AND s.vec_id <> p.p_id) WHERE rn <= 5), " +
-        "h AS (SELECT e.p_id, CAST(SUM(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits " +
-        "FROM e LEFT JOIN a ON e.p_id = a.p_id AND e.vec_id = a.vec_id GROUP BY e.p_id) " +
-        "SELECT count(*) AS n_probes, 5 AS k, " +
-        "CAST(SUM(hits) AS DOUBLE) / (5 * count(*)) AS mean_recall, " +
-        "CAST(MIN(hits) AS DOUBLE) / 5 AS min_recall FROM h")),
+        oRecallAt5(oTop5("e", "p", "p_emb", "embeddings s, p WHERE s.vec_id <> p.p_id"),
+          oTop5("a", "p", "p_emb", "embeddings s JOIN p ON s.label = p.p_label AND s.vec_id <> p.p_id")))),
 
     // IVF search over the TRAINED index: nearest-2-cells candidate scan
     // + exact cosine re-rank, all through graft.api.AnnIndex — the same
@@ -631,7 +621,7 @@ object LlmVectors {
         s"pd AS (SELECT c.c_id, ${oProbeD2("p.p_emb")} AS d2 FROM c3 c, p), " +
         "pc AS (SELECT c_id FROM (SELECT c_id, row_number() OVER (ORDER BY d2, c_id) AS rn FROM pd) WHERE rn <= 2) " +
         "SELECT vec_id, c_id, sim FROM (SELECT s.vec_id, s.c_id, " +
-        s"${oSimSql("s.embedding", "p_emb")} AS sim " +
+        s"${LlmOps.oSim("s.embedding", "p_emb")} AS sim " +
         "FROM asg s JOIN pc USING (c_id), p WHERE s.vec_id <> 0) " +
         "ORDER BY sim DESC, vec_id LIMIT 5")),
 
@@ -645,26 +635,10 @@ object LlmVectors {
         val emb = T.spread(T.t(s, d, "embeddings"))
         val cent = graft.api.AnnIndex.trainFor(s, d, k = 10, iters = 3)
         val assigned = graft.api.AnnIndex.assign(emb, cent)
-        val probes = emb
-          .withColumn("hkey", expr("substring(md5(CAST(vec_id AS STRING)), 1, 8)"))
-          .orderBy("hkey", "vec_id").limit(32)
+        val probes = probePanel(emb)
           .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))
-        val wTop = org.apache.spark.sql.expressions.Window
-          .partitionBy("p_id").orderBy(desc("sim"), col("vec_id"))
-        val exact5 = emb.crossJoin(broadcast(probes))
-          .where("vec_id <> p_id")
-          .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
-          .withColumn("rn", row_number().over(wTop)).where("rn <= 5")
-          .select("p_id", "vec_id")
-        val approx5 = graft.api.AnnIndex.search(assigned, cent, probes, k = 5, nProbe = 2)
-          .select(col("p_id"), col("vec_id"), lit(1).as("hit"))
-        exact5.join(approx5, Seq("p_id", "vec_id"), "left")
-          .groupBy("p_id").agg(sum(coalesce(col("hit"), lit(0))).as("hits"))
-          .agg(count(lit(1)).as("n_probes"), sum("hits").as("total_hits"),
-            min("hits").as("min_hits"))
-          .select(col("n_probes"), lit(5).as("k"),
-            expr("CAST(total_hits AS DOUBLE) / (5 * n_probes)").as("mean_recall"),
-            expr("CAST(min_hits AS DOUBLE) / 5").as("min_recall"))
+        recallAt5(emb, probes,
+          graft.api.AnnIndex.search(assigned, cent, probes, k = 5, nProbe = 2))
       },
       Some(oTrainedAssign +
         ", pp AS (SELECT vec_id AS p_id, embedding AS p_emb FROM embeddings " +
@@ -672,17 +646,8 @@ object LlmVectors {
         s"pd AS (SELECT pp.p_id, pp.p_emb, c.c_id, ${oProbeD2("pp.p_emb")} AS d2 FROM c3 c, pp), " +
         "pc AS (SELECT p_id, p_emb, c_id FROM (SELECT p_id, p_emb, c_id, " +
         "row_number() OVER (PARTITION BY p_id ORDER BY d2, c_id) AS rn FROM pd) WHERE rn <= 2), " +
-        "e AS (SELECT p_id, vec_id FROM (SELECT pp.p_id, s.vec_id, " +
-        s"row_number() OVER (PARTITION BY pp.p_id ORDER BY ${oSimSql("s.embedding", "pp.p_emb")} DESC, s.vec_id) AS rn " +
-        "FROM embeddings s, pp WHERE s.vec_id <> pp.p_id) WHERE rn <= 5), " +
-        "a AS (SELECT p_id, vec_id FROM (SELECT pc.p_id, s.vec_id, " +
-        s"row_number() OVER (PARTITION BY pc.p_id ORDER BY ${oSimSql("s.embedding", "pc.p_emb")} DESC, s.vec_id) AS rn " +
-        "FROM asg s JOIN pc ON s.c_id = pc.c_id AND s.vec_id <> pc.p_id) WHERE rn <= 5), " +
-        "h AS (SELECT e.p_id, CAST(SUM(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits " +
-        "FROM e LEFT JOIN a ON e.p_id = a.p_id AND e.vec_id = a.vec_id GROUP BY e.p_id) " +
-        "SELECT count(*) AS n_probes, 5 AS k, " +
-        "CAST(SUM(hits) AS DOUBLE) / (5 * count(*)) AS mean_recall, " +
-        "CAST(MIN(hits) AS DOUBLE) / 5 AS min_recall FROM h")),
+        oRecallAt5(oTop5("e", "pp", "pp.p_emb", "embeddings s, pp WHERE s.vec_id <> pp.p_id"),
+          oTop5("a", "pc", "pc.p_emb", "asg s JOIN pc ON s.c_id = pc.c_id AND s.vec_id <> pc.p_id")))),
 
     // Embedding mean-centering (the whitening first step SemDeDup-style
     // pipelines run before cosine comparisons): per-dimension corpus
@@ -1360,8 +1325,8 @@ object LlmVectors {
       },
       Some("WITH p AS (SELECT vec_id AS probe_id, embedding AS p_emb FROM embeddings WHERE vec_id < 5), " +
         "scored AS (SELECT probe_id, vec_id, " +
-        s"${oSimSql("embedding", "p_emb")} AS sim_full, " +
-        s"${oSimSql("embedding[1:32]", "p_emb[1:32]")} AS sim_half " +
+        s"${LlmOps.oSim("embedding", "p_emb")} AS sim_full, " +
+        s"${LlmOps.oSim("embedding[1:32]", "p_emb[1:32]")} AS sim_half " +
         "FROM embeddings, p WHERE vec_id <> probe_id), " +
         "rk AS (SELECT probe_id, vec_id, " +
         "row_number() OVER (PARTITION BY probe_id ORDER BY sim_full DESC, vec_id) AS rf, " +

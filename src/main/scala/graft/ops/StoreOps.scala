@@ -4,6 +4,7 @@ import graft.{Op, Tables => T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SURVEY.md §2-D — the store and DML operators: MERGE/DELETE/UPDATE
   * SQL, the UpsertStore's time travel, changefeeds, maintenance, restore
@@ -53,6 +54,33 @@ object StoreOps {
       "row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey DESC) AS rn " +
       "FROM orders), " +
       "l AS (SELECT o_custkey, o_orderkey, total_cents, disc_cents FROM f WHERE rn = 1)"
+
+  /** `orders (o_custkey, o_orderkey, o_totalprice)` split into CDC
+    * batches by the column `b = o_orderkey % mod`.
+    */
+  private def ordersBatches(s: SparkSession, d: String, mod: Int = 3): DataFrame =
+    T.t(s, d, "orders")
+      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
+      .withColumn("b", pmod(col("o_orderkey"), lit(mod)))
+
+  /** Commits batch `b` of [[ordersBatches]] into the 8-bucket
+    * UpsertStore at `dir` (latest o_orderkey per o_custkey) as batch id
+    * `b<b>`; false when the store's ledger already holds that id.
+    */
+  private def commitBatch(t: DataFrame, dir: String, b: Int): Boolean =
+    graft.api.UpsertStore.update(t.where(col("b") === b).drop("b"), dir,
+      "o_custkey", "o_orderkey", nBuckets = 8, batchId = Some(s"b$b"))
+
+  /** Runs `body` on a fresh directory `target/tmp/<name>_<id>`; its
+    * result is pinned with `localCheckpoint` before the directory is
+    * deleted.
+    */
+  private def withStore(s: SparkSession, name: String)(body: String => DataFrame): DataFrame = {
+    val dir = s"target/tmp/${name}_${java.util.UUID.randomUUID().toString.take(8)}"
+    val got = body(dir).localCheckpoint()
+    graft.api.StoreIO.delete(s, dir)
+    got
+  }
 
   val ops: Seq[Op] = Seq(
 
@@ -134,18 +162,11 @@ object StoreOps {
     // under unit specs.
     Op("core_upsert_store",
       (s, d) => {
-        val dir = s"target/tmp/upsert_op_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(3)))
-        (0 to 2).foreach { b =>
-          graft.api.UpsertStore.update(
-            t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
-            nBuckets = 8, batchId = Some(s"b$b")): Unit
-        }
-        val got = graft.api.UpsertStore.read(s, dir).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey")
+        withStore(s, "upsert_op") { dir =>
+          val t = ordersBatches(s, d)
+          (0 to 2).foreach(commitBatch(t, dir, _))
+          graft.api.UpsertStore.read(s, dir)
+        }.orderBy("o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b FROM orders), " +
         "m AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
@@ -165,44 +186,42 @@ object StoreOps {
     // between rewriting ~3 partitions and rewriting the corpus.
     Op("core_erasure_partition_rewrite",
       (s, d) => {
-        val dir = s"target/tmp/erase_${java.util.UUID.randomUUID().toString.take(8)}"
-        val ev = T.events(s, d).select(col("user_id"), col("event_id"), col("value"))
-          .withColumn("bucket", pmod(col("user_id"), lit(16)).cast("int"))
-        ev.write.partitionBy("bucket").mode("overwrite").parquet(dir)
-        val touched = ev.where("user_id % 50 = 0")
-          .select("bucket").distinct().collect().map(_.getInt(0)).sorted
-        ev.where(col("bucket").isin(touched.toIndexedSeq: _*))
-          .where("NOT (user_id % 50 = 0)")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket").parquet(dir)
-        // dynamic overwrite CANNOT erase a partition it writes no rows
-        // for (no key, no overwrite) — a bucket whose every row was
-        // erased would silently survive; those must be deleted
-        // explicitly. The real-table analogue of Delta's deletion
-        // vectors / REPLACE WHERE.
-        val survivors = ev.where(col("bucket").isin(touched.toIndexedSeq: _*))
-          .where("NOT (user_id % 50 = 0)")
-          .select("bucket").distinct().collect().map(_.getInt(0)).toSet
-        touched.filterNot(survivors).foreach(b =>
-          graft.api.StoreIO.delete(s, s"$dir/bucket=$b"))
-        val before = ev.where(col("bucket").isin(touched.toIndexedSeq: _*))
-          .groupBy("bucket").agg(
-            count(lit(1)).as("rows_before"),
-            expr("count_if(user_id % 50 = 0)").as("rows_erased"))
-        val after =
-          if (touched.isEmpty) // empty corpus: nothing written, nothing to read back
-            before.select(col("bucket")).withColumn("rows_after", lit(0L))
-          else s.read.parquet(dir)
-            .where(col("bucket").isin(touched.toIndexedSeq: _*))
-            .groupBy(col("bucket").cast("int").as("bucket"))
-            .agg(count(lit(1)).as("rows_after"))
-        val got = before.join(after, Seq("bucket"), "left")
-          .select(col("bucket"), col("rows_before"), col("rows_erased"),
-            coalesce(col("rows_after"), lit(0L)).as("rows_after"))
-          .localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("bucket")
+        withStore(s, "erase") { dir =>
+          val ev = T.events(s, d).select(col("user_id"), col("event_id"), col("value"))
+            .withColumn("bucket", pmod(col("user_id"), lit(16)).cast("int"))
+          ev.write.partitionBy("bucket").mode("overwrite").parquet(dir)
+          val touched = ev.where("user_id % 50 = 0")
+            .select("bucket").distinct().collect().map(_.getInt(0)).sorted
+          ev.where(col("bucket").isin(touched.toIndexedSeq: _*))
+            .where("NOT (user_id % 50 = 0)")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket").parquet(dir)
+          // dynamic overwrite CANNOT erase a partition it writes no rows
+          // for (no key, no overwrite) — a bucket whose every row was
+          // erased would silently survive; those must be deleted
+          // explicitly. The real-table analogue of Delta's deletion
+          // vectors / REPLACE WHERE.
+          val survivors = ev.where(col("bucket").isin(touched.toIndexedSeq: _*))
+            .where("NOT (user_id % 50 = 0)")
+            .select("bucket").distinct().collect().map(_.getInt(0)).toSet
+          touched.filterNot(survivors).foreach(b =>
+            graft.api.StoreIO.delete(s, s"$dir/bucket=$b"))
+          val before = ev.where(col("bucket").isin(touched.toIndexedSeq: _*))
+            .groupBy("bucket").agg(
+              count(lit(1)).as("rows_before"),
+              expr("count_if(user_id % 50 = 0)").as("rows_erased"))
+          val after =
+            if (touched.isEmpty) // empty corpus: nothing written, nothing to read back
+              before.select(col("bucket")).withColumn("rows_after", lit(0L))
+            else s.read.parquet(dir)
+              .where(col("bucket").isin(touched.toIndexedSeq: _*))
+              .groupBy(col("bucket").cast("int").as("bucket"))
+              .agg(count(lit(1)).as("rows_after"))
+          before.join(after, Seq("bucket"), "left")
+            .select(col("bucket"), col("rows_before"), col("rows_erased"),
+              coalesce(col("rows_after"), lit(0L)).as("rows_after"))
+        }.orderBy("bucket")
       },
       Some("WITH ev AS (SELECT user_id, CAST(user_id % 16 AS INTEGER) AS bucket FROM events), " +
         "t AS (SELECT DISTINCT bucket FROM ev WHERE user_id % 50 = 0) " +
@@ -282,22 +301,19 @@ object StoreOps {
     // spec additionally pins them equal row-for-row.
     Op("core_merge_sql",
       (s, d) => {
-        val dir = s"target/tmp/merge_sql_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(3)))
-        (0 to 2).foreach { b =>
-          t.where(col("b") === b).drop("b")
-            .createOrReplaceTempView(s"graft_merge_src_$b")
-          graft.api.MergeSql.run(s,
-            s"MERGE INTO '$dir' AS t USING graft_merge_src_$b AS s " +
-              "ON t.o_custkey = s.o_custkey LATEST BY o_orderkey " +
-              "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
-            nBuckets = 8, batchId = Some(s"b$b")): Unit
-        }
-        val got = graft.api.MergeSql.readTarget(s, dir).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey")
+        withStore(s, "merge_sql") { dir =>
+          val t = ordersBatches(s, d)
+          (0 to 2).foreach { b =>
+            t.where(col("b") === b).drop("b")
+              .createOrReplaceTempView(s"graft_merge_src_$b")
+            graft.api.MergeSql.run(s,
+              s"MERGE INTO '$dir' AS t USING graft_merge_src_$b AS s " +
+                "ON t.o_custkey = s.o_custkey LATEST BY o_orderkey " +
+                "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+              nBuckets = 8, batchId = Some(s"b$b")): Unit
+          }
+          graft.api.MergeSql.readTarget(s, dir)
+        }.orderBy("o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b FROM orders), " +
         "m AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
@@ -314,20 +330,19 @@ object StoreOps {
     // an atomic swap.
     Op("core_delete_sql",
       (s, d) => {
-        val dir = s"target/tmp/delete_sql_${java.util.UUID.randomUUID().toString.take(8)}"
-        T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .createOrReplaceTempView("graft_delete_src")
-        graft.api.MergeSql.run(s,
-          s"MERGE INTO '$dir' USING graft_delete_src ON t.o_custkey = s.o_custkey " +
-            "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
-            "WHEN NOT MATCHED THEN INSERT *",
-          nBuckets = 8, batchId = Some("seed")): Unit
-        graft.api.MergeSql.runDelete(s,
-          s"DELETE FROM '$dir' WHERE o_custkey % 10 = 3", batchId = Some("del")): Unit
-        val got = graft.api.MergeSql.readTarget(s, dir).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey")
+        withStore(s, "delete_sql") { dir =>
+          T.t(s, d, "orders")
+            .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
+            .createOrReplaceTempView("graft_delete_src")
+          graft.api.MergeSql.run(s,
+            s"MERGE INTO '$dir' USING graft_delete_src ON t.o_custkey = s.o_custkey " +
+              "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
+              "WHEN NOT MATCHED THEN INSERT *",
+            nBuckets = 8, batchId = Some("seed")): Unit
+          graft.api.MergeSql.runDelete(s,
+            s"DELETE FROM '$dir' WHERE o_custkey % 10 = 3", batchId = Some("del")): Unit
+          graft.api.MergeSql.readTarget(s, dir)
+        }.orderBy("o_custkey")
       },
       Some("WITH f AS (SELECT o_custkey, o_orderkey, o_totalprice, " +
         "row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey DESC) AS rn " +
@@ -344,20 +359,19 @@ object StoreOps {
     // same batch correctly upserts.
     Op("core_merge_tombstones",
       (s, d) => {
-        val dir = s"target/tmp/merge_cdc_${java.util.UUID.randomUUID().toString.take(8)}"
-        T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-            expr("CASE WHEN o_orderkey % 7 = 2 THEN 'D' ELSE 'U' END").as("op"))
-          .createOrReplaceTempView("graft_merge_cdc_src")
-        graft.api.MergeSql.run(s,
-          s"MERGE INTO '$dir' USING graft_merge_cdc_src " +
-            "ON t.o_custkey = s.o_custkey LATEST BY o_orderkey " +
-            "WHEN MATCHED AND op = 'D' THEN DELETE " +
-            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
-          nBuckets = 8, batchId = Some("cdc")): Unit
-        val got = graft.api.MergeSql.readTarget(s, dir).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey")
+        withStore(s, "merge_cdc") { dir =>
+          T.t(s, d, "orders")
+            .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
+              expr("CASE WHEN o_orderkey % 7 = 2 THEN 'D' ELSE 'U' END").as("op"))
+            .createOrReplaceTempView("graft_merge_cdc_src")
+          graft.api.MergeSql.run(s,
+            s"MERGE INTO '$dir' USING graft_merge_cdc_src " +
+              "ON t.o_custkey = s.o_custkey LATEST BY o_orderkey " +
+              "WHEN MATCHED AND op = 'D' THEN DELETE " +
+              "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+            nBuckets = 8, batchId = Some("cdc")): Unit
+          graft.api.MergeSql.readTarget(s, dir)
+        }.orderBy("o_custkey")
       },
       Some("WITH f AS (SELECT o_custkey, o_orderkey, o_totalprice, " +
         "CASE WHEN o_orderkey % 7 = 2 THEN 'D' ELSE 'U' END AS op, " +
@@ -376,9 +390,7 @@ object StoreOps {
     Op("core_store_rebucket",
       (s, d) => {
         val dir = s"target/tmp/rebucket_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(3)))
+        val t = ordersBatches(s, d)
         def batch(b: Int, id: String): Unit =
           graft.api.UpsertStore.update(
             t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
@@ -435,21 +447,20 @@ object StoreOps {
     // is a no-op (asserted inline — 0 rows on the second run).
     Op("core_update_sql",
       (s, d) => {
-        val dir = s"target/tmp/update_sql_${java.util.UUID.randomUUID().toString.take(8)}"
-        seedSrc(s, d).createOrReplaceTempView("graft_update_src")
-        graft.api.MergeSql.run(s,
-          s"MERGE INTO '$dir' USING graft_update_src ON t.o_custkey = s.o_custkey " +
-            "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
-            "WHEN NOT MATCHED THEN INSERT *",
-          nBuckets = 8, batchId = Some("seed")): Unit
-        val sql = s"UPDATE '$dir' SET total_cents = total_cents + disc_cents, " +
-          "disc_cents = CAST(0 AS BIGINT) WHERE o_custkey % 5 = 0"
-        graft.api.MergeSql.runUpdate(s, sql, batchId = Some("u1")): Unit
-        val n2 = graft.api.MergeSql.runUpdate(s, sql, batchId = Some("u1"))
-        require(n2 == 0L, s"replayed UPDATE must be a ledger no-op, touched $n2")
-        val got = graft.api.MergeSql.readTarget(s, dir).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey")
+        withStore(s, "update_sql") { dir =>
+          seedSrc(s, d).createOrReplaceTempView("graft_update_src")
+          graft.api.MergeSql.run(s,
+            s"MERGE INTO '$dir' USING graft_update_src ON t.o_custkey = s.o_custkey " +
+              "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
+              "WHEN NOT MATCHED THEN INSERT *",
+            nBuckets = 8, batchId = Some("seed")): Unit
+          val sql = s"UPDATE '$dir' SET total_cents = total_cents + disc_cents, " +
+            "disc_cents = CAST(0 AS BIGINT) WHERE o_custkey % 5 = 0"
+          graft.api.MergeSql.runUpdate(s, sql, batchId = Some("u1")): Unit
+          val n2 = graft.api.MergeSql.runUpdate(s, sql, batchId = Some("u1"))
+          require(n2 == 0L, s"replayed UPDATE must be a ledger no-op, touched $n2")
+          graft.api.MergeSql.readTarget(s, dir)
+        }.orderBy("o_custkey")
       },
       Some(s"WITH $oSeed " +
         "SELECT o_custkey, o_orderkey, " +
@@ -466,27 +477,26 @@ object StoreOps {
     // full-snapshot reconcile means.
     Op("core_merge_full_sync",
       (s, d) => {
-        val dir = s"target/tmp/full_sync_${java.util.UUID.randomUUID().toString.take(8)}"
-        seedSrc(s, d).select("o_custkey", "o_orderkey", "total_cents")
-          .createOrReplaceTempView("graft_sync_seed")
-        graft.api.MergeSql.run(s,
-          s"MERGE INTO '$dir' USING graft_sync_seed ON t.o_custkey = s.o_custkey " +
-            "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
-            "WHEN NOT MATCHED THEN INSERT *",
-          nBuckets = 8, batchId = Some("seed")): Unit
-        seedSrc(s, d).where("o_custkey % 3 <> 1")
-          .select(col("o_custkey"), col("o_orderkey"),
-            (col("total_cents") + 1).as("total_cents"))
-          .createOrReplaceTempView("graft_sync_snap")
-        graft.api.MergeSql.run(s,
-          s"MERGE INTO '$dir' USING graft_sync_snap ON t.o_custkey = s.o_custkey " +
-            "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
-            "WHEN NOT MATCHED THEN INSERT * " +
-            "WHEN NOT MATCHED BY SOURCE AND o_custkey % 7 <> 0 THEN DELETE",
-          nBuckets = 8, batchId = Some("sync")): Unit
-        val got = graft.api.MergeSql.readTarget(s, dir).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey")
+        withStore(s, "full_sync") { dir =>
+          seedSrc(s, d).select("o_custkey", "o_orderkey", "total_cents")
+            .createOrReplaceTempView("graft_sync_seed")
+          graft.api.MergeSql.run(s,
+            s"MERGE INTO '$dir' USING graft_sync_seed ON t.o_custkey = s.o_custkey " +
+              "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
+              "WHEN NOT MATCHED THEN INSERT *",
+            nBuckets = 8, batchId = Some("seed")): Unit
+          seedSrc(s, d).where("o_custkey % 3 <> 1")
+            .select(col("o_custkey"), col("o_orderkey"),
+              (col("total_cents") + 1).as("total_cents"))
+            .createOrReplaceTempView("graft_sync_snap")
+          graft.api.MergeSql.run(s,
+            s"MERGE INTO '$dir' USING graft_sync_snap ON t.o_custkey = s.o_custkey " +
+              "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
+              "WHEN NOT MATCHED THEN INSERT * " +
+              "WHEN NOT MATCHED BY SOURCE AND o_custkey % 7 <> 0 THEN DELETE",
+            nBuckets = 8, batchId = Some("sync")): Unit
+          graft.api.MergeSql.readTarget(s, dir)
+        }.orderBy("o_custkey")
       },
       Some(s"WITH $oSeed " +
         "SELECT o_custkey, o_orderkey, total_cents + 1 AS total_cents FROM l " +
@@ -505,24 +515,17 @@ object StoreOps {
     // replays the two- and three-batch latest-wins semantics directly.
     Op("core_store_time_travel",
       (s, d) => {
-        val dir = s"target/tmp/time_travel_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(3)))
-        (0 to 2).foreach { b =>
-          graft.api.UpsertStore.update(
-            t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
-            nBuckets = 8, batchId = Some(s"b$b")): Unit
-        }
-        require(graft.api.UpsertStore.snapshotSeq(s, dir) == 3L,
-          "three batches must commit as seqs 1..3")
-        val asof = graft.api.UpsertStore.readAsOf(s, dir, 2L)
-          .withColumn("snap", lit("asof2"))
-        val cur = graft.api.UpsertStore.read(s, dir)
-          .withColumn("snap", lit("current"))
-        val got = asof.unionByName(cur).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("snap", "o_custkey")
+        withStore(s, "time_travel") { dir =>
+          val t = ordersBatches(s, d)
+          (0 to 2).foreach(commitBatch(t, dir, _))
+          require(graft.api.UpsertStore.snapshotSeq(s, dir) == 3L,
+            "three batches must commit as seqs 1..3")
+          val asof = graft.api.UpsertStore.readAsOf(s, dir, 2L)
+            .withColumn("snap", lit("asof2"))
+          val cur = graft.api.UpsertStore.read(s, dir)
+            .withColumn("snap", lit("current"))
+          asof.unionByName(cur)
+        }.orderBy("snap", "o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b FROM orders), " +
         "m2 AS (SELECT o_custkey, max(b) AS mb FROM t WHERE b <= 1 GROUP BY 1), " +
@@ -547,27 +550,24 @@ object StoreOps {
     // long-lived CDC target needs.
     Op("core_store_schema_evolution",
       (s, d) => {
-        val dir = s"target/tmp/schema_evo_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(2)))
-        graft.api.UpsertStore.update(
-          t.where("b = 0").select("o_custkey", "o_orderkey"),
-          dir, "o_custkey", "o_orderkey", nBuckets = 32, batchId = Some("v1")): Unit
-        graft.api.UpsertStore.update(
-          t.where("b = 1 AND o_custkey % 10 = 7")
-            .select("o_custkey", "o_orderkey", "o_totalprice"),
-          dir, "o_custkey", "o_orderkey", nBuckets = 32, batchId = Some("v2")): Unit
-        val r = graft.api.UpsertStore.read(s, dir)
-        // a degenerate fixture (empty/one-row) may never run batch 2, so
-        // the column never evolves in — surface it as all-NULL then
-        val evolved =
-          if (r.columns.contains("o_totalprice")) r
-          else r.withColumn("o_totalprice", lit(null).cast("double"))
-        val got = evolved
-          .select("o_custkey", "o_orderkey", "o_totalprice").localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey")
+        withStore(s, "schema_evo") { dir =>
+          val t = ordersBatches(s, d, 2)
+          graft.api.UpsertStore.update(
+            t.where("b = 0").select("o_custkey", "o_orderkey"),
+            dir, "o_custkey", "o_orderkey", nBuckets = 32, batchId = Some("v1")): Unit
+          graft.api.UpsertStore.update(
+            t.where("b = 1 AND o_custkey % 10 = 7")
+              .select("o_custkey", "o_orderkey", "o_totalprice"),
+            dir, "o_custkey", "o_orderkey", nBuckets = 32, batchId = Some("v2")): Unit
+          val r = graft.api.UpsertStore.read(s, dir)
+          // a degenerate fixture (empty/one-row) may never run batch 2, so
+          // the column never evolves in — surface it as all-NULL then
+          val evolved =
+            if (r.columns.contains("o_totalprice")) r
+            else r.withColumn("o_totalprice", lit(null).cast("double"))
+          evolved
+            .select("o_custkey", "o_orderkey", "o_totalprice")
+        }.orderBy("o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 2 AS b FROM orders), " +
         "u AS (SELECT o_custkey, o_orderkey, o_totalprice, 1 AS src FROM t " +
@@ -621,16 +621,14 @@ object StoreOps {
     // probed buckets' paths). Probe set: every ~97th customer.
     Op("core_store_point_lookup",
       (s, d) => {
-        val dir = s"target/tmp/lookup_${java.util.UUID.randomUUID().toString.take(8)}"
-        graft.api.UpsertStore.update(
-          T.t(s, d, "orders").select("o_custkey", "o_orderkey", "o_totalprice"),
-          dir, "o_custkey", "o_orderkey", nBuckets = 16, batchId = Some("seed")): Unit
-        val probes = T.t(s, d, "orders")
-          .where("o_custkey % 97 = 0").select("o_custkey").distinct()
-        val got = graft.api.UpsertStore.lookup(probes, dir, "o_custkey")
-          .localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey")
+        withStore(s, "lookup") { dir =>
+          graft.api.UpsertStore.update(
+            T.t(s, d, "orders").select("o_custkey", "o_orderkey", "o_totalprice"),
+            dir, "o_custkey", "o_orderkey", nBuckets = 16, batchId = Some("seed")): Unit
+          val probes = T.t(s, d, "orders")
+            .where("o_custkey % 97 = 0").select("o_custkey").distinct()
+          graft.api.UpsertStore.lookup(probes, dir, "o_custkey")
+        }.orderBy("o_custkey")
       },
       Some("WITH f AS (SELECT o_custkey, o_orderkey, o_totalprice, " +
         "row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey DESC) AS rn " +
@@ -648,23 +646,14 @@ object StoreOps {
     // semantics).
     Op("core_store_changefeed",
       (s, d) => {
-        val dir = s"target/tmp/changefeed_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-          .where("o_orderkey % 3 <= 1")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(3)))
-        (0 to 1).foreach { b =>
-          graft.api.UpsertStore.update(
-            t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
-            nBuckets = 8, batchId = Some(s"b$b")): Unit
-        }
-        graft.api.UpsertStore.delete(s, dir, expr("o_custkey % 10 = 3"),
-          batchId = Some("sweep")): Unit
-        val got = graft.api.UpsertStore
-          .changesBetween(s, dir, fromSeq = 1L, toSeq = 3L, key = "o_custkey")
-          .localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey")
+        withStore(s, "changefeed") { dir =>
+          val t = ordersBatches(s, d)
+          (0 to 1).foreach(commitBatch(t, dir, _))
+          graft.api.UpsertStore.delete(s, dir, expr("o_custkey % 10 = 3"),
+            batchId = Some("sweep")): Unit
+          graft.api.UpsertStore
+            .changesBetween(s, dir, fromSeq = 1L, toSeq = 3L, key = "o_custkey")
+        }.orderBy("o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b " +
         "FROM orders WHERE o_orderkey % 3 <= 1), " +
@@ -701,18 +690,13 @@ object StoreOps {
         val base = s"target/tmp/consume_${java.util.UUID.randomUUID().toString.take(8)}"
         val dir = s"$base/table"
         val cursor = s"$base/cursor.json"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(3)))
-        def batch(b: Int): Unit = graft.api.UpsertStore.update(
-          t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
-          nBuckets = 8, batchId = Some(s"b$b")): Unit
-        batch(0); batch(1)
+        val t = ordersBatches(s, d)
+        (0 to 1).foreach(commitBatch(t, dir, _))
         val (run1, head1) = graft.api.UpsertStore
           .changesSince(s, dir, "o_custkey", cursor)
         val r1 = run1.withColumn("run", lit("r1")).localCheckpoint()
         graft.api.UpsertStore.commitCursor(s, cursor, head1)
-        batch(2)
+        commitBatch(t, dir, 2): Unit
         graft.api.UpsertStore.delete(s, dir, expr("o_custkey % 10 = 3"),
           batchId = Some("sweep")): Unit
         val (run2, head2) = graft.api.UpsertStore
@@ -755,29 +739,28 @@ object StoreOps {
     // engine-side. Pre-compaction states stay time-travelable.
     Op("core_store_optimize",
       (s, d) => {
-        val dir = s"target/tmp/optimize_${java.util.UUID.randomUUID().toString.take(8)}"
-        graft.api.UpsertStore.update(
-          T.t(s, d, "orders").select("o_custkey", "o_orderkey", "o_totalprice"),
-          dir, "o_custkey", "o_orderkey", nBuckets = 8, batchId = Some("seed")): Unit
-        def maxFiles(): Int = {
-          val f = graft.api.StoreIO.fs(s, dir)
-          (0 until 8).map { b =>
-            val p = new org.apache.hadoop.fs.Path(s"$dir/b$b")
-            if (!f.exists(p)) 0
-            else f.listStatus(p).filter(_.isDirectory).map(_.getPath)
-              .map(g => f.listStatus(g)
-                .count(st => !st.isDirectory && st.getPath.getName.startsWith("part-")))
-              .maxOption.getOrElse(0)
-          }.maxOption.getOrElse(0)
-        }
-        val before = maxFiles()
-        graft.api.UpsertStore.optimize(s, dir): Unit
-        val after = maxFiles()
-        require(after <= math.max(1, before),
-          s"optimize must not fragment: $before -> $after files/bucket")
-        val got = graft.api.UpsertStore.read(s, dir).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey")
+        withStore(s, "optimize") { dir =>
+          graft.api.UpsertStore.update(
+            T.t(s, d, "orders").select("o_custkey", "o_orderkey", "o_totalprice"),
+            dir, "o_custkey", "o_orderkey", nBuckets = 8, batchId = Some("seed")): Unit
+          def maxFiles(): Int = {
+            val f = graft.api.StoreIO.fs(s, dir)
+            (0 until 8).map { b =>
+              val p = new org.apache.hadoop.fs.Path(s"$dir/b$b")
+              if (!f.exists(p)) 0
+              else f.listStatus(p).filter(_.isDirectory).map(_.getPath)
+                .map(g => f.listStatus(g)
+                  .count(st => !st.isDirectory && st.getPath.getName.startsWith("part-")))
+                .maxOption.getOrElse(0)
+            }.maxOption.getOrElse(0)
+          }
+          val before = maxFiles()
+          graft.api.UpsertStore.optimize(s, dir): Unit
+          val after = maxFiles()
+          require(after <= math.max(1, before),
+            s"optimize must not fragment: $before -> $after files/bucket")
+          graft.api.UpsertStore.read(s, dir)
+        }.orderBy("o_custkey")
       },
       Some("WITH f AS (SELECT o_custkey, o_orderkey, o_totalprice, " +
         "row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey DESC) AS rn " +
@@ -794,30 +777,27 @@ object StoreOps {
     // travel and compaction end-to-end.
     Op("core_store_maintenance_sql",
       (s, d) => {
-        val dir = s"target/tmp/maint_sql_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(4)))
-        (0 to 3).foreach { b =>
-          t.where(col("b") === b).drop("b")
-            .createOrReplaceTempView(s"graft_maint_src_$b")
-          graft.api.MergeSql.run(s,
-            s"MERGE INTO '$dir' USING graft_maint_src_$b ON t.o_custkey = s.o_custkey " +
-              "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
-              "WHEN NOT MATCHED THEN INSERT *",
-            nBuckets = 8, batchId = Some(s"b$b")): Unit
-        }
-        val horizon = graft.api.MergeSql.runMaintenance(s,
-          s"VACUUM '$dir' RETAIN 2 COMMITS")
-        require(horizon == 3L, s"RETAIN 2 of 4 commits must set base_seq 3, got $horizon")
-        graft.api.MergeSql.runMaintenance(s, s"OPTIMIZE '$dir'"): Unit
-        val asof = graft.api.MergeSql.readTarget(s, dir, versionAsOf = Some(3L))
-          .withColumn("snap", lit("asof3"))
-        val cur = graft.api.MergeSql.readTarget(s, dir)
-          .withColumn("snap", lit("current"))
-        val got = asof.unionByName(cur).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("snap", "o_custkey")
+        withStore(s, "maint_sql") { dir =>
+          val t = ordersBatches(s, d, 4)
+          (0 to 3).foreach { b =>
+            t.where(col("b") === b).drop("b")
+              .createOrReplaceTempView(s"graft_maint_src_$b")
+            graft.api.MergeSql.run(s,
+              s"MERGE INTO '$dir' USING graft_maint_src_$b ON t.o_custkey = s.o_custkey " +
+                "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
+                "WHEN NOT MATCHED THEN INSERT *",
+              nBuckets = 8, batchId = Some(s"b$b")): Unit
+          }
+          val horizon = graft.api.MergeSql.runMaintenance(s,
+            s"VACUUM '$dir' RETAIN 2 COMMITS")
+          require(horizon == 3L, s"RETAIN 2 of 4 commits must set base_seq 3, got $horizon")
+          graft.api.MergeSql.runMaintenance(s, s"OPTIMIZE '$dir'"): Unit
+          val asof = graft.api.MergeSql.readTarget(s, dir, versionAsOf = Some(3L))
+            .withColumn("snap", lit("asof3"))
+          val cur = graft.api.MergeSql.readTarget(s, dir)
+            .withColumn("snap", lit("current"))
+          asof.unionByName(cur)
+        }.orderBy("snap", "o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 4 AS b FROM orders), " +
         "m3 AS (SELECT o_custkey, max(b) AS mb FROM t WHERE b <= 2 GROUP BY 1), " +
@@ -844,30 +824,29 @@ object StoreOps {
     // batchId asserted a no-op inline.
     Op("core_merge_full_sync_update",
       (s, d) => {
-        val dir = s"target/tmp/sync_upd_${java.util.UUID.randomUUID().toString.take(8)}"
-        seedSrc(s, d).createOrReplaceTempView("graft_syncu_seed")
-        graft.api.MergeSql.run(s,
-          s"MERGE INTO '$dir' USING graft_syncu_seed ON t.o_custkey = s.o_custkey " +
-            "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
-            "WHEN NOT MATCHED THEN INSERT *",
-          nBuckets = 8, batchId = Some("seed")): Unit
-        seedSrc(s, d).where("o_custkey % 3 <> 1")
-          .select(col("o_custkey"), col("o_orderkey"),
-            (col("total_cents") + 1).as("total_cents"), col("disc_cents"))
-          .createOrReplaceTempView("graft_syncu_snap")
-        val sync =
-          s"MERGE INTO '$dir' USING graft_syncu_snap ON t.o_custkey = s.o_custkey " +
-            "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
-            "WHEN NOT MATCHED THEN INSERT * " +
-            "WHEN NOT MATCHED BY SOURCE AND o_custkey % 7 = 0 " +
-            "THEN UPDATE SET disc_cents = total_cents " +
-            "WHEN NOT MATCHED BY SOURCE AND o_custkey % 2 = 0 THEN DELETE"
-        graft.api.MergeSql.run(s, sync, nBuckets = 8, batchId = Some("sync")): Unit
-        require(!graft.api.MergeSql.run(s, sync, nBuckets = 8, batchId = Some("sync")),
-          "replayed full-sync MERGE must be a ledger no-op")
-        val got = graft.api.MergeSql.readTarget(s, dir).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey")
+        withStore(s, "sync_upd") { dir =>
+          seedSrc(s, d).createOrReplaceTempView("graft_syncu_seed")
+          graft.api.MergeSql.run(s,
+            s"MERGE INTO '$dir' USING graft_syncu_seed ON t.o_custkey = s.o_custkey " +
+              "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
+              "WHEN NOT MATCHED THEN INSERT *",
+            nBuckets = 8, batchId = Some("seed")): Unit
+          seedSrc(s, d).where("o_custkey % 3 <> 1")
+            .select(col("o_custkey"), col("o_orderkey"),
+              (col("total_cents") + 1).as("total_cents"), col("disc_cents"))
+            .createOrReplaceTempView("graft_syncu_snap")
+          val sync =
+            s"MERGE INTO '$dir' USING graft_syncu_snap ON t.o_custkey = s.o_custkey " +
+              "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
+              "WHEN NOT MATCHED THEN INSERT * " +
+              "WHEN NOT MATCHED BY SOURCE AND o_custkey % 7 = 0 " +
+              "THEN UPDATE SET disc_cents = total_cents " +
+              "WHEN NOT MATCHED BY SOURCE AND o_custkey % 2 = 0 THEN DELETE"
+          graft.api.MergeSql.run(s, sync, nBuckets = 8, batchId = Some("sync")): Unit
+          require(!graft.api.MergeSql.run(s, sync, nBuckets = 8, batchId = Some("sync")),
+            "replayed full-sync MERGE must be a ledger no-op")
+          graft.api.MergeSql.readTarget(s, dir)
+        }.orderBy("o_custkey")
       },
       Some(s"WITH $oSeed " +
         "SELECT o_custkey, o_orderkey, total_cents + 1 AS total_cents, disc_cents " +
@@ -889,32 +868,27 @@ object StoreOps {
     // snapshot under one oracle.
     Op("core_store_timestamp_as_of",
       (s, d) => {
-        val dir = s"target/tmp/ts_asof_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(3)))
-        (0 to 2).foreach { b =>
-          graft.api.UpsertStore.update(
-            t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
-            nBuckets = 8, batchId = Some(s"b$b")): Unit
-          Thread.sleep(15) // commit timestamps must strictly increase
-        }
-        val ts = graft.api.UpsertStore.commits(s, dir)
-          .select("seq", "ts_ms").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        require(ts(3L) > ts(2L), "commit timestamps must strictly increase")
-        val quoted = java.time.Instant.ofEpochMilli(ts(2L))
-          .atOffset(java.time.ZoneOffset.UTC).toLocalDateTime
-          .format(java.time.format.DateTimeFormatter
-            .ofPattern("yyyy-MM-dd HH:mm:ss.SSS"))
-        val viaMillis = graft.api.MergeSql.runSelect(s,
-          s"SELECT * FROM '$dir' TIMESTAMP AS OF ${ts(2L)}")
-          .withColumn("form", lit("millis"))
-        val viaQuoted = graft.api.MergeSql.runSelect(s,
-          s"SELECT * FROM '$dir' TIMESTAMP AS OF '$quoted'")
-          .withColumn("form", lit("quoted"))
-        val got = viaMillis.unionByName(viaQuoted).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("form", "o_custkey")
+        withStore(s, "ts_asof") { dir =>
+          val t = ordersBatches(s, d)
+          (0 to 2).foreach { b =>
+            commitBatch(t, dir, b)
+            Thread.sleep(15) // commit timestamps must strictly increase
+          }
+          val ts = graft.api.UpsertStore.commits(s, dir)
+            .select("seq", "ts_ms").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          require(ts(3L) > ts(2L), "commit timestamps must strictly increase")
+          val quoted = java.time.Instant.ofEpochMilli(ts(2L))
+            .atOffset(java.time.ZoneOffset.UTC).toLocalDateTime
+            .format(java.time.format.DateTimeFormatter
+              .ofPattern("yyyy-MM-dd HH:mm:ss.SSS"))
+          val viaMillis = graft.api.MergeSql.runSelect(s,
+            s"SELECT * FROM '$dir' TIMESTAMP AS OF ${ts(2L)}")
+            .withColumn("form", lit("millis"))
+          val viaQuoted = graft.api.MergeSql.runSelect(s,
+            s"SELECT * FROM '$dir' TIMESTAMP AS OF '$quoted'")
+            .withColumn("form", lit("quoted"))
+          viaMillis.unionByName(viaQuoted)
+        }.orderBy("form", "o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b FROM orders), " +
         "m2 AS (SELECT o_custkey, max(b) AS mb FROM t WHERE b <= 1 GROUP BY 1), " +
@@ -938,39 +912,38 @@ object StoreOps {
     // and time travel are pinned unchanged by the oracle.
     Op("core_store_optimize_zorder",
       (s, d) => {
-        val dir = s"target/tmp/opt_z_${java.util.UUID.randomUUID().toString.take(8)}"
-        graft.api.UpsertStore.update(
-          T.t(s, d, "orders").select("o_custkey", "o_orderkey", "o_totalprice"),
-          dir, "o_custkey", "o_orderkey", nBuckets = 8, batchId = Some("seed")): Unit
-        graft.api.MergeSql.runMaintenance(s,
-          s"OPTIMIZE '$dir' ZORDER BY (o_orderkey)"): Unit
-        graft.api.UpsertStore.optimize(s, dir,
-          targetFileBytes = 16L * 1024, zorderBy = Seq("o_orderkey")): Unit
-        // clustering audit: within each bucket, per-file o_orderkey
-        // ranges must be near-disjoint (only meaningful with several
-        // files; degenerate fixtures skip the check, not the op)
-        val perFile = graft.api.UpsertStore.read(s, dir)
-          .groupBy(regexp_extract(input_file_name(), "/(b\\d+)/g\\d{12}/", 1).as("bk"),
-            input_file_name().as("fn"))
-          .agg(min("o_orderkey").as("mn"), max("o_orderkey").as("mx"))
-          .groupBy("bk").agg(
-            count(lit(1)).as("nf"),
-            sum(col("mx") - col("mn")).as("sum_span"),
-            (max("mx") - min("mn")).as("span"))
-          .collect()
-        perFile.filter(r => r.getLong(1) >= 3 && r.getLong(3) > 0).foreach { r =>
-          require(r.getLong(2) <= 2 * r.getLong(3),
-            s"bucket ${r.getString(0)}: files not z-clustered " +
-              s"(sum of per-file spans ${r.getLong(2)} vs bucket span ${r.getLong(3)})")
-        }
-        // pre-optimize history must still reconstruct (time travel
-        // unaffected by clustering commits)
-        val n1 = graft.api.UpsertStore.readAsOf(s, dir, 1L).count()
-        val nc = graft.api.UpsertStore.read(s, dir).count()
-        require(n1 == nc, s"optimize must not change content: $n1 vs $nc rows")
-        val got = graft.api.UpsertStore.read(s, dir).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey")
+        withStore(s, "opt_z") { dir =>
+          graft.api.UpsertStore.update(
+            T.t(s, d, "orders").select("o_custkey", "o_orderkey", "o_totalprice"),
+            dir, "o_custkey", "o_orderkey", nBuckets = 8, batchId = Some("seed")): Unit
+          graft.api.MergeSql.runMaintenance(s,
+            s"OPTIMIZE '$dir' ZORDER BY (o_orderkey)"): Unit
+          graft.api.UpsertStore.optimize(s, dir,
+            targetFileBytes = 16L * 1024, zorderBy = Seq("o_orderkey")): Unit
+          // clustering audit: within each bucket, per-file o_orderkey
+          // ranges must be near-disjoint (only meaningful with several
+          // files; degenerate fixtures skip the check, not the op)
+          val perFile = graft.api.UpsertStore.read(s, dir)
+            .groupBy(regexp_extract(input_file_name(), "/(b\\d+)/g\\d{12}/", 1).as("bk"),
+              input_file_name().as("fn"))
+            .agg(min("o_orderkey").as("mn"), max("o_orderkey").as("mx"))
+            .groupBy("bk").agg(
+              count(lit(1)).as("nf"),
+              sum(col("mx") - col("mn")).as("sum_span"),
+              (max("mx") - min("mn")).as("span"))
+            .collect()
+          perFile.filter(r => r.getLong(1) >= 3 && r.getLong(3) > 0).foreach { r =>
+            require(r.getLong(2) <= 2 * r.getLong(3),
+              s"bucket ${r.getString(0)}: files not z-clustered " +
+                s"(sum of per-file spans ${r.getLong(2)} vs bucket span ${r.getLong(3)})")
+          }
+          // pre-optimize history must still reconstruct (time travel
+          // unaffected by clustering commits)
+          val n1 = graft.api.UpsertStore.readAsOf(s, dir, 1L).count()
+          val nc = graft.api.UpsertStore.read(s, dir).count()
+          require(n1 == nc, s"optimize must not change content: $n1 vs $nc rows")
+          graft.api.UpsertStore.read(s, dir)
+        }.orderBy("o_custkey")
       },
       Some("WITH f AS (SELECT o_custkey, o_orderkey, o_totalprice, " +
         "row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey DESC) AS rn " +
@@ -987,26 +960,25 @@ object StoreOps {
     // losing most of the table with no error.
     Op("core_changefeed_bootstrap",
       (s, d) => {
-        val base = s"target/tmp/cf_boot_${java.util.UUID.randomUUID().toString.take(8)}"
-        val dir = s"$base/table"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(4)))
-        (0 to 3).foreach { b =>
-          graft.api.UpsertStore.update(
-            t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
-            nBuckets = 8, batchId = Some(s"b$b"),
-            retainCommits = Int.MaxValue): Unit
-        }
-        graft.api.UpsertStore.retain(s, dir, keepCommits = 2)
-        require(graft.api.UpsertStore.baseSeq(s, dir) == 3L,
-          "retention must advance the horizon to seq 3")
-        val (changes, head) = graft.api.UpsertStore
-          .changesSince(s, dir, "o_custkey", s"$base/cursor.json")
-        require(head == 4L, s"head must be seq 4, got $head")
-        val got = changes.localCheckpoint()
-        graft.api.StoreIO.delete(s, base)
-        got.orderBy("o_custkey")
+        withStore(s, "cf_boot") { base =>
+          val dir = s"$base/table"
+          val t = T.t(s, d, "orders")
+            .select(col("o_custkey"), col("o_orderkey"))
+            .withColumn("b", pmod(col("o_orderkey"), lit(4)))
+          (0 to 3).foreach { b =>
+            graft.api.UpsertStore.update(
+              t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
+              nBuckets = 8, batchId = Some(s"b$b"),
+              retainCommits = Int.MaxValue): Unit
+          }
+          graft.api.UpsertStore.retain(s, dir, keepCommits = 2)
+          require(graft.api.UpsertStore.baseSeq(s, dir) == 3L,
+            "retention must advance the horizon to seq 3")
+          val (changes, head) = graft.api.UpsertStore
+            .changesSince(s, dir, "o_custkey", s"$base/cursor.json")
+          require(head == 4L, s"head must be seq 4, got $head")
+          changes
+        }.orderBy("o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_orderkey % 4 AS b FROM orders), " +
         "m AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
@@ -1026,25 +998,18 @@ object StoreOps {
     // snapshot under one oracle.
     Op("core_store_restore",
       (s, d) => {
-        val dir = s"target/tmp/restore_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(3)))
-        (0 to 2).foreach { b =>
-          graft.api.UpsertStore.update(
-            t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
-            nBuckets = 8, batchId = Some(s"b$b")): Unit
-        }
-        val newHead = graft.api.MergeSql.runMaintenance(s,
-          s"RESTORE '$dir' TO VERSION AS OF 2")
-        require(newHead == 4L, s"restore must commit as head 4, got $newHead")
-        val restored = graft.api.UpsertStore.read(s, dir)
-          .withColumn("snap", lit("restored"))
-        val pre = graft.api.UpsertStore.readAsOf(s, dir, 3L)
-          .withColumn("snap", lit("pre"))
-        val got = pre.unionByName(restored).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("snap", "o_custkey")
+        withStore(s, "restore") { dir =>
+          val t = ordersBatches(s, d)
+          (0 to 2).foreach(commitBatch(t, dir, _))
+          val newHead = graft.api.MergeSql.runMaintenance(s,
+            s"RESTORE '$dir' TO VERSION AS OF 2")
+          require(newHead == 4L, s"restore must commit as head 4, got $newHead")
+          val restored = graft.api.UpsertStore.read(s, dir)
+            .withColumn("snap", lit("restored"))
+          val pre = graft.api.UpsertStore.readAsOf(s, dir, 3L)
+            .withColumn("snap", lit("pre"))
+          pre.unionByName(restored)
+        }.orderBy("snap", "o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b FROM orders), " +
         "m2 AS (SELECT o_custkey, max(b) AS mb FROM t WHERE b <= 1 GROUP BY 1), " +
@@ -1070,32 +1035,22 @@ object StoreOps {
     // source leaves the clone untouched, pinned by the oracle.
     Op("core_store_clone",
       (s, d) => {
-        val base = s"target/tmp/clone_${java.util.UUID.randomUUID().toString.take(8)}"
-        val dir = s"$base/src"
-        val dst = s"$base/branch"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(3)))
-        (0 to 2).foreach { b =>
-          graft.api.UpsertStore.update(
-            t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
-            nBuckets = 8, batchId = Some(s"b$b")): Unit
-        }
-        val v = graft.api.MergeSql.runMaintenance(s,
-          s"CLONE '$dir' TO '$dst' VERSION AS OF 2")
-        require(v == 2L, s"clone must report version 2, got $v")
-        require(!graft.api.UpsertStore.update(
-          t.where(col("b") === 1).drop("b"), dst, "o_custkey", "o_orderkey",
-          nBuckets = 8, batchId = Some("b1")),
-          "replay of a contained batch into the clone must be a ledger no-op")
-        graft.api.UpsertStore.delete(s, dir, expr("o_custkey % 10 = 3"),
-          batchId = Some("sweep")): Unit
-        val got = graft.api.UpsertStore.read(s, dst).withColumn("snap", lit("clone"))
-          .unionByName(
-            graft.api.UpsertStore.read(s, dir).withColumn("snap", lit("src")))
-          .localCheckpoint()
-        graft.api.StoreIO.delete(s, base)
-        got.orderBy("snap", "o_custkey")
+        withStore(s, "clone") { base =>
+          val dir = s"$base/src"
+          val dst = s"$base/branch"
+          val t = ordersBatches(s, d)
+          (0 to 2).foreach(commitBatch(t, dir, _))
+          val v = graft.api.MergeSql.runMaintenance(s,
+            s"CLONE '$dir' TO '$dst' VERSION AS OF 2")
+          require(v == 2L, s"clone must report version 2, got $v")
+          require(!commitBatch(t, dst, 1),
+            "replay of a contained batch into the clone must be a ledger no-op")
+          graft.api.UpsertStore.delete(s, dir, expr("o_custkey % 10 = 3"),
+            batchId = Some("sweep")): Unit
+          graft.api.UpsertStore.read(s, dst).withColumn("snap", lit("clone"))
+            .unionByName(
+              graft.api.UpsertStore.read(s, dir).withColumn("snap", lit("src")))
+        }.orderBy("snap", "o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b FROM orders), " +
         "m2 AS (SELECT o_custkey, max(b) AS mb FROM t WHERE b <= 1 GROUP BY 1), " +
@@ -1121,22 +1076,15 @@ object StoreOps {
     // replays exact no-ops).
     Op("core_store_history",
       (s, d) => {
-        val dir = s"target/tmp/history_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(2)))
-        (0 to 1).foreach { b =>
-          graft.api.UpsertStore.update(
-            t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
-            nBuckets = 8, batchId = Some(s"b$b")): Unit
-        }
-        graft.api.UpsertStore.delete(s, dir, expr("o_custkey % 10 = 3"),
-          batchId = Some("sweep")): Unit
-        graft.api.UpsertStore.restore(s, dir, 1L, batchId = Some("rst")): Unit
-        val got = graft.api.UpsertStore.commits(s, dir)
-          .select("seq", "kind", "batch_id").localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("seq")
+        withStore(s, "history") { dir =>
+          val t = ordersBatches(s, d, 2)
+          (0 to 1).foreach(commitBatch(t, dir, _))
+          graft.api.UpsertStore.delete(s, dir, expr("o_custkey % 10 = 3"),
+            batchId = Some("sweep")): Unit
+          graft.api.UpsertStore.restore(s, dir, 1L, batchId = Some("rst")): Unit
+          graft.api.UpsertStore.commits(s, dir)
+            .select("seq", "kind", "batch_id")
+        }.orderBy("seq")
       },
       Some("SELECT * FROM (VALUES (CAST(1 AS BIGINT), 'merge', 'b0'), " +
         "(2, 'merge', 'b1'), (3, 'delete', 'sweep'), (4, 'restore', 'rst')) " +
@@ -1151,23 +1099,14 @@ object StoreOps {
     // plain changefeed; the pair explodes from ONE joined row.
     Op("core_store_cdf_images",
       (s, d) => {
-        val dir = s"target/tmp/cdf_img_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-          .where("o_orderkey % 3 <= 1")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(3)))
-        (0 to 1).foreach { b =>
-          graft.api.UpsertStore.update(
-            t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
-            nBuckets = 8, batchId = Some(s"b$b")): Unit
-        }
-        graft.api.UpsertStore.delete(s, dir, expr("o_custkey % 10 = 3"),
-          batchId = Some("sweep")): Unit
-        val got = graft.api.UpsertStore
-          .changesBetweenImages(s, dir, fromSeq = 1L, toSeq = 3L, key = "o_custkey")
-          .localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey", "change")
+        withStore(s, "cdf_img") { dir =>
+          val t = ordersBatches(s, d)
+          (0 to 1).foreach(commitBatch(t, dir, _))
+          graft.api.UpsertStore.delete(s, dir, expr("o_custkey % 10 = 3"),
+            batchId = Some("sweep")): Unit
+          graft.api.UpsertStore
+            .changesBetweenImages(s, dir, fromSeq = 1L, toSeq = 3L, key = "o_custkey")
+        }.orderBy("o_custkey", "change")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b " +
         "FROM orders WHERE o_orderkey % 3 <= 1), " +
@@ -1205,29 +1144,28 @@ object StoreOps {
     // third refresh with nothing new is a no-op (asserted inline).
     Op("core_incremental_matview",
       (s, d) => {
-        val base = s"target/tmp/matview_${java.util.UUID.randomUUID().toString.take(8)}"
-        val dir = s"$base/fact"
-        val view = s"$base/view"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"),
-            expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(3)))
-        def batch(b: Int): Unit = graft.api.UpsertStore.update(
-          t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
-          nBuckets = 8, batchId = Some(s"b$b")): Unit
-        def refresh(): Long = graft.api.MatView.refresh(s, dir, "o_custkey", view,
-          groupCols = Seq("grp" -> pmod(col("o_orderkey"), lit(10))),
-          sumCols = Seq("cents"))
-        batch(0); batch(1)
-        require(refresh() == 2L, "first refresh must reach head 2")
-        batch(2)
-        graft.api.UpsertStore.delete(s, dir, expr("o_custkey % 10 = 3"),
-          batchId = Some("sweep")): Unit
-        require(refresh() == 4L, "second refresh must reach head 4")
-        require(refresh() == 4L, "refresh with nothing new must be a no-op")
-        val got = graft.api.MatView.read(s, view).localCheckpoint()
-        graft.api.StoreIO.delete(s, base)
-        got.orderBy("grp")
+        withStore(s, "matview") { base =>
+          val dir = s"$base/fact"
+          val view = s"$base/view"
+          val t = T.t(s, d, "orders")
+            .select(col("o_custkey"), col("o_orderkey"),
+              expr("CAST(floor(o_totalprice * 100) AS BIGINT)").as("cents"))
+            .withColumn("b", pmod(col("o_orderkey"), lit(3)))
+          def batch(b: Int): Unit = graft.api.UpsertStore.update(
+            t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
+            nBuckets = 8, batchId = Some(s"b$b")): Unit
+          def refresh(): Long = graft.api.MatView.refresh(s, dir, "o_custkey", view,
+            groupCols = Seq("grp" -> pmod(col("o_orderkey"), lit(10))),
+            sumCols = Seq("cents"))
+          batch(0); batch(1)
+          require(refresh() == 2L, "first refresh must reach head 2")
+          batch(2)
+          graft.api.UpsertStore.delete(s, dir, expr("o_custkey % 10 = 3"),
+            batchId = Some("sweep")): Unit
+          require(refresh() == 4L, "second refresh must reach head 4")
+          require(refresh() == 4L, "refresh with nothing new must be a no-op")
+          graft.api.MatView.read(s, view)
+        }.orderBy("grp")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, " +
         "CAST(floor(o_totalprice * 100) AS BIGINT) AS cents, o_orderkey % 3 AS b FROM orders), " +
@@ -1251,35 +1189,34 @@ object StoreOps {
     Op("core_store_constraints",
       (s, d) => {
         import s.implicits._
-        val dir = s"target/tmp/constraints_${java.util.UUID.randomUUID().toString.take(8)}"
-        seedSrc(s, d).createOrReplaceTempView("graft_cons_seed")
-        graft.api.MergeSql.run(s,
-          s"MERGE INTO '$dir' USING graft_cons_seed ON t.o_custkey = s.o_custkey " +
-            "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
-            "WHEN NOT MATCHED THEN INSERT *",
-          nBuckets = 8, batchId = Some("seed")): Unit
-        require(graft.api.MergeSql.runMaintenance(s,
-          s"ALTER '$dir' ADD CONSTRAINT nonneg CHECK (total_cents >= 0)") == 1L)
-        graft.api.MergeSql.runUpdate(s,
-          s"UPDATE '$dir' SET total_cents = total_cents + 1 WHERE o_custkey % 2 = 0",
-          batchId = Some("u1")): Unit
-        val badRow = Seq((-7L, 0L, -5L, 0L))
-          .toDF("o_custkey", "o_orderkey", "total_cents", "disc_cents")
-        val rejected =
-          try { graft.api.UpsertStore.update(badRow, dir, "o_custkey", "o_orderkey",
-            nBuckets = 8, batchId = Some("bad")): Unit; false }
-          catch { case e: IllegalArgumentException =>
-            e.getMessage.contains("CHECK constraint nonneg") }
-        require(rejected, "a violating merge batch must be rejected by name")
-        require(graft.api.UpsertStore.snapshotSeq(s, dir) == 2L,
-          "a rejected batch must not advance the commit seq")
-        require(graft.api.MergeSql.runMaintenance(s,
-          s"ALTER '$dir' DROP CONSTRAINT nonneg") == 0L)
-        graft.api.UpsertStore.update(badRow, dir, "o_custkey", "o_orderkey",
-          nBuckets = 8, batchId = Some("bad")): Unit
-        val got = graft.api.UpsertStore.read(s, dir).localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey")
+        withStore(s, "constraints") { dir =>
+          seedSrc(s, d).createOrReplaceTempView("graft_cons_seed")
+          graft.api.MergeSql.run(s,
+            s"MERGE INTO '$dir' USING graft_cons_seed ON t.o_custkey = s.o_custkey " +
+              "LATEST BY o_orderkey WHEN MATCHED THEN UPDATE SET * " +
+              "WHEN NOT MATCHED THEN INSERT *",
+            nBuckets = 8, batchId = Some("seed")): Unit
+          require(graft.api.MergeSql.runMaintenance(s,
+            s"ALTER '$dir' ADD CONSTRAINT nonneg CHECK (total_cents >= 0)") == 1L)
+          graft.api.MergeSql.runUpdate(s,
+            s"UPDATE '$dir' SET total_cents = total_cents + 1 WHERE o_custkey % 2 = 0",
+            batchId = Some("u1")): Unit
+          val badRow = Seq((-7L, 0L, -5L, 0L))
+            .toDF("o_custkey", "o_orderkey", "total_cents", "disc_cents")
+          val rejected =
+            try { graft.api.UpsertStore.update(badRow, dir, "o_custkey", "o_orderkey",
+              nBuckets = 8, batchId = Some("bad")): Unit; false }
+            catch { case e: IllegalArgumentException =>
+              e.getMessage.contains("CHECK constraint nonneg") }
+          require(rejected, "a violating merge batch must be rejected by name")
+          require(graft.api.UpsertStore.snapshotSeq(s, dir) == 2L,
+            "a rejected batch must not advance the commit seq")
+          require(graft.api.MergeSql.runMaintenance(s,
+            s"ALTER '$dir' DROP CONSTRAINT nonneg") == 0L)
+          graft.api.UpsertStore.update(badRow, dir, "o_custkey", "o_orderkey",
+            nBuckets = 8, batchId = Some("bad")): Unit
+          graft.api.UpsertStore.read(s, dir)
+        }.orderBy("o_custkey")
       },
       Some(s"WITH $oSeed " +
         "SELECT o_custkey, o_orderkey, " +
@@ -1300,21 +1237,20 @@ object StoreOps {
     // per-commit last-batch-wins states.
     Op("core_store_row_history",
       (s, d) => {
-        val dir = s"target/tmp/row_hist_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(3)))
-        (0 to 2).foreach { b =>
-          graft.api.UpsertStore.update(
-            t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
-            nBuckets = 1, batchId = Some(s"b$b")): Unit
-        }
-        val probes = T.t(s, d, "orders")
-          .where("o_custkey % 101 = 0").select("o_custkey").distinct()
-        val got = graft.api.UpsertStore.rowVersions(probes, dir, "o_custkey")
-          .select("o_custkey", "commit_seq", "o_orderkey").localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("o_custkey", "commit_seq")
+        withStore(s, "row_hist") { dir =>
+          val t = T.t(s, d, "orders")
+            .select(col("o_custkey"), col("o_orderkey"))
+            .withColumn("b", pmod(col("o_orderkey"), lit(3)))
+          (0 to 2).foreach { b =>
+            graft.api.UpsertStore.update(
+              t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
+              nBuckets = 1, batchId = Some(s"b$b")): Unit
+          }
+          val probes = T.t(s, d, "orders")
+            .where("o_custkey % 101 = 0").select("o_custkey").distinct()
+          graft.api.UpsertStore.rowVersions(probes, dir, "o_custkey")
+            .select("o_custkey", "commit_seq", "o_orderkey")
+        }.orderBy("o_custkey", "commit_seq")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_orderkey % 3 AS b FROM orders), " +
         "f AS (SELECT h.commit_seq, t.o_custkey, t.o_orderkey, " +
@@ -1332,21 +1268,19 @@ object StoreOps {
     // ledgered commits advance the seq whether or not rows flowed.
     Op("core_store_describe",
       (s, d) => {
-        val dir = s"target/tmp/describe_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-        graft.api.UpsertStore.update(
-          t.select("o_custkey", "o_orderkey"), dir, "o_custkey", "o_orderkey",
-          nBuckets = 8, batchId = Some("b0")): Unit
-        graft.api.UpsertStore.update(
-          t.select(col("o_custkey"), col("o_orderkey"),
-            expr("CAST(o_orderkey % 100 AS BIGINT)").as("disc_cents")),
-          dir, "o_custkey", "o_orderkey", nBuckets = 8, batchId = Some("b1")): Unit
-        graft.api.MergeSql.runMaintenance(s,
-          s"ALTER '$dir' ADD CONSTRAINT nonneg CHECK (disc_cents >= 0 OR disc_cents IS NULL)"): Unit
-        val got = graft.api.MergeSql.runDescribe(s, s"DESCRIBE '$dir'")
-          .localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("name")
+        withStore(s, "describe") { dir =>
+          val t = T.t(s, d, "orders")
+          graft.api.UpsertStore.update(
+            t.select("o_custkey", "o_orderkey"), dir, "o_custkey", "o_orderkey",
+            nBuckets = 8, batchId = Some("b0")): Unit
+          graft.api.UpsertStore.update(
+            t.select(col("o_custkey"), col("o_orderkey"),
+              expr("CAST(o_orderkey % 100 AS BIGINT)").as("disc_cents")),
+            dir, "o_custkey", "o_orderkey", nBuckets = 8, batchId = Some("b1")): Unit
+          graft.api.MergeSql.runMaintenance(s,
+            s"ALTER '$dir' ADD CONSTRAINT nonneg CHECK (disc_cents >= 0 OR disc_cents IS NULL)"): Unit
+          graft.api.MergeSql.runDescribe(s, s"DESCRIBE '$dir'")
+        }.orderBy("name")
       },
       Some("SELECT * FROM (VALUES " +
         "('base_seq', '0'), ('col:disc_cents', 'bigint'), " +
@@ -1368,32 +1302,24 @@ object StoreOps {
     // which the oracle rebuilds independently.
     Op("core_store_analyze",
       (s, d) => {
-        val dir = s"target/tmp/analyze_${java.util.UUID.randomUUID().toString.take(8)}"
-        val t = T.t(s, d, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .withColumn("b", pmod(col("o_orderkey"), lit(2)))
-        (0 to 1).foreach { b =>
-          graft.api.UpsertStore.update(
-            t.where(col("b") === b).drop("b"), dir, "o_custkey", "o_orderkey",
-            nBuckets = 8, batchId = Some(s"b$b")): Unit
-        }
-        val nCols = graft.api.MergeSql.runMaintenance(s, s"ANALYZE '$dir'")
-        require(nCols == 3L, s"ANALYZE must cover 3 columns, got $nCols")
-        val (seq, stats) = graft.api.UpsertStore.tableStats(s, dir)
-          .getOrElse(sys.error("ANALYZE must persist stats"))
-        require(seq == 2L, s"stats must be tagged with the analyzed seq, got $seq")
-        val exact = graft.api.Stats.columnStats(
-            graft.api.UpsertStore.read(s, dir),
-            Seq("o_custkey", "o_orderkey", "o_totalprice"), exactNdv = true)
-          .select(col("column"), col("ndv").as("ndv_exact"))
-        val got = stats.join(exact, Seq("column"))
-          .select(col("column"), col("n_nonnull"),
-            (abs(col("ndv") - col("ndv_exact")) <=
-              col("ndv_exact") * lit(0.15)).as("ndv_within_bounds"),
-            col("n_rows"))
-          .localCheckpoint()
-        graft.api.StoreIO.delete(s, dir)
-        got.orderBy("column")
+        withStore(s, "analyze") { dir =>
+          val t = ordersBatches(s, d, 2)
+          (0 to 1).foreach(commitBatch(t, dir, _))
+          val nCols = graft.api.MergeSql.runMaintenance(s, s"ANALYZE '$dir'")
+          require(nCols == 3L, s"ANALYZE must cover 3 columns, got $nCols")
+          val (seq, stats) = graft.api.UpsertStore.tableStats(s, dir)
+            .getOrElse(sys.error("ANALYZE must persist stats"))
+          require(seq == 2L, s"stats must be tagged with the analyzed seq, got $seq")
+          val exact = graft.api.Stats.columnStats(
+              graft.api.UpsertStore.read(s, dir),
+              Seq("o_custkey", "o_orderkey", "o_totalprice"), exactNdv = true)
+            .select(col("column"), col("ndv").as("ndv_exact"))
+          stats.join(exact, Seq("column"))
+            .select(col("column"), col("n_nonnull"),
+              (abs(col("ndv") - col("ndv_exact")) <=
+                col("ndv_exact") * lit(0.15)).as("ndv_within_bounds"),
+              col("n_rows"))
+        }.orderBy("column")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 2 AS b FROM orders), " +
         "m AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
