@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 /** True Structured Streaming forms of the §2-E operators (the batch
   * equivalents used by the t2 oracle live in graft.ops.StreamingOps; the
@@ -308,20 +308,40 @@ object Streams {
       }
   }
 
-  /** Streaming CDC upsert sink via foreachBatch: each micro-batch merges
-    * into the key-bucketed [[graft.api.UpsertStore]] — latest record per
-    * key wins (batch rows override stored rows; within a batch the
-    * greatest `versionCol` wins) under a (run_key, batch_id) ledger
-    * entry, so an at-least-once foreachBatch redelivery is a full
-    * no-op. Per-batch work is O(batch + touched-bucket data), never
-    * O(table), and every bucket promotion is the staged-write +
-    * atomic-rename swap (Hadoop FS throughout — HDFS/S3 stateDirs
-    * work); the store is the parquet-native stand-in for a MERGE INTO
-    * target (Delta/Iceberg) on a cluster. Read the table back with
-    * `UpsertStore.read`.
+  /** The skeleton of every micro-batch sink here: append mode, the
+    * checkpoint at `checkpointDir`, `trigger` (one AvailableNow drain by
+    * default), and `perBatch(batch, batchId)` per micro-batch.
     */
+  private def sink(
+      stream: DataFrame,
+      checkpointDir: String,
+      trigger: Trigger = Trigger.AvailableNow())(
+      perBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        perBatch(batch, batchId)
+      }
+      .start()
+
+  /** Writes one micro-batch's `out` to `dir` partitioned by (run_key,
+    * batch_id) with dynamic partition overwrite: foreachBatch is
+    * at-least-once, and a replayed batch replaces its own partition
+    * instead of appending a duplicate.
+    */
+  private def writeBatchPartition(
+      out: DataFrame, dir: String, runKey: String, batchId: Long): Unit =
+    out.withColumn("run_key", lit(runKey))
+      .withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("run_key", "batch_id")
+      .parquet(dir)
+
   /** Retry `body` while the store writer lease is held elsewhere,
-    * bounded by `maxWaitMs`. A LeaseHeldException must neither escape
+    * bounded in time. A LeaseHeldException must neither escape
     * foreachBatch (an uncaught exception TERMINATES the query, and
     * under Trigger.AvailableNow there is no next trigger to retry on —
     * a restart within a crashed predecessor's lease TTL would fail
@@ -329,10 +349,11 @@ object Streams {
     * committed and silently loses its rows). So the retry lives here,
     * inside the batch: sleep-and-retry until the lease frees or goes
     * stale enough to break, and past the deadline propagate — a loud
-    * query failure, replayed on restart.
+    * query failure, replayed on restart. The wait outlasts the lease's
+    * stale TTL `leaseStaleMs` by 30 s, and is at least 90 s.
     */
-  private def retryLease[A](maxWaitMs: Long)(body: => A): A = {
-    val deadline = System.currentTimeMillis() + maxWaitMs
+  private def retryLease[A](leaseStaleMs: Long)(body: => A): A = {
+    val deadline = System.currentTimeMillis() + math.max(90000L, leaseStaleMs + 30000L)
     @annotation.tailrec
     def loop(): A = {
       val r =
@@ -363,28 +384,33 @@ object Streams {
     */
   private val soleWriterLeaseMs = 60000L
 
+  /** Streaming CDC upsert sink via foreachBatch: each micro-batch merges
+    * into the key-bucketed [[graft.api.UpsertStore]] — latest record per
+    * key wins (batch rows override stored rows; within a batch the
+    * greatest `versionCol` wins) under a (run_key, batch_id) ledger
+    * entry, so an at-least-once foreachBatch redelivery is a full
+    * no-op. Per-batch work is O(batch + touched-bucket data), never
+    * O(table), and every bucket promotion is the staged-write +
+    * atomic-rename swap (Hadoop FS throughout — HDFS/S3 stateDirs
+    * work); the store is the parquet-native stand-in for a MERGE INTO
+    * target (Delta/Iceberg) on a cluster. Read the table back with
+    * `UpsertStore.read`.
+    */
   def upsertSink(
       stream: DataFrame,
       key: String,
       versionCol: String,
       tableDir: String,
       checkpointDir: String,
-      leaseStaleMs: Long = soleWriterLeaseMs)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      leaseStaleMs: Long = soleWriterLeaseMs): StreamingQuery = {
     val runKey = runKeyOf(checkpointDir)
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        retryLease(math.max(90000L, leaseStaleMs + 30000L)) {
-          graft.api.UpsertStore.update(
-            batch.toDF(), tableDir, key, versionCol,
-            batchId = Some(s"$runKey-$batchId"), leaseStaleMs = leaseStaleMs)
-        }
-        ()
-      }
-      .start()
+    sink(stream, checkpointDir) { (batch, batchId) =>
+      retryLease(leaseStaleMs) {
+        graft.api.UpsertStore.update(
+          batch, tableDir, key, versionCol,
+          batchId = Some(s"$runKey-$batchId"), leaseStaleMs = leaseStaleMs)
+      }: Unit
+    }
   }
 
   /** Streaming MERGE-SQL sink: each micro-batch registers as the MERGE
@@ -400,26 +426,19 @@ object Streams {
       mergeSql: String,
       checkpointDir: String,
       nBuckets: Int = 32,
-      leaseStaleMs: Long = soleWriterLeaseMs)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      leaseStaleMs: Long = soleWriterLeaseMs): StreamingQuery = {
     val stmt = graft.api.MergeSql.parse(mergeSql) // fail fast, not per batch
     require(!stmt.source.startsWith("'"),
       "mergeSink needs a view-name USING source (the sink binds each batch to it)")
     val runKey = runKeyOf(checkpointDir)
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.createOrReplaceTempView(stmt.source)
-        retryLease(math.max(90000L, leaseStaleMs + 30000L)) {
-          graft.api.MergeSql.run(batch.sparkSession, mergeSql,
-            nBuckets = nBuckets, batchId = Some(s"$runKey-$batchId"),
-            leaseStaleMs = leaseStaleMs)
-        }
-        ()
-      }
-      .start()
+    sink(stream, checkpointDir) { (batch, batchId) =>
+      batch.createOrReplaceTempView(stmt.source)
+      retryLease(leaseStaleMs) {
+        graft.api.MergeSql.run(batch.sparkSession, mergeSql,
+          nBuckets = nBuckets, batchId = Some(s"$runKey-$batchId"),
+          leaseStaleMs = leaseStaleMs)
+      }: Unit
+    }
   }
 
   /** Streaming erasure sink — a GDPR deletion queue applied to the
@@ -434,22 +453,15 @@ object Streams {
       key: String,
       tableDir: String,
       checkpointDir: String,
-      leaseStaleMs: Long = soleWriterLeaseMs)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      leaseStaleMs: Long = soleWriterLeaseMs): StreamingQuery = {
     val runKey = runKeyOf(checkpointDir)
-    keyStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        retryLease(math.max(90000L, leaseStaleMs + 30000L)) {
-          graft.api.UpsertStore.deleteKeys(
-            batch.toDF(), tableDir, key,
-            batchId = Some(s"$runKey-$batchId"), leaseStaleMs = leaseStaleMs)
-        }
-        ()
-      }
-      .start()
+    sink(keyStream, checkpointDir) { (batch, batchId) =>
+      retryLease(leaseStaleMs) {
+        graft.api.UpsertStore.deleteKeys(
+          batch, tableDir, key,
+          batchId = Some(s"$runKey-$batchId"), leaseStaleMs = leaseStaleMs)
+      }: Unit
+    }
   }
 
   /** Dead-letter-queue split sink: every micro-batch is validated once,
@@ -464,22 +476,16 @@ object Streams {
       reasonsCol: Column,
       goodDir: String,
       badDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val tagged = batch.withColumn("__reasons", reasonsCol).cache()
-        tagged.where("__reasons = ''").drop("__reasons")
-          .write.mode("append").parquet(goodDir)
-        tagged.where("__reasons <> ''")
-          .withColumnRenamed("__reasons", "reject_reasons")
-          .write.mode("append").parquet(badDir)
-        tagged.unpersist()
-        ()
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    sink(stream, checkpointDir) { (batch, _) =>
+      val tagged = batch.withColumn("__reasons", reasonsCol).cache()
+      tagged.where("__reasons = ''").drop("__reasons")
+        .write.mode("append").parquet(goodDir)
+      tagged.where("__reasons <> ''")
+        .withColumnRenamed("__reasons", "reject_reasons")
+        .write.mode("append").parquet(badDir)
+      tagged.unpersist(): Unit
+    }
 
   /** Streaming DQ monitoring — each micro-batch's expectation panel
     * (caller-supplied `panel`: batch -> (expectation, metric_ppm,
@@ -497,23 +503,17 @@ object Streams {
       stream: DataFrame,
       historyDir: String,
       checkpointDir: String)(
-      panel: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery = {
+      panel: DataFrame => DataFrame): StreamingQuery = {
     val runKey = runKeyOf(checkpointDir)
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // same single-writer lease posture as upsertSink: short TTL,
-        // in-batch retry across a crashed predecessor's lease window
-        retryLease(90000L) {
-          graft.api.DqHistory.append(
-            panel(batch.toDF()), historyDir, runSeq = batchId,
-            batchId = Some(s"$runKey-$batchId"), leaseStaleMs = 60000L)
-        }
-        ()
-      }
-      .start()
+    sink(stream, checkpointDir) { (batch, batchId) =>
+      // same single-writer lease posture as upsertSink: short TTL,
+      // in-batch retry across a crashed predecessor's lease window
+      retryLease(soleWriterLeaseMs) {
+        graft.api.DqHistory.append(
+          panel(batch), historyDir, runSeq = batchId,
+          batchId = Some(s"$runKey-$batchId"), leaseStaleMs = soleWriterLeaseMs)
+      }: Unit
+    }
   }
 
   /** Streaming ingestion dedup — the [[graft.api.DedupIndex]]
@@ -545,29 +545,17 @@ object Streams {
       docs: DataFrame,
       indexDir: String,
       verdictDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     val runKey = runKeyOf(checkpointDir)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // pin the verdicts before update() swaps index generations, so
-        // nothing downstream re-reads files the swap retires
-        val verdicts = graft.api.DedupIndex.check(batch, indexDir).localCheckpoint()
-        verdicts
-          .withColumn("run_key", lit(runKey))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("run_key", "batch_id")
-          .parquet(verdictDir)
-        val accepted = batch.join(
-          verdicts.where("verdict = 'keep'").select("doc_id"), "doc_id")
-        graft.api.DedupIndex.update(accepted, indexDir)
-        ()
-      }
-      .start()
+    sink(docs, checkpointDir) { (batch, batchId) =>
+      // pin the verdicts before update() swaps index generations, so
+      // nothing downstream re-reads files the swap retires
+      val verdicts = graft.api.DedupIndex.check(batch, indexDir).localCheckpoint()
+      writeBatchPartition(verdicts, verdictDir, runKey, batchId)
+      val accepted = batch.join(
+        verdicts.where("verdict = 'keep'").select("doc_id"), "doc_id")
+      graft.api.DedupIndex.update(accepted, indexDir): Unit
+    }
   }
 
   /** Stable key for one logical stream run: the checkpoint IS the
@@ -595,23 +583,11 @@ object Streams {
   def checksumSink(
       docs: DataFrame,
       digestDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     val runKey = runKeyOf(checkpointDir)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.CoreOps.rowDigest(batch.toDF())
-          .withColumn("run_key", lit(runKey))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("run_key", "batch_id")
-          .parquet(digestDir)
-        ()
-      }
-      .start()
+    sink(docs, checkpointDir) { (batch, batchId) =>
+      writeBatchPartition(graft.ops.CoreOps.rowDigest(batch), digestDir, runKey, batchId)
+    }
   }
 
   /** Fold the digests [[checksumSink]] wrote into the corpus digest
@@ -635,23 +611,11 @@ object Streams {
   def cmsSink(
       docs: DataFrame,
       cmsDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     val runKey = runKeyOf(checkpointDir)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.LlmText.cmsCounters(batch.toDF())
-          .withColumn("run_key", lit(runKey))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("run_key", "batch_id")
-          .parquet(cmsDir)
-        ()
-      }
-      .start()
+    sink(docs, checkpointDir) { (batch, batchId) =>
+      writeBatchPartition(graft.ops.LlmText.cmsCounters(batch), cmsDir, runKey, batchId)
+    }
   }
 
   /** Fold the per-batch counter tables [[cmsSink]] wrote into the
@@ -671,16 +635,10 @@ object Streams {
   def kmvSink(
       docs: DataFrame,
       storeDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.api.SketchStore.updateKmv(batch.toDF(), storeDir)
-        ()
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    sink(docs, checkpointDir) { (batch, _) =>
+      graft.api.SketchStore.updateKmv(batch, storeDir): Unit
+    }
 
   /** Streaming near-dup signature ingestion — the streaming twin of the
     * nightly `llm_minhash_incremental` gate: each micro-batch folds its
@@ -694,18 +652,11 @@ object Streams {
   def minhashSink(
       docs: DataFrame,
       storeDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     val runKey = runKeyOf(checkpointDir)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.api.MinHashIndex.update(
-          batch.toDF(), storeDir, Some(s"$runKey-$batchId"))
-        ()
-      }
-      .start()
+    sink(docs, checkpointDir) { (batch, batchId) =>
+      graft.api.MinHashIndex.update(batch, storeDir, Some(s"$runKey-$batchId")): Unit
+    }
   }
 
   /** Streaming ANN-index ingestion — the streaming twin of the batch
@@ -724,18 +675,11 @@ object Streams {
   def annSink(
       vectors: DataFrame,
       indexDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     val runKey = runKeyOf(checkpointDir)
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.api.AnnIndex.update(
-          batch.toDF(), indexDir, Some(s"$runKey-$batchId"))
-        ()
-      }
-      .start()
+    sink(vectors, checkpointDir) { (batch, batchId) =>
+      graft.api.AnnIndex.update(batch, indexDir, Some(s"$runKey-$batchId")): Unit
+    }
   }
 
   /** Streaming session-table maintenance — the streaming twin of the
@@ -750,18 +694,11 @@ object Streams {
   def sessionSink(
       events: DataFrame,
       storeDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     val runKey = runKeyOf(checkpointDir)
-    events.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.api.SessionStore.update(
-          batch.toDF(), storeDir, Some(s"$runKey-$batchId"))
-        ()
-      }
-      .start()
+    sink(events, checkpointDir) { (batch, batchId) =>
+      graft.api.SessionStore.update(batch, storeDir, Some(s"$runKey-$batchId")): Unit
+    }
   }
 
   /** Streaming twin of the classifier gate: score arriving vectors
@@ -779,26 +716,15 @@ object Streams {
       vectors: DataFrame,
       weights: Array[Double],
       scoreDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     val runKey = runKeyOf(checkpointDir)
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.toDF()
-          .withColumn("xq", graft.api.Models.xq)
-          .withColumn("s_fp", graft.api.Models.sigmoidFp(weights))
-          .drop("xq")
-          .withColumn("run_key", lit(runKey))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("run_key", "batch_id")
-          .parquet(scoreDir)
-        ()
-      }
-      .start()
+    sink(vectors, checkpointDir) { (batch, batchId) =>
+      val scored = batch
+        .withColumn("xq", graft.api.Models.xq)
+        .withColumn("s_fp", graft.api.Models.sigmoidFp(weights))
+        .drop("xq")
+      writeBatchPartition(scored, scoreDir, runKey, batchId)
+    }
   }
 
   /** Incremental consumption of a parquet directory (snapflow's "process
@@ -895,16 +821,11 @@ object Streams {
       cursorPath: String,
       outDir: String,
       checkpointDir: String,
-      pollIntervalMs: Long = 1000L): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(pollIntervalMs))
-      .foreachBatch { (_: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        changefeedRelayOnce(spark, dir, key, cursorPath, outDir): Unit
-      }
-      .start()
+      pollIntervalMs: Long = 1000L): StreamingQuery =
+    sink(spark.readStream.format("rate").option("rowsPerSecond", 1).load(),
+        checkpointDir, Trigger.ProcessingTime(pollIntervalMs)) { (_, _) =>
+      changefeedRelayOnce(spark, dir, key, cursorPath, outDir): Unit
+    }
 
   /** CONTINUOUS incremental view maintenance: a rate ticker drives
     * [[graft.api.MatView.refresh]] per trigger, so the materialized
@@ -923,15 +844,10 @@ object Streams {
       groupCols: Seq[(String, Column)],
       sumCols: Seq[String],
       checkpointDir: String,
-      pollIntervalMs: Long = 1000L): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(pollIntervalMs))
-      .foreachBatch { (_: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.api.MatView.refresh(
-          spark, storeDir, key, viewDir, groupCols, sumCols): Unit
-      }
-      .start()
+      pollIntervalMs: Long = 1000L): StreamingQuery =
+    sink(spark.readStream.format("rate").option("rowsPerSecond", 1).load(),
+        checkpointDir, Trigger.ProcessingTime(pollIntervalMs)) { (_, _) =>
+      graft.api.MatView.refresh(
+        spark, storeDir, key, viewDir, groupCols, sumCols): Unit
+    }
 }
