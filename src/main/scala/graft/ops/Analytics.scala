@@ -3,7 +3,6 @@ package graft.ops
 import graft.{Op, Tables => T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Statistical analytics over the relational and event tables:

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.functions.KmvAggregator
 import graft.{Op, Tables => T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

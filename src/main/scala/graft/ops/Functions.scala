@@ -3,7 +3,7 @@ package graft.ops
 import graft.{Op, Tables => T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType, DoubleType}
+import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType}
 
 /** SURVEY.md §2-D — scalar function families, one combined query per family.
   * Return types are aligned with DuckDB explicitly (DuckDB length/year/rank

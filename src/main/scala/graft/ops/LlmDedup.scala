@@ -5,7 +5,6 @@ import graft.{Op, Tables => T}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
 /** LLM training-data deduplication: exact, prefix, URL and substring
   * dedup, MinHash + LSH and SimHash near-dup detection, n-gram Jaccard,

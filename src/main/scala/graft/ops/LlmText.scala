@@ -1,11 +1,9 @@
 package graft.ops
 
-import graft.functions.KmvAggregator
 import graft.{Op, Tables => T}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
 /** LLM training-data text operators: tokenization and BPE, language
   * models and n-gram statistics, language ID, quality scores and gates,
@@ -1044,7 +1042,7 @@ object LlmText {
     // Shard-packing efficiency: per-language utilization of the
     // 2000-token shard budget from the contiguous packing — the audit a
     // training loader runs before accepting a dataset layout. Reuses the
-    // range-bucketed two-level packing (LlmOps.packShards), so the
+    // range-bucketed two-level packing ([[packShards]]), so the
     // cumulative window never holds a whole language in one partition.
     Op("llm_packing_efficiency",
       (s, d) => {

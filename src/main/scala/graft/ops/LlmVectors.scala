@@ -1,11 +1,9 @@
 package graft.ops
 
-import graft.functions.KmvAggregator
 import graft.{Op, Tables => T}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
 /** LLM embedding operators: similarity search (brute-force top-k,
   * k-NN join, IVF and LSH ANN, product quantization), k-means, PCA and

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.{Op, Tables => T}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 

@@ -1,9 +1,7 @@
 package graft.ops
 
 import graft.{Op, Tables => T}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SURVEY.md §2-D — the store and DML operators: MERGE/DELETE/UPDATE

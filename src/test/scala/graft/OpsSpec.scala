@@ -14,6 +14,9 @@ class OpsSpec extends AnyFunSuite {
 
   test("registry: keys unique, every oracle belongs to a query") {
     assert(Registry.all.map(_.key).distinct.size == Registry.all.size)
+    // pinned sizes: regrouping the op modules must not drop an op
+    assert(Registry.all.size == 355)
+    assert(SparkEntry.oracleSql.size == 355)
     val keys = SparkEntry.queries.keySet
     assert(SparkEntry.oracleSql.keySet.subsetOf(keys))
     // full-coverage invariant: every operator is DuckDB-oracle-checked,

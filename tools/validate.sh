@@ -19,18 +19,7 @@ done
 echo "== determinism (second run @ sf0.01, value compare) =="
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 target/validate_det" 2>&1 \
   | grep -E '\[verify\].*failed' && fail=1
-python3 - <<'EOF' || fail=1
-import duckdb, pathlib, sys
-con = duckdb.connect()
-bad = []
-for q in sorted(p.name for p in pathlib.Path('target/validate_sf0.01').iterdir() if p.is_dir()):
-    a = con.execute(f"SELECT * FROM read_parquet('target/validate_sf0.01/{q}/*.parquet')").fetchall()
-    b = con.execute(f"SELECT * FROM read_parquet('target/validate_det/{q}/*.parquet')").fetchall()
-    if a != b:
-        bad.append(q)
-print('determinism diffs:', bad or 'none')
-sys.exit(1 if bad else 0)
-EOF
+python3 tools/same_outputs.py target/validate_sf0.01 target/validate_det || fail=1
 
 echo "== bench @ sf0.1 =="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
