@@ -72,8 +72,8 @@ object Tables {
   /** `events` with a 1e-6 fixed-point `value` (`v`) and epoch-microsecond
     * `ts` (`us`): the event-family projection. Its DuckDB twin is [[oEv]].
     */
-  def eventsFp(s: SparkSession, d: String): DataFrame =
-    events(s, d).select(col("event_type"), col("user_id"), col("event_id"),
+  def eventsFp(spark: SparkSession, dir: String): DataFrame =
+    events(spark, dir).select(col("event_type"), col("user_id"), col("event_id"),
       expr("unix_micros(CAST(ts AS TIMESTAMP))").as("us"),
       expr("CAST(floor(value * 1000000) AS BIGINT)").as("v"))
 

@@ -79,8 +79,7 @@ object SketchStore {
   /** Per-lang KMV sketch rows of a batch. */
   def kmvOf(docs: DataFrame): DataFrame =
     docs.where("lang IS NOT NULL AND text IS NOT NULL")
-      .select(col("lang"), expr(
-        graft.Tables.h60("text")).as("h"))
+      .select(col("lang"), expr(graft.Tables.h60("text")).as("h"))
       .groupBy("lang")
       .agg(graft.functions.KmvAggregator.kmv(K)(col("h")).as("mins"))
 
@@ -96,8 +95,7 @@ object SketchStore {
     val mins = docs.where("text IS NOT NULL")
       .select(explode(split(col("text"), " ")).as("tok"))
       .where("tok <> ''")
-      .select(expr(
-        graft.Tables.h60("tok")).as("h"))
+      .select(expr(graft.Tables.h60("tok")).as("h"))
       .agg(graft.functions.KmvAggregator.kmv(K)(col("h")).as("mins"))
       .head().getSeq[Long](0)
     if (mins.length < K) mins.length.toLong
