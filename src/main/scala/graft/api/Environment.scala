@@ -116,23 +116,15 @@ final class Environment(val spark: SparkSession) {
 object RunLog {
   final case class Entry(stage: String, runSeq: Long, watermark: Long, rowsConsumed: Long)
 
-  /** Hadoop-FS existence probe (NOT java.io.File — a stateDir on
-    * HDFS/S3 must read its own history, or runIncremental silently
-    * resets to run_seq 1 and re-consumes from Long.MinValue).
-    */
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val fs = StoreIO.fs(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    fs.exists(p) && fs.getFileStatus(p).isDirectory &&
-      fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-  }
-
   def read(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("stage", StringType), StructField("run_seq", LongType),
       StructField("watermark", LongType), StructField("rows_consumed", LongType)))
-    if (exists(spark, dir)) spark.read.schema(schema).parquet(dir)
+    // Hadoop-FS probe (NOT java.io.File — a stateDir on HDFS/S3 must
+    // read its own history, or runIncremental silently resets to
+    // run_seq 1 and re-consumes from Long.MinValue)
+    if (StoreIO.hasParquet(spark, dir)) spark.read.schema(schema).parquet(dir)
     else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
   }
 

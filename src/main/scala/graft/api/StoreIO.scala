@@ -25,6 +25,22 @@ object StoreIO {
   def delete(spark: SparkSession, path: String): Unit =
     fs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true): Unit
 
+  /** Whether `dir` holds any `*.parquet` file at any depth: a driver-side
+    * listing, so a reader can tell an empty output from a readable one
+    * without a failing `spark.read` (whose analysis error Spark's
+    * listeners log).
+    */
+  def hasParquet(spark: SparkSession, dir: String): Boolean = {
+    val f = fs(spark, dir)
+    val p = new org.apache.hadoop.fs.Path(dir)
+    f.exists(p) && {
+      val it = f.listFiles(p, true)
+      var found = false
+      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
+      found
+    }
+  }
+
   /** A stored generation, with the crash-window fallback of [[genPath]]. */
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(genPath(spark, s"$dir/$name"))

@@ -57,13 +57,7 @@ object LlmDedup {
     val seeds = seedRows.zipWithIndex
       .map { case (r, i) => (i, r.getSeq[Double](1)) }.toSeq
       .toDF("c_id", "c_vec")
-    val d2u = "aggregate(zip_with(u, c_vec, (x, c) -> (x - c) * (x - c)), " +
-      "CAST(0 AS DOUBLE), (a, v) -> a + v)"
-    val assigned = unit.crossJoin(broadcast(seeds))
-      .withColumn("d2", expr(d2u))
-      .withColumn("rnc", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("d2"), col("c_id"))))
-      .where("rnc = 1")
+    val assigned = graft.api.AnnIndex.nearest(unit, seeds, Nil, "u", "vec_id", 1)
       .select(col("vec_id"), col("label"), col("embedding"),
         col("c_id").as("cell"), col("d2"))
       .localCheckpoint()
@@ -662,7 +656,7 @@ object LlmDedup {
     // broadcast.
     Op("llm_embedding_neardup",
       (s, d) => neardupCellCandidates(s, d)
-        .withColumn("sim", LlmOps.simCol("e1", "e2"))
+        .withColumn("sim", graft.api.AnnIndex.cosine("e1", "e2"))
         .where(s"sim >= $neardupThr")
         .select("v1", "v2", "sim")
         .orderBy("v1", "v2"),

@@ -1,118 +1,22 @@
 package graft.ops
 
 import graft.{Op, Tables => T}
+import graft.api.AnnIndex
+import graft.api.AnnIndex.{FullScan, LabelCell, LshBucket, candidates, cosine, probePanel,
+  ranked, recallAt5, topCosine, topK}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** LLM embedding operators: similarity search (brute-force top-k,
   * k-NN join, IVF and LSH ANN, product quantization), k-means, PCA and
   * whitening, retrieval and its evaluation, and the linear classifiers.
+  * Each search is a choice of parameters on the [[graft.api.AnnIndex]]
+  * core: probe panel, candidate generator, score and top-k.
   *
   * Float parity: cosine similarity is an explicit sequential left fold in
-  * DOUBLE on both engines ([[LlmOps.sim]] / [[LlmOps.oSim]]).
+  * DOUBLE on both engines (`cosine_sim` / [[LlmOps.oSim]]).
   */
 object LlmVectors {
-
-  /** DuckDB CTE prefix replaying [[graft.api.AnnIndex.train]]'s three
-    * unrolled fixed-point Lloyd iterations over 64-dim embeddings;
-    * terminal CTE is `c3(c_id, n, c_vec)`. Shared by llm_kmeans_train
-    * and the trained-IVF family, so the trained index's oracle IS the
-    * training oracle.
-    */
-  private[ops] def oKmeansIter(i: Int, prev: String): String =
-    s"a$i AS (SELECT e.vec_id, e.embedding, c.c_id, " +
-      "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-      "list_transform(range(1, 65), k -> " +
-      "(CAST(e.embedding[k] AS DOUBLE) - c.c_vec[k]) * " +
-      s"(CAST(e.embedding[k] AS DOUBLE) - c.c_vec[k]))), (x, y) -> x + y) AS d2 " +
-      s"FROM embeddings e, $prev c), " +
-    s"b$i AS (SELECT vec_id, embedding, c_id, " +
-      s"row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_id) AS rn FROM a$i), " +
-    s"m$i AS (SELECT c_id, embedding FROM b$i WHERE rn = 1), " +
-    s"s$i AS (SELECT c_id, t.range AS pos, " +
-      s"CAST(floor(CAST(embedding[t.range] AS DOUBLE) * 10000) AS BIGINT) AS fp FROM m$i, range(1, 65) t), " +
-    s"g$i AS (SELECT c_id, pos, CAST(SUM(fp) AS BIGINT) AS s, count(*) AS cnt FROM s$i GROUP BY c_id, pos), " +
-    s"h$i AS (SELECT c_id, max(cnt) AS n, list(s ORDER BY pos) AS ss FROM g$i GROUP BY c_id), " +
-    s"c$i AS (SELECT c_id, n, list_transform(ss, x -> CAST(x AS DOUBLE) / (10000.0 * n)) AS c_vec FROM h$i)"
-
-  private[ops] val oKmeansTrainedPrefix: String =
-    "WITH c0 AS (SELECT vec_id AS c_id, " +
-      "list_transform(embedding, x -> CAST(x AS DOUBLE)) AS c_vec " +
-      "FROM embeddings WHERE vec_id < 10), " +
-      oKmeansIter(1, "c0") + ", " + oKmeansIter(2, "c1") + ", " + oKmeansIter(3, "c2")
-
-  /** The recall audits' 32-probe panel: embeddings ordered by the md5
-    * of `vec_id`, so the panel spans the id space.
-    */
-  private def probePanel(emb: DataFrame): DataFrame = emb
-    .withColumn("hkey", expr("substring(md5(CAST(vec_id AS STRING)), 1, 8)"))
-    .orderBy("hkey", "vec_id").limit(32)
-
-  /** Per-probe top-5 `(p_id, vec_id)` by cosine over candidate rows
-    * `(p_id, p_emb, vec_id, embedding)`, ties broken by `vec_id`.
-    */
-  private def top5(cands: DataFrame): DataFrame = cands
-    .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
-    .withColumn("rn", row_number().over(
-      Window.partitionBy("p_id").orderBy(desc("sim"), col("vec_id"))))
-    .where("rn <= 5")
-    .select("p_id", "vec_id")
-
-  /** Recall@5 of an ANN search: `approx5(p_id, vec_id)`, the index's
-    * top-5 per probe, against the exact top-5 of `probes(p_id, p_emb)`
-    * over all of `emb`. One row `(n_probes, k, mean_recall,
-    * min_recall)`; mean recall says how good the index is on average,
-    * min recall exposes the worst-served probe. DuckDB side:
-    * [[oRecallAt5]].
-    */
-  private def recallAt5(emb: DataFrame, probes: DataFrame, approx5: DataFrame): DataFrame =
-    top5(emb.crossJoin(broadcast(probes)).where("vec_id <> p_id"))
-      .join(approx5.select(col("p_id"), col("vec_id"), lit(1).as("hit")),
-        Seq("p_id", "vec_id"), "left")
-      .groupBy("p_id").agg(sum(coalesce(col("hit"), lit(0))).as("hits"))
-      .agg(count(lit(1)).as("n_probes"), sum("hits").as("total_hits"),
-        min("hits").as("min_hits"))
-      .select(col("n_probes"), lit(5).as("k"),
-        expr("CAST(total_hits AS DOUBLE) / (5 * n_probes)").as("mean_recall"),
-        expr("CAST(min_hits AS DOUBLE) / 5").as("min_recall"))
-
-  /** DuckDB CTE `<name>(p_id, vec_id)`: per-probe top-5 by cosine of
-    * `s.embedding` against `pEmb` over `from`, probes aliased `p`.
-    */
-  private def oTop5(name: String, p: String, pEmb: String, from: String): String =
-    s"$name AS (SELECT p_id, vec_id FROM (SELECT $p.p_id, s.vec_id, " +
-      s"row_number() OVER (PARTITION BY $p.p_id ORDER BY ${LlmOps.oSim("s.embedding", pEmb)} DESC, s.vec_id) AS rn " +
-      s"FROM $from) WHERE rn <= 5)"
-
-  /** DuckDB side of [[recallAt5]]: the exact top-5 CTE `e`, the CTEs
-    * ending in the approximate one `a` (both top-5s are [[oTop5]]), then
-    * the hits roll-up.
-    */
-  private def oRecallAt5(e: String, a: String): String =
-    e + ", " + a + ", " +
-      "h AS (SELECT e.p_id, CAST(SUM(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits " +
-      "FROM e LEFT JOIN a ON e.p_id = a.p_id AND e.vec_id = a.vec_id GROUP BY e.p_id) " +
-      "SELECT count(*) AS n_probes, 5 AS k, " +
-      "CAST(SUM(hits) AS DOUBLE) / (5 * count(*)) AS mean_recall, " +
-      "CAST(MIN(hits) AS DOUBLE) / 5 AS min_recall FROM h"
-
-  /** DuckDB CTEs shared by the trained-IVF ops: the kmeans prefix (ends
-    * `c3`) plus the full-corpus assignment to the trained centroids.
-    * Reuses the oKmeansIter(4, c3) building block so the assignment
-    * arithmetic is textually the training arithmetic; ends with
-    * `asg(vec_id, embedding, c_id)`.
-    */
-  private[ops] val oTrainedAssign: String =
-    oKmeansTrainedPrefix + ", " + oKmeansIter(4, "c3") +
-      ", asg AS (SELECT vec_id, embedding, c_id FROM b4 WHERE rn = 1)"
-
-  /** Probe-to-centroid squared-L2 in DuckDB (64-dim, sequential fold). */
-  private def oProbeD2(pEmb: String): String =
-    "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-      "list_transform(range(1, 65), k -> " +
-      s"(CAST($pEmb[k] AS DOUBLE) - c.c_vec[k]) * " +
-      s"(CAST($pEmb[k] AS DOUBLE) - c.c_vec[k]))), (x, y) -> x + y)"
 
   /** DuckDB margin + quantized-sigmoid CTEs for logreg iteration `k`
     * reading weights from `wRef`: emits `m$k` and `s$k`. The arithmetic
@@ -173,26 +77,16 @@ object LlmVectors {
     3L -> "vector", 3L -> "scan", 3L -> "filter")
 
   // ---- shared retrieval building blocks (llm_rrf_fusion,
-  // llm_retrieval_eval): the md5-ordered 4-probe panel, the exact
-  // embedding-cosine ranking, and the token-overlap ranking over the
-  // embedded corpus. ONE definition each, so the eval op always
-  // measures exactly the rankings the fusion op fuses.
-
-  private def retrievalProbes(emb: DataFrame): DataFrame = emb
-    .withColumn("hkey", expr("substring(md5(CAST(vec_id AS STRING)), 1, 8)"))
-    .orderBy("hkey", "vec_id").limit(4)
-    .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))
-    .localCheckpoint()
+  // llm_retrieval_eval): the exact embedding-cosine ranking and the
+  // token-overlap ranking over the embedded corpus, both over the
+  // md5-ordered 4-probe panel (`probePanel(emb, 4)`). ONE definition
+  // each, so the eval op always measures exactly the rankings the
+  // fusion op fuses.
 
   /** Exact cosine top-k per probe: (p_id, id, cos_rank). */
-  private def cosRank(emb: DataFrame, probes: DataFrame, topK: Int): DataFrame = {
-    val w = Window.partitionBy("p_id").orderBy(desc("sim"), col("vec_id"))
-    emb.crossJoin(broadcast(probes)).where("vec_id <> p_id")
-      .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
-      .withColumn("cos_rank", row_number().over(w))
-      .where(s"cos_rank <= $topK")
+  private def cosRank(emb: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    topCosine(candidates(emb, probes, FullScan), k, "cos_rank")
       .select(col("p_id"), col("vec_id").as("id"), col("cos_rank"))
-  }
 
   /** Token-overlap top-k per probe over the EMBEDDED corpus (docs
     * carrying a vector, doc_id = vec_id convention): (p_id, id,
@@ -200,7 +94,7 @@ object LlmVectors {
     * one pass over the token index.
     */
   private def tokRank(s: org.apache.spark.sql.SparkSession, d: String,
-      emb: DataFrame, probes: DataFrame, topK: Int): DataFrame = {
+      emb: DataFrame, probes: DataFrame, k: Int): DataFrame = {
     val toks = T.spread(T.t(s, d, "documents"))
       .join(emb.select(col("vec_id").as("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
@@ -208,19 +102,16 @@ object LlmVectors {
     val probeToks = toks
       .join(broadcast(probes.select("p_id")), col("doc_id") === col("p_id"))
       .select("p_id", "tok")
-    val w = Window.partitionBy("p_id").orderBy(desc("overlap"), col("doc_id"))
-    toks.join(broadcast(probeToks), "tok")
-      .where("doc_id <> p_id")
-      .groupBy("p_id", "doc_id").agg(count(lit(1)).as("overlap"))
-      .withColumn("tok_rank", row_number().over(w))
-      .where(s"tok_rank <= $topK")
+    topK(toks.join(broadcast(probeToks), "tok")
+        .where("doc_id <> p_id")
+        .groupBy("p_id", "doc_id").agg(count(lit(1)).as("overlap")),
+      Seq("p_id"), Seq(desc("overlap"), col("doc_id")), k, "tok_rank")
       .select(col("p_id"), col("doc_id").as("id"), col("tok_rank"))
   }
 
   /** DuckDB twins: probe panel, cosine ranking, token ranking. */
   private val oProbes: String =
-    "pp AS (SELECT vec_id AS p_id, embedding AS p_emb FROM embeddings " +
-      "ORDER BY substr(md5(CAST(vec_id AS VARCHAR)), 1, 8), vec_id LIMIT 4)"
+    s"pp AS (SELECT vec_id AS p_id, embedding AS p_emb FROM embeddings ${AnnIndex.oProbePanel(4)})"
 
   private def oCosRank(topK: Int): String =
     "cr AS (SELECT p_id, id, cos_rank FROM (" +
@@ -281,9 +172,8 @@ object LlmVectors {
       (s, d) => {
         val emb = T.t(s, d, "embeddings")
         val probe = emb.where("vec_id = 0").select(col("embedding").as("p_emb"))
-        val scan = T.spread(emb)
-        scan.where("vec_id <> 0").crossJoin(broadcast(probe))
-          .withColumn("sim", LlmOps.simCol("embedding", "p_emb"))
+        candidates(T.spread(emb), probe, FullScan, col("vec_id") =!= 0)
+          .withColumn("sim", cosine())
           .select("vec_id", "sim")
           .orderBy(desc("sim"), col("vec_id"))
           .limit(10)
@@ -297,12 +187,10 @@ object LlmVectors {
         val emb = T.t(s, d, "embeddings")
         val probes = emb.where("vec_id < 5")
           .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
-        val w = Window.partitionBy("probe_id").orderBy(desc("sim"), col("neighbor_id"))
-        emb.crossJoin(broadcast(probes)).where("vec_id <> probe_id")
-          .withColumn("sim", LlmOps.simCol("embedding", "p_emb"))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("sim"))
-          .withColumn("rn", row_number().over(w))
-          .where("rn <= 3")
+        topK(candidates(emb, probes, FullScan, col("vec_id") =!= col("probe_id"))
+            .withColumn("sim", cosine())
+            .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("sim")),
+          Seq("probe_id"), Seq(desc("sim"), col("neighbor_id")), 3)
           .orderBy("probe_id", "rn")
       },
       Some("SELECT * FROM (SELECT probe_id, neighbor_id, sim, " +
@@ -319,8 +207,8 @@ object LlmVectors {
         val emb = T.t(s, d, "embeddings")
         val probe = emb.where("vec_id = 0")
           .select(col("embedding").as("p_emb"), col("label").as("p_label"))
-        emb.join(broadcast(probe), col("label") === col("p_label") && col("vec_id") =!= 0)
-          .withColumn("sim", LlmOps.simCol("embedding", "p_emb"))
+        candidates(emb, probe, LabelCell, col("vec_id") =!= 0)
+          .withColumn("sim", cosine())
           .select("vec_id", "label", "sim")
           .orderBy(desc("sim"), col("vec_id"))
           .limit(5)
@@ -336,25 +224,16 @@ object LlmVectors {
     // is one partition-pruned hash lookup, never a global cross join.
     Op("llm_ann_lsh",
       (s, d) => {
-        val sigExpr =
-          "aggregate(sequence(0, 7), 0, (acc, i) -> acc + CASE WHEN " +
-            "aggregate(transform(sequence(0, 63), j -> CAST(element_at(embedding, j + 1) AS DOUBLE) * " +
-            "CAST(((i * 7 + j * 13) % 11) - 5 AS DOUBLE)), CAST(0 AS DOUBLE), (a, v) -> a + v) > 0 " +
-            "THEN shiftleft(1, i) ELSE 0 END)"
-        val withSig = T.spread(T.t(s, d, "embeddings")).withColumn("bsig", expr(sigExpr))
+        val withSig = T.spread(T.t(s, d, "embeddings")).withColumn("bsig", expr(AnnIndex.bsig))
         val probe = withSig.where("vec_id = 0")
           .select(col("embedding").as("p_emb"), col("bsig").as("p_sig"))
-        withSig.join(broadcast(probe), col("bsig") === col("p_sig") && col("vec_id") =!= 0)
-          .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
+        candidates(withSig, probe, LshBucket(0), col("vec_id") =!= 0)
+          .withColumn("sim", cosine())
           .select("vec_id", "bsig", "sim")
           .orderBy(desc("sim"), col("vec_id"))
           .limit(5)
       },
-      Some("WITH s AS (SELECT vec_id, embedding, CAST(list_sum(list_transform(range(0, 8), i -> " +
-        "CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        "list_transform(range(0, 64), j -> CAST(embedding[j + 1] AS DOUBLE) * " +
-        "CAST(((i * 7 + j * 13) % 11) - 5 AS DOUBLE))), (a, v) -> a + v) > 0 " +
-        "THEN (1 << i) ELSE 0 END)) AS INTEGER) AS bsig FROM embeddings), " +
+      Some(s"WITH ${AnnIndex.oLshSig}, " +
         "p AS (SELECT embedding AS p_emb, bsig AS p_sig FROM s WHERE vec_id = 0) " +
         s"SELECT vec_id, bsig, ${LlmOps.oSim("embedding", "p_emb")} AS sim " +
         "FROM s, p WHERE bsig = p_sig AND vec_id <> 0 ORDER BY sim DESC, vec_id LIMIT 5")),
@@ -368,29 +247,17 @@ object LlmVectors {
     // appears.
     Op("llm_ann_refine",
       (s, d) => {
-        val sigExpr =
-          "aggregate(sequence(0, 7), 0, (acc, i) -> acc + CASE WHEN " +
-            "aggregate(transform(sequence(0, 63), j -> CAST(element_at(embedding, j + 1) AS DOUBLE) * " +
-            "CAST(((i * 7 + j * 13) % 11) - 5 AS DOUBLE)), CAST(0 AS DOUBLE), (a, v) -> a + v) > 0 " +
-            "THEN shiftleft(1, i) ELSE 0 END)"
-        val withSig = T.spread(T.t(s, d, "embeddings")).withColumn("bsig", expr(sigExpr))
-        val probes = withSig.where("vec_id = 0")
-          .select(col("embedding").as("p_emb"),
-            explode(expr("array_union(array(bsig), transform(sequence(0, 7), i -> bsig ^ shiftleft(1, i)))"))
-              .as("cand_sig"))
-        withSig.join(broadcast(probes), col("bsig") === col("cand_sig") && col("vec_id") =!= 0)
-          .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
+        val withSig = T.spread(T.t(s, d, "embeddings")).withColumn("bsig", expr(AnnIndex.bsig))
+        val probe = withSig.where("vec_id = 0")
+          .select(col("embedding").as("p_emb"), col("bsig").as("p_sig"))
+        candidates(withSig, probe, LshBucket(1), col("vec_id") =!= 0)
+          .withColumn("sim", cosine())
           .select("vec_id", "bsig", "sim")
           .orderBy(desc("sim"), col("vec_id"))
           .limit(5)
       },
-      Some("WITH s AS (SELECT vec_id, embedding, CAST(list_sum(list_transform(range(0, 8), i -> " +
-        "CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        "list_transform(range(0, 64), j -> CAST(embedding[j + 1] AS DOUBLE) * " +
-        "CAST(((i * 7 + j * 13) % 11) - 5 AS DOUBLE))), (a, v) -> a + v) > 0 " +
-        "THEN (1 << i) ELSE 0 END)) AS INTEGER) AS bsig FROM embeddings), " +
-        "p AS (SELECT embedding AS p_emb, unnest(list_prepend(bsig, " +
-        "list_transform(range(0, 8), i -> xor(bsig, 1 << i)))) AS cand_sig " +
+      Some(s"WITH ${AnnIndex.oLshSig}, " +
+        s"p AS (SELECT embedding AS p_emb, unnest(${AnnIndex.oHamming1("bsig")}) AS cand_sig " +
         "FROM s WHERE vec_id = 0) " +
         s"SELECT vec_id, bsig, ${LlmOps.oSim("embedding", "p_emb")} AS sim " +
         "FROM s, p WHERE bsig = cand_sig AND vec_id <> 0 ORDER BY sim DESC, vec_id LIMIT 5")),
@@ -406,12 +273,12 @@ object LlmVectors {
     // rational, hence the same double everywhere. Clusters that lose all
     // members drop out on both engines.
     Op("llm_kmeans_train",
-      (s, d) => graft.api.AnnIndex.trainFor(s, d, k = 10, iters = 3)
+      (s, d) => AnnIndex.trainFor(s, d, k = 10, iters = 3)
         .select(col("c_id"), col("n"),
           expr("element_at(c_vec, 1)").as("c1"),
           expr("element_at(c_vec, 2)").as("c2"))
         .orderBy("c_id"),
-      Some(oKmeansTrainedPrefix +
+      Some(AnnIndex.oKmeansTrainedPrefix +
         " SELECT c_id, n, c_vec[1] AS c1, c_vec[2] AS c2 FROM c3 ORDER BY c_id")),
 
     // one Lloyd/k-means iteration (the IVF coarse-quantizer training
@@ -494,12 +361,7 @@ object LlmVectors {
         val probes = emb.where("vec_id < 3")
           .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"),
             col("label").as("p_label"))
-        emb.crossJoin(broadcast(probes))
-          .where("label <> p_label")
-          .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("p_id").orderBy(desc("sim"), col("vec_id"))))
-          .where("rn <= 3")
+        topCosine(candidates(emb, probes, FullScan, col("label") =!= col("p_label")), 3)
           .select(col("p_id"), expr("CAST(rn AS INT)").as("rn"),
             col("vec_id").as("neg_id"), col("label").as("neg_label"), col("sim"))
           .orderBy("p_id", "rn")
@@ -547,34 +409,20 @@ object LlmVectors {
     // by probe id (bounded panel, fully parallel).
     Op("llm_ann_recall_audit",
       (s, d) => {
-        val sigExpr =
-          "aggregate(sequence(0, 7), 0, (acc, i) -> acc + CASE WHEN " +
-            "aggregate(transform(sequence(0, 63), j -> CAST(element_at(embedding, j + 1) AS DOUBLE) * " +
-            "CAST(((i * 7 + j * 13) % 11) - 5 AS DOUBLE)), CAST(0 AS DOUBLE), (a, v) -> a + v) > 0 " +
-            "THEN shiftleft(1, i) ELSE 0 END)"
-        val emb = T.spread(T.t(s, d, "embeddings")).withColumn("bsig", expr(sigExpr))
-        val probes = probePanel(emb)
-          .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"),
-            col("bsig").as("p_sig"))
+        val emb = T.spread(T.t(s, d, "embeddings")).withColumn("bsig", expr(AnnIndex.bsig))
+        val probes = probePanel(emb, 32, col("bsig").as("p_sig"))
         // multi-probe candidates: the probe's own bucket plus all 8
         // Hamming-1 buckets — audits the same candidate generation the
-        // production llm_ann_lsh/llm_ann_refine index uses
-        val variants = probes.withColumn("p_probe", explode(expr(
-          "concat(array(p_sig), transform(sequence(0, 7), i -> CAST(p_sig ^ shiftleft(1, i) AS INT)))")))
-        recallAt5(emb, probes, top5(emb.join(broadcast(variants),
-          col("bsig") === col("p_probe") && col("vec_id") =!= col("p_id"))))
+        // production llm_ann_refine index uses
+        recallAt5(emb, probes,
+          topCosine(candidates(emb, probes, LshBucket(1)), 5))
       },
-      Some("WITH s AS (SELECT vec_id, embedding, CAST(list_sum(list_transform(range(0, 8), i -> " +
-        "CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        "list_transform(range(0, 64), j -> CAST(embedding[j + 1] AS DOUBLE) * " +
-        "CAST(((i * 7 + j * 13) % 11) - 5 AS DOUBLE))), (a, v) -> a + v) > 0 " +
-        "THEN (1 << i) ELSE 0 END)) AS INTEGER) AS bsig FROM embeddings), " +
-        "p AS (SELECT vec_id AS p_id, embedding AS p_emb, bsig AS p_sig FROM s " +
-        "ORDER BY substr(md5(CAST(vec_id AS VARCHAR)), 1, 8), vec_id LIMIT 32), " +
-        oRecallAt5(oTop5("e", "p", "p_emb", "s, p WHERE s.vec_id <> p.p_id"),
+      Some(s"WITH ${AnnIndex.oLshSig}, " +
+        s"p AS (SELECT vec_id AS p_id, embedding AS p_emb, bsig AS p_sig FROM s ${AnnIndex.oProbePanel(32)}), " +
+        AnnIndex.oRecallAt5(AnnIndex.oTop5("e", "p", "p_emb", "s, p WHERE s.vec_id <> p.p_id"),
           "pv AS (SELECT p_id, p_emb, unnest(list_prepend(p_sig, " +
             "list_transform(range(0, 8), i -> xor(p_sig, (1 << i))))) AS p_probe FROM p), " +
-            oTop5("a", "pv", "p_emb", "s JOIN pv ON s.bsig = pv.p_probe AND s.vec_id <> pv.p_id")))),
+            AnnIndex.oTop5("a", "pv", "p_emb", "s JOIN pv ON s.bsig = pv.p_probe AND s.vec_id <> pv.p_id")))),
 
     // IVF recall audit over the same 32-probe panel as the LSH one: the
     // IVF index prunes the search to the probe's own cell (= label
@@ -585,16 +433,14 @@ object LlmVectors {
     Op("llm_ann_ivf_recall_audit",
       (s, d) => {
         val emb = T.spread(T.t(s, d, "embeddings"))
-        val probes = probePanel(emb)
-          .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"),
-            col("label").as("p_label"))
-        recallAt5(emb, probes, top5(emb.join(broadcast(probes),
-          col("label") === col("p_label") && col("vec_id") =!= col("p_id"))))
+        val probes = probePanel(emb, 32, col("label").as("p_label"))
+        recallAt5(emb, probes,
+          topCosine(candidates(emb, probes, LabelCell), 5))
       },
       Some("WITH p AS (SELECT vec_id AS p_id, embedding AS p_emb, label AS p_label " +
-        "FROM embeddings ORDER BY substr(md5(CAST(vec_id AS VARCHAR)), 1, 8), vec_id LIMIT 32), " +
-        oRecallAt5(oTop5("e", "p", "p_emb", "embeddings s, p WHERE s.vec_id <> p.p_id"),
-          oTop5("a", "p", "p_emb", "embeddings s JOIN p ON s.label = p.p_label AND s.vec_id <> p.p_id")))),
+        s"FROM embeddings ${AnnIndex.oProbePanel(32)}), " +
+        AnnIndex.oRecallAt5(AnnIndex.oTop5("e", "p", "p_emb", "embeddings s, p WHERE s.vec_id <> p.p_id"),
+          AnnIndex.oTop5("a", "p", "p_emb", "embeddings s JOIN p ON s.label = p.p_label AND s.vec_id <> p.p_id")))),
 
     // IVF search over the TRAINED index: nearest-2-cells candidate scan
     // + exact cosine re-rank, all through graft.api.AnnIndex — the same
@@ -606,17 +452,17 @@ object LlmVectors {
     Op("llm_ann_ivf_trained",
       (s, d) => {
         val emb = T.spread(T.t(s, d, "embeddings"))
-        val cent = graft.api.AnnIndex.trainFor(s, d, k = 10, iters = 3)
-        val assigned = graft.api.AnnIndex.assign(emb, cent)
+        val cent = AnnIndex.trainFor(s, d, k = 10, iters = 3)
+        val assigned = AnnIndex.assign(emb, cent)
         val probes = emb.where("vec_id = 0")
           .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))
-        graft.api.AnnIndex.search(assigned, cent, probes, k = 5, nProbe = 2)
+        AnnIndex.search(assigned, cent, probes, k = 5, nProbe = 2)
           .select("vec_id", "c_id", "sim")
           .orderBy(desc("sim"), col("vec_id"))
       },
-      Some(oTrainedAssign +
+      Some(AnnIndex.oTrainedAssign +
         ", p AS (SELECT embedding AS p_emb FROM embeddings WHERE vec_id = 0), " +
-        s"pd AS (SELECT c.c_id, ${oProbeD2("p.p_emb")} AS d2 FROM c3 c, p), " +
+        s"pd AS (SELECT c.c_id, ${AnnIndex.oD2("p.p_emb")} AS d2 FROM c3 c, p), " +
         "pc AS (SELECT c_id FROM (SELECT c_id, row_number() OVER (ORDER BY d2, c_id) AS rn FROM pd) WHERE rn <= 2) " +
         "SELECT vec_id, c_id, sim FROM (SELECT s.vec_id, s.c_id, " +
         s"${LlmOps.oSim("s.embedding", "p_emb")} AS sim " +
@@ -631,21 +477,19 @@ object LlmVectors {
     Op("llm_ann_ivf_trained_recall",
       (s, d) => {
         val emb = T.spread(T.t(s, d, "embeddings"))
-        val cent = graft.api.AnnIndex.trainFor(s, d, k = 10, iters = 3)
-        val assigned = graft.api.AnnIndex.assign(emb, cent)
-        val probes = probePanel(emb)
-          .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))
+        val cent = AnnIndex.trainFor(s, d, k = 10, iters = 3)
+        val assigned = AnnIndex.assign(emb, cent)
+        val probes = probePanel(emb, 32)
         recallAt5(emb, probes,
-          graft.api.AnnIndex.search(assigned, cent, probes, k = 5, nProbe = 2))
+          AnnIndex.search(assigned, cent, probes, k = 5, nProbe = 2))
       },
-      Some(oTrainedAssign +
-        ", pp AS (SELECT vec_id AS p_id, embedding AS p_emb FROM embeddings " +
-        "ORDER BY substr(md5(CAST(vec_id AS VARCHAR)), 1, 8), vec_id LIMIT 32), " +
-        s"pd AS (SELECT pp.p_id, pp.p_emb, c.c_id, ${oProbeD2("pp.p_emb")} AS d2 FROM c3 c, pp), " +
+      Some(AnnIndex.oTrainedAssign +
+        s", pp AS (SELECT vec_id AS p_id, embedding AS p_emb FROM embeddings ${AnnIndex.oProbePanel(32)}), " +
+        s"pd AS (SELECT pp.p_id, pp.p_emb, c.c_id, ${AnnIndex.oD2("pp.p_emb")} AS d2 FROM c3 c, pp), " +
         "pc AS (SELECT p_id, p_emb, c_id FROM (SELECT p_id, p_emb, c_id, " +
         "row_number() OVER (PARTITION BY p_id ORDER BY d2, c_id) AS rn FROM pd) WHERE rn <= 2), " +
-        oRecallAt5(oTop5("e", "pp", "pp.p_emb", "embeddings s, pp WHERE s.vec_id <> pp.p_id"),
-          oTop5("a", "pc", "pc.p_emb", "asg s JOIN pc ON s.c_id = pc.c_id AND s.vec_id <> pc.p_id")))),
+        AnnIndex.oRecallAt5(AnnIndex.oTop5("e", "pp", "pp.p_emb", "embeddings s, pp WHERE s.vec_id <> pp.p_id"),
+          AnnIndex.oTop5("a", "pc", "pc.p_emb", "asg s JOIN pc ON s.c_id = pc.c_id AND s.vec_id <> pc.p_id")))),
 
     // Embedding mean-centering (the whitening first step SemDeDup-style
     // pipelines run before cosine comparisons): per-dimension corpus
@@ -667,9 +511,8 @@ object LlmVectors {
           .select(col("vec_id"),
             expr("CAST(element_at(embedding, 1) AS DOUBLE) - element_at(mean_vec, 1)").as("c1"),
             expr("CAST(element_at(embedding, 2) AS DOUBLE) - element_at(mean_vec, 2)").as("c2"),
-            expr("CAST(floor(aggregate(zip_with(embedding, mean_vec, " +
-              "(x, m) -> (CAST(x AS DOUBLE) - m) * (CAST(x AS DOUBLE) - m)), " +
-              "CAST(0 AS DOUBLE), (a, v) -> a + v) * 10000 + 0.000001) AS BIGINT)").as("cnorm2_fp"))
+            expr(s"CAST(floor(${AnnIndex.d2("embedding", "mean_vec")} * 10000 + 0.000001) AS BIGINT)")
+              .as("cnorm2_fp"))
           .orderBy("vec_id")
       },
       Some("WITH s AS (SELECT t.range AS pos, " +
@@ -960,21 +803,18 @@ object LlmVectors {
     Op("llm_kmeans_inertia",
       (s, d) => {
         val emb = T.t(s, d, "embeddings")
-        val cent = graft.api.AnnIndex.trainFor(s, d, k = 10, iters = 3)
-        graft.api.AnnIndex.assign(emb, cent)
+        val cent = AnnIndex.trainFor(s, d, k = 10, iters = 3)
+        AnnIndex.assign(emb, cent)
           .join(broadcast(cent.select("c_id", "c_vec")), "c_id")
-          .withColumn("d2", expr(graft.api.AnnIndex.d2("embedding")))
+          .withColumn("d2", expr(AnnIndex.d2("embedding")))
           .withColumn("d2_fp", expr("CAST(floor(d2 * 10000 + 0.000001) AS BIGINT)"))
           .groupBy("c_id")
           .agg(count(lit(1)).as("n"), sum("d2_fp").as("inertia_fp"))
           .withColumn("avg_d2_fp", expr("inertia_fp div n"))
           .orderBy("c_id")
       },
-      Some(oKmeansTrainedPrefix + ", " +
-        "a4 AS (SELECT e.vec_id, c.c_id, " +
-        "list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), k -> " +
-        "(CAST(e.embedding[k] AS DOUBLE) - c.c_vec[k]) * " +
-        "(CAST(e.embedding[k] AS DOUBLE) - c.c_vec[k]))), (x, y) -> x + y) AS d2 " +
+      Some(AnnIndex.oKmeansTrainedPrefix + ", " +
+        s"a4 AS (SELECT e.vec_id, c.c_id, ${AnnIndex.oD2("e.embedding")} AS d2 " +
         "FROM embeddings e, c3 c), " +
         "b4 AS (SELECT c_id, d2, row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_id) AS rn FROM a4), " +
         "w AS (SELECT c_id, CAST(floor(d2 * 10000 + 0.000001) AS BIGINT) AS d2_fp FROM b4 WHERE rn = 1) " +
@@ -1004,9 +844,7 @@ object LlmVectors {
         val post = tf.join(broadcast(queries), "token")
         val dfreq = post.groupBy("token")
           .agg(countDistinct("doc_id").as("df"))
-        val w = Window.partitionBy("q_id")
-          .orderBy(desc("score_fp"), col("doc_id"))
-        post.join(dfreq, "token").join(dl, "doc_id")
+        topK(post.join(dfreq, "token").join(dl, "doc_id")
           .crossJoin(broadcast(stats))
           .withColumn("term_fp", expr(
             "CAST(floor(ln((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) / " +
@@ -1014,9 +852,8 @@ object LlmVectors {
               "(CAST(tf AS DOUBLE) * 2.2) / " +
               "(CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / " +
               "(CAST(n_toks AS DOUBLE) / CAST(n_docs AS DOUBLE)))) * 1000000.0) AS BIGINT)"))
-          .groupBy("q_id", "doc_id").agg(sum("term_fp").as("score_fp"))
-          .withColumn("rank", row_number().over(w))
-          .where("rank <= 3")
+            .groupBy("q_id", "doc_id").agg(sum("term_fp").as("score_fp")),
+          Seq("q_id"), Seq(desc("score_fp"), col("doc_id")), 3, "rank")
           .select("q_id", "rank", "doc_id", "score_fp")
           .orderBy("q_id", "rank")
       },
@@ -1056,16 +893,14 @@ object LlmVectors {
     Op("llm_rrf_fusion",
       (s, d) => {
         val emb = T.spread(T.t(s, d, "embeddings"))
-        val probes = retrievalProbes(emb)
-        val cosR = cosRank(emb, probes, topK = 20)
-        val tokR = tokRank(s, d, emb, probes, topK = 20)
-        val wRrf = Window.partitionBy("p_id").orderBy(desc("rrf_fp"), col("id"))
-        cosR.join(tokR, Seq("p_id", "id"), "full_outer")
-          .withColumn("rrf_fp", expr(
-            "coalesce(1000000000 div (60 + cos_rank), 0) + " +
-              "coalesce(1000000000 div (60 + tok_rank), 0)"))
-          .withColumn("rank", row_number().over(wRrf))
-          .where("rank <= 5")
+        val probes = probePanel(emb, 4).localCheckpoint()
+        val cosR = cosRank(emb, probes, 20)
+        val tokR = tokRank(s, d, emb, probes, 20)
+        topK(cosR.join(tokR, Seq("p_id", "id"), "full_outer")
+            .withColumn("rrf_fp", expr(
+              "coalesce(1000000000 div (60 + cos_rank), 0) + " +
+                "coalesce(1000000000 div (60 + tok_rank), 0)")),
+          Seq("p_id"), Seq(desc("rrf_fp"), col("id")), 5, "rank")
           .select("p_id", "rank", "id", "rrf_fp", "cos_rank", "tok_rank")
           .orderBy("p_id", "rank")
       },
@@ -1091,9 +926,9 @@ object LlmVectors {
     Op("llm_retrieval_eval",
       (s, d) => {
         val emb = T.spread(T.t(s, d, "embeddings"))
-        val probes = retrievalProbes(emb)
-        val truth = cosRank(emb, probes, topK = 5)
-        val cand = tokRank(s, d, emb, probes, topK = 20)
+        val probes = probePanel(emb, 4).localCheckpoint()
+        val truth = cosRank(emb, probes, 5)
+        val cand = tokRank(s, d, emb, probes, 20)
         truth.join(cand, Seq("p_id", "id"), "left")
           .groupBy("p_id").agg(
             count(lit(1)).as("n_truth"),
@@ -1125,8 +960,8 @@ object LlmVectors {
     Op("llm_ivf_cell_balance",
       (s, d) => {
         val emb = T.spread(T.t(s, d, "embeddings"))
-        val cent = graft.api.AnnIndex.trainFor(s, d, k = 10, iters = 3)
-        val sizes = graft.api.AnnIndex.assign(emb, cent)
+        val cent = AnnIndex.trainFor(s, d, k = 10, iters = 3)
+        val sizes = AnnIndex.assign(emb, cent)
           .groupBy("c_id").agg(count(lit(1)).as("n"))
         cent.select("c_id").join(sizes, Seq("c_id"), "left")
           .select(col("c_id"), coalesce(col("n"), lit(0L)).as("n"))
@@ -1138,7 +973,7 @@ object LlmVectors {
             expr("CAST(CAST(max_cell AS DECIMAL(38,0)) * n_cells * 1000000 " +
               "div n_vectors AS BIGINT)").as("imbalance_ppm"))
       },
-      Some(oTrainedAssign +
+      Some(AnnIndex.oTrainedAssign +
         ", sz AS (SELECT c3.c_id, (SELECT count(*) FROM asg WHERE asg.c_id = c3.c_id) AS n FROM c3), " +
         "st AS (SELECT CAST(count(*) AS BIGINT) AS n_cells, CAST(SUM(n) AS BIGINT) AS n_vectors, " +
         "CAST(MAX(n) AS BIGINT) AS max_cell, CAST(MIN(n) AS BIGINT) AS min_cell, " +
@@ -1162,15 +997,15 @@ object LlmVectors {
         val emb = T.spread(T.t(s, d, "embeddings"))
         // ONE session-memoized Lloyd stream trains all 4 subspaces;
         // the ADC-recall op consumes the SAME codebooks
-        val all = graft.api.AnnIndex.trainSubspaces(s, d, 4, 16, k = 8, iters = 2)
+        val all = AnnIndex.trainSubspaces(s, d, 4, 16, k = 8, iters = 2)
         val parts = (0 until 4).map { m =>
           val sub = emb.select(col("vec_id"),
             expr(s"slice(embedding, ${16 * m + 1}, 16)").as("embedding"))
           val cent = all.where(s"m = $m").select("c_id", "n", "c_vec")
-          graft.api.AnnIndex.assign(sub, cent)
+          AnnIndex.assign(sub, cent)
             .join(broadcast(cent.select("c_id", "c_vec")), "c_id")
             .select(lit(m).as("m"),
-              expr("CAST(floor(" + graft.api.AnnIndex.d2("embedding") +
+              expr("CAST(floor(" + AnnIndex.d2("embedding") +
                 " * 100000000) AS BIGINT)").as("qerr_fp"))
         }
         parts.reduce(_ unionByName _)
@@ -1197,38 +1032,34 @@ object LlmVectors {
     Op("llm_pq_adc_recall",
       (s, d) => {
         val emb = T.spread(T.t(s, d, "embeddings"))
-        val probes = retrievalProbes(emb)
-        val all = graft.api.AnnIndex.trainSubspaces(s, d, 4, 16, k = 8, iters = 2)
+        val probes = probePanel(emb, 4).localCheckpoint()
+        val all = AnnIndex.trainSubspaces(s, d, 4, 16, k = 8, iters = 2)
         val subs = (0 until 4).map { m =>
           val sub = emb.select(col("vec_id"),
             expr(s"slice(embedding, ${16 * m + 1}, 16)").as("embedding"))
           val cent = all.where(s"m = $m").select("c_id", "n", "c_vec")
-          val codes = graft.api.AnnIndex.assign(sub, cent)
+          val codes = AnnIndex.assign(sub, cent)
             .select(lit(m).as("m"), col("vec_id"), col("c_id"))
           val pdist = probes
             .select(col("p_id"),
               expr(s"slice(p_emb, ${16 * m + 1}, 16)").as("embedding"))
             .crossJoin(broadcast(cent.select("c_id", "c_vec")))
             .select(col("p_id"), lit(m).as("m"), col("c_id"),
-              expr(graft.api.AnnIndex.d2("embedding")).as("pd2"))
+              expr(AnnIndex.d2("embedding")).as("pd2"))
           (codes, pdist)
         }
         val codes = subs.map(_._1).reduce(_ unionByName _)
         val pdists = subs.map(_._2).reduce(_ unionByName _)
-        val wAdc = Window.partitionBy("p_id").orderBy(col("adc_fp"), col("vec_id"))
-        val approx = codes.join(broadcast(pdists), Seq("m", "c_id"))
-          .where("vec_id <> p_id")
-          .groupBy("p_id", "vec_id")
-          .agg(sum(expr("CAST(floor(pd2 * 100000000) AS BIGINT)")).as("adc_fp"))
-          .withColumn("rn", row_number().over(wAdc)).where("rn <= 5")
+        val approx = topK(codes.join(broadcast(pdists), Seq("m", "c_id"))
+            .where("vec_id <> p_id")
+            .groupBy("p_id", "vec_id")
+            .agg(sum(expr("CAST(floor(pd2 * 100000000) AS BIGINT)")).as("adc_fp")),
+          Seq("p_id"), Seq(col("adc_fp"), col("vec_id")), 5)
           .select(col("p_id"), col("vec_id"), lit(1L).as("hit"))
-        val l2 = "aggregate(zip_with(embedding, p_emb, (x, c) -> " +
-          "(CAST(x AS DOUBLE) - CAST(c AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(c AS DOUBLE))), " +
-          "CAST(0 AS DOUBLE), (a, v) -> a + v)"
-        val wEx = Window.partitionBy("p_id").orderBy(col("d2"), col("vec_id"))
-        emb.crossJoin(broadcast(probes)).where("vec_id <> p_id")
-          .withColumn("d2", expr(l2))
-          .withColumn("rn", row_number().over(wEx)).where("rn <= 5")
+        // exact truth: the squared-L2 top-5 over the whole corpus
+        topK(candidates(emb, probes, FullScan)
+            .withColumn("d2", expr(AnnIndex.d2("embedding", "p_emb"))),
+          Seq("p_id"), Seq(col("d2"), col("vec_id")), 5)
           .select("p_id", "vec_id")
           .join(approx, Seq("p_id", "vec_id"), "left")
           .groupBy("p_id").agg(count(lit(1)).as("n_truth"),
@@ -1275,13 +1106,11 @@ object LlmVectors {
     Op("llm_diversified_topk",
       (s, d) => {
         val emb = T.spread(T.t(s, d, "embeddings"))
-        val probes = retrievalProbes(emb)
-        val wLab = Window.partitionBy("p_id", "label").orderBy("cos_rank")
-        val wDiv = Window.partitionBy("p_id").orderBy("cos_rank", "id")
-        cosRank(emb, probes, topK = 20)
-          .join(emb.select(col("vec_id").as("id"), col("label")), "id")
-          .withColumn("lab_rn", row_number().over(wLab)).where("lab_rn = 1")
-          .withColumn("div_rank", row_number().over(wDiv)).where("div_rank <= 3")
+        val probes = probePanel(emb, 4).localCheckpoint()
+        val best = topK(cosRank(emb, probes, 20)
+            .join(emb.select(col("vec_id").as("id"), col("label")), "id"),
+          Seq("p_id", "label"), Seq(col("cos_rank")), 1, "lab_rn")
+        topK(best, Seq("p_id"), Seq(col("cos_rank"), col("id")), 3, "div_rank")
           .select("p_id", "div_rank", "id", "label", "cos_rank")
           .orderBy("p_id", "div_rank")
       },
@@ -1307,14 +1136,11 @@ object LlmVectors {
         val emb = T.t(s, d, "embeddings")
         val probes = emb.where("vec_id < 5")
           .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
-        val wf = Window.partitionBy("probe_id").orderBy(desc("sim_full"), col("vec_id"))
-        val wh = Window.partitionBy("probe_id").orderBy(desc("sim_half"), col("vec_id"))
-        T.spread(emb).crossJoin(broadcast(probes)).where("vec_id <> probe_id")
-          .withColumn("sim_full", expr("cosine_sim(embedding, p_emb)"))
-          .withColumn("sim_half", expr(
-            "cosine_sim(slice(embedding, 1, 32), slice(p_emb, 1, 32))"))
-          .withColumn("rf", row_number().over(wf))
-          .withColumn("rh", row_number().over(wh))
+        val scored = candidates(T.spread(emb), probes, FullScan, col("vec_id") =!= col("probe_id"))
+          .withColumn("sim_full", cosine())
+          .withColumn("sim_half", cosine("slice(embedding, 1, 32)", "slice(p_emb, 1, 32)"))
+        ranked(ranked(scored, Seq("probe_id"), Seq(desc("sim_full"), col("vec_id")), "rf"),
+            Seq("probe_id"), Seq(desc("sim_half"), col("vec_id")), "rh")
           .where("rf <= 10 OR rh <= 10")
           .groupBy("probe_id").agg(
             expr("CAST(count_if(rf <= 10 AND rh <= 10) AS BIGINT)").as("n_overlap"))
@@ -1353,14 +1179,10 @@ object LlmVectors {
           .agg(expr("array_sort(collect_list(struct(pos, sx, n)))").as("ss"))
           .select(col("label"),
             expr("transform(ss, e -> CAST(e.sx AS DOUBLE) / (10000.0 * e.n))").as("mean_vec"))
-        val w = Window.partitionBy("label").orderBy(desc("d2_fp"), col("vec_id"))
-        emb.join(broadcast(means), "label")
-          .withColumn("d2_fp", expr(
-            "CAST(floor(aggregate(zip_with(embedding, mean_vec, " +
-              "(x, m) -> (CAST(x AS DOUBLE) - m) * (CAST(x AS DOUBLE) - m)), " +
-              "CAST(0 AS DOUBLE), (a, v) -> a + v) * 10000 + 0.000001) AS BIGINT)"))
-          .withColumn("rnk", row_number().over(w))
-          .where("rnk <= 3")
+        topK(emb.join(broadcast(means), "label")
+            .withColumn("d2_fp", expr(
+              s"CAST(floor(${AnnIndex.d2("embedding", "mean_vec")} * 10000 + 0.000001) AS BIGINT)")),
+          Seq("label"), Seq(desc("d2_fp"), col("vec_id")), 3, "rnk")
           .select("label", "rnk", "vec_id", "d2_fp")
           .orderBy("label", "rnk")
       },

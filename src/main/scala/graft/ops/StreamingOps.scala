@@ -394,13 +394,13 @@ object StreamingOps {
           s, dir, "o_custkey", cursor, out): Unit
         require(cursorAt() == 4L, s"relay must advance to head 4, at ${cursorAt()}")
         // an all-empty-window run writes no parquet files at all
-        val raw = scala.util.Try(s.read.parquet(out)).getOrElse(
+        val raw = if (graft.api.StoreIO.hasParquet(s, out)) s.read.parquet(out) else
           s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
             StructType(Seq(
               StructField("change", StringType), StructField("o_custkey", LongType),
               StructField("o_orderkey", LongType),
               StructField("o_totalprice", DoubleType),
-              StructField("to_seq", IntegerType)))))
+              StructField("to_seq", IntegerType))))
         val got = raw
           .withColumn("run", when(col("to_seq") === 2, lit("r1")).otherwise(lit("r2")))
           .drop("to_seq").localCheckpoint()

@@ -223,30 +223,13 @@ object ScaleProbe {
         .repartition(32).localCheckpoint()
       val base = emb.where("vec_id % 10 <> 3")
       val late = emb.where("vec_id % 10 = 3")
-      val probes = emb
-        .withColumn("hkey", expr("substring(md5(CAST(vec_id AS STRING)), 1, 8)"))
-        .orderBy("hkey", "vec_id").limit(16)
-        .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))
-        .localCheckpoint()
-      val wTop = org.apache.spark.sql.expressions.Window
-        .partitionBy("p_id").orderBy(desc("sim"), col("vec_id"))
-      def exact5(corpus: DataFrame): DataFrame = corpus
-        .crossJoin(broadcast(probes)).where("vec_id <> p_id")
-        .withColumn("sim", expr("cosine_sim(embedding, p_emb)"))
-        .withColumn("rn", row_number().over(wTop)).where("rn <= 5")
-        .select("p_id", "vec_id")
+      val probes = graft.api.AnnIndex.probePanel(emb, 16).localCheckpoint()
       def recall(corpus: DataFrame, tag: String): Unit = {
         val ta = System.nanoTime()
-        val approx = graft.api.AnnIndex
-          .searchIndex(spark, idxDir, probes, k = 5, nProbe = 2)
-          .select(col("p_id"), col("vec_id"), lit(1).as("hit"))
-        val r = exact5(corpus).join(approx, Seq("p_id", "vec_id"), "left")
-          .groupBy("p_id").agg(sum(coalesce(col("hit"), lit(0))).as("hits"))
-          .agg(avg(expr("CAST(hits AS DOUBLE) / 5")).as("mean"),
-            min(expr("CAST(hits AS DOUBLE) / 5")).as("min"))
-          .collect()(0)
-        println(f"PROBE ann_maint[$tag]: recall@5 mean=${r.getDouble(0)}%.3f " +
-          f"min=${r.getDouble(1)}%.3f (${(System.nanoTime() - ta) / 1e9}%.2f s)")
+        val approx = graft.api.AnnIndex.searchIndex(spark, idxDir, probes, k = 5, nProbe = 2)
+        val r = graft.api.AnnIndex.recallAt5(corpus, probes, approx).collect()(0)
+        println(f"PROBE ann_maint[$tag]: recall@5 mean=${r.getDouble(2)}%.3f " +
+          f"min=${r.getDouble(3)}%.3f (${(System.nanoTime() - ta) / 1e9}%.2f s)")
       }
       var ts = System.nanoTime()
       graft.api.AnnIndex.build(base, idxDir, k = 10, iters = 3)

@@ -285,6 +285,16 @@ class Round5bSpec extends AnyFunSuite {
       s"kmeans family must share one training (ran ${api.AnnIndex.trainJobs - before})")
   }
 
+  test("train is trainSubspaces with one full-width subspace: one Lloyd loop") {
+    val emb = spark.read.parquet(s"${TestSpark.sf}/embeddings.parquet")
+    val full = api.AnnIndex.train(emb, 8, 2)
+    val sub = api.AnnIndex.trainSubspaces(spark, TestSpark.sf, 1, 64, 8, 2)
+      .where("m = 0").select("c_id", "n", "c_vec")
+    assert(!full.isEmpty)
+    assert(full.exceptAll(sub).isEmpty && sub.exceptAll(full).isEmpty,
+      "the m = 0 codebook of a 1 x 64 split must equal train's centroids exactly")
+  }
+
   test("llm_minhash_recall buckets partition the exact-jaccard truth set") {
     val got = Registry.byKey("llm_minhash_recall").query(spark, TestSpark.sf).collect()
     assert(got.nonEmpty, "sf0.001 carries near-dup pairs")
