@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -95,6 +96,24 @@ object Tables {
     */
   def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+  /** `rankCol` = row_number within `partition` in `order`. */
+  private[graft] def ranked(df: DataFrame, partition: Seq[String], order: Seq[Column],
+      rankCol: String): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+      Window.partitionBy(partition.map(col): _*).orderBy(order: _*)))
+
+  /** Top-k step, the one way to keep the best rows of each group: the
+    * first `k` rows of each `partition` in `order`, numbered in
+    * `rankCol`; k = 1 is the argmin filter `rankCol = 1`. Spark's
+    * `InferWindowGroupLimit` turns the cut into a partial
+    * `WindowGroupLimit` before the shuffle. Global top-k stays
+    * `orderBy(...).limit(k)`.
+    */
+  private[graft] def topK(df: DataFrame, partition: Seq[String], order: Seq[Column], k: Int,
+      rankCol: String = "rn"): DataFrame =
+    ranked(df, partition, order, rankCol)
+      .where(if (k == 1) col(rankCol) === 1 else col(rankCol) <= k)
 
   private val dec = DecimalType(18, 4)
 

@@ -1,7 +1,7 @@
 package graft.api
 
+import graft.Tables.topK
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persistent centroid-backed IVF index — the state a production
@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   * It is also the one similarity-search core every vector operator
   * composes: [[probePanel]] picks the probes, [[candidates]] pairs them
   * with the corpus rows a [[Gen]] admits, [[cosine]] (or the
-  * squared-L2 fold [[d2]]) scores the pairs and [[topK]] keeps the best
-  * per probe. A step's DuckDB twin (`o*`) sits next to it wherever the
+  * squared-L2 fold [[d2]]) scores the pairs and `Tables.topK` keeps the
+  * best per probe. A step's DuckDB twin (`o*`) sits next to it wherever the
   * oracles share its text.
   */
 object AnnIndex {
@@ -96,21 +96,6 @@ object AnnIndex {
       "list_transform(range(1, 65), k -> " +
       s"(CAST($v[k] AS DOUBLE) - c.c_vec[k]) * " +
       s"(CAST($v[k] AS DOUBLE) - c.c_vec[k]))), (x, y) -> x + y)"
-
-  /** `rankCol` = row_number within `partition` in `order`. */
-  private[graft] def ranked(df: DataFrame, partition: Seq[String], order: Seq[Column],
-      rankCol: String): DataFrame =
-    df.withColumn(rankCol, row_number().over(
-      Window.partitionBy(partition.map(col): _*).orderBy(order: _*)))
-
-  /** Top-k step: the first `k` rows of each `partition` in `order`,
-    * numbered in `rankCol`; k = 1 is the argmin filter `rankCol = 1`.
-    * Global top-k stays `orderBy(...).limit(k)`.
-    */
-  private[graft] def topK(df: DataFrame, partition: Seq[String], order: Seq[Column], k: Int,
-      rankCol: String = "rn"): DataFrame =
-    ranked(df, partition, order, rankCol)
-      .where(if (k == 1) col(rankCol) === 1 else col(rankCol) <= k)
 
   /** The `k` most cosine-similar candidates per probe `p_id`: [[cosine]]
     * as `sim`, ties broken by `vec_id`.

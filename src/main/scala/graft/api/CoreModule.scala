@@ -40,12 +40,9 @@ object CoreModule {
   def merge(streams: DataFrame*): DataFrame = accumulate(streams)
 
   /** stream op `latest`: most recent row per key by (orderCol, tiebreak). */
-  def latest(df: DataFrame, keys: Seq[String], orderCol: String, tiebreak: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col).toIndexedSeq: _*)
-      .orderBy(col(orderCol).desc, col(tiebreak).desc)
-    df.withColumn("__rn", row_number().over(w)).where("__rn = 1").drop("__rn")
-  }
+  def latest(df: DataFrame, keys: Seq[String], orderCol: String, tiebreak: String): DataFrame =
+    graft.Tables.topK(df, keys, Seq(col(orderCol).desc, col(tiebreak).desc), 1, "__rn")
+      .drop("__rn")
 
   /** dedupe_keep_latest on a declared schema's unique_on key. */
   def dedupeKeepLatest(df: DataFrame, schema: RecordSchema, orderCol: String): DataFrame =

@@ -1,7 +1,6 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persistent data-quality metrics repository — the Deequ
@@ -61,10 +60,7 @@ object DqHistory {
     * report).
     */
   def trend(spark: SparkSession, dir: String, alertDropPpm: Long = 1000L): DataFrame = {
-    val w = Window.partitionBy("expectation").orderBy(col("run_seq").desc)
-    read(spark, dir)
-      .withColumn("rn", row_number().over(w))
-      .where("rn <= 2")
+    graft.Tables.topK(read(spark, dir), Seq("expectation"), Seq(col("run_seq").desc), 2)
       .groupBy("expectation")
       .agg(
         count(lit(1)).as("n_runs"),

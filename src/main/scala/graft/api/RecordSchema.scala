@@ -48,11 +48,9 @@ final case class RecordSchema(
     */
   def dedupeKeepLatest(df: DataFrame, orderCol: String): DataFrame = {
     require(uniqueOn.nonEmpty, "dedupeKeepLatest needs unique_on")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(uniqueOn.map(col).toIndexedSeq: _*)
-      .orderBy((col(orderCol).desc +: struct.fieldNames.filterNot(uniqueOn.contains)
-        .filterNot(_ == orderCol).map(col(_).desc).toIndexedSeq): _*)
-    df.withColumn("__rn", row_number().over(w)).where("__rn = 1").drop("__rn")
+    graft.Tables.topK(df, uniqueOn, col(orderCol).desc +: struct.fieldNames
+      .filterNot(uniqueOn.contains).filterNot(_ == orderCol).map(col(_).desc).toIndexedSeq,
+      1, "__rn").drop("__rn")
   }
 
   /** Schema drift report against a realized frame: which declared

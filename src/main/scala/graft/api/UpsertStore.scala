@@ -1,7 +1,6 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import com.fasterxml.jackson.databind.JsonNode
@@ -1658,12 +1657,11 @@ object UpsertStore {
       }
     }
 
-    val wLatest = Window.partitionBy(key).orderBy(col(versionCol).desc)
     // one pass over the batch; feeds the touched set, the anti-join and
     // the staged write
-    val (latest, touched) = checkpointBuckets(batch
-      .withColumn("__rn", row_number().over(wLatest)).where("__rn = 1").drop("__rn")
-      .withColumn("__b", bucketExpr(key, n)), "__b")
+    val (latest, touched) = checkpointBuckets(
+      graft.Tables.topK(batch, Seq(key), Seq(col(versionCol).desc), 1, "__rn").drop("__rn")
+        .withColumn("__b", bucketExpr(key, n)), "__b")
     if (bootstrap && touched.isEmpty) {
       // an empty first batch must still leave a readable (schema-carrying)
       // store: one empty bucket generation

@@ -75,8 +75,6 @@ object WebhookModule {
     * core_dedupe_keep_latest.
     */
   def dedupeReplays(df: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("event_key").orderBy(col("delivery_id").asc)
-    df.withColumn("__rn", row_number().over(w)).where("__rn = 1").drop("__rn")
+    graft.Tables.topK(df, Seq("event_key"), Seq(col("delivery_id").asc), 1, "__rn").drop("__rn")
   }
 }

@@ -495,17 +495,14 @@ object Analytics {
         val wCum = Window.partitionBy("event_type").orderBy("v")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val wTot = Window.partitionBy("event_type")
-        val wMax = Window.partitionBy("event_type")
-          .orderBy(expr(
-            "abs(CAST(cuma AS DECIMAL(38,0)) * nb - CAST(cumb AS DECIMAL(38,0)) * na)").desc,
-            col("v"))
-        h.withColumn("cuma", sum("ca").over(wCum))
-          .withColumn("cumb", sum("cb").over(wCum))
-          .withColumn("na", sum("ca").over(wTot))
-          .withColumn("nb", sum("cb").over(wTot))
-          .where("na > 0 AND nb > 0")
-          .withColumn("rn", row_number().over(wMax))
-          .where("rn = 1")
+        T.topK(h.withColumn("cuma", sum("ca").over(wCum))
+            .withColumn("cumb", sum("cb").over(wCum))
+            .withColumn("na", sum("ca").over(wTot))
+            .withColumn("nb", sum("cb").over(wTot))
+            .where("na > 0 AND nb > 0"),
+            Seq("event_type"), Seq(expr(
+              "abs(CAST(cuma AS DECIMAL(38,0)) * nb - CAST(cumb AS DECIMAL(38,0)) * na)").desc,
+              col("v")), 1)
           .select(col("event_type"), col("na").as("n_a"), col("nb").as("n_b"),
             col("v").as("ks_at_fp"),
             expr("CAST(abs(CAST(cuma AS DECIMAL(38,0)) * nb - CAST(cumb AS DECIMAL(38,0)) * na) " +
@@ -747,12 +744,9 @@ object Analytics {
           count(lit(1)).as("nh"), expr("CAST(SUM(y) AS BIGINT)").as("total"))
         val wCum = Window.partitionBy("event_type").orderBy("hidx")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wMax = Window.partitionBy("event_type")
-          .orderBy(abs(col("cusum")).desc, col("hidx"))
-        g.join(broadcast(tot), "event_type")
-          .withColumn("cusum", sum(expr("y * nh - total")).over(wCum))
-          .withColumn("rn", row_number().over(wMax))
-          .where("rn = 1")
+        T.topK(g.join(broadcast(tot), "event_type")
+            .withColumn("cusum", sum(expr("y * nh - total")).over(wCum)),
+            Seq("event_type"), Seq(abs(col("cusum")).desc, col("hidx")), 1)
           .select(col("event_type"), col("nh").as("n_hours"), col("total"),
             col("hidx").as("cp_hidx"),
             expr("CAST(abs(CAST(cusum AS DECIMAL(38,0))) * 1000000 " +

@@ -181,10 +181,7 @@ object CoreOps {
     // the most recent record (tie-broken on event_id for determinism).
     Op("core_dedupe_keep_latest",
       (s, d) => {
-        val w = Window.partitionBy("user_id")
-          .orderBy(col("ts").desc, col("event_id").desc)
-        T.events(s, d)
-          .withColumn("rn", row_number().over(w)).where("rn = 1")
+        graft.api.CoreModule.latest(T.events(s, d), Seq("user_id"), "ts", "event_id")
           .select("user_id", "event_id", "ts", "event_type", "value", "props")
           .orderBy("user_id")
       },
@@ -195,10 +192,7 @@ object CoreOps {
     // stream op `latest`: reduce each keyed stream to its most recent block.
     Op("core_stream_latest",
       (s, d) => {
-        val w = Window.partitionBy("event_type")
-          .orderBy(col("ts").desc, col("event_id").desc)
-        T.events(s, d)
-          .withColumn("rn", row_number().over(w)).where("rn = 1")
+        graft.api.CoreModule.latest(T.events(s, d), Seq("event_type"), "ts", "event_id")
           .select("event_type", "event_id", "user_id", "ts", "value")
           .orderBy("event_type")
       },
@@ -818,8 +812,7 @@ object CoreOps {
     Op("core_golden_record",
       (s, d) => {
         val ev = T.eventsFp(s, d)
-        val w = Window.partitionBy("user_id").orderBy(desc("us"), desc("event_id"))
-        val last = ev.withColumn("rn", row_number().over(w)).where("rn = 1")
+        val last = T.topK(ev, Seq("user_id"), Seq(desc("us"), desc("event_id")), 1)
           .select(col("user_id"), col("event_type").as("last_type"))
         val agg = ev.groupBy("user_id").agg(
           min("us").as("first_seen_us"),

@@ -238,9 +238,7 @@ object EventOps {
     // DuckDB twin is string_agg(... ORDER BY rn).
     Op("rel_event_path",
       (s, d) => {
-        val w = Window.partitionBy("user_id", "session_seq").orderBy("us", "event_id")
-        sessionEvents(s, d)
-          .withColumn("rn", row_number().over(w)).where("rn <= 5")
+        T.topK(sessionEvents(s, d), Seq("user_id", "session_seq"), Seq(col("us"), col("event_id")), 5)
           .groupBy("user_id", "session_seq")
           .agg(expr("array_join(transform(array_sort(collect_list(struct(rn, event_type))), " +
             "x -> x.event_type), '>')").as("path"))

@@ -62,15 +62,13 @@ object LlmText {
     val docs = T.t(s, d, "documents")
     val tok = T.spread(docs).select(col("doc_id"), col("lang"),
       explode(split(col("text"), " ")).as("token"))
-    val wp = Window.partitionBy("lang").orderBy(desc("cnt"), col("token"))
-    val profile = tok.groupBy("lang", "token").agg(count(lit(1)).as("cnt"))
-      .withColumn("rnk", row_number().over(wp)).where("rnk <= 20")
+    val profile = T.topK(tok.groupBy("lang", "token").agg(count(lit(1)).as("cnt")),
+        Seq("lang"), Seq(desc("cnt"), col("token")), 20, "rnk")
       .select(col("lang").as("p_lang"), col("token"))
     val docTok = tok.select("doc_id", "token").distinct()
-    val wb = Window.partitionBy("doc_id").orderBy(desc("matches"), col("p_lang"))
-    val best = docTok.join(broadcast(profile), "token")
-      .groupBy("doc_id", "p_lang").agg(count(lit(1)).as("matches"))
-      .withColumn("rn", row_number().over(wb)).where("rn = 1")
+    val best = T.topK(docTok.join(broadcast(profile), "token")
+        .groupBy("doc_id", "p_lang").agg(count(lit(1)).as("matches")),
+        Seq("doc_id"), Seq(desc("matches"), col("p_lang")), 1)
       .select(col("doc_id"), col("p_lang").as("pred_lang"), col("matches"))
     docs.select("doc_id", "lang").join(best, Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"),
@@ -146,12 +144,10 @@ object LlmText {
 
     Op("llm_top_terms",
       (s, d) => {
-        val w = Window.partitionBy("lang").orderBy(desc("cnt"), col("token"))
-        T.t(s, d, "documents")
-          .select(col("lang"), explode(split(col("text"), " ")).as("token"))
-          .groupBy("lang", "token").agg(count(lit(1)).as("cnt"))
-          .withColumn("rnk", row_number().over(w))
-          .where("rnk <= 5")
+        T.topK(T.t(s, d, "documents")
+            .select(col("lang"), explode(split(col("text"), " ")).as("token"))
+            .groupBy("lang", "token").agg(count(lit(1)).as("cnt")),
+            Seq("lang"), Seq(desc("cnt"), col("token")), 5, "rnk")
           .orderBy("lang", "rnk")
       },
       Some("SELECT * FROM (SELECT lang, token, cnt, " +
@@ -206,10 +202,9 @@ object LlmText {
           .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("token"))
           .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
         val df_ = tf.groupBy("token").agg(count(lit(1)).as("df"))
-        val w = Window.partitionBy("doc_id").orderBy(desc("score"), col("token"))
-        tf.join(df_, "token").crossJoin(broadcast(n))
-          .withColumn("score", expr("round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6)"))
-          .withColumn("rn", row_number().over(w)).where("rn = 1")
+        T.topK(tf.join(df_, "token").crossJoin(broadcast(n))
+            .withColumn("score", expr("round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6)")),
+            Seq("doc_id"), Seq(desc("score"), col("token")), 1)
           .select(col("doc_id"), col("token").as("top_term"), col("score"))
           .orderBy("doc_id")
       },
@@ -356,10 +351,8 @@ object LlmText {
           "quality" -> graft.Pipeline.map1("lang")(
             _.where("n_chars BETWEEN 100 AND 500 AND size(split(text, ' ')) >= 20")),
           "dedup" -> graft.Pipeline.map1("quality") { df =>
-            val w = Window.partitionBy("sig").orderBy("doc_id")
-            df.withColumn("sig", sha2(lower(trim(col("text"))), 256))
-              .withColumn("rn", row_number().over(w))
-              .where("rn = 1").drop("sig", "rn")
+            T.topK(df.withColumn("sig", sha2(lower(trim(col("text"))), 256)),
+              Seq("sig"), Seq(col("doc_id")), 1).drop("sig", "rn")
           },
           "stats" -> graft.Pipeline.map1("dedup")(
             _.groupBy("lang", "source")
@@ -726,10 +719,7 @@ object LlmText {
           .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
           .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
         val heads = bi.groupBy("w1").agg(sum("c12").as("c1"))
-        bi.join(heads, "w1")
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("w1").orderBy(desc("c12"), col("w2"))))
-          .where("rn = 1")
+        T.topK(bi.join(heads, "w1"), Seq("w1"), Seq(desc("c12"), col("w2")), 1)
           .select(col("w1"), col("w2"), col("c12"),
             expr("CAST(c1 AS BIGINT)").as("c1"),
             expr("CAST(c12 AS DOUBLE) / c1").as("p"))

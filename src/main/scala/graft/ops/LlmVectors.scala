@@ -1,9 +1,10 @@
 package graft.ops
 
 import graft.{Op, Tables => T}
+import graft.Tables.{ranked, topK}
 import graft.api.AnnIndex
 import graft.api.AnnIndex.{FullScan, LabelCell, LshBucket, candidates, cosine, probePanel,
-  ranked, recallAt5, topCosine, topK}
+  recallAt5, topCosine}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 

@@ -334,11 +334,11 @@ object Relational {
       (s, d) => {
         val w = Window.partitionBy("o_custkey")
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        T.t(s, d, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
-          .withColumn("rk", rank().over(w))
-          .withColumn("drk", dense_rank().over(w))
-          .withColumn("rn", row_number().over(w))
-          .where("rn <= 3").orderBy("o_custkey", "rn")
+        T.topK(T.t(s, d, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
+            .withColumn("rk", rank().over(w))
+            .withColumn("drk", dense_rank().over(w)),
+            Seq("o_custkey"), Seq(col("o_totalprice").desc, col("o_orderkey")), 3)
+          .orderBy("o_custkey", "rn")
       },
       Some("SELECT o_custkey, o_orderkey, o_totalprice, CAST(rk AS INTEGER) AS rk, " +
         "CAST(drk AS INTEGER) AS drk, CAST(rn AS INTEGER) AS rn FROM (" +
@@ -1055,10 +1055,7 @@ object Relational {
       (s, d) => {
         val part = T.t(s, d, "part")
         val counts = part.groupBy("p_size", "p_brand").agg(count(lit(1)).as("cnt"))
-        val mode = counts
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("p_size").orderBy(desc("cnt"), col("p_brand"))))
-          .where("rn = 1")
+        val mode = T.topK(counts, Seq("p_size"), Seq(desc("cnt"), col("p_brand")), 1)
           .select(col("p_size"), col("p_brand").as("modal_brand"), col("cnt").as("modal_cnt"))
         val med = part.groupBy("p_size")
           .agg(expr("median(p_retailprice)").as("median_price"), count(lit(1)).as("n"))

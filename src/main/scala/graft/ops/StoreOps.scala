@@ -69,6 +69,18 @@ object StoreOps {
     graft.api.UpsertStore.update(t.where(col("b") === b).drop("b"), dir,
       "o_custkey", "o_orderkey", nBuckets = 8, batchId = Some(s"b$b"))
 
+  /** DuckDB twin of [[commitBatch]] replayed over batches 0..`upTo` (all
+    * when None) of CTE `t`: CTEs `m<sfx>` (each customer's last batch)
+    * and `f<sfx>` (`t.o_custkey, t.o_orderkey`, the `carry` columns and
+    * `rn`); the store holds the `f<sfx>` rows with `rn = 1`.
+    */
+  private[ops] def oStoreAfter(sfx: String, carry: Seq[String] = Seq("t.o_totalprice"),
+      upTo: Option[Int] = None): String =
+    s"m$sfx AS (SELECT o_custkey, max(b) AS mb FROM t${upTo.fold("")(b => s" WHERE b <= $b")} GROUP BY 1), " +
+      s"f$sfx AS (SELECT ${("t.o_custkey" +: "t.o_orderkey" +: carry).mkString(", ")}, " +
+      "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
+      s"FROM t JOIN m$sfx ON t.o_custkey = m$sfx.o_custkey AND t.b = m$sfx.mb)"
+
   /** Runs `body` on a fresh directory `target/tmp/<name>_<id>`; its
     * result is pinned with `localCheckpoint` before the directory is
     * deleted.
@@ -167,11 +179,8 @@ object StoreOps {
         }.orderBy("o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b FROM orders), " +
-        "m AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
-        "f AS (SELECT t.o_custkey, t.o_orderkey, t.o_totalprice, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m ON t.o_custkey = m.o_custkey AND t.b = m.mb) " +
-        "SELECT o_custkey, o_orderkey, o_totalprice FROM f WHERE rn = 1 ORDER BY o_custkey")),
+        oStoreAfter("") +
+        " SELECT o_custkey, o_orderkey, o_totalprice FROM f WHERE rn = 1 ORDER BY o_custkey")),
 
     // GDPR/right-to-be-forgotten erasure as a TARGETED-PARTITION
     // rewrite: events land user-bucketed (pmod(user_id, 16) — the
@@ -314,11 +323,8 @@ object StoreOps {
         }.orderBy("o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b FROM orders), " +
-        "m AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
-        "f AS (SELECT t.o_custkey, t.o_orderkey, t.o_totalprice, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m ON t.o_custkey = m.o_custkey AND t.b = m.mb) " +
-        "SELECT o_custkey, o_orderkey, o_totalprice FROM f WHERE rn = 1 ORDER BY o_custkey")),
+        oStoreAfter("") +
+        " SELECT o_custkey, o_orderkey, o_totalprice FROM f WHERE rn = 1 ORDER BY o_custkey")),
 
     // The second mutation-SQL verb: DELETE FROM '<dir>' WHERE <pred>
     // against the upsert store (the GDPR-erasure / retention-sweep
@@ -403,11 +409,8 @@ object StoreOps {
         got.orderBy("o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b FROM orders), " +
-        "m AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
-        "f AS (SELECT t.o_custkey, t.o_orderkey, t.o_totalprice, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m ON t.o_custkey = m.o_custkey AND t.b = m.mb) " +
-        "SELECT o_custkey, o_orderkey, o_totalprice FROM f WHERE rn = 1 ORDER BY o_custkey")),
+        oStoreAfter("") +
+        " SELECT o_custkey, o_orderkey, o_totalprice FROM f WHERE rn = 1 ORDER BY o_custkey")),
 
     // Store bucket-layout introspection — the read that MOTIVATES
     // core_store_rebucket: per-bucket row counts off the store's own
@@ -526,15 +529,9 @@ object StoreOps {
         }.orderBy("snap", "o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b FROM orders), " +
-        "m2 AS (SELECT o_custkey, max(b) AS mb FROM t WHERE b <= 1 GROUP BY 1), " +
-        "f2 AS (SELECT t.o_custkey, t.o_orderkey, t.o_totalprice, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m2 ON t.o_custkey = m2.o_custkey AND t.b = m2.mb), " +
-        "m3 AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
-        "f3 AS (SELECT t.o_custkey, t.o_orderkey, t.o_totalprice, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m3 ON t.o_custkey = m3.o_custkey AND t.b = m3.mb) " +
-        "SELECT o_custkey, o_orderkey, o_totalprice, 'asof2' AS snap FROM f2 WHERE rn = 1 " +
+        oStoreAfter("2", upTo = Some(1)) + ", " +
+        oStoreAfter("3") +
+        " SELECT o_custkey, o_orderkey, o_totalprice, 'asof2' AS snap FROM f2 WHERE rn = 1 " +
         "UNION ALL " +
         "SELECT o_custkey, o_orderkey, o_totalprice, 'current' AS snap FROM f3 WHERE rn = 1 " +
         "ORDER BY snap, o_custkey")),
@@ -798,15 +795,9 @@ object StoreOps {
         }.orderBy("snap", "o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 4 AS b FROM orders), " +
-        "m3 AS (SELECT o_custkey, max(b) AS mb FROM t WHERE b <= 2 GROUP BY 1), " +
-        "f3 AS (SELECT t.o_custkey, t.o_orderkey, t.o_totalprice, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m3 ON t.o_custkey = m3.o_custkey AND t.b = m3.mb), " +
-        "m4 AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
-        "f4 AS (SELECT t.o_custkey, t.o_orderkey, t.o_totalprice, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m4 ON t.o_custkey = m4.o_custkey AND t.b = m4.mb) " +
-        "SELECT o_custkey, o_orderkey, o_totalprice, 'asof3' AS snap FROM f3 WHERE rn = 1 " +
+        oStoreAfter("3", upTo = Some(2)) + ", " +
+        oStoreAfter("4") +
+        " SELECT o_custkey, o_orderkey, o_totalprice, 'asof3' AS snap FROM f3 WHERE rn = 1 " +
         "UNION ALL " +
         "SELECT o_custkey, o_orderkey, o_totalprice, 'current' AS snap FROM f4 WHERE rn = 1 " +
         "ORDER BY snap, o_custkey")),
@@ -889,11 +880,8 @@ object StoreOps {
         }.orderBy("form", "o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b FROM orders), " +
-        "m2 AS (SELECT o_custkey, max(b) AS mb FROM t WHERE b <= 1 GROUP BY 1), " +
-        "f2 AS (SELECT t.o_custkey, t.o_orderkey, t.o_totalprice, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m2 ON t.o_custkey = m2.o_custkey AND t.b = m2.mb) " +
-        "SELECT o_custkey, o_orderkey, o_totalprice, 'millis' AS form FROM f2 WHERE rn = 1 " +
+        oStoreAfter("2", upTo = Some(1)) +
+        " SELECT o_custkey, o_orderkey, o_totalprice, 'millis' AS form FROM f2 WHERE rn = 1 " +
         "UNION ALL " +
         "SELECT o_custkey, o_orderkey, o_totalprice, 'quoted' AS form FROM f2 WHERE rn = 1 " +
         "ORDER BY form, o_custkey")),
@@ -979,11 +967,8 @@ object StoreOps {
         }.orderBy("o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_orderkey % 4 AS b FROM orders), " +
-        "m AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
-        "f AS (SELECT t.o_custkey, t.o_orderkey, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m ON t.o_custkey = m.o_custkey AND t.b = m.mb) " +
-        "SELECT 'insert' AS change, o_custkey, o_orderkey FROM f WHERE rn = 1 " +
+        oStoreAfter("", Nil) +
+        " SELECT 'insert' AS change, o_custkey, o_orderkey FROM f WHERE rn = 1 " +
         "ORDER BY o_custkey")),
 
     // RESTORE — Delta's undo verb: `RESTORE '<dir>' TO VERSION AS OF
@@ -1010,15 +995,9 @@ object StoreOps {
         }.orderBy("snap", "o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b FROM orders), " +
-        "m2 AS (SELECT o_custkey, max(b) AS mb FROM t WHERE b <= 1 GROUP BY 1), " +
-        "f2 AS (SELECT t.o_custkey, t.o_orderkey, t.o_totalprice, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m2 ON t.o_custkey = m2.o_custkey AND t.b = m2.mb), " +
-        "m3 AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
-        "f3 AS (SELECT t.o_custkey, t.o_orderkey, t.o_totalprice, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m3 ON t.o_custkey = m3.o_custkey AND t.b = m3.mb) " +
-        "SELECT o_custkey, o_orderkey, o_totalprice, 'pre' AS snap FROM f3 WHERE rn = 1 " +
+        oStoreAfter("2", upTo = Some(1)) + ", " +
+        oStoreAfter("3") +
+        " SELECT o_custkey, o_orderkey, o_totalprice, 'pre' AS snap FROM f3 WHERE rn = 1 " +
         "UNION ALL " +
         "SELECT o_custkey, o_orderkey, o_totalprice, 'restored' AS snap FROM f2 WHERE rn = 1 " +
         "ORDER BY snap, o_custkey")),
@@ -1051,15 +1030,9 @@ object StoreOps {
         }.orderBy("snap", "o_custkey")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 3 AS b FROM orders), " +
-        "m2 AS (SELECT o_custkey, max(b) AS mb FROM t WHERE b <= 1 GROUP BY 1), " +
-        "f2 AS (SELECT t.o_custkey, t.o_orderkey, t.o_totalprice, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m2 ON t.o_custkey = m2.o_custkey AND t.b = m2.mb), " +
-        "m3 AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
-        "f3 AS (SELECT t.o_custkey, t.o_orderkey, t.o_totalprice, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m3 ON t.o_custkey = m3.o_custkey AND t.b = m3.mb) " +
-        "SELECT o_custkey, o_orderkey, o_totalprice, 'clone' AS snap FROM f2 WHERE rn = 1 " +
+        oStoreAfter("2", upTo = Some(1)) + ", " +
+        oStoreAfter("3") +
+        " SELECT o_custkey, o_orderkey, o_totalprice, 'clone' AS snap FROM f2 WHERE rn = 1 " +
         "UNION ALL " +
         "SELECT o_custkey, o_orderkey, o_totalprice, 'src' AS snap FROM f3 " +
         "WHERE rn = 1 AND o_custkey % 10 <> 3 " +
@@ -1167,10 +1140,7 @@ object StoreOps {
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, " +
         "CAST(floor(o_totalprice * 100) AS BIGINT) AS cents, o_orderkey % 3 AS b FROM orders), " +
-        "m AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
-        "f AS (SELECT t.o_custkey, t.o_orderkey, t.cents, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m ON t.o_custkey = m.o_custkey AND t.b = m.mb), " +
+        oStoreAfter("", Seq("t.cents")) + ", " +
         "cur AS (SELECT o_custkey, o_orderkey, cents FROM f " +
         "WHERE rn = 1 AND o_custkey % 10 <> 3) " +
         "SELECT o_orderkey % 10 AS grp, count(*) AS n_rows, " +
@@ -1320,10 +1290,7 @@ object StoreOps {
         }.orderBy("column")
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, o_totalprice, o_orderkey % 2 AS b FROM orders), " +
-        "m AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
-        "f AS (SELECT t.o_custkey, t.o_orderkey, t.o_totalprice, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m ON t.o_custkey = m.o_custkey AND t.b = m.mb), " +
+        oStoreAfter("") + ", " +
         "cur AS (SELECT o_custkey, o_orderkey, o_totalprice FROM f WHERE rn = 1) " +
         "SELECT 'o_custkey' AS \"column\", count(o_custkey) AS n_nonnull, " +
         "true AS ndv_within_bounds, (SELECT count(*) FROM cur) AS n_rows FROM cur " +

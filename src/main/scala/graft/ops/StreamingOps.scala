@@ -115,9 +115,7 @@ object StreamingOps {
     // deterministic order, not bare dropDuplicates (§2-E).
     Op("strm_dedup_stateful",
       (s, d) => {
-        val w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-        T.events(s, d)
-          .withColumn("rn", row_number().over(w)).where("rn = 1")
+        T.topK(T.events(s, d), Seq("user_id", "event_type"), Seq(col("ts"), col("event_id")), 1)
           .select("user_id", "event_type", "event_id", "ts")
           .orderBy("user_id", "event_type")
       },
@@ -213,9 +211,7 @@ object StreamingOps {
         val cnt = T.events(s, d)
           .withColumn("bucket", expr("CAST(date_trunc('hour', ts) AS TIMESTAMP_NTZ)"))
           .groupBy("bucket", "user_id").agg(count(lit(1)).as("n_ev"))
-        cnt.withColumn("rn", row_number().over(
-            Window.partitionBy("bucket").orderBy(desc("n_ev"), col("user_id"))))
-          .where("rn <= 3")
+        T.topK(cnt, Seq("bucket"), Seq(desc("n_ev"), col("user_id")), 3)
           .select(col("bucket"), col("user_id"), col("n_ev"), col("rn").cast(IntegerType).as("rn"))
           .orderBy("bucket", "rn")
       },
@@ -484,10 +480,7 @@ object StreamingOps {
       },
       Some("WITH t AS (SELECT o_custkey, o_orderkey, " +
         "CAST(floor(o_totalprice * 100) AS BIGINT) AS cents, o_orderkey % 3 AS b FROM orders), " +
-        "m AS (SELECT o_custkey, max(b) AS mb FROM t GROUP BY 1), " +
-        "f AS (SELECT t.o_custkey, t.o_orderkey, t.cents, " +
-        "row_number() OVER (PARTITION BY t.o_custkey ORDER BY t.o_orderkey DESC) AS rn " +
-        "FROM t JOIN m ON t.o_custkey = m.o_custkey AND t.b = m.mb), " +
+        StoreOps.oStoreAfter("", Seq("t.cents")) + ", " +
         "cur AS (SELECT o_custkey, o_orderkey, cents FROM f " +
         "WHERE rn = 1 AND o_custkey % 10 <> 3) " +
         "SELECT o_orderkey % 10 AS grp, count(*) AS n_rows, " +

@@ -142,6 +142,34 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("KmvAggregator == sorted distinct take(k) for any data and any partitioning") {
+    import graft.functions.KmvAggregator
+    // a narrow hash range, so most groups hold duplicates
+    val rowsGen = for {
+      n <- Gen.choose(0, 80)
+      rows <- Gen.listOfN(n, for {
+        g <- Gen.choose(0L, 4L)
+        h <- Gen.choose(0L, 12L)
+      } yield (g, h))
+    } yield rows
+    forSamples(rowsGen) { rows =>
+      val k = 3
+      val kmv = KmvAggregator.kmv(k)
+      val df = rows.toDF("g", "h").repartition(7)
+      val got = df.groupBy("g")
+        .agg(kmv(col("h")).as("mins"))
+        .as[(Long, Seq[Long])].collect().toMap
+      val want = rows.groupBy(_._1).map { case (g, rs) =>
+        g -> rs.map(_._2).sorted.distinct.take(k)
+      }
+      assert(got.view.mapValues(_.toList).toMap == want.view.mapValues(_.toList).toMap)
+      // direct unit: buffers sharing values keep each value once
+      val agg = new KmvAggregator(k)
+      assert(agg.merge(Seq(2L, 5L, 9L), Seq(2L, 5L, 7L)) == Seq(2L, 5L, 7L))
+      assert(agg.merge(Seq(4L), Seq(4L)) == Seq(4L))
+    }
+  }
+
   test("MinHash estimate is calibrated against true trigram Jaccard on LSH candidates") {
     val est = Registry.byKey("llm_dedup_minhash").query(spark, TestSpark.sf)
       .select(col("d1"), col("d2"), col("est_jaccard"))

@@ -13,6 +13,18 @@ numbers and the call sites that name an RDD (`MapPartitionsRDD[77] at
 localCheckpoint at AnnIndex.scala:146`), and random UUIDs. Prints a
 unified diff for every key whose masked plans differ, or that only one
 side has, then a summary; exits 1 on any difference.
+
+Known noise, not regressions:
+- `llm_dataset_card` and `rel_agg_multi_distinct` (several
+  `count(DISTINCT ...)` aggregates) can get a different physical plan in
+  two JVM runs of the same code: the distinct-aggregate rewrite may order
+  its `Expand` projections and hash-partitioning keys (`source, lang` vs
+  `lang, source`) either way. Compare against a second run of the parent
+  to be sure.
+- `Location: InMemoryFileIndex [...]` lines name the checkout's own
+  directory and random temporary directories (`graft_incr_<n>`,
+  `graft_runlog_<n>`, `graft_xml_<n>`); rewrite the checkout path in one
+  dump before comparing two checkouts.
 """
 import difflib
 import re
