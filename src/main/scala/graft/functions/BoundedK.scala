@@ -12,12 +12,14 @@ import org.apache.spark.sql.expressions.Aggregator
   *
   * Buffers are kept sorted by `before` and truncated to k, so reduce and
   * merge are order-insensitive and the result is independent of
-  * partitioning and merge order. As a TypedImperativeAggregate it runs
-  * with map-side partial aggregation: the shuffle carries at most k
-  * elements per (group, mapper). Spark's own `row_number() <= k` gets
-  * the same bound from `InferWindowGroupLimit` (a partial
-  * `WindowGroupLimit` before the shuffle); ROADMAP direction 2 holds the
-  * measured comparison.
+  * partitioning and merge order. Merge returns a Vector because
+  * `reduce` reads the buffer's length and last element for every input
+  * row, and on a List (what `toSeq` builds) each walks all k elements.
+  * As a TypedImperativeAggregate it runs with map-side partial
+  * aggregation: the shuffle carries at most k elements per (group,
+  * mapper). Spark's own `row_number() <= k` gets the same bound from
+  * `InferWindowGroupLimit` (a partial `WindowGroupLimit` before the
+  * shuffle); ROADMAP direction 2 holds the measured comparison.
   */
 abstract class BoundedK[T](k: Int, distinct: Boolean = false)
     extends Aggregator[T, Seq[T], Seq[T]] {
@@ -31,8 +33,8 @@ abstract class BoundedK[T](k: Int, distinct: Boolean = false)
   override def zero: Seq[T] = Nil
 
   override def reduce(buf: Seq[T], in: T): Seq[T] =
-    if (buf.length == k && (before(buf.last, in) || (distinct && buf.last == in))) buf
-    else merge(buf, Seq(in))
+    if (buf.length == k && { val last = buf.last; before(last, in) || (distinct && last == in) }) buf
+    else merge(buf, Vector(in))
 
   override def merge(a: Seq[T], b: Seq[T]): Seq[T] = {
     val out = new scala.collection.mutable.ArrayBuffer[T](k)
@@ -44,7 +46,7 @@ abstract class BoundedK[T](k: Int, distinct: Boolean = false)
         else { j += 1; b(j - 1) }
       if (!distinct || out.isEmpty || out.last != next) out += next
     }
-    out.toSeq
+    out.toVector
   }
 
   override def finish(r: Seq[T]): Seq[T] = r
